@@ -119,13 +119,6 @@ final class MultiSearcher private[search] (val shards: Seq[IndexSearcher],
     */
   private def expandAcrossShards(q: Query): Query = q match {
     case m: MultiTermQuery =>
-      val (boost, f) = m match {
-        case PrefixQuery(_, b, f0) => (b, f0)
-        case WildcardQuery(_, b, f0) => (b, f0)
-        case FuzzyQuery(_, _, b, f0) => (b, f0)
-        case TermRangeQuery(_, _, _, _, b, f0) => (b, f0)
-        case RegexpQuery(_, b, f0) => (b, f0)
-      }
       // per-shard dictionary scans in parallel (independent bounded jobs);
       // union sorted in UTF-8 BINARY order (Spark's orderBy("term") order —
       // Ordering.String is UTF-16 code-unit order, which diverges for
@@ -140,7 +133,7 @@ final class MultiSearcher private[search] (val shards: Seq[IndexSearcher],
       require(union.size <= 1024,
         s"$m expands to more than 1024 terms across the shards — raise " +
           "specificity (reference maxClauseCount is the rewrite budget)")
-      BooleanQuery(union.map(t => BooleanClause(Occur.SHOULD, TermQuery(t, boost, f))))
+      BooleanQuery(union.map(t => BooleanClause(Occur.SHOULD, TermQuery(t, m.boost, m.field))))
     case BooleanQuery(cs, msm, b) =>
       BooleanQuery(cs.map(c => c.copy(query = expandAcrossShards(c.query))), msm, b)
     case DisMaxQuery(cs, tie, b) => DisMaxQuery(cs.map(expandAcrossShards), tie, b)
@@ -187,8 +180,10 @@ final class MultiSearcher private[search] (val shards: Seq[IndexSearcher],
 
   /** Block-max WAND per shard, merged: each shard's pruned top-k is a
     * superset of its members of the GLOBAL top-k (bounds use the seeded
-    * merged stats), so the merge is exact on docs/scores; totalHits becomes
-    * a lower bound as usual.
+    * merged stats), so the merge is exact on docs/scores. totalHits sums the
+    * shards' counts: exact when every shard answered exhaustively (see
+    * [[Wand.searchTopK]]), a lower bound — flagged by
+    * `totalHitsIsLowerBound` — as soon as one shard pruned.
     */
   def searchWand(q0: Query, k: Int, mode: ScoreMode = ScoreMode.Ref32,
       phase1Ranges: Int = 64): TopDocs = {

@@ -35,9 +35,13 @@ final case class PhraseQuery(terms: Seq[String], boost: Float = 1.0f,
 /** Marker for dictionary-expanded leaves (prefix/wildcard/fuzzy/range):
   * rewritten by IndexSearcher.expandPrefixes into bounded SHOULD
   * disjunctions BEFORE compilation; reaching leafKeys/compile unexpanded is
-  * a bug and throws.
+  * a bug and throws. Every expanded term inherits the leaf's boost and
+  * field.
   */
-sealed trait MultiTermQuery extends Query
+sealed trait MultiTermQuery extends Query {
+  def boost: Float
+  def field: Option[String]
+}
 
 /** Prefix term query `field:pre*`. The reference LEXES the star but its
   * handlers panic (/root/reference/queryparser/classic/queryParserBase.go:

@@ -50,6 +50,39 @@ private[search] object RangeSel {
   final case class Df(df: DataFrame) extends RangeSel // single column: rangeId
 }
 
+/** Compiled query + everything the executors need: the expanded, rewritten
+  * query, its distinct (field, term) keys (a leaf's term index points into
+  * `keys`), their dictionary stats and the per-range evaluator holding the
+  * plan. Exhaustive search, explain and WAND's bound tree all read this one
+  * compilation.
+  */
+private[search] final case class Prepared(
+    q: Query, keys: Seq[(String, String)], stats: Map[(String, String), TermStats],
+    ge: GroupEval)
+
+/** Key of one entry in a searcher's byte-bounded LRU; `V` is the value
+  * stored under it and `weight` its approximate heap size in bytes.
+  */
+private[search] sealed abstract class CacheKey[V] {
+  def weight(v: V): Long
+}
+/** Collected posting rows of one (field, term), with or without positions. */
+private[search] final case class RowsKey(field: String, term: String, positions: Boolean)
+    extends CacheKey[Array[PRow]] {
+  def weight(rs: Array[PRow]): Long =
+    rs.map(r => 64L + r._5.length + (if (r._6 == null) 0 else r._6.length)).sum
+}
+/** Sorted dictionary terms of one multi-term leaf (boost and field cleared). */
+private[search] final case class ExpansionKey(field: String, leaf: MultiTermQuery)
+    extends CacheKey[Seq[String]] {
+  def weight(ts: Seq[String]): Long = 64L + ts.map(48L + 2L * _.length).sum
+}
+/** Spelling suggestions (term, docFreq, distance) for one input. */
+private[search] final case class SuggestKey(input: String, maxEdits: Int, topN: Int,
+    field: String) extends CacheKey[Seq[(String, Long, Int)]] {
+  def weight(ss: Seq[(String, Long, Int)]): Long = 64L + ss.map(64L + 2L * _._1.length).sum
+}
+
 /** Per-doc leaf data assembled from decoded postings for one docId range. */
 private[search] final class RangeAccum(
     val base: Long,
@@ -327,14 +360,12 @@ final class IndexSearcher(
     */
   def close(): Unit = {
     if (delRangesInit) delRangesDF.unpersist()
-    rowCache.synchronized {
-      rowCache.clear()
-      rowCacheBytes = 0L
+    cache.synchronized {
+      cache.clear()
+      cacheBytes = 0L
     }
-    suggestCache.clear()
   }
 
-  /** A view of this index with additional (non-persisted) deleted docIds. */
   /** Derived delete views INHERIT a snapshot of this searcher's stats
     * caches: a delete view does not change statistics (deleted docs keep
     * counting toward df/ttf/collection stats until a reclaiming merge — the
@@ -363,6 +394,7 @@ final class IndexSearcher(
     this
   }
 
+  /** A view of this index with additional (non-persisted) deleted docIds. */
   def withDeletes(docIds: Array[Long]): IndexSearcher =
     inheritCaches(new IndexSearcher(spark, indexPath, field, similarity,
       extraDeletes ++ docIds, extraDeletesDF, deleteBroadcastMax))
@@ -396,14 +428,12 @@ final class IndexSearcher(
 
   private val csCache = scala.collection.concurrent.TrieMap.empty[String, CollectionStats]
 
-  def collectionStats(f: String): CollectionStats = csCache.getOrElseUpdate(f, {
-    val r = fieldStatsDF.where(col("field") === f).collect()(0)
-    CollectionStats(f,
-      maxDoc = r.getAs[Long]("maxDoc"),
-      docCount = r.getAs[Long]("docCount"),
-      sumTotalTermFreq = r.getAs[Long]("sumTotalTermFreq"),
-      sumDocFreq = r.getAs[Long]("sumDocFreq"))
-  })
+  /** Statistics of field `f`; fails naming the field when this index never
+    * indexed it.
+    */
+  def collectionStats(f: String): CollectionStats =
+    collectionStatsOpt(f).getOrElse(throw new IllegalArgumentException(
+      s"field '$f' is not indexed in $indexPath (no fieldstats row)"))
 
   /** Batch-fill csCache for every missing field in ONE fieldstats scan —
     * prepare() runs this concurrently with the terms-dict lookup, so a cold
@@ -428,18 +458,10 @@ final class IndexSearcher(
     * sharded search ([[MultiSearcher]]) merges stats across shards whose
     * field sets may differ.
     */
-  def collectionStatsOpt(f: String): Option[CollectionStats] =
-    csCache.get(f).orElse {
-      fieldStatsDF.where(col("field") === f).collect().headOption.map { r =>
-        val cs = CollectionStats(f,
-          maxDoc = r.getAs[Long]("maxDoc"),
-          docCount = r.getAs[Long]("docCount"),
-          sumTotalTermFreq = r.getAs[Long]("sumTotalTermFreq"),
-          sumDocFreq = r.getAs[Long]("sumDocFreq"))
-        csCache.put(f, cs)
-        cs
-      }
-    }
+  def collectionStatsOpt(f: String): Option[CollectionStats] = {
+    warmCollectionStats(Seq(f))
+    csCache.get(f)
+  }
 
   /** Replace the statistics this searcher scores with ([[MultiSearcher]]
     * seeds every shard with GLOBALLY merged stats, so each shard scores
@@ -484,8 +506,8 @@ final class IndexSearcher(
       statsCache(k).map(_.totalTermFreq).getOrElse(0L)
     }.sum
     dfSum <= localSearchMaxPostings && posSum <= localSearchMaxPostings &&
-      rowCache.synchronized {
-        keys.forall(k => rowCache.get((k._1, k._2, pts.contains(k))) != null)
+      cache.synchronized {
+        keys.forall(k => cache.containsKey(RowsKey(k._1, k._2, pts.contains(k))))
       }
   }
 
@@ -645,18 +667,6 @@ final class IndexSearcher(
     node(Query.rewrite(q0), 1.0f)
   }
 
-  /** Compiled query + everything the executors need. */
-  private final case class Prepared(
-      q: Query, keys: Seq[(String, String)], stats: Map[(String, String), TermStats],
-      ge: GroupEval)
-
-  /** Per-searcher prefix-expansion cache: a searcher is a point-in-time view
-    * (same rationale as the row cache), so an expansion can never go stale
-    * within it. Keyed (field, prefix); values are SORTED term lists.
-    */
-  private val prefixCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Seq[String]]
-
   /** Matching dictionary terms for a prefix: a driver-side sorted range scan
     * of the terms table. `startsWith` pushes down as parquet
     * StringStartsWith (row-group pruning on the term column's min/max —
@@ -666,8 +676,6 @@ final class IndexSearcher(
     */
   private def prefixTerms(f: String, prefix: String): Seq[String] = {
     require(prefix.nonEmpty, "empty prefix (bare '*' queries are not supported)")
-    val cached = prefixCache.get((f, prefix))
-    if (cached.isDefined) return cached.get
     val terms = termsDF
       .where(col("field") === f && col("term").startsWith(prefix))
       .select("term").orderBy("term").limit(1025)
@@ -675,7 +683,6 @@ final class IndexSearcher(
     require(terms.size <= 1024,
       s"prefix '$f:$prefix*' expands to more than 1024 terms (reference " +
         "maxClauseCount is the rewrite budget) — narrow the prefix")
-    prefixCache.put((f, prefix), terms)
     terms
   }
 
@@ -690,8 +697,6 @@ final class IndexSearcher(
   private def wildcardTerms(f: String, pattern: String): Seq[String] = {
     require(pattern.exists(c => c != '*' && c != '?'),
       s"wildcard pattern '$pattern' has no literal characters")
-    val cached = prefixCache.get((f, "wc " + pattern))
-    if (cached.isDefined) return cached.get
     val pre = pattern.takeWhile(c => c != '*' && c != '?')
     // anchored regex from the pattern, literals quoted
     val rx = pattern.map {
@@ -707,7 +712,6 @@ final class IndexSearcher(
     require(terms.size <= 1024,
       s"wildcard '$f:$pattern' expands to more than 1024 terms (reference " +
         "maxClauseCount is the rewrite budget) — narrow the pattern")
-    prefixCache.put((f, "wc " + pattern), terms)
     terms
   }
 
@@ -723,16 +727,13 @@ final class IndexSearcher(
     // through rlike over the vocabulary, so a catastrophic-backtracking
     // pattern would stall every dictionary task. Dictionary-sized input
     // already caps the blast radius; these guards make the failure a fast
-    // driver-side error instead. (Heuristic: a quantified group whose body
-    // itself contains a quantifier — the classic (a+)+ shape.)
+    // driver-side error instead.
     require(pattern.length <= 256,
       s"regexp pattern is ${pattern.length} chars — cap is 256")
-    require(!RegexpNestedQuant.matcher(pattern).find(),
+    java.util.regex.Pattern.compile(pattern) // fail fast on driver with a clear error
+    require(!nestsQuantifier(pattern),
       s"regexp '/$pattern/' nests a quantifier inside a quantified group " +
         "(catastrophic-backtracking guard) — rewrite without nested quantifiers")
-    java.util.regex.Pattern.compile(pattern) // fail fast on driver with a clear error
-    val cached = prefixCache.get((f, "rx " + pattern))
-    if (cached.isDefined) return cached.get
     val pre = pattern.takeWhile(c => !"\\^$.|?*+()[]{}".contains(c))
     var base = termsDF.where(col("field") === f)
     if (pre.nonEmpty) base = base.where(col("term").startsWith(pre))
@@ -742,7 +743,6 @@ final class IndexSearcher(
     require(terms.size <= 1024,
       s"regexp '$f:/$pattern/' expands to more than 1024 terms (reference " +
         "maxClauseCount is the rewrite budget) — narrow the pattern")
-    prefixCache.put((f, "rx " + pattern), terms)
     terms
   }
 
@@ -755,26 +755,9 @@ final class IndexSearcher(
     * compiling.
     */
   def expandPrefixes(q: Query): Query = q match {
-    case PrefixQuery(prefix, boost, f) =>
-      val fn = f.getOrElse(field)
-      BooleanQuery(prefixTerms(fn, prefix).map(t =>
-        BooleanClause(Occur.SHOULD, TermQuery(t, boost, f))))
-    case WildcardQuery(pattern, boost, f) =>
-      val fn = f.getOrElse(field)
-      BooleanQuery(wildcardTerms(fn, pattern).map(t =>
-        BooleanClause(Occur.SHOULD, TermQuery(t, boost, f))))
-    case FuzzyQuery(t, maxEdits, boost, f) =>
-      val fn = f.getOrElse(field)
-      BooleanQuery(fuzzyTerms(fn, t, maxEdits).map(t2 =>
-        BooleanClause(Occur.SHOULD, TermQuery(t2, boost, f))))
-    case TermRangeQuery(lo, hi, il, iu, boost, f) =>
-      val fn = f.getOrElse(field)
-      BooleanQuery(rangeTerms(fn, lo, hi, il, iu).map(t2 =>
-        BooleanClause(Occur.SHOULD, TermQuery(t2, boost, f))))
-    case RegexpQuery(pattern, boost, f) =>
-      val fn = f.getOrElse(field)
-      BooleanQuery(regexpTerms(fn, pattern).map(t2 =>
-        BooleanClause(Occur.SHOULD, TermQuery(t2, boost, f))))
+    case m: MultiTermQuery =>
+      BooleanQuery(expansionTerms(m).map(t =>
+        BooleanClause(Occur.SHOULD, TermQuery(t, m.boost, m.field))))
     case BooleanQuery(cs, msm, boost) =>
       BooleanQuery(cs.map(c => c.copy(query = expandPrefixes(c.query))), msm, boost)
     case FilteredQuery(q1, f1) => FilteredQuery(expandPrefixes(q1), expandPrefixes(f1))
@@ -786,15 +769,29 @@ final class IndexSearcher(
   /** Expanded term list for ONE multi-term leaf against THIS searcher's
     * dictionary — [[MultiSearcher]] unions these across shards (the union
     * of per-shard expansions over a partitioned corpus IS the monolithic
-    * expansion: same matching terms, same sorted order).
+    * expansion: same matching terms, same sorted order). Cached per
+    * searcher under the leaf itself with boost and field normalized away,
+    * so each expansion kind has its own key space and a boost never splits
+    * an entry.
     */
-  private[search] def expansionTerms(m: MultiTermQuery): Seq[String] = m match {
-    case PrefixQuery(p, _, f) => prefixTerms(f.getOrElse(field), p)
-    case WildcardQuery(pat, _, f) => wildcardTerms(f.getOrElse(field), pat)
-    case FuzzyQuery(t, e, _, f) => fuzzyTerms(f.getOrElse(field), t, e)
-    case TermRangeQuery(lo, hi, il, iu, _, f) =>
-      rangeTerms(f.getOrElse(field), lo, hi, il, iu)
-    case RegexpQuery(pat, _, f) => regexpTerms(f.getOrElse(field), pat)
+  private[search] def expansionTerms(m: MultiTermQuery): Seq[String] = {
+    val fn = m.field.getOrElse(field)
+    val leaf: MultiTermQuery = m match {
+      case q: PrefixQuery => q.copy(boost = 1.0f, field = None)
+      case q: WildcardQuery => q.copy(boost = 1.0f, field = None)
+      case q: FuzzyQuery => q.copy(boost = 1.0f, field = None)
+      case q: TermRangeQuery => q.copy(boost = 1.0f, field = None)
+      case q: RegexpQuery => q.copy(boost = 1.0f, field = None)
+    }
+    cached(ExpansionKey(fn, leaf)) {
+      leaf match {
+        case PrefixQuery(p, _, _) => prefixTerms(fn, p)
+        case WildcardQuery(pat, _, _) => wildcardTerms(fn, pat)
+        case FuzzyQuery(t, e, _, _) => fuzzyTerms(fn, t, e)
+        case TermRangeQuery(lo, hi, il, iu, _, _) => rangeTerms(fn, lo, hi, il, iu)
+        case RegexpQuery(pat, _, _) => regexpTerms(fn, pat)
+      }
+    }
   }
 
   /** Matching dictionary terms within `maxEdits` CLASSIC Levenshtein edits:
@@ -806,9 +803,6 @@ final class IndexSearcher(
   private def fuzzyTerms(f: String, q: String, maxEdits: Int): Seq[String] = {
     require(maxEdits >= 0 && maxEdits <= 2,
       s"fuzzy maxEdits must be 0..2 (Lucene's classic bound), got $maxEdits")
-    val key = (f, s"fz$maxEdits $q")
-    val cached = prefixCache.get(key)
-    if (cached.isDefined) return cached.get
     val terms = termsDF
       .where(col("field") === f &&
         length(col("term")).between(q.length - maxEdits, q.length + maxEdits) &&
@@ -818,7 +812,6 @@ final class IndexSearcher(
     require(terms.size <= 1024,
       s"fuzzy '$f:$q~$maxEdits' expands to more than 1024 terms — raise " +
         "specificity (reference maxClauseCount is the rewrite budget)")
-    prefixCache.put(key, terms)
     terms
   }
 
@@ -828,9 +821,6 @@ final class IndexSearcher(
   private def rangeTerms(f: String, lo: Option[String], hi: Option[String],
       incLo: Boolean, incHi: Boolean): Seq[String] = {
     require(lo.nonEmpty || hi.nonEmpty, "term range needs at least one bound")
-    val key = (f, s"rg ${lo.getOrElse("")} ${hi.getOrElse("")} $incLo$incHi")
-    val cached = prefixCache.get(key)
-    if (cached.isDefined) return cached.get
     var base = termsDF.where(col("field") === f)
     lo.foreach(l => base = base.where(if (incLo) col("term") >= l else col("term") > l))
     hi.foreach(h => base = base.where(if (incHi) col("term") <= h else col("term") < h))
@@ -840,11 +830,10 @@ final class IndexSearcher(
       s"range '$f:[${lo.getOrElse("*")} TO ${hi.getOrElse("*")}]' expands to " +
         "more than 1024 terms — narrow the bounds (reference maxClauseCount " +
         "is the rewrite budget)")
-    prefixCache.put(key, terms)
     terms
   }
 
-  private def prepare(q0: Query, mode: ScoreMode): Prepared = {
+  private[search] def prepare(q0: Query, mode: ScoreMode): Prepared = {
     val q = Query.rewrite(expandPrefixes(q0))
     val keys = Query.leafKeys(q, field)
     // reference maxClauseCount (/root/reference/core/search/boolean.go:9)
@@ -1045,14 +1034,13 @@ final class IndexSearcher(
     require(maxEdits >= 1 && maxEdits <= 2,
       s"suggest maxEdits must be 1..2 (Lucene's classic bound), got $maxEdits")
     require(topN > 0, s"topN must be positive, got $topN")
-    // cached like the prefix/fuzzy expansions (a searcher is a point-in-time
-    // view, so entries can never go stale within it): the candidate set is
+    // cached like the multi-term expansions: the candidate set is
     // vocabulary-bounded (≤2 edits of one input) and topN-limited, so the
     // collected rows are tiny — a repeated suggestion costs zero Spark jobs
-    // (the result rebuilds as a LocalRelation). Cleared by close().
+    // (the result rebuilds as a LocalRelation)
     val sp = spark
     import sp.implicits._
-    suggestCache.getOrElseUpdate((input, maxEdits, topN, f), {
+    cached(SuggestKey(input, maxEdits, topN, f)) {
       termsDF
         .where(col("field") === f &&
           length(col("term")).between(input.length - maxEdits, input.length + maxEdits) &&
@@ -1063,18 +1051,52 @@ final class IndexSearcher(
         .orderBy(col("dist").asc, col("docFreq").desc, col("term").asc)
         .limit(topN)
         .collect().map(r => (r.getString(0), r.getLong(1), r.getInt(2))).toSeq
-    }).toDF("term", "docFreq", "dist")
+    }.toDF("term", "docFreq", "dist")
   }
 
-  private val suggestCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, Int, String), Seq[(String, Long, Int)]]
-
-  /** A quantifier applied to a group whose body already contains a
-    * quantifier — the (a+)+ catastrophic-backtracking shape; see
-    * [[regexpTerms]].
+  /** True when a group quantified by `*`, `+` or `{n}` has a body (nested
+    * groups included) that already holds a `*` or `+` quantifier — the
+    * (a+)+ catastrophic-backtracking shape; see [[regexpTerms]]. Escaped
+    * characters and character classes quantify nothing, so `(a\+b)*` and
+    * `([+-]x)*` pass.
     */
-  private val RegexpNestedQuant =
-    java.util.regex.Pattern.compile("""\([^()]*[*+][^()]*\)\s*[*+{]""")
+  private def nestsQuantifier(pattern: String): Boolean = {
+    val open = scala.collection.mutable.Stack.empty[Boolean] // body quantified?
+    var closedQuantified = false // the group closing just before i
+    var i = 0
+    while (i < pattern.length) {
+      val c = pattern.charAt(i)
+      val afterGroup = closedQuantified
+      closedQuantified = false
+      c match {
+        case '\\' => i += 1 // the escaped character is a literal
+        case '[' => // skip the class: a leading ']' (or '^]') is literal
+          var depth = 1
+          i += 1
+          if (i < pattern.length && pattern.charAt(i) == '^') i += 1
+          if (i < pattern.length && pattern.charAt(i) == ']') i += 1
+          while (i < pattern.length && depth > 0) {
+            pattern.charAt(i) match {
+              case '\\' => i += 1
+              case '[' => depth += 1
+              case ']' => depth -= 1
+              case _ => ()
+            }
+            if (depth > 0) i += 1
+          }
+        case '(' => open.push(false)
+        case ')' if open.nonEmpty =>
+          closedQuantified = open.pop()
+          if (closedQuantified && open.nonEmpty) { open.pop(); open.push(true) }
+        case '*' | '+' | '{' =>
+          if (afterGroup) return true
+          if (c != '{' && open.nonEmpty) { open.pop(); open.push(true) }
+        case _ => ()
+      }
+      i += 1
+    }
+    false
+  }
 
   /** Structured score breakdown for one document (reference Explain,
     * /root/reference/core/search/explanation.go, term.go:163-193): the
@@ -1224,73 +1246,67 @@ final class IndexSearcher(
       .as[PRow]
   }
 
-  /** Per-searcher posting-row cache (the reference's query-cache analogue,
+  /** Per-searcher byte-bounded LRU (the reference's query-cache analogue,
     * natural here because a searcher IS a point-in-time view — Lucene
-    * IndexReader semantics — so entries can never go stale within it).
-    * Caches the collected rows per (field, term, positionsLoaded) when the
-    * driver-local path fetches them: repeated query terms cost ZERO Spark
-    * jobs. Byte-bounded LRU ([[rowCacheMaxBytes]]); disabled under ranged
-    * deletes (rows would bake in a join product).
+    * IndexReader semantics — so entries can never go stale within it). It
+    * holds everything a searcher derives from the index per query input:
+    * collected posting rows per (field, term, positionsLoaded), so repeated
+    * query terms cost ZERO Spark jobs; multi-term expansions; spelling
+    * suggestions. [[rowCacheMaxBytes]] bounds the whole; close() empties
+    * it. Row entries are bypassed under ranged deletes (rows would bake in a
+    * join product). Term and collection statistics stay out: MultiSearcher
+    * seeds merged values into them, and evicting one would silently
+    * re-fetch shard-local stats.
     */
   var rowCacheMaxBytes: Long = 64L << 20
-  private var rowCacheBytes = 0L
-  private val rowCache =
-    new java.util.LinkedHashMap[(String, String, Boolean), Array[PRow]](64, 0.75f, true)
+  private var cacheBytes = 0L
+  private val cache = new java.util.LinkedHashMap[CacheKey[_], (Any, Long)](64, 0.75f, true)
 
-  private def rowBytes(rs: Array[PRow]): Long =
-    rs.map(r => 64L + r._5.length + (if (r._6 == null) 0 else r._6.length)).sum
+  private def cacheGet[V](key: CacheKey[V]): Option[V] =
+    cache.synchronized(Option(cache.get(key)).map(_._1.asInstanceOf[V]))
+
+  /** Insert unless present, then evict least-recently-used entries down to
+    * the budget — never the entry just inserted (the live query needs it).
+    */
+  private def cachePut[V](key: CacheKey[V], v: V): Unit = cache.synchronized {
+    if (!cache.containsKey(key)) {
+      val w = key.weight(v)
+      cache.put(key, (v, w))
+      cacheBytes += w
+      val it = cache.entrySet().iterator()
+      while (cacheBytes > rowCacheMaxBytes && it.hasNext) {
+        val e = it.next()
+        if (e.getKey != key) {
+          cacheBytes -= e.getValue._2
+          it.remove()
+        }
+      }
+    }
+  }
+
+  private def cached[V](key: CacheKey[V])(compute: => V): V =
+    cacheGet(key).getOrElse { val v = compute; cachePut(key, v); v }
 
   /** Collected rows for a full-key (unfiltered) driver-local evaluation,
     * served from / inserted into the cache per term.
     */
   private def collectRows(p: Prepared): Array[PRow] = {
     if (rangedDeletes) return rowsFor(p).collect()
-    val wantPos = p.keys.zipWithIndex.map { case (k, i) => k -> p.ge.needPos(i) }.toMap
-    val (hits, missing) = rowCache.synchronized {
-      val h = scala.collection.mutable.ArrayBuffer.empty[Array[PRow]]
-      val m = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      p.keys.foreach { k =>
-        val cached = rowCache.get((k._1, k._2, wantPos(k)))
-        if (cached != null) h += cached else m += k
-      }
-      (h.toArray, m.toSeq)
-    }
+    val keys = p.keys.zip(p.ge.needPos).map { case ((f, t), pos) => RowsKey(f, t, pos) }
+    val hits = keys.map(k => k -> cacheGet(k))
+    val missing = hits.collect { case (k, None) => k }
     val fetched =
       if (missing.isEmpty) Array.empty[PRow]
       else {
-        val anyPos = missing.exists(wantPos)
-        val rows = rowsForKeys(missing, anyPos, None).collect()
+        val rows = rowsForKeys(missing.map(k => (k.field, k.term)),
+          missing.exists(_.positions), None).collect()
         val byKey = rows.groupBy(r => (r._1, r._2))
-        rowCache.synchronized {
-          missing.foreach { k =>
-            val rs = byKey.getOrElse(k, Array.empty[PRow])
-            val key = (k._1, k._2, wantPos(k))
-            if (rowCache.get(key) == null) {
-              rowCache.put(key, rs)
-              rowCacheBytes += rowBytes(rs)
-              val it = rowCache.entrySet().iterator()
-              while (rowCacheBytes > rowCacheMaxBytes && it.hasNext) {
-                val e = it.next()
-                if (e.getKey != key) { // never evict what this query needs
-                  rowCacheBytes -= rowBytes(e.getValue)
-                  it.remove()
-                }
-              }
-            }
-          }
-        }
+        missing.foreach(k => cachePut(k, byKey.getOrElse((k.field, k.term), Array.empty[PRow])))
         rows
       }
-    hits.flatten ++ fetched
+    hits.flatMap(_._2).flatten.toArray ++ fetched
   }
 
-  /** MatchAllQuery evaluation: every live docId at constant score = boost.
-    * The range-group machinery only sees docs touched by query postings, so
-    * an all-docs leaf scans the DOCS table instead — column-pruned to docId
-    * — with deletes applied the same two ways as the postings path:
-    * broadcast binary-search below deleteBroadcastMax, a left-anti join
-    * against the (never collected) delete set beyond it.
-    */
   /** Union of every delete source as a one-column `docId` DataFrame (ranged
     * path; never collected).
     */
@@ -1301,6 +1317,13 @@ final class IndexSearcher(
     parts.reduceOption(_ union _).map(_.select(col("docId").cast("long").as("docId")))
   }
 
+  /** MatchAllQuery evaluation: every live docId at constant score = boost.
+    * The range-group machinery only sees docs touched by query postings, so
+    * an all-docs leaf scans the DOCS table instead — column-pruned to docId
+    * — with deletes applied the same two ways as the postings path:
+    * broadcast binary-search below deleteBroadcastMax, a left-anti join
+    * against the (never collected) delete set beyond it.
+    */
   private def matchAllScored(boost: Float): Dataset[ScoredDoc] = {
     val score = boost.toDouble
     val ids = docsDF.select(col("docId")).as[Long]
@@ -1319,14 +1342,18 @@ final class IndexSearcher(
   /** All matching docs with scores — the full scored result set as a Dataset
     * (top-k and TotalHits both derive from it in one pass).
     */
-  def scoredDocs(q0: Query, mode: ScoreMode): Dataset[ScoredDoc] = {
+  def scoredDocs(q0: Query, mode: ScoreMode): Dataset[ScoredDoc] =
     Query.rewrite(expandPrefixes(q0)) match {
-      case MatchAllQuery(b) => return matchAllScored(b)
-      case _ => ()
+      case MatchAllQuery(b) => matchAllScored(b)
+      case _ => scored(prepare(q0, mode), None)
     }
-    val p = prepare(q0, mode)
+
+  /** Distributed scoring of a prepared plan over its posting rows
+    * (optionally only the selected ranges).
+    */
+  private def scored(p: Prepared, rangeFilter: Option[RangeSel]): Dataset[ScoredDoc] = {
     val geB = spark.sparkContext.broadcast(p.ge)
-    val ds = rowsFor(p)
+    val ds = rowsFor(p, rangeFilter)
     if (p.keys.size <= 1)
       // single-term: every doc lives in exactly one row → no shuffle at all
       ds.mapPartitions { it =>
@@ -1350,7 +1377,7 @@ final class IndexSearcher(
     * per-partition bounded heaps merge on the driver (treeAggregate shape).
     */
   def search(q: Query, k: Int, mode: ScoreMode = ScoreMode.Ref32): TopDocs =
-    searchFiltered(q, k, mode, None)
+    topK(q, k, mode, None)
 
   /** Pagination (reference TopDocsCollector.TopDocsRange,
     * /root/reference/core/search/collect.go:158-191): results
@@ -1374,51 +1401,22 @@ final class IndexSearcher(
     */
   def searchAfter(q: Query, after: ScoredDoc, k: Int,
       mode: ScoreMode = ScoreMode.Ref32): TopDocs =
-    searchFiltered(q, k, mode, None, Some(after))
+    topK(q, k, mode, Some(after))
 
-  /** Evaluate only the given docId ranges (WAND phases). */
-  private[search] def evalRanges(q: Query, mode: ScoreMode,
-      ranges: RangeSel, k: Int): TopDocs =
-    searchFiltered(q, k, mode, Some(ranges))
-
-  private def searchFiltered(q: Query, k: Int, mode: ScoreMode,
-      rangeFilter: Option[RangeSel], after: Option[ScoredDoc] = None): TopDocs = {
-    // cursor gate (searchAfter): matches at-or-before the cursor still COUNT
-    // but never enter a heap — captured by value in executor closures
-    val afterOk: ScoredDoc => Boolean = after match {
-      case None => _ => true
-      case Some(a) => sd => sd.score < a.score || (sd.score == a.score && sd.docId > a.docId)
-    }
-
+  private def topK(q: Query, k: Int, mode: ScoreMode, after: Option[ScoredDoc]): TopDocs =
     Query.rewrite(expandPrefixes(q)) match {
-      case MatchAllQuery(b) =>
-        // all-docs path: one treeAggregate over the live-docs scan (same
-        // count+heap shape as the distributed tail below)
-        val ds = rangeFilter match {
-          case None => matchAllScored(b)
-          case Some(RangeSel.Ids(ids)) =>
-            val set = ids.toSet
-            val dpr = manifest.docsPerRange
-            matchAllScored(b).filter((sd: ScoredDoc) => set.contains(sd.docId / dpr))
-          case Some(RangeSel.Df(df)) =>
-            val dpr = manifest.docsPerRange
-            matchAllScored(b).toDF("docId", "score")
-              .withColumn("rangeId", expr(s"docId div ${dpr}L"))
-              .join(broadcast(df), Seq("rangeId"), "left_semi")
-              .select(col("docId"), col("score")).as[ScoredDoc]
-        }
-        val (total, heap) = ds.rdd.treeAggregate((0L, new BoundedHitQueue(k)))(
-          seqOp = (acc: (Long, BoundedHitQueue), sd: ScoredDoc) => {
-            if (afterOk(sd)) acc._2.insert(sd.docId, sd.score); (acc._1 + 1, acc._2)
-          },
-          combOp = (a: (Long, BoundedHitQueue), b2: (Long, BoundedHitQueue)) =>
-            (a._1 + b2._1, a._2.merge(b2._2)),
-          depth = 2)
-        return TopDocs(total, heap.toSortedArray)
-      case _ => ()
+      case MatchAllQuery(b) => collectTopK(matchAllScored(b), k, after)
+      case _ => searchFiltered(prepare(q, mode), k, None, after)
     }
-    val p = prepare(q, mode)
 
+  /** Evaluate a prepared plan over the given docId ranges, or over all of
+    * them (WAND phases and its exhaustive fallback).
+    */
+  private[search] def evalRanges(p: Prepared, ranges: Option[RangeSel], k: Int): TopDocs =
+    searchFiltered(p, k, ranges, None)
+
+  private def searchFiltered(p: Prepared, k: Int, rangeFilter: Option[RangeSel],
+      after: Option[ScoredDoc]): TopDocs = {
     // singleton pulsing (reference postingsWriter.go:412-417,571-575): when
     // EVERY present query term has docFreq == 1, its docId is already inlined
     // in the terms dict and its freq equals its totalTermFreq — the ≤1024
@@ -1443,14 +1441,7 @@ final class IndexSearcher(
             null: Array[Byte], null: Array[Long])
         }
       }.toArray
-      val heap = new BoundedHitQueue(k)
-      var total = 0L
-      rows.groupBy(_._3).foreach { case (rangeId, rs) =>
-        p.ge.eval(rangeId, rs.iterator).foreach { sd =>
-          total += 1; if (afterOk(sd)) heap.insert(sd.docId, sd.score)
-        }
-      }
-      return TopDocs(total, heap.toSortedArray)
+      return localTopK(p, rows, k, after)
     }
 
     val dfSum = p.keys.map(k => p.stats.get(k).map(_.docFreq).getOrElse(0L)).sum
@@ -1468,58 +1459,64 @@ final class IndexSearcher(
       case RangeSel.Ids(rs) => rs.size <= 256
       case _ => false
     }
-    if (localOk || smallRangeList) {
-      // local fast path: fetch the (few) posting rows, evaluate on the
-      // driver — ranges decode/score in parallel (the serial loop was a
-      // single-threaded latency floor at the 2M-posting threshold).
-      // Unfiltered fetches go through the per-term row cache: a repeated
-      // query term costs zero Spark jobs on this searcher
-      val rows =
-        if (rangeFilter.isEmpty) collectRows(p)
-        else rowsFor(p, rangeFilter).collect()
-      val grouped = rows.groupBy(_._3).toSeq
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val partials = Await.result(
-        Future.sequence(grouped.map { case (rangeId, rs) => Future {
-          val h = new BoundedHitQueue(k)
-          var c = 0L
-          p.ge.eval(rangeId, rs.iterator).foreach { sd =>
-            c += 1; if (afterOk(sd)) h.insert(sd.docId, sd.score)
-          }
-          (c, h.toSortedArray)
-        }}), scala.concurrent.duration.Duration.Inf)
-      val heap = new BoundedHitQueue(k)
-      var total = 0L
-      partials.foreach { case (c, hits) =>
-        total += c
-        hits.foreach(h => heap.insert(h.docId, h.score))
-      }
-      TopDocs(total, heap.toSortedArray)
-    } else {
-      val geB = spark.sparkContext.broadcast(p.ge)
-      val scored =
-        if (p.keys.size <= 1)
-          rowsFor(p, rangeFilter).mapPartitions { it =>
-            val ge = geB.value
-            it.flatMap(r => ge.eval(r._3, Iterator.single(r)))
-          }
-        else
-          rowsFor(p, rangeFilter).groupByKey(_._3)
-            .flatMapGroups((rangeId: Long, it: Iterator[PRow]) =>
-              geB.value.eval(rangeId, it))
-      // per-partition heaps merge in O(log P) combiner rounds (treeAggregate,
-      // depth 2): the driver receives O(√P) pre-merged k-heaps instead of P —
-      // at 10^5 partitions × k=1000 a flat collect would ship 10^8 rows
-      val (total, heap) = scored.rdd.treeAggregate((0L, new BoundedHitQueue(k)))(
-        seqOp = (acc: (Long, BoundedHitQueue), sd: ScoredDoc) => {
-          if (afterOk(sd)) acc._2.insert(sd.docId, sd.score); (acc._1 + 1, acc._2)
-        },
-        combOp = (a: (Long, BoundedHitQueue), b: (Long, BoundedHitQueue)) =>
-          (a._1 + b._1, a._2.merge(b._2)),
-        depth = 2)
-      TopDocs(total, heap.toSortedArray)
-    }
+    // local fast path: fetch the (few) posting rows, evaluate on the driver.
+    // Unfiltered fetches go through the per-term row cache: a repeated
+    // query term costs zero Spark jobs on this searcher
+    if (localOk || smallRangeList)
+      localTopK(p,
+        if (rangeFilter.isEmpty) collectRows(p) else rowsFor(p, rangeFilter).collect(),
+        k, after)
+    else collectTopK(scored(p, rangeFilter), k, after)
+  }
+
+  /** Cursor gate (searchAfter): matches at-or-before the cursor still COUNT
+    * but never enter a heap — captured by value in executor closures.
+    */
+  private def afterGate(after: Option[ScoredDoc]): ScoredDoc => Boolean = after match {
+    case None => _ => true
+    case Some(a) => sd => sd.score < a.score || (sd.score == a.score && sd.docId > a.docId)
+  }
+
+  /** Driver-side count + top-k over posting rows already on the driver
+    * (fetched or synthesized): ranges decode and score in parallel (a
+    * serial loop was a single-threaded latency floor at the 2M-posting
+    * threshold), each into its own k-bounded heap.
+    */
+  private def localTopK(p: Prepared, rows: Array[PRow], k: Int,
+      after: Option[ScoredDoc]): TopDocs = {
+    val keep = afterGate(after)
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val partials = Await.result(
+      Future.sequence(rows.groupBy(_._3).toSeq.map { case (rangeId, rs) => Future {
+        val h = new BoundedHitQueue(k)
+        var c = 0L
+        p.ge.eval(rangeId, rs.iterator).foreach { sd =>
+          c += 1; if (keep(sd)) h.insert(sd.docId, sd.score)
+        }
+        (c, h)
+      }}), scala.concurrent.duration.Duration.Inf)
+    val heap = new BoundedHitQueue(k)
+    partials.foreach { case (_, h) => heap.merge(h) }
+    TopDocs(partials.map(_._1).sum, heap.toSortedArray)
+  }
+
+  /** Distributed count + top-k: per-partition heaps merge in O(log P)
+    * combiner rounds (treeAggregate, depth 2) — the driver receives O(√P)
+    * pre-merged k-heaps instead of P; at 10^5 partitions × k=1000 a flat
+    * collect would ship 10^8 rows.
+    */
+  private def collectTopK(scored: Dataset[ScoredDoc], k: Int,
+      after: Option[ScoredDoc]): TopDocs = {
+    val keep = afterGate(after)
+    val (total, heap) = scored.rdd.treeAggregate((0L, new BoundedHitQueue(k)))(
+      seqOp = (acc: (Long, BoundedHitQueue), sd: ScoredDoc) => {
+        if (keep(sd)) acc._2.insert(sd.docId, sd.score); (acc._1 + 1, acc._2)
+      },
+      combOp = (a: (Long, BoundedHitQueue), b: (Long, BoundedHitQueue)) =>
+        (a._1 + b._1, a._2.merge(b._2)),
+      depth = 2)
+    TopDocs(total, heap.toSortedArray)
   }
 }
 

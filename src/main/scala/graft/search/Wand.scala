@@ -84,9 +84,17 @@ object Wand {
   }
 
   /** Pruned top-k for ANY query tree of term/phrase leaves and nested
-    * booleans (MUST/SHOULD/MUST_NOT at every level, any minShouldMatch) —
-    * the bound tree mirrors the compiled plan recursively, so nothing falls
-    * back to exhaustive search except the all-singleton shortcut below.
+    * booleans (MUST/SHOULD/FILTER/MUST_NOT at every level, any
+    * minShouldMatch, dismax, constant score) — the bound tree is derived
+    * from the plan the searcher compiled, so nothing falls back to
+    * exhaustive search except the shortcuts below.
+    *
+    * totalHits: EXACT (`totalHitsIsLowerBound == false`) when an exhaustive
+    * path answers — a query with no term leaves or only df=1 terms, the
+    * row-cache shortcut, or too few phase-1 candidates; a LOWER BOUND
+    * (`totalHitsIsLowerBound == true`) when pruning ran, since skipped
+    * ranges are never counted. The top-k (docIds and scores) is identical
+    * to exhaustive search either way.
     */
   def searchTopK(searcher: IndexSearcher, q0: Query, k: Int,
       mode: ScoreMode = ScoreMode.Ref32, phase1Ranges: Int = 64,
@@ -102,26 +110,25 @@ object Wand {
     // already in the searcher's row cache (and the driver-local bound
     // holds), the exhaustive driver-local path answers with ZERO Spark jobs
     // — WAND's two-phase plan would launch jobs to avoid reads the cache
-    // already paid for. The top-k is identical (pruned ≡ exhaustive is the
-    // pinned invariant); totalHits comes back EXACT (lowerBound = false)
-    // instead of pruned. `cachedShortcut = false` opts out for callers that
-    // pin pruning behavior itself (WandSpec's graded-corpus test).
+    // already paid for. `cachedShortcut = false` opts out for callers that
+    // pin pruning behavior itself (the WAND parity specs).
     else if (cachedShortcut && searcher.servesFromRowCache(q))
       searcher.search(q, k, mode)
-    else pruned(searcher, q, k, mode, phase1Ranges)
+    else pruned(searcher, searcher.prepare(q, mode), k, phase1Ranges)
   }
 
   /** Serializable range-bound tree mirroring the compiled query plan: one
     * node per scoring clause (a term duplicated across clauses scores once
     * per clause in Eval, so each clause carries its OWN scorer and bounds
-    * sum per clause). MUST_NOT children are dropped entirely — they only
-    * remove docs, so ignoring them keeps the bound an upper bound and the
-    * eligibility a superset. `BNever` marks a subtree that can match
-    * nowhere (a term/phrase member with no dictionary entry).
+    * sum per clause). Leaves name their term by its index into the plan's
+    * keys. MUST_NOT children are dropped entirely — they only remove docs,
+    * so ignoring them keeps the bound an upper bound and the eligibility a
+    * superset. `BNever` marks a subtree that can match nowhere (a
+    * term/phrase member with no dictionary entry).
     */
   private sealed trait BNode extends Serializable
-  private final case class BTerm(fkey: String, scorer: BScorer) extends BNode
-  private final case class BPhrase(fkeys: Array[String], scorer: BScorer, slop: Int) extends BNode
+  private final case class BTerm(idx: Int, scorer: BScorer) extends BNode
+  private final case class BPhrase(idxs: Array[Int], scorer: BScorer, slop: Int) extends BNode
   /** `filters` are Occur.FILTER children: gate eligibility like MUST,
     * contribute exactly 0 to the bound (they never score).
     */
@@ -136,34 +143,68 @@ object Wand {
   private final case class BConst(child: BNode, score: Float) extends BNode
   private case object BNever extends BNode
 
-  /** Per-range (bound, canMatch) over the tree given the range's per-key
-    * (maxFreq, minDl) row lists. MUST bounds sum raw (negative-scoring LM
-    * models: every MUST clause matches), SHOULD bounds clamp at 0 (a
-    * non-matching clause contributes 0 — a common term's negative bound must
-    * not drag the range below a doc matching only the rare term).
-    * Eligibility: every MUST child matchable, >= msm SHOULD children
-    * matchable, and — with no MUSTs — at least one scoring child matchable
-    * (terms cannot match from another range).
+  /** Bound tree of a compiled plan. Leaves reuse the plan's normalized
+    * scorers — the arithmetic the evaluation runs in (advisor round-3 fix:
+    * ExactDouble bounds come from the exact scorers, Ref32 keeps the
+    * safe-byte float32 bound, so tau and bounds share one arithmetic). A
+    * BooleanQuery whose MUST or FILTER child can match nowhere collapses to
+    * BNever.
+    */
+  private def boundTree(n: CNode, exactMode: Boolean): BNode = {
+    def sc(ref: Similarity.Scorer, exact: Similarity.ExactScorer): BScorer =
+      if (exactMode) ExactB(exact) else FloatB(ref)
+    def walk(n: CNode): BNode = n match {
+      case CLeafTerm(idx, _, ref, exact) => if (idx < 0) BNever else BTerm(idx, sc(ref, exact))
+      case CLeafPhrase(idxs, _, ref, exact, slop) => BPhrase(idxs, sc(ref, exact), slop)
+      case CBool(must0, should0, filters0, _, msm, _) =>
+        val must = must0.map(walk)
+        // an unmatchable SHOULD clause never counts toward msm
+        val should = should0.map(walk).filter(_ != BNever)
+        val filters = filters0.map(walk)
+        if (must.contains(BNever) || filters.contains(BNever)) BNever
+        else if (should.length < msm) BNever
+        else if (must.isEmpty && should.isEmpty && filters.isEmpty) BNever
+        else BBool(must, should, filters, msm)
+      case CDisMax(cs, tie) =>
+        val children = cs.map(walk).filter(_ != BNever)
+        if (children.isEmpty) BNever else BDisMax(children, tie)
+      case CConst(child, s) =>
+        walk(child) match { // child gates only; boost lives in the constant
+          case BNever => BNever
+          case c => BConst(c, s)
+        }
+    }
+    walk(n)
+  }
+
+  /** Per-range (bound, canMatch) over the tree given the range's per-term
+    * (maxFreq, minDl) row lists (null = the term has no row in the range).
+    * MUST bounds sum raw (negative-scoring LM models: every MUST clause
+    * matches), SHOULD bounds clamp at 0 (a non-matching clause contributes
+    * 0 — a common term's negative bound must not drag the range below a doc
+    * matching only the rare term). Eligibility: every MUST child matchable,
+    * >= msm SHOULD children matchable, and — with no MUSTs — at least one
+    * scoring child matchable (terms cannot match from another range).
     */
   private def evalNode(n: BNode,
-      byKey: scala.collection.Map[String, scala.collection.mutable.ArrayBuffer[(Int, Int)]]): (Double, Boolean) =
+      byIdx: Array[scala.collection.mutable.ArrayBuffer[(Int, Int)]]): (Double, Boolean) =
     n match {
-      case BTerm(fk, sc) => byKey.get(fk) match {
-        case Some(rs) => (rs.iterator.map(e => sc.bound(e._1, e._2)).sum, true)
-        case None => (0.0, false)
+      case BTerm(idx, sc) => byIdx(idx) match {
+        case null => (0.0, false)
+        case rs => (rs.iterator.map(e => sc.bound(e._1, e._2)).sum, true)
       }
-      case BPhrase(fks, sc, slop) =>
+      case BPhrase(idxs, sc, slop) =>
         // slop=0: phraseFreq <= min over members of the range's maxFreq.
         // slop>0: matches anchor on the FIRST member's positions, and one
         // later-member position can serve MANY anchors — only the first
         // member's maxFreq bounds the count. Either way a matching doc
         // contains EVERY member, so max over members' minDl is a valid dl
         // lower bound (a sloppy match still requires every member present).
-        if (fks.forall(byKey.contains)) {
+        if (idxs.forall(byIdx(_) != null)) {
           val maxF =
-            if (slop == 0) fks.iterator.map(fk => byKey(fk).iterator.map(_._1).max).min
-            else byKey(fks(0)).iterator.map(_._1).max
-          val minDl = fks.iterator.map(fk => byKey(fk).iterator.map(_._2).min).max
+            if (slop == 0) idxs.iterator.map(i => byIdx(i).iterator.map(_._1).max).min
+            else byIdx(idxs(0)).iterator.map(_._1).max
+          val minDl = idxs.iterator.map(i => byIdx(i).iterator.map(_._2).min).max
           (sc.bound(maxF, minDl), true)
         } else (0.0, false)
       case BBool(must, should, filters, msm) =>
@@ -171,21 +212,21 @@ object Wand {
         var ok = true
         var i = 0
         while (i < must.length) {
-          val (b, e) = evalNode(must(i), byKey)
+          val (b, e) = evalNode(must(i), byIdx)
           if (!e) ok = false
           bound += b
           i += 1
         }
         i = 0
         while (i < filters.length) { // gate like MUST, bound contribution 0
-          val (_, e) = evalNode(filters(i), byKey)
+          val (_, e) = evalNode(filters(i), byIdx)
           if (!e) ok = false
           i += 1
         }
         var sat = 0
         i = 0
         while (i < should.length) {
-          val (b, e) = evalNode(should(i), byKey)
+          val (b, e) = evalNode(should(i), byIdx)
           if (e) { sat += 1; bound += math.max(0.0, b) }
           i += 1
         }
@@ -198,7 +239,7 @@ object Wand {
         var any = false
         var i = 0
         while (i < children.length) {
-          val (b, e) = evalNode(children(i), byKey)
+          val (b, e) = evalNode(children(i), byIdx)
           if (e) {
             any = true
             sm += b
@@ -208,177 +249,48 @@ object Wand {
         }
         if (any) (mx + tie.toDouble * (sm - mx), true) else (0.0, false)
       case BConst(child, s) =>
-        val (_, e) = evalNode(child, byKey)
+        val (_, e) = evalNode(child, byIdx)
         (if (e) s.toDouble else 0.0, e)
       case BNever => (0.0, false)
     }
 
-  private def pruned(searcher: IndexSearcher, q: Query,
-      k: Int, mode: ScoreMode, phase1Count: Int): TopDocs = {
+  private def pruned(searcher: IndexSearcher, p: Prepared, k: Int, phase1Count: Int): TopDocs = {
     val spark = searcher.sparkSession
     import spark.implicits._
-    def fld(of: Option[String]): String = of.getOrElse(searcher.field)
-    val stats = searcher.termStats(Query.leafKeys(q, searcher.field))
-    val sim = searcher.similarity
-    val exactMode = mode == ScoreMode.ExactDouble
-    def cs(f: String) = searcher.collectionStats(f)
-    def phraseMemberStats(p: PhraseQuery): Seq[TermStats] =
-      p.terms.map(t => stats((fld(p.field), t)))
-    // the searcher compiles a phrase's normalization weight from composite
-    // stats (min member df, summed ttf) -- replicate exactly (compile.v/vD)
-    def phraseCompositeStats(p: PhraseQuery): TermStats = {
-      val ms = phraseMemberStats(p)
-      TermStats(fld(p.field), p.terms.mkString(" "),
-        ms.map(_.docFreq).min, ms.map(_.totalTermFreq).sum)
-    }
-    def phrasePresent(p: PhraseQuery): Boolean =
-      p.terms.forall(t => stats.contains((fld(p.field), t)))
-
-    // replicate the searcher's queryNorm recursion (compile.v / compile.vD)
-    // so TF-IDF-style similarities (qn != 1) cannot score above an
-    // unnormalized bound; coord <= 1 at every nesting level only lowers
-    // evaluated scores, so summing unscaled leaf bounds stays safe
-    def vF(q0: Query, topBoost: Float): Float = q0 match {
-      case TermQuery(t, boost, f) =>
-        stats.get((fld(f), t))
-          .map(ts => sim.valueForNormalization(ts, cs(fld(f)), boost * topBoost))
-          .getOrElse(0f)
-      case p @ PhraseQuery(_, boost, f, _) =>
-        if (phrasePresent(p))
-          sim.valueForNormalization(phraseCompositeStats(p), cs(fld(f)), boost * topBoost)
-        else 0f
-      case BooleanQuery(clauses, _, boost) =>
-        // FILTER clauses never score: no queryNorm contribution
-        clauses.filter(c => c.occur != Occur.MUST_NOT && c.occur != Occur.FILTER)
-          .map(c => vF(c.query, boost * topBoost)).sum
-      case DisMaxQuery(cs0, _, boost) => cs0.map(c => vF(c, boost * topBoost)).sum
-      case ConstantScoreQuery(_, _) => 0f // constant never normalized
-      case q1: MatchAllQuery => throw new IllegalArgumentException(
-        s"$q1 inside a BooleanQuery is not supported — use it top-level or " +
-          "as FilteredQuery(MatchAllQuery(), filter)")
-      case p: MultiTermQuery => throw new IllegalStateException(
-        s"unexpanded $p — expandPrefixes must run before compile")
-    }
-    def vD(q0: Query, topBoost: Double): Double = q0 match {
-      case TermQuery(t, boost, f) =>
-        stats.get((fld(f), t))
-          .map(ts => sim.exactValueForNormalization(ts, cs(fld(f)), boost.toDouble * topBoost))
-          .getOrElse(0.0)
-      case p @ PhraseQuery(_, boost, f, _) =>
-        if (phrasePresent(p))
-          sim.exactValueForNormalization(phraseCompositeStats(p), cs(fld(f)), boost.toDouble * topBoost)
-        else 0.0
-      case BooleanQuery(clauses, _, boost) =>
-        clauses.filter(c => c.occur != Occur.MUST_NOT && c.occur != Occur.FILTER)
-          .map(c => vD(c.query, boost.toDouble * topBoost)).sum
-      case DisMaxQuery(cs0, _, boost) => cs0.map(c => vD(c, boost.toDouble * topBoost)).sum
-      case ConstantScoreQuery(_, _) => 0.0 // constant never normalized
-      case q1: MatchAllQuery => throw new IllegalArgumentException(
-        s"$q1 inside a BooleanQuery is not supported — use it top-level or " +
-          "as FilteredQuery(MatchAllQuery(), filter)")
-      case p: MultiTermQuery => throw new IllegalStateException(
-        s"unexpanded $p — expandPrefixes must run before compile")
-    }
-    val qn = sim.queryNorm(math.max(vF(q, 1.0f), Float.MinPositiveValue))
-    val qnD = sim.exactQueryNorm(math.max(vD(q, 1.0), Double.MinPositiveValue))
-
-    // NUL-joined (field, term) key (an escaped literal, NOT a raw byte --
-    // keeps the source text); NUL stays unambiguous even when keyword-field
-    // values contain spaces
-    val sep = "\u0000"
-    def fkey(kk: (String, String)): String = kk._1 + sep + kk._2
-
-    // mode-matched bounds (advisor round-3 fix): ExactDouble evaluation gets
-    // float64 bounds from the exact scorers; Ref32 keeps the safe-byte
-    // float32 bound. tau and bound then share one arithmetic.
-    def termB(tq: TermQuery): BScorer = {
-      val kk = (fld(tq.field), tq.term)
-      if (exactMode)
-        ExactB(sim.exactTermScorer(stats(kk), cs(kk._1), tq.boost.toDouble).normalize(qnD))
-      else FloatB(sim.termScorer(stats(kk), cs(kk._1), tq.boost).normalize(qn))
-    }
-    def phraseB(p: PhraseQuery): BScorer = {
-      val fn = fld(p.field)
-      if (exactMode)
-        ExactB(sim.exactPhraseScorer(phraseMemberStats(p), cs(fn), p.boost.toDouble).normalize(qnD))
-      else FloatB(sim.phraseScorer(phraseMemberStats(p), cs(fn), p.boost).normalize(qn))
-    }
-
-    // Query -> bound tree, mirroring compile.node's boost threading. A
-    // BooleanQuery whose MUST child can match nowhere collapses to BNever.
-    def build(q0: Query, topBoost: Float): BNode = q0 match {
-      case tq @ TermQuery(t, boost, f) =>
-        if (stats.contains((fld(f), t)))
-          BTerm(fkey((fld(f), t)), termB(TermQuery(t, boost * topBoost, f)))
-        else BNever
-      case p @ PhraseQuery(ts, boost, f, slop) =>
-        if (phrasePresent(p))
-          BPhrase(ts.map(t => fkey((fld(f), t))).toArray,
-            phraseB(PhraseQuery(ts, boost * topBoost, f, slop)), slop)
-        else BNever
-      case BooleanQuery(clauses, msm, boost) =>
-        val b = boost * topBoost
-        val must = clauses.filter(_.occur == Occur.MUST).map(c => build(c.query, b))
-        val should = clauses.filter(_.occur == Occur.SHOULD).map(c => build(c.query, b))
-          .filter(_ != BNever) // an unmatchable SHOULD clause never counts toward msm
-        val filters = clauses.filter(_.occur == Occur.FILTER).map(c => build(c.query, b))
-        if (must.contains(BNever) || filters.contains(BNever)) BNever
-        else if (should.size < msm) BNever
-        else if (must.isEmpty && should.isEmpty && filters.isEmpty) BNever
-        else BBool(must.toArray, should.toArray, filters.toArray, msm)
-      case DisMaxQuery(cs, tie, boost) =>
-        val children = cs.map(c => build(c, boost * topBoost)).filter(_ != BNever)
-        if (children.isEmpty) BNever else BDisMax(children.toArray, tie)
-      case ConstantScoreQuery(q1, s) =>
-        build(q1, 1.0f) match { // child gates only; boost lives in the constant
-          case BNever => BNever
-          case child => BConst(child, s)
-        }
-      // same guided error the exhaustive compile path throws (a raw
-      // MatchError here would hide the FilteredQuery guidance)
-      case q1: MatchAllQuery => throw new IllegalArgumentException(
-        s"$q1 inside a BooleanQuery is not supported — use it top-level or " +
-          "as FilteredQuery(MatchAllQuery(), filter)")
-      case p: MultiTermQuery => throw new IllegalStateException(
-        s"unexpanded $p — expandPrefixes must run before compile")
-    }
-    val root = build(q, 1.0f)
+    val root = boundTree(p.ge.planRoot, p.ge.scoreMode == ScoreMode.ExactDouble)
     if (root == BNever) return TopDocs(0, Array.empty)
 
-    // keys the tree actually scores (MUST_NOT and unmatchable leaves are out)
-    def treeKeys(n: BNode): Seq[String] = n match {
-      case BTerm(fk, _) => Seq(fk)
-      case BPhrase(fks, _, _) => fks.toSeq
-      // filter keys are needed for ELIGIBILITY even though they never score
-      case BBool(m, s0, f0, _) => (m ++ s0 ++ f0).flatMap(treeKeys).toSeq
-      case BDisMax(cs0, _) => cs0.flatMap(treeKeys).toSeq
-      case BConst(c0, _) => treeKeys(c0)
+    // terms the tree actually scores (MUST_NOT and unmatchable leaves are out)
+    def treeIdxs(n: BNode): Seq[Int] = n match {
+      case BTerm(idx, _) => Seq(idx)
+      case BPhrase(idxs, _, _) => idxs.toSeq
+      // filter terms are needed for ELIGIBILITY even though they never score
+      case BBool(m, s0, f0, _) => (m ++ s0 ++ f0).flatMap(treeIdxs).toSeq
+      case BDisMax(cs0, _) => cs0.flatMap(treeIdxs).toSeq
+      case BConst(c0, _) => treeIdxs(c0)
       case BNever => Nil
     }
-    val scoringKeys = treeKeys(root).distinct.map { enc =>
-      val i = enc.indexOf(sep)
-      (enc.substring(0, i), enc.substring(i + 1))
-    }
-    if (scoringKeys.isEmpty) return TopDocs(0, Array.empty)
+    val scoringKeys = treeIdxs(root).distinct.map(p.keys)
 
     // per-range bound + eligibility in ONE typed pass over the range's
     // metadata rows (groupByKey on rangeId): <= #query keys x #live waves
     // entries of a few bytes each per group -- a bounded buffer, never
     // O(docs). Typed rows, no string codec (round-4 judge fix: the former
     // concat_ws encoding would break on a term containing the separator).
-    val rootB = root
+    val termIdx = p.keys.zipWithIndex.toMap
+    val nTerms = p.keys.size
     val eligible = searcher.postingRowsMeta(scoringKeys)
       .select(col("field"), col("term"), col("rangeId"), col("maxFreq"), col("minDl"))
       .as[(String, String, Long, Int, Int)]
       .groupByKey(_._3)
       .mapGroups { (rangeId: Long, it: Iterator[(String, String, Long, Int, Int)]) =>
-        val byKey = scala.collection.mutable.HashMap
-          .empty[String, scala.collection.mutable.ArrayBuffer[(Int, Int)]]
+        val byIdx = new Array[scala.collection.mutable.ArrayBuffer[(Int, Int)]](nTerms)
         it.foreach { case (f, t, _, maxFreq, minDl) =>
-          byKey.getOrElseUpdate(f + sep + t,
-            scala.collection.mutable.ArrayBuffer.empty) += ((maxFreq, minDl))
+          val i = termIdx((f, t))
+          if (byIdx(i) == null) byIdx(i) = scala.collection.mutable.ArrayBuffer.empty
+          byIdx(i) += ((maxFreq, minDl))
         }
-        val (b, e) = evalNode(rootB, byKey)
+        val (b, e) = evalNode(root, byIdx)
         (rangeId, b, e)
       }
       .toDF("rangeId", "rangeBound", "eligible")
@@ -390,11 +302,11 @@ object Wand {
       .limit(phase1Count).as[(Long, Double)].collect()
     if (phase1.isEmpty) return TopDocs(0, Array.empty)
     val phase1Set = phase1.map(_._1).toSet
-    val r1 = searcher.evalRanges(q, mode, RangeSel.Ids(phase1Set.toSeq), k)
+    val r1 = searcher.evalRanges(p, Some(RangeSel.Ids(phase1Set.toSeq)), k)
     if (r1.scoreDocs.length < k) {
       // not enough candidates among the best ranges → exhaustive (rare:
       // k larger than phase-1 coverage)
-      return searcher.search(q, k, mode)
+      return searcher.evalRanges(p, None, k)
     }
     val tau = r1.scoreDocs.last.score
 
@@ -416,7 +328,7 @@ object Wand {
       val sel =
         if (probe.length <= SurvivorCollectMax) RangeSel.Ids(probe.toSeq)
         else RangeSel.Df(survivorsDF)
-      val r2 = searcher.evalRanges(q, mode, sel, k)
+      val r2 = searcher.evalRanges(p, Some(sel), k)
       r2.scoreDocs.foreach(d => merged.insert(d.docId, d.score))
       total += r2.totalHits
     }

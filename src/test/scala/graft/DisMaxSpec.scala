@@ -109,7 +109,7 @@ class DisMaxSpec extends AnyFunSuite with SparkTestBase {
         BooleanClause(Occur.SHOULD, TermQuery("merge")))))
     for (q <- qs; mode <- Seq[ScoreMode](ScoreMode.Ref32, ScoreMode.ExactDouble)) {
       val ex = searcher.search(q, 10, mode)
-      val wd = Wand.searchTopK(searcher, q, 10, mode)
+      val wd = Wand.searchTopK(searcher, q, 10, mode, cachedShortcut = false)
       assert(ex.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
         wd.scoreDocs.map(d => (d.docId, d.score)).toSeq, s"q=$q mode=$mode")
     }

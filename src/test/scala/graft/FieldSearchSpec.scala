@@ -104,7 +104,8 @@ class FieldSearchSpec extends AnyFunSuite with SparkTestBase {
       BooleanClause(Occur.SHOULD, TermQuery("parser")),
       BooleanClause(Occur.SHOULD, TermQuery("buffer"))))
     val exact = searcher.search(q, 10, ScoreMode.Ref32)
-    val wand = Wand.searchTopK(searcher, q, 10, ScoreMode.Ref32, phase1Ranges = 4)
+    val wand = Wand.searchTopK(searcher, q, 10, ScoreMode.Ref32, phase1Ranges = 4,
+      cachedShortcut = false)
     assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
       exact.scoreDocs.map(d => (d.docId, d.score)).toSeq)
   }
@@ -287,5 +288,12 @@ class FieldSearchSpec extends AnyFunSuite with SparkTestBase {
     assert(ids1 == ids2)
 
     assert(CheckIndex.run(spark, dir).ok)
+  }
+
+  test("collection stats of a never-indexed field: None, or an error naming the field") {
+    assert(searcher.collectionStatsOpt("lang").nonEmpty)
+    assert(searcher.collectionStatsOpt("nosuch_field").isEmpty)
+    val e = intercept[IllegalArgumentException](searcher.collectionStats("nosuch_field"))
+    assert(e.getMessage.contains("nosuch_field"))
   }
 }

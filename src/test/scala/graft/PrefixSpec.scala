@@ -103,7 +103,7 @@ class PrefixSpec extends AnyFunSuite with SparkTestBase {
       BooleanClause(Occur.SHOULD, TermQuery("buffer"))))
     for (mode <- Seq[ScoreMode](ScoreMode.Ref32, ScoreMode.ExactDouble)) {
       val exact = searcher.search(q, 10, mode)
-      val wand = Wand.searchTopK(searcher, q, 10, mode, phase1Ranges = 4)
+      val wand = Wand.searchTopK(searcher, q, 10, mode, phase1Ranges = 4, cachedShortcut = false)
       assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
         exact.scoreDocs.map(d => (d.docId, d.score)).toSeq, s"mode=$mode")
     }
@@ -266,7 +266,7 @@ class PrefixSpec extends AnyFunSuite with SparkTestBase {
     }
     // boosts flow through WAND top-k identically (bounds are mode-matched)
     val viaWand = Wand.searchTopK(searcher, p.parse("scorer^2 merge"), 8,
-      ScoreMode.ExactDouble)
+      ScoreMode.ExactDouble, cachedShortcut = false)
     val exhaustive = searcher.search(p.parse("scorer^2 merge"), 8, ScoreMode.ExactDouble)
     assert(viaWand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
       exhaustive.scoreDocs.map(d => (d.docId, d.score)).toSeq)
@@ -333,7 +333,7 @@ class PrefixSpec extends AnyFunSuite with SparkTestBase {
       BooleanQuery(List(BooleanClause(Occur.SHOULD, TermQuery(rarer)))))
     // the MLT query searches like its hand-built twin, incl. through WAND
     val full = searcher.search(q, 10, ScoreMode.ExactDouble)
-    val wand = Wand.searchTopK(searcher, q, 10, ScoreMode.ExactDouble)
+    val wand = Wand.searchTopK(searcher, q, 10, ScoreMode.ExactDouble, cachedShortcut = false)
     assert(full.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
       wand.scoreDocs.map(d => (d.docId, d.score)).toSeq)
     assert(full.totalHits > 0)
@@ -428,6 +428,11 @@ class PrefixSpec extends AnyFunSuite with SparkTestBase {
     val e1 = intercept[IllegalArgumentException](
       searcher.search(RegexpQuery("(s+)+r"), 5, ScoreMode.Ref32))
     assert(e1.getMessage.contains("backtracking"))
+    for (rx <- Seq("(a*)*", "(ab+){3}", "(x(ab)+)*")) {
+      val e = intercept[IllegalArgumentException](
+        searcher.search(RegexpQuery(rx), 5, ScoreMode.Ref32))
+      assert(e.getMessage.contains("backtracking"), rx)
+    }
     // oversized pattern → rejected
     val e2 = intercept[IllegalArgumentException](
       searcher.search(RegexpQuery("s" * 300), 5, ScoreMode.Ref32))
@@ -435,5 +440,36 @@ class PrefixSpec extends AnyFunSuite with SparkTestBase {
     // the sane oracle-style pattern still works
     val ok = searcher.search(RegexpQuery("s[ct][a-z]+"), 5, ScoreMode.Ref32)
     assert(ok.totalHits > 0)
+  }
+
+  test("regexp guard: escaped and character-class quantifiers are not nested") {
+    // keyword values hold the literal '+'/'-' the patterns quantify over
+    val values = Seq("a+b", "a+ba+b", "ab", "+x", "-x+x", "x", "axax", "+x+x", "ax")
+    val dir = java.nio.file.Files.createTempDirectory("graft-rxguard").toString
+    val docs = values.zipWithIndex.map { case (v, i) =>
+      CodeFile(s"r$i", f"p$i%03d", "", v, s"doc$i")
+    }
+    val cfg = IndexConfig(analyzer = new StandardCodeAnalyzer(), docsPerRange = 16,
+      numSegments = 1, segmentsPerWave = 1, keywordFields = Seq("lang"))
+    new IndexBuilder(spark, cfg).build(docs.toDF(), dir)
+    val s = new IndexSearcher(spark, dir)
+    for (rx <- Seq("""(a\+b)*""", "([+-]x)*", "([a+]x){2}")) {
+      val expected = values.filter(_.matches(rx)).sorted
+      assert(expected.nonEmpty, s"fixture matches nothing for $rx")
+      val expanded = s.expandPrefixes(RegexpQuery(rx, field = Some("lang"))) match {
+        case BooleanQuery(cs, _, _) => cs.map(_.query).collect { case TermQuery(t, _, _) => t }
+        case other => fail(s"unexpected expansion $other")
+      }
+      assert(expanded == expected, rx)
+      assert(s.search(RegexpQuery(rx, field = Some("lang")), 20).totalHits == expected.size, rx)
+    }
+  }
+
+  test("expansion cache keys are typed: a prefix never reuses a regexp or fuzzy expansion") {
+    val s = new IndexSearcher(spark, indexPath)
+    assert(s.search(RegexpQuery("pars.*"), 5).totalHits > 0)
+    assert(s.search(PrefixQuery("rx pars.*"), 5).totalHits == 0)
+    assert(s.search(FuzzyQuery("parser", 1), 5).totalHits > 0)
+    assert(s.search(PrefixQuery("fz1 parser"), 5).totalHits == 0)
   }
 }

@@ -90,4 +90,35 @@ class RowCacheSpec extends AnyFunSuite with SparkTestBase {
     assert(again == warm)
     intercept[Exception](s.suggestTerms("sorr", 2, 5).collect())
   }
+
+  test("expansions and suggestions share the byte budget: a flood evicts the oldest") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-lru").toString
+    val cfg = IndexConfig(analyzer = new StandardCodeAnalyzer(),
+      docsPerRange = 128, numSegments = 4, segmentsPerWave = 4)
+    new IndexBuilder(spark, cfg).build(TestCorpus.corpus(400).toDF(), dir)
+    val truth = new IndexSearcher(spark, dir) // default budget
+    val s = new IndexSearcher(spark, dir)
+    s.rowCacheMaxBytes = 2048 // holds about two (prefix, suggestion) pairs
+    def suggest(x: IndexSearcher, in: String) = x.suggestTerms(in, 2, 5).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getInt(2))).toSeq
+    val inputs = (10 until 30).map(i => s"w$i") // TestCorpus terms w0..w499
+    val answers = inputs.map { p =>
+      val a = (suggest(s, p + "q"), s.expandPrefixes(PrefixQuery(p)))
+      assert(a == ((suggest(truth, p + "q"), truth.expandPrefixes(PrefixQuery(p)))), p)
+      assert(a._1.nonEmpty && a._2 != BooleanQuery(Nil), p)
+      a
+    }
+    def rm(f: java.io.File): Unit = {
+      if (f.isDirectory) f.listFiles().foreach(rm)
+      f.delete()
+    }
+    rm(new java.io.File(
+      graft.index.IndexManifest.load(spark, dir).termsLocation))
+    // the newest input is still served from the cache ...
+    assert(s.expandPrefixes(PrefixQuery(inputs.last)) == answers.last._2)
+    assert(suggest(s, inputs.last + "q") == answers.last._1)
+    // ... the first was evicted: re-computing it needs the deleted dictionary
+    intercept[Exception](s.expandPrefixes(PrefixQuery(inputs.head)))
+    intercept[Exception](suggest(s, inputs.head + "q"))
+  }
 }

@@ -120,7 +120,7 @@ class SloppyPhraseSpec extends AnyFunSuite with SparkTestBase {
         BooleanClause(Occur.SHOULD, TermQuery("pad")))))
     for (q <- qs; mode <- Seq[ScoreMode](ScoreMode.Ref32, ScoreMode.ExactDouble)) {
       val exact = s.search(q, 5, mode)
-      val wand = Wand.searchTopK(s, q, 5, mode, phase1Ranges = 1)
+      val wand = Wand.searchTopK(s, q, 5, mode, phase1Ranges = 1, cachedShortcut = false)
       assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
         exact.scoreDocs.map(d => (d.docId, d.score)).toSeq, s"parity $q mode=$mode")
     }
@@ -143,7 +143,7 @@ class SloppyPhraseSpec extends AnyFunSuite with SparkTestBase {
     assert(hits == Set(0L))
     for (mode <- Seq[ScoreMode](ScoreMode.Ref32, ScoreMode.ExactDouble)) {
       val exact = s2.search(q, 2, mode)
-      val wand = Wand.searchTopK(s2, q, 2, mode, phase1Ranges = 1)
+      val wand = Wand.searchTopK(s2, q, 2, mode, phase1Ranges = 1, cachedShortcut = false)
       assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
         exact.scoreDocs.map(d => (d.docId, d.score)).toSeq)
     }

@@ -23,9 +23,14 @@ class WandSpec extends AnyFunSuite with SparkTestBase {
   }
   private lazy val searcher = new IndexSearcher(spark, indexPath)
 
+  /** The WAND side runs with the row-cache shortcut off: the exhaustive
+    * search just filled the cache, and the shortcut would answer with that
+    * same exhaustive path instead of pruning.
+    */
   private def assertSafe(q: Query, k: Int, phase1: Int): Unit = {
     val exact = searcher.search(q, k, ScoreMode.Ref32)
-    val wand = Wand.searchTopK(searcher, q, k, ScoreMode.Ref32, phase1Ranges = phase1)
+    val wand = Wand.searchTopK(searcher, q, k, ScoreMode.Ref32, phase1Ranges = phase1,
+      cachedShortcut = false)
     assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
       exact.scoreDocs.map(d => (d.docId, d.score)).toSeq, s"top-k parity for $q")
     assert(wand.totalHits <= exact.totalHits)
@@ -35,6 +40,19 @@ class WandSpec extends AnyFunSuite with SparkTestBase {
   test("single hot term: pruned == exhaustive with tiny phase-1 budget") {
     assertSafe(TermQuery("import"), k = 10, phase1 = 4)
     assertSafe(TermQuery("parser"), k = 10, phase1 = 4)
+  }
+
+  test("row-cache shortcut: a warm cache answers exhaustively with exact totalHits") {
+    val s = new IndexSearcher(spark, indexPath)
+    val q = BooleanQuery(Seq(
+      BooleanClause(Occur.SHOULD, TermQuery("parser")),
+      BooleanClause(Occur.SHOULD, TermQuery("buffer"))))
+    val exact = s.search(q, 10, ScoreMode.Ref32) // fills the row cache
+    val wand = Wand.searchTopK(s, q, 10, ScoreMode.Ref32, phase1Ranges = 4)
+    assert(!wand.totalHitsIsLowerBound)
+    assert(wand.totalHits == exact.totalHits)
+    assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
+      exact.scoreDocs.map(d => (d.docId, d.score)).toSeq)
   }
 
   test("disjunction: pruned == exhaustive") {
@@ -121,7 +139,7 @@ class WandSpec extends AnyFunSuite with SparkTestBase {
           BooleanClause(Occur.SHOULD, TermQuery("import"))), minShouldMatch = 1))
       for (q <- qs; mode <- Seq[ScoreMode](ScoreMode.Ref32, ScoreMode.ExactDouble)) {
         val exact = s.search(q, 10, mode)
-        val wand = Wand.searchTopK(s, q, 10, mode, phase1Ranges = 4)
+        val wand = Wand.searchTopK(s, q, 10, mode, phase1Ranges = 4, cachedShortcut = false)
         assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
           exact.scoreDocs.map(d => (d.docId, d.score)).toSeq,
           s"${sim.getClass.getSimpleName}/$mode parity for $q")
@@ -145,7 +163,7 @@ class WandSpec extends AnyFunSuite with SparkTestBase {
         BooleanClause(Occur.SHOULD, TermQuery("scorer"))), minShouldMatch = 2))
     for (q <- shapes; mode <- Seq[ScoreMode](ScoreMode.Ref32, ScoreMode.ExactDouble)) {
       val exact = searcher.search(q, 10, mode)
-      val wand = Wand.searchTopK(searcher, q, 10, mode, phase1Ranges = 4)
+      val wand = Wand.searchTopK(searcher, q, 10, mode, phase1Ranges = 4, cachedShortcut = false)
       assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
         exact.scoreDocs.map(d => (d.docId, d.score)).toSeq, s"parity $q mode=$mode")
       assert(wand.totalHits <= exact.totalHits)
@@ -178,7 +196,7 @@ class WandSpec extends AnyFunSuite with SparkTestBase {
         BooleanClause(Occur.SHOULD, TermQuery("import")))))
     for (q <- shapes; mode <- Seq[ScoreMode](ScoreMode.Ref32, ScoreMode.ExactDouble)) {
       val exact = searcher.search(q, 10, mode)
-      val wand = Wand.searchTopK(searcher, q, 10, mode, phase1Ranges = 4)
+      val wand = Wand.searchTopK(searcher, q, 10, mode, phase1Ranges = 4, cachedShortcut = false)
       assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
         exact.scoreDocs.map(d => (d.docId, d.score)).toSeq, s"parity $q mode=$mode")
       assert(wand.totalHits <= exact.totalHits)
@@ -187,7 +205,7 @@ class WandSpec extends AnyFunSuite with SparkTestBase {
     val lm = new IndexSearcher(spark, indexPath, similarity = new LMJelinekMercerSimilarity)
     val q = p.parse("parser OR (buffer AND scorer)")
     val e = lm.search(q, 10, ScoreMode.Ref32)
-    val w = Wand.searchTopK(lm, q, 10, ScoreMode.Ref32, phase1Ranges = 4)
+    val w = Wand.searchTopK(lm, q, 10, ScoreMode.Ref32, phase1Ranges = 4, cachedShortcut = false)
     assert(w.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
       e.scoreDocs.map(d => (d.docId, d.score)).toSeq)
   }
@@ -209,7 +227,7 @@ class WandSpec extends AnyFunSuite with SparkTestBase {
     for (mode <- Seq[ScoreMode](ScoreMode.Ref32, ScoreMode.ExactDouble)) {
       val q = PhraseQuery(Seq("alpha", "beta"))
       val exact = s.search(q, 5, mode)
-      val wand = Wand.searchTopK(s, q, 5, mode, phase1Ranges = 2)
+      val wand = Wand.searchTopK(s, q, 5, mode, phase1Ranges = 2, cachedShortcut = false)
       assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
         exact.scoreDocs.map(d => (d.docId, d.score)).toSeq, s"b=0 parity mode=$mode")
     }
@@ -266,7 +284,8 @@ class WandSpec extends AnyFunSuite with SparkTestBase {
     val s = new IndexSearcher(spark, dir)
     for (k <- Seq(5, 17, 40); p1 <- Seq(1, 2, 4)) {
       val exact = s.search(TermQuery("edgeterm"), k, ScoreMode.Ref32)
-      val wand = Wand.searchTopK(s, TermQuery("edgeterm"), k, ScoreMode.Ref32, phase1Ranges = p1)
+      val wand = Wand.searchTopK(s, TermQuery("edgeterm"), k, ScoreMode.Ref32, phase1Ranges = p1,
+        cachedShortcut = false)
       assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
         exact.scoreDocs.map(d => (d.docId, d.score)).toSeq, s"k=$k phase1=$p1")
     }
@@ -279,7 +298,8 @@ class WandSpec extends AnyFunSuite with SparkTestBase {
         BooleanClause(Occur.MUST, TermQuery("parser")),
         BooleanClause(Occur.SHOULD, TermQuery("buffer")))))) {
       val exact = searcher.search(q, 10, ScoreMode.ExactDouble)
-      val wand = Wand.searchTopK(searcher, q, 10, ScoreMode.ExactDouble, phase1Ranges = 4)
+      val wand = Wand.searchTopK(searcher, q, 10, ScoreMode.ExactDouble, phase1Ranges = 4,
+        cachedShortcut = false)
       assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
         exact.scoreDocs.map(d => (d.docId, d.score)).toSeq, s"exact-mode parity for $q")
     }
@@ -320,7 +340,7 @@ class WandSpec extends AnyFunSuite with SparkTestBase {
       BooleanClause(Occur.SHOULD, TermQuery("yterm"))))
     val exact = s.search(q, 1, ScoreMode.Ref32)
     assert(exact.scoreDocs.head.docId == 0L) // score tie, smaller docId wins
-    val wand = Wand.searchTopK(s, q, 1, ScoreMode.Ref32, phase1Ranges = 1)
+    val wand = Wand.searchTopK(s, q, 1, ScoreMode.Ref32, phase1Ranges = 1, cachedShortcut = false)
     assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
       exact.scoreDocs.map(d => (d.docId, d.score)).toSeq,
       "bound==tau range pruned: tie-break winner lost")
@@ -369,7 +389,7 @@ class WandSpec extends AnyFunSuite with SparkTestBase {
       BooleanClause(Occur.SHOULD, TermQuery("buffer"))))
     for (mode <- Seq[ScoreMode](ScoreMode.Ref32, ScoreMode.ExactDouble)) {
       val exact = s2.search(q, 10, mode)
-      val wand = Wand.searchTopK(s2, q, 10, mode, phase1Ranges = 4)
+      val wand = Wand.searchTopK(s2, q, 10, mode, phase1Ranges = 4, cachedShortcut = false)
       assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
         exact.scoreDocs.map(d => (d.docId, d.score)).toSeq, s"PY mixed-corpus parity $mode")
     }
