@@ -363,10 +363,14 @@ object FtQueries {
       .select(col("doc_id"), round(col("score"), 4).as("score_r"))
       .orderBy("doc_id")
 
-  /** Per-shard WAND merged top-k through the sharded pair. */
+  /** Per-shard WAND merged top-k through the sharded pair — its own pair,
+    * whose shards' zero driver-local bound keeps every shard pruning.
+    */
   def shardedWandTopK(spark: SparkSession, sfDir: String, q: Query, k: Int): DataFrame = {
     import spark.implicits._
-    multiSearcher(spark, sfDir).searchWand(q, k, ScoreMode.ExactDouble)
+    val m = multiCache.getOrElseUpdate(s"$sfDir#wand", MultiSearcher(spark, shardPaths(spark, sfDir)))
+    m.shards.foreach(_.localSearchMaxPostings = 0)
+    m.searchWand(q, k, ScoreMode.ExactDouble)
       .scoreDocs.map(d => (d.docId, d.score)).toSeq
       .toDF("doc_id", "score")
       .select(col("doc_id"), round(col("score"), 4).as("score_r"))
@@ -524,11 +528,14 @@ object FtQueries {
 
   /** Block-max WAND pruned top-k (Wand.searchTopK) — driver-verified against
     * the exhaustive SQL ranking, proving pruned ≡ exhaustive on real data
-    * (WandSpec asserts it property-style; this asserts it vs DuckDB).
+    * (WandSpec asserts it property-style; this asserts it vs DuckDB), on
+    * its own searcher whose zero driver-local bound keeps WAND pruning.
     */
   def wandTopKDF(spark: SparkSession, sfDir: String, q: Query, k: Int): DataFrame = {
     import spark.implicits._
-    Wand.searchTopK(searcher(spark, sfDir), q, k, ScoreMode.ExactDouble)
+    val s = searcherCache.getOrElseUpdate(s"$sfDir#wand", new IndexSearcher(spark, indexPath(spark, sfDir)))
+    s.localSearchMaxPostings = 0
+    Wand.searchTopK(s, q, k, ScoreMode.ExactDouble)
       .scoreDocs.map(d => (d.docId, d.score)).toSeq
       .toDF("doc_id", "score")
       .select(col("doc_id"), round(col("score"), 4).as("score_r"))

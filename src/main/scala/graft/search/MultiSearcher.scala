@@ -181,9 +181,10 @@ final class MultiSearcher private[search] (val shards: Seq[IndexSearcher],
   /** Block-max WAND per shard, merged: each shard's pruned top-k is a
     * superset of its members of the GLOBAL top-k (bounds use the seeded
     * merged stats), so the merge is exact on docs/scores. totalHits sums the
-    * shards' counts: exact when every shard answered exhaustively (see
+    * shards' counts: exact when no shard pruned (see
     * [[Wand.searchTopK]]), a lower bound — flagged by
-    * `totalHitsIsLowerBound` — as soon as one shard pruned.
+    * `totalHitsIsLowerBound` — as soon as one shard pruned, which follows
+    * posting volume against each shard's bound, never cache state.
     */
   def searchWand(q0: Query, k: Int, mode: ScoreMode = ScoreMode.Ref32,
       phase1Ranges: Int = 64): TopDocs = {

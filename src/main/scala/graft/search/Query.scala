@@ -281,7 +281,9 @@ object Query {
   * `totalHitsIsLowerBound` is set by the WAND-pruned path (which skips
   * ranges that provably cannot reach the top-k): top-k docs/scores remain
   * exact, the hit count becomes a ≥ bound — the TotalHits.Relation idea of
-  * modern Lucene, absent in the 4.10 reference.
+  * modern Lucene, absent in the 4.10 reference. WAND prunes only queries
+  * whose posting volume exceeds the searcher's `localSearchMaxPostings`,
+  * so the flag never depends on what a searcher has cached.
   */
 final case class TopDocs(totalHits: Long, scoreDocs: Array[ScoredDoc],
     totalHitsIsLowerBound: Boolean = false)

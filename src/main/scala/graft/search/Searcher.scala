@@ -82,6 +82,13 @@ private[search] final case class SuggestKey(input: String, maxEdits: Int, topN: 
     field: String) extends CacheKey[Seq[(String, Long, Int)]] {
   def weight(ss: Seq[(String, Long, Int)]): Long = 64L + ss.map(64L + 2L * _._1.length).sum
 }
+/** Stored-doc row of one docId (None: the docs table has no such doc). */
+private[search] final case class DocKey(docId: Long)
+    extends CacheKey[Option[graft.index.DocRow]] {
+  def weight(d: Option[graft.index.DocRow]): Long = 64L + d.fold(0L)(r =>
+    2L * (r.repo.length + r.path.length + r.commit.length + r.lang.length +
+      r.contentSha.length) + r.fieldDls.keys.map(48L + 2L * _.length).sum)
+}
 
 /** Per-doc leaf data assembled from decoded postings for one docId range. */
 private[search] final class RangeAccum(
@@ -486,31 +493,6 @@ final class IndexSearcher(
   private val singletonIds =
     scala.collection.concurrent.TrieMap.empty[(String, String), Long]
 
-  /** True when a rewritten+expanded query can be answered ENTIRELY from the
-    * driver-local caches: every (field, term, needPos) posting-row entry is
-    * in the row cache (absent terms count — their cached entry is the empty
-    * row set) and the cached df/ttf totals stay under the driver-local
-    * bound. Wand.searchTopK consults this to skip its two-phase plan when
-    * the exhaustive driver-local path would run with zero Spark jobs.
-    * Requires the query's stats to be cached already (callers fetch them
-    * first); ranged deletes disable the row cache, so they disable this.
-    */
-  private[search] def servesFromRowCache(q: Query): Boolean = {
-    if (rangedDeletes) return false
-    val keys = Query.leafKeys(q, field)
-    if (keys.isEmpty) return false
-    val pts = Query.phraseTerms(q, field)
-    if (!keys.forall(statsCache.contains)) return false
-    val dfSum = keys.map(k => statsCache(k).map(_.docFreq).getOrElse(0L)).sum
-    val posSum = keys.collect { case k if pts.contains(k) =>
-      statsCache(k).map(_.totalTermFreq).getOrElse(0L)
-    }.sum
-    dfSum <= localSearchMaxPostings && posSum <= localSearchMaxPostings &&
-      cache.synchronized {
-        keys.forall(k => cache.containsKey(RowsKey(k._1, k._2, pts.contains(k))))
-      }
-  }
-
   /** Driver-side stats lookup for the query's few (field, term) keys
     * (broadcast-join equivalent; the terms table never ships anywhere).
     * Cached per searcher — repeated query terms cost zero jobs (the
@@ -862,28 +844,35 @@ final class IndexSearcher(
 
   def sparkSession: SparkSession = spark
 
-  private lazy val docsDF: DataFrame = spark.read.parquet(s"$indexPath/docs")
+  /** Stored docs; version-1 indexes predate per-field dls and read an empty
+    * map (the per-field read paths fall back to dl), not an AnalysisException.
+    */
+  private lazy val docsDF: DataFrame = {
+    val d = spark.read.parquet(s"$indexPath/docs")
+    if (d.columns.contains("fieldDls")) d
+    else d.withColumn("fieldDls", typedLit(Map.empty[String, Int]))
+  }
 
   /** Stored-fields lookup (reference reader.Document(hit.Doc),
     * /root/reference/core/document/document.go:75-133): docId-pushdown
-    * parquet point read.
+    * parquet point read, once per call, of the docIds not in the LRU
+    * (`DocKey`), so a repeated lookup — every singleton hit makes one —
+    * costs zero jobs. Rows come back in `docIds` order, once each.
     */
   def doc(docId: Long): Option[graft.index.DocRow] = docs(Seq(docId)).headOption
 
   def docs(docIds: Seq[Long]): Seq[graft.index.DocRow] = {
     import spark.implicits._
-    val base = docsDF.where(col("docId").isin(docIds: _*))
-    // version-1 indexes predate per-field dls: degrade to an empty map (the
-    // per-field read paths fall back to dl) instead of an AnalysisException
-    val withFd =
-      if (base.columns.contains("fieldDls")) base
-      else base.withColumn("fieldDls",
-        map().cast(org.apache.spark.sql.types.MapType(
-          org.apache.spark.sql.types.StringType, org.apache.spark.sql.types.IntegerType)))
-    withFd
-      .select("docId", "segId", "repo", "path", "commit", "lang", "contentSha",
-        "dl", "norm", "fieldDls")
-      .as[graft.index.DocRow].collect().toSeq
+    val hits = docIds.distinct.map(id => id -> cacheGet(DocKey(id)))
+    val missing = hits.collect { case (id, None) => id }
+    val fetched =
+      if (missing.isEmpty) Map.empty[Long, graft.index.DocRow]
+      else docsDF.where(col("docId").isin(missing: _*))
+        .select("docId", "segId", "repo", "path", "commit", "lang", "contentSha",
+          "dl", "norm", "fieldDls")
+        .as[graft.index.DocRow].collect().map(d => d.docId -> d).toMap
+    missing.foreach(id => cachePut(DocKey(id), fetched.get(id)))
+    hits.flatMap { case (id, hit) => hit.getOrElse(fetched.get(id)) }
   }
 
   /** MoreLikeThis (Lucene's MLT module — never ported in the reference):
@@ -1252,11 +1241,12 @@ final class IndexSearcher(
     * holds everything a searcher derives from the index per query input:
     * collected posting rows per (field, term, positionsLoaded), so repeated
     * query terms cost ZERO Spark jobs; multi-term expansions; spelling
-    * suggestions. [[rowCacheMaxBytes]] bounds the whole; close() empties
-    * it. Row entries are bypassed under ranged deletes (rows would bake in a
-    * join product). Term and collection statistics stay out: MultiSearcher
-    * seeds merged values into them, and evicting one would silently
-    * re-fetch shard-local stats.
+    * suggestions; stored-doc rows per docId (`DocKey`, read by singleton
+    * hits and [[docs]]). [[rowCacheMaxBytes]] bounds the whole; close()
+    * empties it. Posting-row entries are bypassed under ranged deletes (rows
+    * would bake in a join product). Term and collection statistics stay
+    * out: MultiSearcher seeds merged values into them, and evicting one
+    * would silently re-fetch shard-local stats.
     */
   var rowCacheMaxBytes: Long = 64L << 20
   private var cacheBytes = 0L
@@ -1286,6 +1276,9 @@ final class IndexSearcher(
 
   private def cached[V](key: CacheKey[V])(compute: => V): V =
     cacheGet(key).getOrElse { val v = compute; cachePut(key, v); v }
+
+  /** Summed weight of the LRU's entries. */
+  private[graft] def cacheBytesInUse: Long = cache.synchronized(cacheBytes)
 
   /** Collected rows for a full-key (unfiltered) driver-local evaluation,
     * served from / inserted into the cache per term.
@@ -1369,9 +1362,22 @@ final class IndexSearcher(
   /** Query terms' summed docFreq below this → driver-local evaluation (one
     * fetch job, zero shuffles) — the Lucene-style per-node search path.
     * 2M postings ≈ a few MB of packed blocks and ~10 ms of local decode;
-    * only genuinely large result sets go distributed.
+    * only genuinely large result sets go distributed, and only they prune
+    * under [[Wand.searchTopK]] (0 pins WAND to its pruned plan).
     */
   var localSearchMaxPostings: Long = 2000000L
+
+  /** The path selector: a plan runs driver-local (one row fetch through
+    * the row cache) when summed docFreq, and summed totalTermFreq of the
+    * members whose positions load (a hot phrase term must not pull
+    * hundreds of MB onto the driver), are within [[localSearchMaxPostings]].
+    */
+  private[search] def fitsDriver(p: Prepared): Boolean = {
+    val stats = p.keys.map(p.stats.get)
+    val dfSum = stats.map(_.fold(0L)(_.docFreq)).sum
+    val posSum = stats.zip(p.ge.needPos).collect { case (Some(ts), true) => ts.totalTermFreq }.sum
+    dfSum <= localSearchMaxPostings && posSum <= localSearchMaxPostings
+  }
 
   /** Top-k with reference tie-break + TotalHits, in ONE distributed pass:
     * per-partition bounded heaps merge on the driver (treeAggregate shape).
@@ -1444,17 +1450,6 @@ final class IndexSearcher(
       return localTopK(p, rows, k, after)
     }
 
-    val dfSum = p.keys.map(k => p.stats.get(k).map(_.docFreq).getOrElse(0L)).sum
-    // positions scale with totalTermFreq, not docFreq — when the query needs
-    // posPayload, gate the driver-local collect on summed ttf too, or a hot
-    // phrase term could pull hundreds of MB of positions onto the driver
-    val posSum =
-      if (p.ge.needPos.exists(identity))
-        p.keys.zipWithIndex.collect { case (key, i) if p.ge.needPos(i) =>
-          p.stats.get(key).map(_.totalTermFreq).getOrElse(0L)
-        }.sum
-      else 0L
-    val localOk = dfSum <= localSearchMaxPostings && posSum <= localSearchMaxPostings
     val smallRangeList = rangeFilter.exists {
       case RangeSel.Ids(rs) => rs.size <= 256
       case _ => false
@@ -1462,7 +1457,7 @@ final class IndexSearcher(
     // local fast path: fetch the (few) posting rows, evaluate on the driver.
     // Unfiltered fetches go through the per-term row cache: a repeated
     // query term costs zero Spark jobs on this searcher
-    if (localOk || smallRangeList)
+    if (fitsDriver(p) || smallRangeList)
       localTopK(p,
         if (rangeFilter.isEmpty) collectRows(p) else rowsFor(p, rangeFilter).collect(),
         k, after)

@@ -86,35 +86,28 @@ object Wand {
   /** Pruned top-k for ANY query tree of term/phrase leaves and nested
     * booleans (MUST/SHOULD/FILTER/MUST_NOT at every level, any
     * minShouldMatch, dismax, constant score) — the bound tree is derived
-    * from the plan the searcher compiled, so nothing falls back to
-    * exhaustive search except the shortcuts below.
+    * from the plan the searcher compiled.
     *
-    * totalHits: EXACT (`totalHitsIsLowerBound == false`) when an exhaustive
-    * path answers — a query with no term leaves or only df=1 terms, the
-    * row-cache shortcut, or too few phase-1 candidates; a LOWER BOUND
-    * (`totalHitsIsLowerBound == true`) when pruning ran, since skipped
-    * ranges are never counted. The top-k (docIds and scores) is identical
-    * to exhaustive search either way.
+    * Route: a query with no term leaves, only df=1 terms, or postings
+    * within the searcher's driver-local bound ([[IndexSearcher.fitsDriver]])
+    * takes the searcher's own path — one row fetch fills the row cache, so
+    * a repeat costs zero Spark jobs. Only above the bound, where skipping
+    * payload reads pays for the bound-scan rounds, does pruning run.
+    *
+    * totalHits: EXACT (`totalHitsIsLowerBound == false`) on that route and
+    * when too few phase-1 candidates force the exhaustive fallback; a LOWER
+    * BOUND when pruning ran (skipped ranges are never counted). It depends
+    * only on posting volume against the bound, never on cache state. The
+    * top-k (docIds and scores) is identical to exhaustive search either way.
     */
   def searchTopK(searcher: IndexSearcher, q0: Query, k: Int,
-      mode: ScoreMode = ScoreMode.Ref32, phase1Ranges: Int = 64,
-      cachedShortcut: Boolean = true): TopDocs = {
+      mode: ScoreMode = ScoreMode.Ref32, phase1Ranges: Int = 64): TopDocs = {
     val q = Query.rewrite(searcher.expandPrefixes(q0))
-    // every present term df==1 → the searcher's singleton-pulsing path
-    // answers with ZERO postings reads; WAND's metadata scan would be
-    // strictly more work (stats are cached, so this check is free)
-    val keys = Query.leafKeys(q, searcher.field)
-    if (keys.isEmpty || searcher.termStats(keys).values.forall(_.docFreq == 1))
-      searcher.search(q, k, mode)
-    // ROW-CACHE shortcut (round 6): when every query key's posting rows are
-    // already in the searcher's row cache (and the driver-local bound
-    // holds), the exhaustive driver-local path answers with ZERO Spark jobs
-    // — WAND's two-phase plan would launch jobs to avoid reads the cache
-    // already paid for. `cachedShortcut = false` opts out for callers that
-    // pin pruning behavior itself (the WAND parity specs).
-    else if (cachedShortcut && searcher.servesFromRowCache(q))
-      searcher.search(q, k, mode)
-    else pruned(searcher, searcher.prepare(q, mode), k, phase1Ranges)
+    if (Query.leafKeys(q, searcher.field).isEmpty) return searcher.search(q, k, mode)
+    val p = searcher.prepare(q, mode)
+    if (p.stats.values.forall(_.docFreq == 1) || searcher.fitsDriver(p))
+      searcher.evalRanges(p, None, k)
+    else pruned(searcher, p, k, phase1Ranges)
   }
 
   /** Serializable range-bound tree mirroring the compiled query plan: one

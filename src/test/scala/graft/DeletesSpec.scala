@@ -55,8 +55,8 @@ class DeletesSpec extends AnyFunSuite with SparkTestBase {
     assert(post.totalHits == pre.totalHits - 3)
     // WAND top-k over the deleted view == exhaustive over the deleted view
     val exact = s.search(TermQuery("import"), 10, ScoreMode.Ref32)
-    val wand = Wand.searchTopK(s, TermQuery("import"), 10, ScoreMode.Ref32, phase1Ranges = 2,
-      cachedShortcut = false)
+    val wand = Wand.searchTopK(pruning(new IndexSearcher(spark, dir)), TermQuery("import"), 10,
+      ScoreMode.Ref32, phase1Ranges = 2)
     assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
       exact.scoreDocs.map(d => (d.docId, d.score)).toSeq)
     // appending more deletes accumulates

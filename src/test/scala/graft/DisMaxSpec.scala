@@ -24,6 +24,8 @@ class DisMaxSpec extends AnyFunSuite with SparkTestBase {
     dir
   }
   private lazy val searcher = new IndexSearcher(spark, indexPath)
+  /** WAND side: a zero driver-local bound keeps WAND on its pruned plan. */
+  private lazy val wandSearcher = pruning(new IndexSearcher(spark, indexPath))
 
   private def scores(q: Query, mode: ScoreMode): Map[Long, Double] =
     searcher.scoredDocs(q, mode).collect().map(d => (d.docId, d.score)).toMap
@@ -109,7 +111,7 @@ class DisMaxSpec extends AnyFunSuite with SparkTestBase {
         BooleanClause(Occur.SHOULD, TermQuery("merge")))))
     for (q <- qs; mode <- Seq[ScoreMode](ScoreMode.Ref32, ScoreMode.ExactDouble)) {
       val ex = searcher.search(q, 10, mode)
-      val wd = Wand.searchTopK(searcher, q, 10, mode, cachedShortcut = false)
+      val wd = Wand.searchTopK(wandSearcher, q, 10, mode)
       assert(ex.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
         wd.scoreDocs.map(d => (d.docId, d.score)).toSeq, s"q=$q mode=$mode")
     }

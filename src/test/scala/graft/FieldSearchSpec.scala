@@ -25,6 +25,8 @@ class FieldSearchSpec extends AnyFunSuite with SparkTestBase {
     dir
   }
   private lazy val searcher = new IndexSearcher(spark, indexPath)
+  /** WAND side: a zero driver-local bound keeps WAND on its pruned plan. */
+  private lazy val wandSearcher = pruning(new IndexSearcher(spark, indexPath))
   private lazy val parser =
     new QueryParser(new StandardCodeAnalyzer(), keywordFields = Set("lang", "repo"))
   private lazy val corpus = TestCorpus.corpus(N)
@@ -104,8 +106,7 @@ class FieldSearchSpec extends AnyFunSuite with SparkTestBase {
       BooleanClause(Occur.SHOULD, TermQuery("parser")),
       BooleanClause(Occur.SHOULD, TermQuery("buffer"))))
     val exact = searcher.search(q, 10, ScoreMode.Ref32)
-    val wand = Wand.searchTopK(searcher, q, 10, ScoreMode.Ref32, phase1Ranges = 4,
-      cachedShortcut = false)
+    val wand = Wand.searchTopK(wandSearcher, q, 10, ScoreMode.Ref32, phase1Ranges = 4)
     assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
       exact.scoreDocs.map(d => (d.docId, d.score)).toSeq)
   }

@@ -25,6 +25,8 @@ class FilterSpec extends AnyFunSuite with SparkTestBase {
     dir
   }
   private lazy val searcher = new IndexSearcher(spark, indexPath)
+  /** WAND side: a zero driver-local bound keeps WAND on its pruned plan. */
+  private lazy val wandSearcher = pruning(new IndexSearcher(spark, indexPath))
 
   private def hits(q: Query, mode: ScoreMode): Seq[(Long, Double)] =
     searcher.scoredDocs(q, mode).collect().map(d => (d.docId, d.score))
@@ -98,7 +100,7 @@ class FilterSpec extends AnyFunSuite with SparkTestBase {
       BooleanQuery(Seq(BooleanClause(Occur.FILTER, TermQuery("scorer")))))
     for (q <- qs; mode <- Seq[ScoreMode](ScoreMode.Ref32, ScoreMode.ExactDouble)) {
       val ex = searcher.search(q, 10, mode)
-      val wd = Wand.searchTopK(searcher, q, 10, mode, cachedShortcut = false)
+      val wd = Wand.searchTopK(wandSearcher, q, 10, mode)
       assert(ex.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
         wd.scoreDocs.map(d => (d.docId, d.score)).toSeq, s"q=$q mode=$mode")
     }

@@ -38,6 +38,12 @@ class MultiSearcherSpec extends AnyFunSuite with SparkTestBase {
 
   private lazy val mono = new IndexSearcher(spark, monoPath)
   private lazy val multi = MultiSearcher(spark, Seq(shardAPath, shardBPath))
+  /** WAND side: shards with a zero driver-local bound take the pruned plan. */
+  private lazy val pruned = {
+    val m = MultiSearcher(spark, Seq(shardAPath, shardBPath))
+    m.shards.foreach(pruning)
+    m
+  }
 
   private val battery: Seq[Query] = Seq(
     TermQuery("merge"),
@@ -77,16 +83,17 @@ class MultiSearcherSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("per-shard WAND merge ≡ monolithic exhaustive top-k") {
-    for (q <- battery; mode <- Seq[ScoreMode](ScoreMode.Ref32, ScoreMode.ExactDouble)) {
-      val m = mono.search(q, 10, mode)
-      // fresh shard searchers: the tests above warmed `multi`'s row caches,
-      // and a warm cache answers through the exhaustive shortcut, not WAND
-      val cold = MultiSearcher(spark, Seq(shardAPath, shardBPath))
-      val s = cold.searchWand(q, 10, mode)
-      cold.close()
-      assert(s.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
-        m.scoreDocs.map(d => (d.docId, d.score)).toSeq, s"q=$q mode=$mode")
-    }
+    val routes = for (q <- battery; mode <- Seq[ScoreMode](ScoreMode.Ref32, ScoreMode.ExactDouble))
+      yield {
+        val m = mono.search(q, 10, mode)
+        val s = pruned.searchWand(q, 10, mode)
+        assert(s.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
+          m.scoreDocs.map(d => (d.docId, d.score)).toSeq, s"q=$q mode=$mode")
+        // a merge that no shard pruned counts every hit
+        assert(s.totalHitsIsLowerBound || s.totalHits == m.totalHits, s"totalHits q=$q mode=$mode")
+        s.totalHitsIsLowerBound
+      }
+    assert(routes.contains(true), "no shard pruned")
   }
 
   test("explain routes to the owning shard; value == monolithic score") {

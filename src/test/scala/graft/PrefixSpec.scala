@@ -25,6 +25,8 @@ class PrefixSpec extends AnyFunSuite with SparkTestBase {
     dir
   }
   private lazy val searcher = new IndexSearcher(spark, indexPath)
+  /** WAND side: a zero driver-local bound keeps WAND on its pruned plan. */
+  private lazy val wandSearcher = pruning(new IndexSearcher(spark, indexPath))
 
   test("prefix == explicit disjunction of the matching vocabulary terms") {
     // TestCorpus mid terms starting with 's': scorer, shard, sort? (vocab:
@@ -103,7 +105,7 @@ class PrefixSpec extends AnyFunSuite with SparkTestBase {
       BooleanClause(Occur.SHOULD, TermQuery("buffer"))))
     for (mode <- Seq[ScoreMode](ScoreMode.Ref32, ScoreMode.ExactDouble)) {
       val exact = searcher.search(q, 10, mode)
-      val wand = Wand.searchTopK(searcher, q, 10, mode, phase1Ranges = 4, cachedShortcut = false)
+      val wand = Wand.searchTopK(wandSearcher, q, 10, mode, phase1Ranges = 4)
       assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
         exact.scoreDocs.map(d => (d.docId, d.score)).toSeq, s"mode=$mode")
     }
@@ -265,8 +267,8 @@ class PrefixSpec extends AnyFunSuite with SparkTestBase {
       assert(b.score == a.score * 2.0, s"doc ${a.docId}")
     }
     // boosts flow through WAND top-k identically (bounds are mode-matched)
-    val viaWand = Wand.searchTopK(searcher, p.parse("scorer^2 merge"), 8,
-      ScoreMode.ExactDouble, cachedShortcut = false)
+    val viaWand = Wand.searchTopK(wandSearcher, p.parse("scorer^2 merge"), 8,
+      ScoreMode.ExactDouble)
     val exhaustive = searcher.search(p.parse("scorer^2 merge"), 8, ScoreMode.ExactDouble)
     assert(viaWand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
       exhaustive.scoreDocs.map(d => (d.docId, d.score)).toSeq)
@@ -333,7 +335,7 @@ class PrefixSpec extends AnyFunSuite with SparkTestBase {
       BooleanQuery(List(BooleanClause(Occur.SHOULD, TermQuery(rarer)))))
     // the MLT query searches like its hand-built twin, incl. through WAND
     val full = searcher.search(q, 10, ScoreMode.ExactDouble)
-    val wand = Wand.searchTopK(searcher, q, 10, ScoreMode.ExactDouble, cachedShortcut = false)
+    val wand = Wand.searchTopK(wandSearcher, q, 10, ScoreMode.ExactDouble)
     assert(full.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
       wand.scoreDocs.map(d => (d.docId, d.score)).toSeq)
     assert(full.totalHits > 0)

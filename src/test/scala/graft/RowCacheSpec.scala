@@ -121,4 +121,31 @@ class RowCacheSpec extends AnyFunSuite with SparkTestBase {
     intercept[Exception](s.expandPrefixes(PrefixQuery(inputs.head)))
     intercept[Exception](suggest(s, inputs.head + "q"))
   }
+
+  test("stored-doc rows share the byte budget: a DocKey flood stays within it") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-lru-docs").toString
+    val cfg = IndexConfig(analyzer = new StandardCodeAnalyzer(),
+      docsPerRange = 128, numSegments = 4, segmentsPerWave = 4)
+    new IndexBuilder(spark, cfg).build(TestCorpus.corpus(400).toDF(), dir)
+    val ids = (0L until 40L)
+    val truth = new IndexSearcher(spark, dir).docs(ids) // default budget
+    assert(truth.map(_.docId) == ids)
+    val s = new IndexSearcher(spark, dir)
+    s.rowCacheMaxBytes = 2048 // holds about eight stored-doc rows
+    // one batch lookup returns every row, however few the cache keeps
+    assert(s.docs(ids) == truth)
+    assert(s.cacheBytesInUse <= s.rowCacheMaxBytes)
+    ids.zip(truth).foreach { case (id, row) =>
+      assert(s.doc(id) == Some(row), s"doc $id")
+      assert(s.cacheBytesInUse <= s.rowCacheMaxBytes, s"after doc $id")
+    }
+    def rm(f: java.io.File): Unit = {
+      if (f.isDirectory) f.listFiles().foreach(rm)
+      f.delete()
+    }
+    rm(new java.io.File(s"$dir/docs"))
+    // the newest lookup is still served from the cache; the first was evicted
+    assert(s.doc(ids.last) == Some(truth.last))
+    intercept[Exception](s.doc(ids.head))
+  }
 }

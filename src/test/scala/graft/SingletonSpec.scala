@@ -66,4 +66,30 @@ class SingletonSpec extends AnyFunSuite with SparkTestBase {
     // proves the singleton queries above really never touched them
     intercept[Exception](s1.search(TermQuery("import"), 5, ScoreMode.Ref32))
   }
+
+  test("repeated singleton queries read the docs table once: stored rows are cached") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-singleton-docs").toString
+    val cfg = IndexConfig(analyzer = new StandardCodeAnalyzer(),
+      docsPerRange = 64, numSegments = 4, segmentsPerWave = 4)
+    new IndexBuilder(spark, cfg).build(TestCorpus.corpus(300).toDF(), dir)
+    val s = new IndexSearcher(spark, dir)
+    val q = TermQuery("uniqtoken_5")
+    val first = s.search(q, 5, ScoreMode.Ref32)
+    assert(first.totalHits == 1)
+    assert(s.termStatsOf(Seq("uniqtoken_8"))("uniqtoken_8").docFreq == 1)
+    // physical proof: without the docs table the repeat still answers, and
+    // the hit's stored fields come from the same cached row
+    def rm(f: java.io.File): Unit = {
+      if (f.isDirectory) f.listFiles().foreach(rm)
+      f.delete()
+    }
+    rm(new java.io.File(s"$dir/docs"))
+    val again = s.search(q, 5, ScoreMode.Ref32)
+    assert(again.totalHits == first.totalHits)
+    assert(again.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
+      first.scoreDocs.map(d => (d.docId, d.score)).toSeq)
+    assert(s.doc(first.scoreDocs.head.docId).map(_.docId) == Some(first.scoreDocs.head.docId))
+    // canary: a singleton never asked needs its stored row — the read fails
+    intercept[Exception](s.search(TermQuery("uniqtoken_8"), 5, ScoreMode.Ref32))
+  }
 }

@@ -36,6 +36,8 @@ class SloppyPhraseSpec extends AnyFunSuite with SparkTestBase {
     d
   }
   private lazy val s = new IndexSearcher(spark, dir)
+  /** WAND side: a zero driver-local bound keeps WAND on its pruned plan. */
+  private lazy val w = pruning(new IndexSearcher(spark, dir))
 
   private def matchIds(q: Query): Seq[Long] =
     s.scoredDocs(q, ScoreMode.ExactDouble).collect().map(_.docId).sorted.toSeq
@@ -120,7 +122,7 @@ class SloppyPhraseSpec extends AnyFunSuite with SparkTestBase {
         BooleanClause(Occur.SHOULD, TermQuery("pad")))))
     for (q <- qs; mode <- Seq[ScoreMode](ScoreMode.Ref32, ScoreMode.ExactDouble)) {
       val exact = s.search(q, 5, mode)
-      val wand = Wand.searchTopK(s, q, 5, mode, phase1Ranges = 1, cachedShortcut = false)
+      val wand = Wand.searchTopK(w, q, 5, mode, phase1Ranges = 1)
       assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
         exact.scoreDocs.map(d => (d.docId, d.score)).toSeq, s"parity $q mode=$mode")
     }
@@ -138,12 +140,13 @@ class SloppyPhraseSpec extends AnyFunSuite with SparkTestBase {
       numSegments = 1, segmentsPerWave = 1, explicitDocIdCol = Some("docId"))
     new IndexBuilder(spark, cfg).build(docs, d2)
     val s2 = new IndexSearcher(spark, d2)
+    val w2 = pruning(new IndexSearcher(spark, d2))
     val q = PhraseQuery(Seq("alpha", "beta"), slop = 2)
     val hits = s2.scoredDocs(q, ScoreMode.ExactDouble).collect().map(_.docId).toSet
     assert(hits == Set(0L))
     for (mode <- Seq[ScoreMode](ScoreMode.Ref32, ScoreMode.ExactDouble)) {
       val exact = s2.search(q, 2, mode)
-      val wand = Wand.searchTopK(s2, q, 2, mode, phase1Ranges = 1, cachedShortcut = false)
+      val wand = Wand.searchTopK(w2, q, 2, mode, phase1Ranges = 1)
       assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
         exact.scoreDocs.map(d => (d.docId, d.score)).toSeq)
     }

@@ -6,6 +6,15 @@ import org.scalatest.{BeforeAndAfterAll, Suite}
 trait SparkTestBase extends BeforeAndAfterAll { self: Suite =>
   lazy val spark: SparkSession = SparkTestBase.session
 
+  /** `s` with a zero driver-local bound: WAND on it takes the pruned plan
+    * for every query that has a term with df > 1, so a WAND parity check
+    * exercises pruning instead of the driver-local route.
+    */
+  def pruning(s: graft.search.IndexSearcher): graft.search.IndexSearcher = {
+    s.localSearchMaxPostings = 0
+    s
+  }
+
   override def afterAll(): Unit = super.afterAll()
 }
 

@@ -22,18 +22,21 @@ class WandSpec extends AnyFunSuite with SparkTestBase {
     dir
   }
   private lazy val searcher = new IndexSearcher(spark, indexPath)
+  /** WAND side: a zero driver-local bound keeps WAND on its pruned plan. */
+  private lazy val wandSearcher = pruning(new IndexSearcher(spark, indexPath))
 
-  /** The WAND side runs with the row-cache shortcut off: the exhaustive
-    * search just filled the cache, and the shortcut would answer with that
-    * same exhaustive path instead of pruning.
+  /** Parity with the exhaustive search, asserting which route answered:
+    * phase 2 ran (`totalHitsIsLowerBound`), or — `fallback` — too few
+    * phase-1 candidates sent WAND to its exhaustive fallback (exact count).
     */
-  private def assertSafe(q: Query, k: Int, phase1: Int): Unit = {
+  private def assertSafe(q: Query, k: Int, phase1: Int, fallback: Boolean = false): Unit = {
     val exact = searcher.search(q, k, ScoreMode.Ref32)
-    val wand = Wand.searchTopK(searcher, q, k, ScoreMode.Ref32, phase1Ranges = phase1,
-      cachedShortcut = false)
+    val wand = Wand.searchTopK(wandSearcher, q, k, ScoreMode.Ref32, phase1Ranges = phase1)
     assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
       exact.scoreDocs.map(d => (d.docId, d.score)).toSeq, s"top-k parity for $q")
-    assert(wand.totalHits <= exact.totalHits)
+    assert(wand.totalHitsIsLowerBound == !fallback, s"route for $q")
+    if (fallback) assert(wand.totalHits == exact.totalHits, s"totalHits for $q")
+    else assert(wand.totalHits <= exact.totalHits, s"totalHits for $q")
     assert(wand.scoreDocs.length == math.min(k.toLong, exact.totalHits))
   }
 
@@ -42,17 +45,41 @@ class WandSpec extends AnyFunSuite with SparkTestBase {
     assertSafe(TermQuery("parser"), k = 10, phase1 = 4)
   }
 
-  test("row-cache shortcut: a warm cache answers exhaustively with exact totalHits") {
-    val s = new IndexSearcher(spark, indexPath)
+  test("driver-local route: under the bound, exact totalHits cold and no postings reads warm") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-wand-local").toString
+    val cfg = IndexConfig(analyzer = new StandardCodeAnalyzer(),
+      docsPerRange = 64, numSegments = 4, segmentsPerWave = 4)
+    new IndexBuilder(spark, cfg).build(TestCorpus.corpus(400).toDF(), dir)
     val q = BooleanQuery(Seq(
       BooleanClause(Occur.SHOULD, TermQuery("parser")),
       BooleanClause(Occur.SHOULD, TermQuery("buffer"))))
-    val exact = s.search(q, 10, ScoreMode.Ref32) // fills the row cache
-    val wand = Wand.searchTopK(s, q, 10, ScoreMode.Ref32, phase1Ranges = 4)
-    assert(!wand.totalHitsIsLowerBound)
-    assert(wand.totalHits == exact.totalHits)
-    assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
-      exact.scoreDocs.map(d => (d.docId, d.score)).toSeq)
+    val exact = new IndexSearcher(spark, dir).scoredDocs(q, ScoreMode.Ref32).collect()
+      .sortBy(d => (-d.score, d.docId))
+    def top(t: TopDocs) = t.scoreDocs.map(d => (d.docId, d.score)).toSeq
+    // first (cold) call on a fresh searcher: exact totalHits, no cache needed
+    val s = new IndexSearcher(spark, dir)
+    val cold = Wand.searchTopK(s, q, 10, ScoreMode.Ref32, phase1Ranges = 2)
+    assert(!cold.totalHitsIsLowerBound)
+    assert(cold.totalHits == exact.length)
+    assert(top(cold) == exact.take(10).map(d => (d.docId, d.score)).toSeq)
+    // a bound below the query's df sum: the same query prunes
+    val dfSum = s.termStatsOf(Seq("parser", "buffer")).values.map(_.docFreq).sum
+    val low = new IndexSearcher(spark, dir)
+    low.localSearchMaxPostings = dfSum - 1
+    val pruned = Wand.searchTopK(low, q, 10, ScoreMode.Ref32, phase1Ranges = 2)
+    assert(pruned.totalHitsIsLowerBound)
+    assert(top(pruned) == top(cold))
+    // physical proof: with postings deleted, the repeat answers from the
+    // row cache the cold call filled
+    def rm(f: java.io.File): Unit = {
+      if (f.isDirectory) f.listFiles().foreach(rm)
+      f.delete()
+    }
+    rm(new java.io.File(s"$dir/postings"))
+    val warm = Wand.searchTopK(s, q, 10, ScoreMode.Ref32, phase1Ranges = 2)
+    assert(!warm.totalHitsIsLowerBound && warm.totalHits == cold.totalHits)
+    assert(top(warm) == top(cold))
+    intercept[Exception](Wand.searchTopK(s, TermQuery("merge"), 10, ScoreMode.Ref32))
   }
 
   test("disjunction: pruned == exhaustive") {
@@ -79,11 +106,8 @@ class WandSpec extends AnyFunSuite with SparkTestBase {
     val s = new IndexSearcher(spark, dir)
     val q = TermQuery("graded")
     val exact = s.search(q, 10, ScoreMode.Ref32)
-    // cachedShortcut = false: the exact search above populated the row
-    // cache, and this test pins the PRUNING machinery itself — the shortcut
-    // (serve fully-cached queries exhaustively, zero jobs) sits above it
-    val wand = Wand.searchTopK(s, q, 10, ScoreMode.Ref32, phase1Ranges = 2,
-      cachedShortcut = false)
+    val wand = Wand.searchTopK(pruning(new IndexSearcher(spark, dir)), q, 10,
+      ScoreMode.Ref32, phase1Ranges = 2)
     assert(wand.totalHitsIsLowerBound)
     assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
       exact.scoreDocs.map(d => (d.docId, d.score)).toSeq)
@@ -95,11 +119,12 @@ class WandSpec extends AnyFunSuite with SparkTestBase {
       BooleanClause(Occur.MUST, TermQuery("import")),
       BooleanClause(Occur.MUST, TermQuery("parser"))))
     assertSafe(q, k = 10, phase1 = 4)
-    // MUST term with df=1: only its single range is eligible
+    // MUST term with df=1: only its single range is eligible, and its one
+    // candidate is fewer than k → the exhaustive fallback answers
     val q2 = BooleanQuery(Seq(
       BooleanClause(Occur.MUST, TermQuery("parser")),
       BooleanClause(Occur.MUST, TermQuery("uniqtoken_17"))))
-    assertSafe(q2, k = 5, phase1 = 2)
+    assertSafe(q2, k = 5, phase1 = 2, fallback = true)
   }
 
   test("MUST+SHOULD and MUST_NOT shapes: pruned == exhaustive") {
@@ -126,6 +151,7 @@ class WandSpec extends AnyFunSuite with SparkTestBase {
     // range's bound below τ and wrongly prune it if summed raw
     for (sim <- Seq[Similarity](new LMJelinekMercerSimilarity, new LMDirichletSimilarity)) {
       val s = new IndexSearcher(spark, indexPath, similarity = sim)
+      val w = pruning(new IndexSearcher(spark, indexPath, similarity = sim))
       val qs = Seq[Query](
         BooleanQuery(Seq(
           BooleanClause(Occur.SHOULD, TermQuery("uniqtoken_9")),
@@ -139,7 +165,7 @@ class WandSpec extends AnyFunSuite with SparkTestBase {
           BooleanClause(Occur.SHOULD, TermQuery("import"))), minShouldMatch = 1))
       for (q <- qs; mode <- Seq[ScoreMode](ScoreMode.Ref32, ScoreMode.ExactDouble)) {
         val exact = s.search(q, 10, mode)
-        val wand = Wand.searchTopK(s, q, 10, mode, phase1Ranges = 4, cachedShortcut = false)
+        val wand = Wand.searchTopK(w, q, 10, mode, phase1Ranges = 4)
         assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
           exact.scoreDocs.map(d => (d.docId, d.score)).toSeq,
           s"${sim.getClass.getSimpleName}/$mode parity for $q")
@@ -163,7 +189,7 @@ class WandSpec extends AnyFunSuite with SparkTestBase {
         BooleanClause(Occur.SHOULD, TermQuery("scorer"))), minShouldMatch = 2))
     for (q <- shapes; mode <- Seq[ScoreMode](ScoreMode.Ref32, ScoreMode.ExactDouble)) {
       val exact = searcher.search(q, 10, mode)
-      val wand = Wand.searchTopK(searcher, q, 10, mode, phase1Ranges = 4, cachedShortcut = false)
+      val wand = Wand.searchTopK(wandSearcher, q, 10, mode, phase1Ranges = 4)
       assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
         exact.scoreDocs.map(d => (d.docId, d.score)).toSeq, s"parity $q mode=$mode")
       assert(wand.totalHits <= exact.totalHits)
@@ -196,7 +222,7 @@ class WandSpec extends AnyFunSuite with SparkTestBase {
         BooleanClause(Occur.SHOULD, TermQuery("import")))))
     for (q <- shapes; mode <- Seq[ScoreMode](ScoreMode.Ref32, ScoreMode.ExactDouble)) {
       val exact = searcher.search(q, 10, mode)
-      val wand = Wand.searchTopK(searcher, q, 10, mode, phase1Ranges = 4, cachedShortcut = false)
+      val wand = Wand.searchTopK(wandSearcher, q, 10, mode, phase1Ranges = 4)
       assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
         exact.scoreDocs.map(d => (d.docId, d.score)).toSeq, s"parity $q mode=$mode")
       assert(wand.totalHits <= exact.totalHits)
@@ -205,7 +231,9 @@ class WandSpec extends AnyFunSuite with SparkTestBase {
     val lm = new IndexSearcher(spark, indexPath, similarity = new LMJelinekMercerSimilarity)
     val q = p.parse("parser OR (buffer AND scorer)")
     val e = lm.search(q, 10, ScoreMode.Ref32)
-    val w = Wand.searchTopK(lm, q, 10, ScoreMode.Ref32, phase1Ranges = 4, cachedShortcut = false)
+    val w = Wand.searchTopK(
+      pruning(new IndexSearcher(spark, indexPath, similarity = new LMJelinekMercerSimilarity)),
+      q, 10, ScoreMode.Ref32, phase1Ranges = 4)
     assert(w.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
       e.scoreDocs.map(d => (d.docId, d.score)).toSeq)
   }
@@ -224,10 +252,11 @@ class WandSpec extends AnyFunSuite with SparkTestBase {
       docsPerRange = 64, numSegments = 4, segmentsPerWave = 4)
     new IndexBuilder(spark, cfg).build(docs.toDF(), dir)
     val s = new IndexSearcher(spark, dir, similarity = new Bm25Similarity(1.2f, 0f))
+    val w = pruning(new IndexSearcher(spark, dir, similarity = new Bm25Similarity(1.2f, 0f)))
     for (mode <- Seq[ScoreMode](ScoreMode.Ref32, ScoreMode.ExactDouble)) {
       val q = PhraseQuery(Seq("alpha", "beta"))
       val exact = s.search(q, 5, mode)
-      val wand = Wand.searchTopK(s, q, 5, mode, phase1Ranges = 2, cachedShortcut = false)
+      val wand = Wand.searchTopK(w, q, 5, mode, phase1Ranges = 2)
       assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
         exact.scoreDocs.map(d => (d.docId, d.score)).toSeq, s"b=0 parity mode=$mode")
     }
@@ -282,10 +311,10 @@ class WandSpec extends AnyFunSuite with SparkTestBase {
       docsPerRange = 32, numSegments = 4, segmentsPerWave = 4)
     new IndexBuilder(spark, cfg).build(docs.toDF(), dir)
     val s = new IndexSearcher(spark, dir)
+    val w = pruning(new IndexSearcher(spark, dir))
     for (k <- Seq(5, 17, 40); p1 <- Seq(1, 2, 4)) {
       val exact = s.search(TermQuery("edgeterm"), k, ScoreMode.Ref32)
-      val wand = Wand.searchTopK(s, TermQuery("edgeterm"), k, ScoreMode.Ref32, phase1Ranges = p1,
-        cachedShortcut = false)
+      val wand = Wand.searchTopK(w, TermQuery("edgeterm"), k, ScoreMode.Ref32, phase1Ranges = p1)
       assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
         exact.scoreDocs.map(d => (d.docId, d.score)).toSeq, s"k=$k phase1=$p1")
     }
@@ -298,8 +327,7 @@ class WandSpec extends AnyFunSuite with SparkTestBase {
         BooleanClause(Occur.MUST, TermQuery("parser")),
         BooleanClause(Occur.SHOULD, TermQuery("buffer")))))) {
       val exact = searcher.search(q, 10, ScoreMode.ExactDouble)
-      val wand = Wand.searchTopK(searcher, q, 10, ScoreMode.ExactDouble, phase1Ranges = 4,
-        cachedShortcut = false)
+      val wand = Wand.searchTopK(wandSearcher, q, 10, ScoreMode.ExactDouble, phase1Ranges = 4)
       assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
         exact.scoreDocs.map(d => (d.docId, d.score)).toSeq, s"exact-mode parity for $q")
     }
@@ -340,7 +368,8 @@ class WandSpec extends AnyFunSuite with SparkTestBase {
       BooleanClause(Occur.SHOULD, TermQuery("yterm"))))
     val exact = s.search(q, 1, ScoreMode.Ref32)
     assert(exact.scoreDocs.head.docId == 0L) // score tie, smaller docId wins
-    val wand = Wand.searchTopK(s, q, 1, ScoreMode.Ref32, phase1Ranges = 1, cachedShortcut = false)
+    val wand = Wand.searchTopK(pruning(new IndexSearcher(spark, dir, "content",
+      new Bm25Similarity(1.2f, 0f))), q, 1, ScoreMode.Ref32, phase1Ranges = 1)
     assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
       exact.scoreDocs.map(d => (d.docId, d.score)).toSeq,
       "bound==tau range pruned: tie-break winner lost")
@@ -384,12 +413,14 @@ class WandSpec extends AnyFunSuite with SparkTestBase {
     // end-to-end parity on the shared corpus (all-clamped regime: scores 0,
     // tie-break by docId — pruning must preserve it), both modes
     val s2 = new IndexSearcher(spark, indexPath, similarity = new LMPitmanYorProcessSimilarity)
+    val w2 = pruning(new IndexSearcher(spark, indexPath,
+      similarity = new LMPitmanYorProcessSimilarity))
     val q = BooleanQuery(Seq(
       BooleanClause(Occur.SHOULD, TermQuery("parser")),
       BooleanClause(Occur.SHOULD, TermQuery("buffer"))))
     for (mode <- Seq[ScoreMode](ScoreMode.Ref32, ScoreMode.ExactDouble)) {
       val exact = s2.search(q, 10, mode)
-      val wand = Wand.searchTopK(s2, q, 10, mode, phase1Ranges = 4, cachedShortcut = false)
+      val wand = Wand.searchTopK(w2, q, 10, mode, phase1Ranges = 4)
       assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
         exact.scoreDocs.map(d => (d.docId, d.score)).toSeq, s"PY mixed-corpus parity $mode")
     }
