@@ -33,8 +33,10 @@ final case class Explanation(
 private[search] object Explain {
 
   /** Build the explanation for one doc from its range's raw posting rows.
-    * Values are produced by the SAME eval functions the collectors use, so
-    * root.value == search score by construction, at every tree level.
+    * Values are produced by the SAME plan evaluator the collectors use
+    * ([[GroupEval.scoreAt]]), so root.value == search score by
+    * construction, at every tree level; `mode` only rounds the coord
+    * node's clause sum the way the evaluator does.
     */
   def forDoc(
       q: Query,
@@ -52,153 +54,118 @@ private[search] object Explain {
     val slot = (docId - acc.base).toInt
     if (slot < 0 || slot >= acc.width || !acc.touched(slot))
       return Explanation(0.0, s"doc $docId: no query term matches", Nil, isMatch = false)
-    node(Query.rewrite(q), ge.planRoot, acc, slot, docId, searcher, stats, mode)
-  }
 
-  private def evalAt(n: CNode, acc: RangeAccum, slot: Int, mode: ScoreMode): Double =
-    mode match {
-      case ScoreMode.ExactDouble => Eval.evalD(n, acc, slot)
-      case ScoreMode.Ref32 =>
-        val f = Eval.evalF(n, acc, slot)
-        if (f.isNaN) Double.NaN else f.toDouble
+    def scoreOf(n: CNode): Double = ge.scoreAt(acc, slot, n)
+
+    def node(q: Query, n: CNode): Explanation = (q, n) match {
+
+      case (TermQuery(t, boost, f), leaf @ CLeafTerm(idx, fi, scorer)) =>
+        val fieldName = f.getOrElse(searcher.field)
+        val v = scoreOf(leaf)
+        if (v.isNaN || idx < 0)
+          Explanation(0.0, s"no match: weight($fieldName:$t)", Nil, isMatch = false)
+        else {
+          val freq = acc.freqs(idx)(slot)
+          val ts = stats((fieldName, t))
+          val cs = searcher.collectionStats(fieldName)
+          // detail values COMPOSE: their product in mode arithmetic equals the
+          // node value exactly (reference term.go:163-193 — tfNorm × weight);
+          // the function arguments live in descriptions, not value nodes
+          val ctx = s"termFreq=$freq, docFreq=${ts.docFreq}, maxDoc=${cs.maxDoc}, " +
+            s"dl=${acc.dls(fi)(slot)}, normByte=${acc.norms(fi)(slot)}, avgdl=${Bm25.avgdlExact(cs)}"
+          Explanation(v,
+            s"product of: weight($fieldName:$t in $docId) [${searcher.similarity.name}" +
+              (if (boost != 1.0f) s", boost=$boost" else "") + s"] ($ctx)",
+            scorer.explainFactors(freq, acc, fi, slot).map { case (l, x) => Explanation(x, l) })
+        }
+
+      case (PhraseQuery(ts, boost, f, slop), leaf @ CLeafPhrase(idxs, fi, scorer, _)) =>
+        val fieldName = f.getOrElse(searcher.field)
+        val v = scoreOf(leaf)
+        val pf = Eval.phraseFreq(idxs, acc, slot, slop)
+        if (v.isNaN)
+          Explanation(0.0, s"no match: phrase(\"${ts.mkString(" ")}\")", Nil, isMatch = false)
+        else
+          Explanation(v,
+            s"product of: weight($fieldName:\"${ts.mkString(" ")}\" in $docId) [phrase" +
+              (if (slop > 0) s"~$slop" else "") +
+              (if (boost != 1.0f) s", boost=$boost" else "") +
+              s"] (phraseFreq=$pf, dl=${acc.dls(fi)(slot)})",
+            scorer.explainFactors(pf, acc, fi, slot).map { case (l, x) => Explanation(x, l) })
+
+      case (PhraseQuery(ts, _, _, _), _: CLeafTerm) => // missing member term
+        Explanation(0.0, s"no match: phrase(\"${ts.mkString(" ")}\") has unindexed terms",
+          Nil, isMatch = false)
+
+      case (BooleanQuery(clauses, msm, _), b @ CBool(must, should, filters, mustNot, _, coords)) =>
+        val v = scoreOf(b)
+        def of(o: Occur) = clauses.filter(_.occur == o).map(_.query)
+        val mustEx = of(Occur.MUST).zip(must).map { case (cq, cn) => node(cq, cn) }
+        val shouldEx = of(Occur.SHOULD).zip(should).map { case (cq, cn) => node(cq, cn) }
+        // filters never score: shown as 0-value children (presence only)
+        val filterEx = of(Occur.FILTER).zip(filters).map { case (cq, cn) =>
+          val m = !scoreOf(cn).isNaN
+          Explanation(0.0, s"filter($cq): ${if (m) "matches (contributes no score)"
+            else "does not match"}", Nil, isMatch = m)
+        }
+        val notHits = mustNot.count(cn => !scoreOf(cn).isNaN)
+        if (v.isNaN) {
+          val why =
+            if (notHits > 0) s"excluded by MUST_NOT ($notHits prohibited clause(s) match)"
+            else if (filterEx.exists(!_.isMatch)) "a FILTER clause does not match"
+            else if (mustEx.exists(!_.isMatch)) "a MUST clause does not match"
+            else if (shouldEx.count(_.isMatch) < msm)
+              s"only ${shouldEx.count(_.isMatch)} of minShouldMatch=$msm SHOULD clauses match"
+            else "no scoring clause matches"
+          Explanation(0.0, s"no match: boolean ($why)",
+            mustEx ++ shouldEx ++ filterEx, isMatch = false)
+        } else {
+          val matched = shouldEx.count(_.isMatch)
+          val coordVal = coords(must.length + matched)
+          // filter children carry value 0 — the fold-add composition is intact
+          val kids = mustEx ++ shouldEx ++ filterEx
+          // composition: value == fold-add of MATCHING details in listed order
+          // (must then should — the exact summation order of Eval in each
+          // mode's arithmetic), then × coord when it is not 1
+          if (coordVal == 1.0f)
+            Explanation(v,
+              s"sum of: boolean (minShouldMatch=$msm, ${mustNot.length} prohibited)", kids)
+          else {
+            val sumV = kids.filter(_.isMatch).foldLeft(0.0)((s, e) => mode.round(s + e.value))
+            Explanation(v, "product of: boolean (coord-scaled)",
+              Seq(
+                Explanation(sumV,
+                  s"sum of: clauses (minShouldMatch=$msm, ${mustNot.length} prohibited)", kids),
+                Explanation(coordVal.toDouble,
+                  s"coord(${must.length + matched}/${must.length + should.length})")))
+          }
+        }
+
+      case (DisMaxQuery(cs, tie, _), d @ CDisMax(children, _)) =>
+        val v = scoreOf(d)
+        val kids = cs.zip(children).map { case (cq, cn) => node(cq, cn) }
+        if (v.isNaN)
+          Explanation(0.0, "no match: dismax (no clause matches)", kids, isMatch = false)
+        else
+          // composition: max over matching kids + tie × (sum − max), in mode
+          // arithmetic — the kids' values ARE the per-clause scores
+          Explanation(v, s"max plus $tie times others of:", kids)
+
+      case (ConstantScoreQuery(cq, s), c @ CConst(_, _)) =>
+        val v = scoreOf(c)
+        val m = !v.isNaN
+        // the child is shown presence-only (its score is discarded)
+        val kid = Explanation(0.0,
+          s"match($cq): ${if (m) "matches (score discarded)" else "does not match"}",
+          Nil, isMatch = m)
+        if (m) Explanation(v, s"constant score $s", Seq(kid))
+        else Explanation(0.0, "no match: constant-score wrapper", Seq(kid), isMatch = false)
+
+      case _ =>
+        val v = scoreOf(n)
+        Explanation(if (v.isNaN) 0.0 else v, s"query $q", Nil, isMatch = !v.isNaN)
     }
 
-  private def node(
-      q: Query, n: CNode, acc: RangeAccum, slot: Int, docId: Long,
-      searcher: IndexSearcher, stats: Map[(String, String), TermStats],
-      mode: ScoreMode): Explanation = (q, n) match {
-
-    case (TermQuery(t, boost, f), leaf @ CLeafTerm(idx, fi, refS, exactS)) =>
-      val fieldName = f.getOrElse(searcher.field)
-      val v = evalAt(leaf, acc, slot, mode)
-      if (v.isNaN || idx < 0)
-        Explanation(0.0, s"no match: weight($fieldName:$t)", Nil, isMatch = false)
-      else {
-        val freq = acc.freqs(idx)(slot)
-        val ts = stats((fieldName, t))
-        val cs = searcher.collectionStats(fieldName)
-        // detail values COMPOSE: their product in mode arithmetic equals the
-        // node value exactly (reference term.go:163-193 — tfNorm × weight);
-        // the function arguments live in descriptions, not value nodes
-        val parts: Seq[(String, Double)] = mode match {
-          case ScoreMode.Ref32 =>
-            refS.explainFactors(freq.toFloat, acc.norms(fi)(slot))
-              .map { case (l, x) => (l, x.toDouble) }
-          case ScoreMode.ExactDouble =>
-            exactS.explainFactors(freq.toDouble, acc.dls(fi)(slot).toDouble)
-        }
-        val ctx = s"termFreq=$freq, docFreq=${ts.docFreq}, maxDoc=${cs.maxDoc}, " +
-          s"dl=${acc.dls(fi)(slot)}, normByte=${acc.norms(fi)(slot)}, avgdl=${Bm25.avgdlExact(cs)}"
-        Explanation(v,
-          s"product of: weight($fieldName:$t in $docId) [${searcher.similarity.name}" +
-            (if (boost != 1.0f) s", boost=$boost" else "") + s"] ($ctx)",
-          parts.map { case (l, x) => Explanation(x, l) })
-      }
-
-    case (PhraseQuery(ts, boost, f, slop), leaf @ CLeafPhrase(idxs, fi, refS, exactS, _)) =>
-      val fieldName = f.getOrElse(searcher.field)
-      val v = evalAt(leaf, acc, slot, mode)
-      val pf = Eval.phraseFreq(idxs, acc, slot, slop)
-      if (v.isNaN)
-        Explanation(0.0, s"no match: phrase(\"${ts.mkString(" ")}\")", Nil, isMatch = false)
-      else {
-        val parts: Seq[(String, Double)] = mode match {
-          case ScoreMode.Ref32 =>
-            refS.explainFactors(pf.toFloat, acc.norms(fi)(slot))
-              .map { case (l, x) => (l, x.toDouble) }
-          case ScoreMode.ExactDouble =>
-            exactS.explainFactors(pf.toDouble, acc.dls(fi)(slot).toDouble)
-        }
-        Explanation(v,
-          s"product of: weight($fieldName:\"${ts.mkString(" ")}\" in $docId) [phrase" +
-            (if (slop > 0) s"~$slop" else "") +
-            (if (boost != 1.0f) s", boost=$boost" else "") +
-            s"] (phraseFreq=$pf, dl=${acc.dls(fi)(slot)})",
-          parts.map { case (l, x) => Explanation(x, l) })
-      }
-
-    case (PhraseQuery(ts, _, _, _), leaf: CLeafTerm) => // missing member term
-      Explanation(0.0, s"no match: phrase(\"${ts.mkString(" ")}\") has unindexed terms",
-        Nil, isMatch = false)
-
-    case (BooleanQuery(clauses, msm, _), b @ CBool(must, should, filters, mustNot, _, coords)) =>
-      val v = evalAt(b, acc, slot, mode)
-      val mustQs = clauses.filter(_.occur == Occur.MUST).map(_.query)
-      val shouldQs = clauses.filter(_.occur == Occur.SHOULD).map(_.query)
-      val filterQs = clauses.filter(_.occur == Occur.FILTER).map(_.query)
-      val notQs = clauses.filter(_.occur == Occur.MUST_NOT).map(_.query)
-      val mustEx = mustQs.zip(must).map { case (cq, cn) =>
-        node(cq, cn, acc, slot, docId, searcher, stats, mode) }
-      val shouldEx = shouldQs.zip(should).map { case (cq, cn) =>
-        node(cq, cn, acc, slot, docId, searcher, stats, mode) }
-      // filters never score: shown as 0-value children (presence only)
-      val filterEx = filterQs.zip(filters).map { case (cq, cn) =>
-        val m = !evalAt(cn, acc, slot, mode).isNaN
-        Explanation(0.0, s"filter($cq): ${if (m) "matches (contributes no score)"
-          else "does not match"}", Nil, isMatch = m)
-      }
-      val notHits = notQs.zip(mustNot).filter { case (_, cn) =>
-        !evalAt(cn, acc, slot, mode).isNaN }
-      if (v.isNaN) {
-        val why =
-          if (notHits.nonEmpty) s"excluded by MUST_NOT (${notHits.size} prohibited clause(s) match)"
-          else if (filterEx.exists(!_.isMatch)) "a FILTER clause does not match"
-          else if (mustEx.exists(!_.isMatch)) "a MUST clause does not match"
-          else if (shouldEx.count(_.isMatch) < msm)
-            s"only ${shouldEx.count(_.isMatch)} of minShouldMatch=$msm SHOULD clauses match"
-          else "no scoring clause matches"
-        Explanation(0.0, s"no match: boolean ($why)",
-          mustEx ++ shouldEx ++ filterEx, isMatch = false)
-      } else {
-        val matched = shouldEx.count(_.isMatch)
-        val coordVal = coords(must.length + matched)
-        // filter children carry value 0 — the fold-add composition is intact
-        val kids = mustEx ++ shouldEx ++ filterEx
-        // composition: value == fold-add of MATCHING details in listed order
-        // (must then should — the exact summation order of Eval in each
-        // mode's arithmetic), then × coord when it is not 1
-        if (coordVal == 1.0f)
-          Explanation(v,
-            s"sum of: boolean (minShouldMatch=$msm, ${mustNot.length} prohibited)", kids)
-        else {
-          val sumV = mode match {
-            case ScoreMode.Ref32 =>
-              kids.filter(_.isMatch).map(_.value.toFloat).foldLeft(0.0f)(_ + _).toDouble
-            case ScoreMode.ExactDouble =>
-              kids.filter(_.isMatch).map(_.value).foldLeft(0.0)(_ + _)
-          }
-          Explanation(v, "product of: boolean (coord-scaled)",
-            Seq(
-              Explanation(sumV,
-                s"sum of: clauses (minShouldMatch=$msm, ${mustNot.length} prohibited)", kids),
-              Explanation(coordVal.toDouble,
-                s"coord(${must.length + matched}/${must.length + should.length})")))
-        }
-      }
-
-    case (DisMaxQuery(cs, tie, _), d @ CDisMax(children, _)) =>
-      val v = evalAt(d, acc, slot, mode)
-      val kids = cs.zip(children).map { case (cq, cn) =>
-        node(cq, cn, acc, slot, docId, searcher, stats, mode) }
-      if (v.isNaN)
-        Explanation(0.0, "no match: dismax (no clause matches)", kids, isMatch = false)
-      else
-        // composition: max over matching kids + tie × (sum − max), in mode
-        // arithmetic — the kids' values ARE the per-clause scores
-        Explanation(v, s"max plus $tie times others of:", kids)
-
-    case (ConstantScoreQuery(cq, s), c @ CConst(child, _)) =>
-      val v = evalAt(c, acc, slot, mode)
-      val m = !v.isNaN
-      // the child is shown presence-only (its score is discarded)
-      val kid = Explanation(0.0,
-        s"match($cq): ${if (m) "matches (score discarded)" else "does not match"}",
-        Nil, isMatch = m)
-      if (m) Explanation(v, s"constant score $s", Seq(kid))
-      else Explanation(0.0, "no match: constant-score wrapper", Seq(kid), isMatch = false)
-
-    case _ =>
-      val v = evalAt(n, acc, slot, mode)
-      Explanation(if (v.isNaN) 0.0 else v, s"query $q", Nil, isMatch = !v.isNaN)
+    node(Query.rewrite(q), ge.planRoot)
   }
 }

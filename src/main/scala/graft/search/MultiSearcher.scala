@@ -279,33 +279,17 @@ final class MultiSearcher private[search] (val shards: Seq[IndexSearcher],
       .select(col("term"), col("docFreq"), col("dist"))
   }
 
-  /** MoreLikeThis across shards: the same candidate pipeline as the
-    * single-index version but ranked with MERGED df and maxDoc, so the
-    * selected disjunction (and its ultimate scores through [[search]])
-    * matches what a monolithic index would choose.
+  /** MoreLikeThis across shards: the single-index term selection
+    * ([[MoreLikeThis]]) ranked with MERGED df and maxDoc, so the selected
+    * disjunction (and its ultimate scores through [[search]]) matches what
+    * a monolithic index would choose.
     */
   def moreLikeThisQuery(analyzer: graft.analysis.Analyzer, text: String,
       maxQueryTerms: Int = 25, minTermFreq: Int = 1, minDocFreq: Int = 1,
       queryField: Option[String] = None): Query = {
-    require(maxQueryTerms > 0 && maxQueryTerms <= 1024,
-      s"maxQueryTerms must be in 1..1024, got $maxQueryTerms")
     val fn = queryField.getOrElse(field)
-    val tf = analyzer(text).tokens.iterator.map(_.term)
-      .foldLeft(Map.empty[String, Int]) { (m, t) => m.updated(t, m.getOrElse(t, 0) + 1) }
-    val cand = tf.filter(_._2 >= minTermFreq).keys.toSeq.sorted
-    require(cand.size <= 8192,
-      s"MLT seed text has ${cand.size} distinct terms — cap is 8192 (pass an excerpt)")
-    val stats = seedStats(cand.map(t => (fn, t)))
-    val n = mergedCollectionStats(fn).maxDoc
-    val scored = cand.flatMap { t =>
-      stats.get((fn, t)).filter(_.docFreq >= minDocFreq).map { ts =>
-        (t, tf(t).toDouble * Bm25.idfExact(ts.docFreq, n))
-      }
-    }
-    val top = scored.sortBy { case (t, s) => (-s, t) }.take(maxQueryTerms)
-      .map(_._1).sorted
-    BooleanQuery(top.map(t =>
-      BooleanClause(Occur.SHOULD, TermQuery(t, 1.0f, queryField))).toList)
+    MoreLikeThis.query(analyzer, text, maxQueryTerms, minTermFreq, minDocFreq, queryField,
+      fn, seedStats, mergedCollectionStats(fn).maxDoc)
   }
 
   /** Explanation from the shard that owns `docId` (disjoint docId spaces);

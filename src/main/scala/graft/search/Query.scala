@@ -290,10 +290,25 @@ final case class TopDocs(totalHits: Long, scoreDocs: Array[ScoredDoc],
 final case class ScoredDoc(docId: Long, score: Double)
 
 /** Scoring arithmetic mode — see [[Bm25]]. */
-sealed trait ScoreMode extends Serializable
+sealed trait ScoreMode extends Serializable {
+  /** The result of one `+`, `-` or `*` in this mode's arithmetic, given the
+    * float64 result of the same operation on this mode's operands. Every
+    * score composition (plan evaluation, queryNorm, explain) applies it.
+    */
+  private[search] def round(x: Double): Double
+}
 object ScoreMode {
-  /** float32 + byte-quantized norms: rank/score parity with the reference. */
-  case object Ref32 extends ScoreMode
+  /** float32 + byte-quantized norms: rank/score parity with the reference.
+    * A float32 `+`, `-` or `*` equals the float64 operation on the widened
+    * operands rounded once to float32, bit for bit (53 ≥ 2·24 + 2, so the
+    * double rounding is innocuous) — the whole float32 arithmetic is this
+    * rounding over float64.
+    */
+  case object Ref32 extends ScoreMode {
+    private[search] def round(x: Double): Double = x.toFloat.toDouble
+  }
   /** float64 + exact doc lengths: reproducible by an ANSI-SQL oracle. */
-  case object ExactDouble extends ScoreMode
+  case object ExactDouble extends ScoreMode {
+    private[search] def round(x: Double): Double = x
+  }
 }

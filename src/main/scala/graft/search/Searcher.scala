@@ -1,6 +1,6 @@
 package graft.search
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.codec.PostingsCodec
@@ -14,11 +14,9 @@ import graft.index.IndexManifest
   * into a content leaf's BM25 normalization and vice versa).
   */
 private[search] sealed trait CNode extends Serializable
-private[search] final case class CLeafTerm(
-    idx: Int, fi: Int, ref: Similarity.Scorer, exact: Similarity.ExactScorer) extends CNode
+private[search] final case class CLeafTerm(idx: Int, fi: Int, scorer: LeafScorer) extends CNode
 private[search] final case class CLeafPhrase(
-    idxs: Array[Int], fi: Int, ref: Similarity.Scorer, exact: Similarity.ExactScorer,
-    slop: Int) extends CNode
+    idxs: Array[Int], fi: Int, scorer: LeafScorer, slop: Int) extends CNode
 /** coords(i) = similarity.coord(i, maxOverlap) — 1.0 for BM25-family.
   * `filters` are Occur.FILTER clauses: must match, contribute no score and
   * no coord overlap (maxOverlap counts scoring clauses only).
@@ -35,6 +33,42 @@ private[search] final case class CDisMax(children: Array[CNode], tie: Float) ext
   * norm/queryNorm/coord — engine spec, see [[ConstantScoreQuery]]).
   */
 private[search] final case class CConst(child: CNode, score: Float) extends CNode
+
+/** A plan leaf's scorer, bound to the plan's score mode when the plan
+  * compiles: the leaf's score, its WAND range bound and its explain factors,
+  * each from a freq plus the slot's norm byte (Ref32) or exact dl
+  * (ExactDouble) in the leaf's field. Values are the mode's arithmetic
+  * widened to Double.
+  */
+private[search] sealed trait LeafScorer extends Serializable {
+  def score(freq: Int, acc: RangeAccum, fi: Int, slot: Int): Double
+  /** Upper bound of `score` over freq ≤ maxFreq and dl ≥ minDl. */
+  def bound(maxFreq: Int, minDl: Int): Double
+  /** Factors whose product in mode arithmetic, in order, equals `score`. */
+  def explainFactors(freq: Int, acc: RangeAccum, fi: Int, slot: Int): Seq[(String, Double)]
+}
+private[search] final case class Ref32Leaf(s: Similarity.Scorer) extends LeafScorer {
+  def score(freq: Int, acc: RangeAccum, fi: Int, slot: Int): Double =
+    s.score(freq.toFloat, acc.norms(fi)(slot)).toDouble
+  def bound(maxFreq: Int, minDl: Int): Double = Wand.rowBound(s, maxFreq, minDl).toDouble
+  def explainFactors(freq: Int, acc: RangeAccum, fi: Int, slot: Int): Seq[(String, Double)] =
+    s.explainFactors(freq.toFloat, acc.norms(fi)(slot)).map { case (l, x) => (l, x.toDouble) }
+}
+/** The bound evaluates the exact scorer's boundScore at (maxFreq, minDl) —
+  * τ and bounds share the float64 arithmetic (a float32 bound one ulp below
+  * a float64 τ could prune a tie-break winner when the norm-quantization
+  * margin vanishes, e.g. b=0). boundScore defaults to score, valid for every
+  * model nondecreasing in freq and nonincreasing in dl; LM Pitman-Yor (whose
+  * discount term grows with dl) overrides it with a dl-independent bound.
+  */
+private[search] final case class ExactLeaf(s: Similarity.ExactScorer) extends LeafScorer {
+  def score(freq: Int, acc: RangeAccum, fi: Int, slot: Int): Double =
+    s.score(freq.toDouble, acc.dls(fi)(slot).toDouble)
+  def bound(maxFreq: Int, minDl: Int): Double =
+    s.boundScore(maxFreq.toDouble, math.max(minDl, 1).toDouble)
+  def explainFactors(freq: Int, acc: RangeAccum, fi: Int, slot: Int): Seq[(String, Double)] =
+    s.explainFactors(freq.toDouble, acc.dls(fi)(slot).toDouble)
+}
 
 /** Range selection for filtered evaluation (WAND phases, explain).
   *
@@ -106,45 +140,47 @@ private[search] final class RangeAccum(
 }
 
 private[search] object Eval {
-  /** Exact-arithmetic (float64) evaluation; NaN = no match.
+  /** Score of `node` at one slot in mode `m`'s arithmetic; NaN = no match.
+    * Leaves score through their mode-bound [[LeafScorer]]; every `+`, `-`
+    * and `*` composing them goes through `m.round`, so Ref32 reproduces
+    * float32 sums in clause order and ExactDouble stays float64.
     * Boolean semantics follow the reference planner
     * (/root/reference/core/search/boolean.go:133-252): all MUST match, no
     * MUST_NOT matches, ≥minShouldMatch SHOULD match, at least one scoring
     * clause matches; score = sum of matching clause scores (BM25 coord = 1,
     * /root/reference/core/search/similarities/similarity.go:34-36).
     */
-  def evalD(node: CNode, acc: RangeAccum, slot: Int): Double = node match {
-    case CLeafTerm(idx, fi, _, exact) =>
-      if (idx >= 0 && acc.freqs(idx)(slot) > 0)
-        exact.score(acc.freqs(idx)(slot).toDouble, acc.dls(fi)(slot).toDouble)
+  def eval(node: CNode, acc: RangeAccum, slot: Int, m: ScoreMode): Double = node match {
+    case CLeafTerm(idx, fi, scorer) =>
+      if (idx >= 0 && acc.freqs(idx)(slot) > 0) scorer.score(acc.freqs(idx)(slot), acc, fi, slot)
       else Double.NaN
-    case CLeafPhrase(idxs, fi, _, exact, slop) =>
+    case CLeafPhrase(idxs, fi, scorer, slop) =>
       val pf = phraseFreq(idxs, acc, slot, slop)
-      if (pf > 0) exact.score(pf.toDouble, acc.dls(fi)(slot).toDouble) else Double.NaN
+      if (pf > 0) scorer.score(pf, acc, fi, slot) else Double.NaN
     case CBool(must, should, filters, mustNot, msm, coords) =>
       var score = 0.0
       var i = 0
       while (i < mustNot.length) {
-        if (!evalD(mustNot(i), acc, slot).isNaN) return Double.NaN
+        if (!eval(mustNot(i), acc, slot, m).isNaN) return Double.NaN
         i += 1
       }
       i = 0
       while (i < filters.length) { // must match, contributes nothing
-        if (evalD(filters(i), acc, slot).isNaN) return Double.NaN
+        if (eval(filters(i), acc, slot, m).isNaN) return Double.NaN
         i += 1
       }
       i = 0
       while (i < must.length) {
-        val s = evalD(must(i), acc, slot)
+        val s = eval(must(i), acc, slot, m)
         if (s.isNaN) return Double.NaN
-        score += s
+        score = m.round(score + s)
         i += 1
       }
       var matched = 0
       i = 0
       while (i < should.length) {
-        val s = evalD(should(i), acc, slot)
-        if (!s.isNaN) { matched += 1; score += s }
+        val s = eval(should(i), acc, slot, m)
+        if (!s.isNaN) { matched += 1; score = m.round(score + s) }
         i += 1
       }
       if (matched < msm) return Double.NaN
@@ -153,79 +189,22 @@ private[search] object Eval {
       if (must.isEmpty && filters.isEmpty && matched == 0) return Double.NaN
       // coord is 1.0f for every model but TF-IDF, where the float32 factor
       // (widened) is what the SQL oracle reproduces (×1.0 is bit-exact)
-      score * coords(must.length + matched).toDouble
+      m.round(score * coords(must.length + matched).toDouble)
     case CDisMax(children, tie) =>
       var mx = Double.NaN
       var sm = 0.0
       var i = 0
       while (i < children.length) {
-        val s = evalD(children(i), acc, slot)
+        val s = eval(children(i), acc, slot, m)
         if (!s.isNaN) {
-          sm += s
+          sm = m.round(sm + s)
           if (mx.isNaN || s > mx) mx = s
         }
         i += 1
       }
-      if (mx.isNaN) Double.NaN else mx + tie.toDouble * (sm - mx)
+      if (mx.isNaN) Double.NaN else m.round(mx + m.round(tie.toDouble * m.round(sm - mx)))
     case CConst(child, s) =>
-      if (evalD(child, acc, slot).isNaN) Double.NaN else s.toDouble
-  }
-
-  /** float32 evaluation (reference score parity: float32 sums of float32
-    * leaf scores in clause order).
-    */
-  def evalF(node: CNode, acc: RangeAccum, slot: Int): Float = node match {
-    case CLeafTerm(idx, fi, ref, _) =>
-      if (idx >= 0 && acc.freqs(idx)(slot) > 0)
-        ref.score(acc.freqs(idx)(slot).toFloat, acc.norms(fi)(slot))
-      else Float.NaN
-    case CLeafPhrase(idxs, fi, ref, _, slop) =>
-      val pf = phraseFreq(idxs, acc, slot, slop)
-      if (pf > 0) ref.score(pf.toFloat, acc.norms(fi)(slot)) else Float.NaN
-    case CBool(must, should, filters, mustNot, msm, coords) =>
-      var score = 0.0f
-      var i = 0
-      while (i < mustNot.length) {
-        if (!evalF(mustNot(i), acc, slot).isNaN) return Float.NaN
-        i += 1
-      }
-      i = 0
-      while (i < filters.length) { // must match, contributes nothing
-        if (evalF(filters(i), acc, slot).isNaN) return Float.NaN
-        i += 1
-      }
-      i = 0
-      while (i < must.length) {
-        val s = evalF(must(i), acc, slot)
-        if (s.isNaN) return Float.NaN
-        score += s
-        i += 1
-      }
-      var matched = 0
-      i = 0
-      while (i < should.length) {
-        val s = evalF(should(i), acc, slot)
-        if (!s.isNaN) { matched += 1; score += s }
-        i += 1
-      }
-      if (matched < msm) return Float.NaN
-      if (must.isEmpty && filters.isEmpty && matched == 0) return Float.NaN
-      score * coords(must.length + matched)
-    case CDisMax(children, tie) =>
-      var mx = Float.NaN
-      var sm = 0.0f
-      var i = 0
-      while (i < children.length) {
-        val s = evalF(children(i), acc, slot)
-        if (!s.isNaN) {
-          sm += s
-          if (mx.isNaN || s > mx) mx = s
-        }
-        i += 1
-      }
-      if (mx.isNaN) Float.NaN else mx + tie * (sm - mx)
-    case CConst(child, s) =>
-      if (evalF(child, acc, slot).isNaN) Float.NaN else s
+      if (eval(child, acc, slot, m).isNaN) Double.NaN else s.toDouble
   }
 
   /** Phrase occurrence count. slop=0: #positions p of term0 such that term
@@ -530,96 +509,80 @@ final class IndexSearcher(
       col("field") === f && col("term").isin(ks.map(_._2).distinct: _*)
     }.reduce(_ || _)
 
+  /** Compile a rewritten query into a plan whose leaves carry scorers
+    * bound to `mode` — the one place a score mode is chosen. TF-IDF's
+    * two-phase queryNorm (search.go:152-169: v = Σ leaf weight², qn = f(v);
+    * 1 for every other model) runs in the mode's arithmetic: float32 boost
+    * products and sums under Ref32, float64 under ExactDouble. Exact leaf
+    * scorers still receive the float32 boost product, widened.
+    */
   private def compile(
       q0: Query,
       stats: Map[(String, String), TermStats],
       termIdx: Map[(String, String), Int],
-      fieldIdx: Map[String, Int]): CNode = {
+      fieldIdx: Map[String, Int],
+      mode: ScoreMode): CNode = {
     val sim = similarity
+    val exact = mode == ScoreMode.ExactDouble
     def fld(of: Option[String]): String = of.getOrElse(field)
-    // queryNorm two-phase (search.go:152-169): v = Σ leaf weight², qn = f(v).
-    // 1 for every model except TF-IDF.
-    def v(q: Query, topBoost: Float): Float = q match {
+    def unsupported(q: Query): Nothing = q match {
+      case p: MultiTermQuery => throw new IllegalStateException(
+        s"unexpanded $p — expandPrefixes must run before compile")
+      case _ => throw new IllegalArgumentException(
+        s"$q inside a BooleanQuery is not supported — use it top-level or " +
+          "as FilteredQuery(MatchAllQuery(), filter)")
+    }
+    def normWeight(ts: TermStats, fn: String, boost: Double): Double =
+      if (exact) sim.exactValueForNormalization(ts, collectionStats(fn), boost)
+      else sim.valueForNormalization(ts, collectionStats(fn), boost.toFloat).toDouble
+    def v(q: Query, topBoost: Double): Double = q match {
       case TermQuery(t, boost, f) =>
-        stats.get((fld(f), t))
-          .map(ts => sim.valueForNormalization(ts, collectionStats(fld(f)), boost * topBoost))
-          .getOrElse(0f)
+        stats.get((fld(f), t)).fold(0.0)(normWeight(_, fld(f), mode.round(boost * topBoost)))
       case PhraseQuery(ts, boost, f, _) =>
         val fn = fld(f)
         if (ts.forall(t => stats.contains((fn, t))))
-          sim.valueForNormalization(
+          normWeight(
             TermStats(fn, ts.mkString(" "),
               ts.map(t => stats((fn, t)).docFreq).min,
               ts.map(t => stats((fn, t)).totalTermFreq).sum),
-            collectionStats(fn), boost * topBoost)
-        else 0f
+            fn, mode.round(boost * topBoost))
+        else 0.0
       case BooleanQuery(clauses, _, boost) =>
         // FILTER clauses are non-scoring: no queryNorm contribution (Lucene)
         clauses.filter(c => c.occur != Occur.MUST_NOT && c.occur != Occur.FILTER)
-          .map(c => v(c.query, boost * topBoost)).sum
+          .foldLeft(0.0)((s, c) => mode.round(s + v(c.query, mode.round(boost * topBoost))))
       case DisMaxQuery(cs, _, boost) =>
-        cs.map(c => v(c, boost * topBoost)).sum
-      case ConstantScoreQuery(_, _) => 0f // the constant is never normalized
-      case FilteredQuery(q1, _) => v(q1, topBoost) // filter side never scores
-      case q: MatchAllQuery => throw new IllegalArgumentException(
-        s"$q inside a BooleanQuery is not supported — use it top-level or " +
-          "as FilteredQuery(MatchAllQuery(), filter)")
-      case p: MultiTermQuery => throw new IllegalStateException(
-        s"unexpanded $p — expandPrefixes must run before compile")
-    }
-    val qn = sim.queryNorm(math.max(v(Query.rewrite(q0), 1.0f), Float.MinPositiveValue))
-
-    // exact-double queryNorm twin (1 for every model except TF-IDF)
-    def vD(q: Query, topBoost: Double): Double = q match {
-      case TermQuery(t, boost, f) =>
-        stats.get((fld(f), t))
-          .map(ts => sim.exactValueForNormalization(ts, collectionStats(fld(f)),
-            boost.toDouble * topBoost))
-          .getOrElse(0.0)
-      case PhraseQuery(ts, boost, f, _) =>
-        val fn = fld(f)
-        if (ts.forall(t => stats.contains((fn, t))))
-          sim.exactValueForNormalization(
-            TermStats(fn, ts.mkString(" "),
-              ts.map(t => stats((fn, t)).docFreq).min,
-              ts.map(t => stats((fn, t)).totalTermFreq).sum),
-            collectionStats(fn), boost.toDouble * topBoost)
-        else 0.0
-      case BooleanQuery(clauses, _, boost) =>
-        clauses.filter(c => c.occur != Occur.MUST_NOT && c.occur != Occur.FILTER)
-          .map(c => vD(c.query, boost.toDouble * topBoost)).sum
-      case DisMaxQuery(cs, _, boost) =>
-        cs.map(c => vD(c, boost.toDouble * topBoost)).sum
+        cs.foldLeft(0.0)((s, c) => mode.round(s + v(c, mode.round(boost * topBoost))))
       case ConstantScoreQuery(_, _) => 0.0 // the constant is never normalized
-      case FilteredQuery(q1, _) => vD(q1, topBoost) // filter side never scores
-      case q: MatchAllQuery => throw new IllegalArgumentException(
-        s"$q inside a BooleanQuery is not supported — use it top-level or " +
-          "as FilteredQuery(MatchAllQuery(), filter)")
-      case p: MultiTermQuery => throw new IllegalStateException(
-        s"unexpanded $p — expandPrefixes must run before compile")
+      case FilteredQuery(q1, _) => v(q1, topBoost) // filter side never scores
+      case other => unsupported(other)
     }
-    val qnD = sim.exactQueryNorm(math.max(vD(Query.rewrite(q0), 1.0), Double.MinPositiveValue))
+    val vq = v(Query.rewrite(q0), 1.0)
+    val qn =
+      if (exact) sim.exactQueryNorm(math.max(vq, Double.MinPositiveValue))
+      else sim.queryNorm(math.max(vq.toFloat, Float.MinPositiveValue)).toDouble
+    def termLeaf(ts: TermStats, cs: CollectionStats, b: Float): LeafScorer =
+      if (exact) ExactLeaf(sim.exactTermScorer(ts, cs, b.toDouble).normalize(qn))
+      else Ref32Leaf(sim.termScorer(ts, cs, b).normalize(qn.toFloat))
+    def phraseLeaf(tss: Seq[TermStats], cs: CollectionStats, b: Float): LeafScorer =
+      if (exact) ExactLeaf(sim.exactPhraseScorer(tss, cs, b.toDouble).normalize(qn))
+      else Ref32Leaf(sim.phraseScorer(tss, cs, b).normalize(qn.toFloat))
 
     def node(q: Query, topBoost: Float): CNode = q match {
       case TermQuery(t, boost, f) =>
         val fn = fld(f)
         stats.get((fn, t)) match {
           case Some(ts) =>
-            val cs = collectionStats(fn)
             CLeafTerm(termIdx((fn, t)), fieldIdx(fn),
-              sim.termScorer(ts, cs, boost * topBoost).normalize(qn),
-              sim.exactTermScorer(ts, cs, (boost * topBoost).toDouble).normalize(qnD))
-          case None => CLeafTerm(-1, 0, null, null)
+              termLeaf(ts, collectionStats(fn), boost * topBoost))
+          case None => CLeafTerm(-1, 0, null)
         }
       case PhraseQuery(ts, boost, f, slop) =>
         val fn = fld(f)
-        if (ts.forall(t => stats.contains((fn, t)))) {
-          val cs = collectionStats(fn)
+        if (ts.forall(t => stats.contains((fn, t))))
           CLeafPhrase(ts.map(t => termIdx((fn, t))).toArray, fieldIdx(fn),
-            sim.phraseScorer(ts.map(t => stats((fn, t))), cs, boost * topBoost).normalize(qn),
-            sim.exactPhraseScorer(ts.map(t => stats((fn, t))), cs,
-              (boost * topBoost).toDouble).normalize(qnD), slop)
-        } else CLeafTerm(-1, 0, null, null)
+            phraseLeaf(ts.map(t => stats((fn, t))), collectionStats(fn), boost * topBoost), slop)
+        else CLeafTerm(-1, 0, null)
       case BooleanQuery(clauses, msm, boost) =>
         val b = boost * topBoost
         val must = clauses.filter(_.occur == Occur.MUST).map(c => node(c.query, b)).toArray
@@ -640,11 +603,7 @@ final class IndexSearcher(
         CConst(node(q1, 1.0f), s)
       case f: FilteredQuery => // rewrite() desugars these before compile
         node(Query.rewrite(f), topBoost)
-      case q: MatchAllQuery => throw new IllegalArgumentException(
-        s"$q inside a BooleanQuery is not supported — use it top-level or " +
-          "as FilteredQuery(MatchAllQuery(), filter)")
-      case p: MultiTermQuery => throw new IllegalStateException(
-        s"unexpanded $p — expandPrefixes must run before compile")
+      case other => unsupported(other)
     }
     node(Query.rewrite(q0), 1.0f)
   }
@@ -652,21 +611,33 @@ final class IndexSearcher(
   /** Matching dictionary terms for a prefix: a driver-side sorted range scan
     * of the terms table. `startsWith` pushes down as parquet
     * StringStartsWith (row-group pruning on the term column's min/max —
-    * metadata-cheap at any corpus size); the 1024 cap is the reference
-    * maxClauseCount acting as the rewrite budget, so the collect is bounded
-    * whatever the vocabulary.
+    * metadata-cheap at any corpus size).
     */
   private def prefixTerms(f: String, prefix: String): Seq[String] = {
     require(prefix.nonEmpty, "empty prefix (bare '*' queries are not supported)")
-    val terms = termsDF
-      .where(col("field") === f && col("term").startsWith(prefix))
+    expansion(f, col("term").startsWith(prefix), s"prefix '$f:$prefix*'", "narrow the prefix")
+  }
+
+  /** The sorted dictionary terms of field `f` matching `where`, at most
+    * 1024 — the reference maxClauseCount acting as the rewrite budget, so
+    * the collect is bounded whatever the vocabulary. `what` names the leaf
+    * and `remedy` the fix in the over-budget error.
+    */
+  private def expansion(f: String, where: Column, what: String, remedy: String): Seq[String] = {
+    val terms = termsDF.where(col("field") === f && where)
       .select("term").orderBy("term").limit(1025)
       .as[String].collect().toSeq
     require(terms.size <= 1024,
-      s"prefix '$f:$prefix*' expands to more than 1024 terms (reference " +
-        "maxClauseCount is the rewrite budget) — narrow the prefix")
+      s"$what expands to more than 1024 terms (reference maxClauseCount is the " +
+        s"rewrite budget) — $remedy")
     terms
   }
+
+  /** `term` starts with `pre` (parquet StringStartsWith pushdown) — no
+    * condition for an empty literal prefix.
+    */
+  private def startsWithLiteral(pre: String): Column =
+    if (pre.nonEmpty) col("term").startsWith(pre) else lit(true)
 
   /** Matching dictionary terms for a wildcard pattern (`*` any run, `?` one
     * char): the literal prefix before the first wildcard pushes down
@@ -686,15 +657,8 @@ final class IndexSearcher(
       case '?' => "."
       case c => java.util.regex.Pattern.quote(c.toString)
     }.mkString("^", "", "$")
-    var base = termsDF.where(col("field") === f)
-    if (pre.nonEmpty) base = base.where(col("term").startsWith(pre))
-    val terms = base.where(col("term").rlike(rx))
-      .select("term").orderBy("term").limit(1025)
-      .as[String].collect().toSeq
-    require(terms.size <= 1024,
-      s"wildcard '$f:$pattern' expands to more than 1024 terms (reference " +
-        "maxClauseCount is the rewrite budget) — narrow the pattern")
-    terms
+    expansion(f, startsWithLiteral(pre) && col("term").rlike(rx),
+      s"wildcard '$f:$pattern'", "narrow the pattern")
   }
 
   /** Matching dictionary terms for an anchored regex: the pattern's leading
@@ -717,15 +681,8 @@ final class IndexSearcher(
       s"regexp '/$pattern/' nests a quantifier inside a quantified group " +
         "(catastrophic-backtracking guard) — rewrite without nested quantifiers")
     val pre = pattern.takeWhile(c => !"\\^$.|?*+()[]{}".contains(c))
-    var base = termsDF.where(col("field") === f)
-    if (pre.nonEmpty) base = base.where(col("term").startsWith(pre))
-    val terms = base.where(col("term").rlike(s"^(?:$pattern)$$"))
-      .select("term").orderBy("term").limit(1025)
-      .as[String].collect().toSeq
-    require(terms.size <= 1024,
-      s"regexp '$f:/$pattern/' expands to more than 1024 terms (reference " +
-        "maxClauseCount is the rewrite budget) — narrow the pattern")
-    terms
+    expansion(f, startsWithLiteral(pre) && col("term").rlike(s"^(?:$pattern)$$"),
+      s"regexp '$f:/$pattern/'", "narrow the pattern")
   }
 
   /** Rewrite multi-term leaves (PrefixQuery, WildcardQuery) into bounded
@@ -785,16 +742,10 @@ final class IndexSearcher(
   private def fuzzyTerms(f: String, q: String, maxEdits: Int): Seq[String] = {
     require(maxEdits >= 0 && maxEdits <= 2,
       s"fuzzy maxEdits must be 0..2 (Lucene's classic bound), got $maxEdits")
-    val terms = termsDF
-      .where(col("field") === f &&
-        length(col("term")).between(q.length - maxEdits, q.length + maxEdits) &&
-        levenshtein(col("term"), lit(q)) <= maxEdits)
-      .select("term").orderBy("term").limit(1025)
-      .as[String].collect().toSeq
-    require(terms.size <= 1024,
-      s"fuzzy '$f:$q~$maxEdits' expands to more than 1024 terms — raise " +
-        "specificity (reference maxClauseCount is the rewrite budget)")
-    terms
+    expansion(f,
+      length(col("term")).between(q.length - maxEdits, q.length + maxEdits) &&
+        levenshtein(col("term"), lit(q)) <= maxEdits,
+      s"fuzzy '$f:$q~$maxEdits'", "raise specificity")
   }
 
   /** Dictionary terms within a lexicographic [lower, upper] range (either
@@ -803,16 +754,10 @@ final class IndexSearcher(
   private def rangeTerms(f: String, lo: Option[String], hi: Option[String],
       incLo: Boolean, incHi: Boolean): Seq[String] = {
     require(lo.nonEmpty || hi.nonEmpty, "term range needs at least one bound")
-    var base = termsDF.where(col("field") === f)
-    lo.foreach(l => base = base.where(if (incLo) col("term") >= l else col("term") > l))
-    hi.foreach(h => base = base.where(if (incHi) col("term") <= h else col("term") < h))
-    val terms = base.select("term").orderBy("term").limit(1025)
-      .as[String].collect().toSeq
-    require(terms.size <= 1024,
-      s"range '$f:[${lo.getOrElse("*")} TO ${hi.getOrElse("*")}]' expands to " +
-        "more than 1024 terms — narrow the bounds (reference maxClauseCount " +
-        "is the rewrite budget)")
-    terms
+    val above = lo.fold(lit(true))(l => if (incLo) col("term") >= l else col("term") > l)
+    val below = hi.fold(lit(true))(h => if (incHi) col("term") <= h else col("term") < h)
+    expansion(f, above && below,
+      s"range '$f:[${lo.getOrElse("*")} TO ${hi.getOrElse("*")}]'", "narrow the bounds")
   }
 
   private[search] def prepare(q0: Query, mode: ScoreMode): Prepared = {
@@ -834,7 +779,7 @@ final class IndexSearcher(
     val stats = termStats(keys)
     csFut.foreach(f =>
       scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
-    val plan = compile(q, stats, termIdx, fieldIdx)
+    val plan = compile(q, stats, termIdx, fieldIdx, mode)
     val pts = Query.phraseTerms(q, field)
     val needPos = keys.map(pts.contains).toArray
     Prepared(q, keys, stats,
@@ -875,41 +820,25 @@ final class IndexSearcher(
     hits.flatMap { case (id, hit) => hit.getOrElse(fetched.get(id)) }
   }
 
-  /** MoreLikeThis (Lucene's MLT module — never ported in the reference):
-    * build a query matching documents similar to a piece of TEXT. The text
-    * is analyzed with the caller's analyzer (normally the index analyzer),
-    * candidate terms are filtered by `minTermFreq` (tf within the text) and
-    * `minDocFreq` (dictionary df — driver point lookups, bounded by the
-    * text's distinct-term count), ranked by tf × BM25-idf interestingness
-    * with a deterministic (score desc, term asc) tie-break, and the top
-    * `maxQueryTerms` become a SHOULD disjunction. CLAUSE ORDER IS
-    * TERM-SORTED — the same stable-under-corpus-growth discipline as every
-    * other multi-term rewrite (selection may change with corpus stats;
-    * summation order never does). The returned query runs through any
-    * search entry point, including WAND.
+  /** MoreLikeThis: a SHOULD disjunction of the text's most interesting
+    * terms by this index's statistics — see [[MoreLikeThis]].
     */
   def moreLikeThisQuery(analyzer: graft.analysis.Analyzer, text: String,
       maxQueryTerms: Int = 25, minTermFreq: Int = 1, minDocFreq: Int = 1,
       queryField: Option[String] = None): Query = {
-    require(maxQueryTerms > 0 && maxQueryTerms <= 1024,
-      s"maxQueryTerms must be in 1..1024, got $maxQueryTerms")
     val fn = queryField.getOrElse(field)
-    val tf = analyzer(text).tokens.iterator.map(_.term)
-      .foldLeft(Map.empty[String, Int]) { (m, t) => m.updated(t, m.getOrElse(t, 0) + 1) }
-    val cand = tf.filter(_._2 >= minTermFreq).keys.toSeq.sorted
-    require(cand.size <= 8192,
-      s"MLT seed text has ${cand.size} distinct terms — cap is 8192 (pass a excerpt)")
-    val stats = termStats(cand.map(t => (fn, t)))
-    val n = collectionStats(fn).maxDoc
-    val scored = cand.flatMap { t =>
-      stats.get((fn, t)).filter(_.docFreq >= minDocFreq).map { ts =>
-        (t, tf(t).toDouble * Bm25.idfExact(ts.docFreq, n))
-      }
-    }
-    val top = scored.sortBy { case (t, s) => (-s, t) }.take(maxQueryTerms)
-      .map(_._1).sorted
-    BooleanQuery(top.map(t =>
-      BooleanClause(Occur.SHOULD, TermQuery(t, 1.0f, queryField))).toList)
+    MoreLikeThis.query(analyzer, text, maxQueryTerms, minTermFreq, minDocFreq, queryField,
+      fn, termStats, collectionStats(fn).maxDoc)
+  }
+
+  /** Fails unless `c` is a stored metadata column of the docs table (not
+    * one of the engine's own columns); `role` names its use in the error.
+    */
+  private def requireMetadataColumn(c: String, role: String): Unit = {
+    val internal = Set("docId", "segId", "dl", "norm", "fieldDls", "wave", "contentSha")
+    require(docsDF.columns.contains(c) && !internal.contains(c),
+      s"$role column '$c' is not a stored metadata column " +
+        s"(available: ${docsDF.columns.filterNot(internal).mkString(", ")})")
   }
 
   /** Facet counts — the distinct values of a stored metadata column among
@@ -923,10 +852,7 @@ final class IndexSearcher(
     * scores, so matching runs in Ref32 mode.
     */
   def facetCounts(q: Query, facetCol: String, topN: Int = 20): DataFrame = {
-    val internal = Set("docId", "segId", "dl", "norm", "fieldDls", "wave", "contentSha")
-    require(docsDF.columns.contains(facetCol) && !internal.contains(facetCol),
-      s"facet column '$facetCol' is not a stored metadata column " +
-        s"(available: ${docsDF.columns.filterNot(internal).mkString(", ")})")
+    requireMetadataColumn(facetCol, "facet")
     scoredDocs(q, ScoreMode.Ref32) // prepare() expands multi-term leaves
       .select(col("docId"))
       .join(docsDF.select(col("docId"), col(facetCol)), "docId")
@@ -949,10 +875,7 @@ final class IndexSearcher(
     */
   def searchSortBy(q: Query, sortCol: String, k: Int,
       ascending: Boolean = true): DataFrame = {
-    val internal = Set("docId", "segId", "dl", "norm", "fieldDls", "wave", "contentSha")
-    require(docsDF.columns.contains(sortCol) && !internal.contains(sortCol),
-      s"sort column '$sortCol' is not a stored metadata column " +
-        s"(available: ${docsDF.columns.filterNot(internal).mkString(", ")})")
+    requireMetadataColumn(sortCol, "sort")
     require(k > 0, s"k must be positive, got $k")
     val ord = if (ascending) col(sortCol).asc else col(sortCol).desc
     scoredDocs(q, ScoreMode.Ref32) // prepare() expands multi-term leaves
@@ -984,10 +907,7 @@ final class IndexSearcher(
     */
   def groupedSearch(q: Query, groupCol: String, topGroups: Int,
       docsPerGroup: Int, mode: ScoreMode = ScoreMode.Ref32): DataFrame = {
-    val internal = Set("docId", "segId", "dl", "norm", "fieldDls", "wave", "contentSha")
-    require(docsDF.columns.contains(groupCol) && !internal.contains(groupCol),
-      s"group column '$groupCol' is not a stored metadata column " +
-        s"(available: ${docsDF.columns.filterNot(internal).mkString(", ")})")
+    requireMetadataColumn(groupCol, "group")
     require(topGroups > 0 && docsPerGroup > 0,
       s"topGroups/docsPerGroup must be positive, got $topGroups/$docsPerGroup")
     val hits = scoredDocs(q, mode).toDF("docId", "score")
@@ -1544,23 +1464,12 @@ private[search] final class GroupEval(
     val acc = fill(rangeId, arr.iterator)
     val out = Array.newBuilder[ScoredDoc]
     var slot = 0
-    mode match {
-      case ScoreMode.ExactDouble =>
-        while (slot < width) {
-          if (acc.touched(slot) && live(acc.base + slot, dels)) {
-            val s = Eval.evalD(plan, acc, slot)
-            if (!s.isNaN) out += ScoredDoc(acc.base + slot, s)
-          }
-          slot += 1
-        }
-      case ScoreMode.Ref32 =>
-        while (slot < width) {
-          if (acc.touched(slot) && live(acc.base + slot, dels)) {
-            val s = Eval.evalF(plan, acc, slot)
-            if (!s.isNaN) out += ScoredDoc(acc.base + slot, s.toDouble)
-          }
-          slot += 1
-        }
+    while (slot < width) {
+      if (acc.touched(slot) && live(acc.base + slot, dels)) {
+        val s = scoreAt(acc, slot)
+        if (!s.isNaN) out += ScoredDoc(acc.base + slot, s)
+      }
+      slot += 1
     }
     out.result().iterator
   }
@@ -1593,15 +1502,13 @@ private[search] final class GroupEval(
     acc
   }
 
-  private[search] def scoreAt(acc: RangeAccum, slot: Int): Double = mode match {
-    case ScoreMode.ExactDouble => Eval.evalD(plan, acc, slot)
-    case ScoreMode.Ref32 =>
-      val f = Eval.evalF(plan, acc, slot)
-      if (f.isNaN) Double.NaN else f.toDouble
-  }
+  /** Score of the plan (or of one of its subtrees — Explain) at `slot`;
+    * NaN = no match.
+    */
+  private[search] def scoreAt(acc: RangeAccum, slot: Int, node: CNode = plan): Double =
+    Eval.eval(node, acc, slot, mode)
 
   private[search] def planRoot: CNode = plan
-  private[search] def scoreMode: ScoreMode = mode
 }
 
 /** Size-bounded hit queue with the reference collector's ordering: keep the

@@ -59,30 +59,6 @@ object Wand {
     scorer.boundScore(maxFreq.toFloat, safeByte)
   }
 
-  /** Mode-matched bound evaluator (advisor round-3 fix: tau and bounds must
-    * live in the SAME arithmetic — a float32 bound one ulp below a float64
-    * tau could wrongly prune a tie-break winner when the norm-quantization
-    * margin vanishes, e.g. b=0).
-    */
-  private sealed trait BScorer extends Serializable {
-    def bound(maxFreq: Int, minDl: Int): Double
-  }
-  private final case class FloatB(s: Similarity.Scorer) extends BScorer {
-    def bound(maxFreq: Int, minDl: Int): Double = rowBound(s, maxFreq, minDl).toDouble
-  }
-  /** ExactDouble bound: evaluates the exact scorer's boundScore at
-    * (maxFreq, minDl) in the same float64 arithmetic the evaluation uses.
-    * boundScore defaults to score — valid for every model monotone
-    * nondecreasing in freq and nonincreasing in dl (BM25 family, TF-IDF
-    * 1/√dl, LM/DFR/IB length penalties, DFI expectation growth); LM
-    * Pitman-Yor (whose discount term grows with dl) overrides it with a
-    * dl-independent bound (advisor round-4 fix).
-    */
-  private final case class ExactB(s: Similarity.ExactScorer) extends BScorer {
-    def bound(maxFreq: Int, minDl: Int): Double =
-      s.boundScore(maxFreq.toDouble, math.max(minDl, 1).toDouble)
-  }
-
   /** Pruned top-k for ANY query tree of term/phrase leaves and nested
     * booleans (MUST/SHOULD/FILTER/MUST_NOT at every level, any
     * minShouldMatch, dismax, constant score) — the bound tree is derived
@@ -120,8 +96,8 @@ object Wand {
     * term/phrase member with no dictionary entry).
     */
   private sealed trait BNode extends Serializable
-  private final case class BTerm(idx: Int, scorer: BScorer) extends BNode
-  private final case class BPhrase(idxs: Array[Int], scorer: BScorer, slop: Int) extends BNode
+  private final case class BTerm(idx: Int, scorer: LeafScorer) extends BNode
+  private final case class BPhrase(idxs: Array[Int], scorer: LeafScorer, slop: Int) extends BNode
   /** `filters` are Occur.FILTER children: gate eligibility like MUST,
     * contribute exactly 0 to the bound (they never score).
     */
@@ -136,19 +112,15 @@ object Wand {
   private final case class BConst(child: BNode, score: Float) extends BNode
   private case object BNever extends BNode
 
-  /** Bound tree of a compiled plan. Leaves reuse the plan's normalized
-    * scorers — the arithmetic the evaluation runs in (advisor round-3 fix:
-    * ExactDouble bounds come from the exact scorers, Ref32 keeps the
-    * safe-byte float32 bound, so tau and bounds share one arithmetic). A
-    * BooleanQuery whose MUST or FILTER child can match nowhere collapses to
-    * BNever.
+  /** Bound tree of a compiled plan. Leaves reuse the plan's mode-bound
+    * scorers ([[LeafScorer.bound]]), so τ and every bound share the
+    * arithmetic the evaluation runs in. A BooleanQuery whose MUST or FILTER
+    * child can match nowhere collapses to BNever.
     */
-  private def boundTree(n: CNode, exactMode: Boolean): BNode = {
-    def sc(ref: Similarity.Scorer, exact: Similarity.ExactScorer): BScorer =
-      if (exactMode) ExactB(exact) else FloatB(ref)
+  private def boundTree(n: CNode): BNode = {
     def walk(n: CNode): BNode = n match {
-      case CLeafTerm(idx, _, ref, exact) => if (idx < 0) BNever else BTerm(idx, sc(ref, exact))
-      case CLeafPhrase(idxs, _, ref, exact, slop) => BPhrase(idxs, sc(ref, exact), slop)
+      case CLeafTerm(idx, _, sc) => if (idx < 0) BNever else BTerm(idx, sc)
+      case CLeafPhrase(idxs, _, sc, slop) => BPhrase(idxs, sc, slop)
       case CBool(must0, should0, filters0, _, msm, _) =>
         val must = must0.map(walk)
         // an unmatchable SHOULD clause never counts toward msm
@@ -250,7 +222,7 @@ object Wand {
   private def pruned(searcher: IndexSearcher, p: Prepared, k: Int, phase1Count: Int): TopDocs = {
     val spark = searcher.sparkSession
     import spark.implicits._
-    val root = boundTree(p.ge.planRoot, p.ge.scoreMode == ScoreMode.ExactDouble)
+    val root = boundTree(p.ge.planRoot)
     if (root == BNever) return TopDocs(0, Array.empty)
 
     // terms the tree actually scores (MUST_NOT and unmatchable leaves are out)

@@ -58,20 +58,29 @@ class DisMaxSpec extends AnyFunSuite with SparkTestBase {
       assert(math.abs(s - want(id)) <= math.ulp(want(id)) * 4, s"doc $id") }
   }
 
-  test("general tie matches the hand formula in exact-double arithmetic") {
+  test("general tie matches the hand formula in each mode's arithmetic") {
     val a = TermQuery("merge"); val b = TermQuery("scorer"); val c = TermQuery("index")
     val tie = 0.25f
-    val got = scores(DisMaxQuery(Seq(a, b, c), tie), ScoreMode.ExactDouble)
-    val sa = scores(a, ScoreMode.ExactDouble)
-    val sb = scores(b, ScoreMode.ExactDouble)
-    val sc = scores(c, ScoreMode.ExactDouble)
-    got.foreach { case (id, s) =>
-      // clause-order accumulation: sm adds a, b, c in order; mx is the max
-      var sm = 0.0; var mx = Double.NaN
-      for (m <- Seq(sa, sb, sc); v <- m.get(id)) {
-        sm += v; if (mx.isNaN || v > mx) mx = v
+    for (mode <- Seq[ScoreMode](ScoreMode.ExactDouble, ScoreMode.Ref32)) {
+      val got = scores(DisMaxQuery(Seq(a, b, c), tie), mode)
+      val per = Seq(a, b, c).map(scores(_, mode))
+      // the formula only rounds where two or more clauses match
+      assert(got.keys.count(id => per.count(_.contains(id)) >= 2) > 0, s"mode $mode")
+      got.foreach { case (id, s) =>
+        // clause-order accumulation: sm adds a, b, c in order; mx is the max
+        val vs = per.flatMap(_.get(id))
+        val want = mode match {
+          case ScoreMode.ExactDouble =>
+            val sm = vs.foldLeft(0.0)(_ + _); val mx = vs.max
+            mx + tie.toDouble * (sm - mx)
+          case ScoreMode.Ref32 => // float32 throughout
+            val fs = vs.map(_.toFloat)
+            assert(fs.map(_.toDouble) == vs, s"doc $id: Ref32 clause scores are float32 values")
+            val sm = fs.foldLeft(0.0f)(_ + _); val mx = fs.max
+            (mx + tie * (sm - mx)).toDouble
+        }
+        assert(s == want, s"doc $id mode $mode")
       }
-      assert(s == mx + tie.toDouble * (sm - mx), s"doc $id")
     }
   }
 
