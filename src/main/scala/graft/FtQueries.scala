@@ -237,7 +237,7 @@ object FtQueries {
     searcherCache.getOrElseUpdate(s"${indexPath(spark, sfDir)}#sim=$simName",
       // inherit the base searcher's stats caches: df/ttf/collection stats
       // are similarity-independent, so a fresh per-model searcher would
-      // re-pay an identical terms-dict job for identical values
+      // re-pay an identical terms-dict read for identical values
       new IndexSearcher(spark, indexPath(spark, sfDir), similarity = sim)
         .inheritStatsFrom(searcher(spark, sfDir)))
 

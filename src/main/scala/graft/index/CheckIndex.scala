@@ -8,8 +8,8 @@ import graft.codec.PostingsCodec
 /** Offline index validator (reference CheckIndex,
   * /root/reference/core/index/checkIndex.go:17-509): recomputes doc/term
   * counts and stats from the raw postings and cross-checks the published
-  * manifest/terms/fieldstats — the "doc-count/term-count metrics" leg of the
-  * north-star checkpoint story.
+  * manifest/terms/fieldstats (and the manifest's copy of the field stats) —
+  * the "doc-count/term-count metrics" leg of the north-star checkpoint story.
   */
 object CheckIndex {
   final case class Report(
@@ -104,20 +104,30 @@ object CheckIndex {
       .join(perFieldTerms, Seq("field"), "full_outer")
       .join(perFieldDocs, Seq("field"), "full_outer")
       .collect()
+    // the manifest's copy of the stats (manifests that have one) must equal
+    // the table row AND the recomputation, field by field
+    val copy = manifest.fieldStats.map(_.map(fs => fs.field -> fs).toMap)
     fieldRows.foreach { r =>
       val f = r.getAs[String]("field")
-      def cmp(published: String, recomputed: String): Unit = {
-        val p = if (r.isNullAt(r.fieldIndex(published))) -1L else r.getAs[Long](published)
-        val c = if (r.isNullAt(r.fieldIndex(recomputed))) -1L else r.getAs[Long](recomputed)
-        if (p != c) problems += s"fieldstats[$f].$published $p != recomputed $c"
+      def v(c: String): Long = if (r.isNullAt(r.fieldIndex(c))) -1L else r.getAs[Long](c)
+      val entry = copy.map(_.get(f))
+      def cmp(published: String, recomputed: String, inCommit: FieldStats => Long): Unit = {
+        if (v(published) != v(recomputed))
+          problems += s"fieldstats[$f].$published ${v(published)} != recomputed ${v(recomputed)}"
+        entry.map(_.fold(-1L)(inCommit)).filter(c => c != v(published) || c != v(recomputed))
+          .foreach(c => problems += s"commit.json fieldStats[$f].$published $c != " +
+            s"fieldstats ${v(published)} / recomputed ${v(recomputed)}")
       }
-      cmp("sumTotalTermFreq", "pSumTtf")
-      cmp("sumDocFreq", "pSumDf")
-      cmp("termCount", "pTermCount")
-      cmp("docCount", "pDocCount")
-      if (r.isNullAt(r.fieldIndex("maxDoc")) || r.getAs[Long]("maxDoc") != nDocs)
-        problems += s"fieldstats[$f].maxDoc stale"
+      cmp("sumTotalTermFreq", "pSumTtf", _.sumTotalTermFreq)
+      cmp("sumDocFreq", "pSumDf", _.sumDocFreq)
+      cmp("termCount", "pTermCount", _.termCount)
+      cmp("docCount", "pDocCount", _.docCount)
+      if (v("maxDoc") != nDocs) problems += s"fieldstats[$f].maxDoc stale"
+      if (entry.exists(_.fold(-1L)(_.maxDoc) != nDocs))
+        problems += s"commit.json fieldStats[$f].maxDoc stale"
     }
+    copy.foreach(c => (c.keySet -- fieldRows.map(_.getAs[String]("field"))).foreach(f =>
+      problems += s"commit.json fieldStats[$f] names no indexed field"))
     rowChecks.unpersist()
 
     val docCount = stats.agg(max("docCount")).collect()(0).getLong(0)

@@ -168,13 +168,11 @@ final class IndexBuilder(spark: SparkSession, val config: IndexConfig = IndexCon
     // any mismatch — uncommitted index, config drift, wave-set drift — falls
     // through to the full publish exactly as before.
     if (resume && !invertedAny && exists(s"$indexPath/commit.json")) {
-      val expectedFormat =
-        if (config.withOffsets) IndexManifest.FormatOffsets else IndexManifest.CurrentFormat
       scala.util.Try(IndexManifest.load(spark, indexPath)).toOption match {
         case Some(m) if m.publishedWaves.nonEmpty &&
             m.publishedWaves.toSet ==
               TieredMerge.waves(spark, indexPath).map(_.wave).toSet &&
-            m.formatVersion == expectedFormat &&
+            m.formatVersion == formatVersion &&
             m.field == config.field &&
             m.analyzedFields == config.analyzedFields &&
             m.keywordFields == config.keywordFields &&
@@ -345,15 +343,13 @@ final class IndexBuilder(spark: SparkSession, val config: IndexConfig = IndexCon
       }
     }
 
-    partial
+    val postingRows = partial
       .groupByKey(r => (r.field, r.term, r.rangeId))
       .mapGroups { (_: (String, String, Long), it: Iterator[PostingRow]) =>
         PostingRows.merge(it.toArray, wave)
       }
-      // (field, term)-sorted files → tight parquet row-group min/max stats,
-      // so query-time pair predicates prune row groups
-      .sortWithinPartitions("field", "term", "rangeId")
-      .write.mode("overwrite").parquet(s"$indexPath/postings/wave=$wave")
+    IndexBuilder.writeSorted(postingRows, s"$indexPath/postings/wave=$wave",
+      "field", "term", "rangeId")
 
     Await.result(docsJob, scala.concurrent.duration.Duration.Inf)
   }
@@ -369,6 +365,10 @@ final class IndexBuilder(spark: SparkSession, val config: IndexConfig = IndexCon
     */
   def writeTermsPartial(indexPath: String, wave: Int): Unit =
     IndexBuilder.writeTermsPartial(spark, indexPath, wave)
+
+  /** The manifest format this builder writes: 3 with offsets, else 2. */
+  private def formatVersion: Int =
+    if (config.withOffsets) IndexManifest.FormatOffsets else IndexManifest.CurrentFormat
 
   /** Stage 3: (re)publish terms dict, stats, segment metadata, commit. */
   def publish(indexPath: String): IndexManifest = {
@@ -388,7 +388,7 @@ final class IndexBuilder(spark: SparkSession, val config: IndexConfig = IndexCon
     val termsPath = s"$indexPath/terms"
     val statsPath = s"$indexPath/fieldstats"
     val segmentsPath = s"$indexPath/segments"
-    val postings = spark.read.parquet(s"$indexPath/postings")
+    val postings = spark.read.schema(TableSchemas.postings(formatVersion)).parquet(s"$indexPath/postings")
 
     // terms aggregation and the docs rollup are independent → submit
     // concurrently (publish's wall is mostly fixed cost, which otherwise
@@ -419,9 +419,7 @@ final class IndexBuilder(spark: SparkSession, val config: IndexConfig = IndexCon
         sum("ttf").as("totalTermFreq"),
         when(sum("docFreq") === 1L, max("firstDocId")).otherwise(-1L).as("singletonDocId"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val termsJob = Future {
-      termsAgg.write.mode("overwrite").parquet(termsPath)
-    }
+    val termsJob = Future(IndexBuilder.writeSorted(termsAgg, termsPath, "field", "term"))
     val docs = spark.read.parquet(docsPath)
     // one pass over docs: rollup gives per-segment rows, the global totals
     // row, AND every field's docCount (conditional aggs over the stored
@@ -492,16 +490,17 @@ final class IndexBuilder(spark: SparkSession, val config: IndexConfig = IndexCon
     Await.result(statsJob, scala.concurrent.duration.Duration.Inf)
     mark("stats-done")
     termsAgg.unpersist()
+    // the manifest carries a copy of the (field-count-sized) table, read back
+    // on the driver, so searchers read collection stats with no I/O
+    val publishedStats = IndexManifest.readFieldStats(spark.sparkContext.hadoopConfiguration, statsPath)
 
     // two-phase commit: all data dirs are durable; the marker makes it live.
     // publishedWaves records which waves' term contributions this dictionary
     // covers (replay idempotence for streaming's incremental publish)
     val m = IndexManifest(indexPath, maxDoc, docCount, config.docsPerRange, maxDocId,
-      termsGen = 0, publishedWaves = liveWaves.map(_.wave).sorted,
-      formatVersion = if (config.withOffsets) IndexManifest.FormatOffsets
-        else IndexManifest.CurrentFormat,
+      termsGen = 0, publishedWaves = liveWaves.map(_.wave).sorted, formatVersion = formatVersion,
       field = config.field, analyzedFields = config.analyzedFields,
-      keywordFields = config.keywordFields)
+      keywordFields = config.keywordFields, fieldStats = Some(publishedStats))
     // the generation that was live BEFORE this commit survives one round
     // for in-flight readers (same grace publishIncremental gives); older
     // stale generations are dead and swept
@@ -549,7 +548,7 @@ final class IndexBuilder(spark: SparkSession, val config: IndexConfig = IndexCon
       // committed segment row; divergence falls back to a FULL publish,
       // which re-aggregates whatever is actually on disk (consistent
       // dictionary; the overwritten wave's old rows are gone either way).
-      val r = spark.read.parquet(s"$indexPath/docs/wave=$wave")
+      val r = spark.read.schema(TableSchemas.docs).parquet(s"$indexPath/docs/wave=$wave")
         .agg(count(lit(1)).as("n"), min("docId").as("lo"), max("docId").as("hi")).collect()(0)
       val segPath0 = new Path(s"$indexPath/segments.json")
       val fs0 = fs(indexPath)
@@ -585,23 +584,25 @@ final class IndexBuilder(spark: SparkSession, val config: IndexConfig = IndexCon
           spark.read.parquet(s"$indexPath/termsPartial/wave=$wave")
             .select(col("field"), col("term"), col("docFreq").as("dDf"),
               col("ttf").as("dTtf"), col("singletonDocId").as("dSingle"))
-        else spark.read.parquet(s"$indexPath/postings/wave=$wave")
+        else spark.read.schema(TableSchemas.postings(formatVersion))
+          .parquet(s"$indexPath/postings/wave=$wave")
           .groupBy("field", "term")
           .agg(
             sum("docFreq").as("dDf"),
             sum("ttf").as("dTtf"),
             when(sum("docFreq") === 1L, max("firstDocId")).otherwise(-1L).as("dSingle"))
-      spark.read.parquet(prev.termsLocation)
+      val merged = spark.read.schema(TableSchemas.terms).parquet(prev.termsLocation)
         .join(delta, Seq("field", "term"), "full_outer")
         .select(col("field"), col("term"),
           (coalesce(col("docFreq"), lit(0L)) + coalesce(col("dDf"), lit(0L))).as("docFreq"),
           (coalesce(col("totalTermFreq"), lit(0L)) + coalesce(col("dTtf"), lit(0L))).as("totalTermFreq"),
           when(coalesce(col("docFreq"), lit(0L)) + coalesce(col("dDf"), lit(0L)) === 1L,
             coalesce(col("singletonDocId"), col("dSingle"))).otherwise(-1L).as("singletonDocId"))
-        .write.mode("overwrite").parquet(termsOut)
+      IndexBuilder.writeSorted(merged, termsOut, "field", "term")
     }
 
-    // 2) docCount/maxDoc increments from the new wave's docs partition only
+    // 2) docCount/maxDoc increments from the new wave's docs partition only,
+    // added to the committed docCounts (the manifest's field stats)
     val indexedFields =
       (Seq(config.field) ++ config.analyzedFields ++ config.keywordFields).distinct
     val batchAggs = Seq(count(lit(1)).as("n"), min("docId").as("lo"), max("docId").as("hi"),
@@ -610,16 +611,12 @@ final class IndexBuilder(spark: SparkSession, val config: IndexConfig = IndexCon
         if (f == config.field) sum(when(col("dl") > 0, 1L).otherwise(0L)).as(s"dc_$f")
         else sum(when(element_at(col("fieldDls"), f) > 0, 1L).otherwise(0L)).as(s"dc_$f"))
     val batchRowF = Future {
-      spark.read.parquet(s"$indexPath/docs/wave=$wave")
+      spark.read.schema(TableSchemas.docs).parquet(s"$indexPath/docs/wave=$wave")
         .agg(batchAggs.head, batchAggs.tail: _*).collect()(0)
     }
-    val oldDcF = Future {
-      spark.read.parquet(prev.statsLocation)
-        .select("field", "docCount").collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-    }
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    val oldDc = prev.fieldStatsOrTable(hadoopConf).map(fs => fs.field -> fs.docCount).toMap
     val batchRow = Await.result(batchRowF, Duration.Inf)
-    val oldDc = Await.result(oldDcF, Duration.Inf)
     val batchN = batchRow.getLong(0)
     val newMaxDoc = prev.maxDoc + batchN
     val dcCol = indexedFields.zipWithIndex.map { case (f, i) =>
@@ -629,7 +626,7 @@ final class IndexBuilder(spark: SparkSession, val config: IndexConfig = IndexCon
     // 3) per-field sums from the merged dictionary (a vocabulary-sized scan)
     Await.result(termsJob, Duration.Inf)
     val statsJob = Future {
-      spark.read.parquet(termsOut)
+      spark.read.schema(TableSchemas.terms).parquet(termsOut)
         .groupBy("field").agg(
           sum("totalTermFreq").as("sumTotalTermFreq"),
           sum("docFreq").as("sumDocFreq"),
@@ -660,16 +657,15 @@ final class IndexBuilder(spark: SparkSession, val config: IndexConfig = IndexCon
       s""""docCount":$batchN,"generation":1,"lineage":"stream/wave=$wave"}""" + "\n").getBytes("UTF-8"))
     out.close()
     Await.result(statsJob, Duration.Inf)
+    val publishedStats = IndexManifest.readFieldStats(hadoopConf, statsOut)
 
     // 5) atomic flip + sweep generations older than the one we keep for
     // in-flight readers
     val m = IndexManifest(indexPath, newMaxDoc, prev.docCount + batchRow.getLong(3),
       config.docsPerRange, math.max(prev.maxDocId, batchRow.getLong(2)),
-      termsGen = gen, publishedWaves = prev.publishedWaves :+ wave,
-      formatVersion = if (config.withOffsets) IndexManifest.FormatOffsets
-        else IndexManifest.CurrentFormat,
+      termsGen = gen, publishedWaves = prev.publishedWaves :+ wave, formatVersion = formatVersion,
       field = config.field, analyzedFields = config.analyzedFields,
-      keywordFields = config.keywordFields)
+      keywordFields = config.keywordFields, fieldStats = Some(publishedStats))
     IndexManifest.commit(spark, m)
     fsys.listStatus(new Path(indexPath)).map(_.getPath)
       .filter { p =>
@@ -688,6 +684,18 @@ final class IndexBuilder(spark: SparkSession, val config: IndexConfig = IndexCon
 object IndexBuilder {
   /** The four stored metadata columns of the CodeFile input shape. */
   val MetaCols = Seq("repo", "path", "commit", "lang")
+
+  /** Writes a terms or postings table: rows sorted by `keys` within each
+    * file, in parquet pages of at most 1024 rows. Footer and column-index
+    * min/max statistics then narrow a (field, term) seek — Spark's
+    * pushdown and the searcher's driver-side [[PointReader]] — to the
+    * pages holding the key, like Lucene's BlockTree term blocks. (With
+    * parquet's default of 20,000 rows per page, a seek in a 200k-doc
+    * dictionary decoded most of every file.)
+    */
+  private[index] def writeSorted(ds: Dataset[_], path: String, keys: String*): Unit =
+    ds.sortWithinPartitions(keys.map(col): _*).write.mode("overwrite")
+      .option("parquet.page.row.count.limit", 1024L).parquet(path)
 
   /** Row order of the stage-1 key (segId, repo, path, h) matching Spark's
     * own sort semantics EXACTLY: strings compare in UTF-8 BINARY order (the
@@ -816,7 +824,12 @@ final case class IndexManifest(indexPath: String, maxDoc: Long, docCount: Long,
       */
     field: String = "content",
     analyzedFields: Seq[String] = Nil,
-    keywordFields: Seq[String] = Nil) {
+    keywordFields: Seq[String] = Nil,
+    /** The committed `fieldstats` table's rows, so reading collection
+      * statistics costs no I/O. None for manifests written before the copy
+      * existed: read the table ([[fieldStatsOrTable]]).
+      */
+    fieldStats: Option[Seq[FieldStats]] = None) {
 
   /** Committed terms-dictionary dir. Generation 0 is the full-publish dir
     * ("terms"); incremental publishes write generational dirs and flip the
@@ -829,6 +842,12 @@ final case class IndexManifest(indexPath: String, maxDoc: Long, docCount: Long,
   /** Committed fieldstats dir (same generation discipline as terms). */
   def statsLocation: String =
     if (termsGen <= 0) s"$indexPath/fieldstats" else s"$indexPath/fieldstats_g$termsGen"
+
+  /** Per-field statistics: the manifest's copy, else the fieldstats table
+    * read on the driver (no Spark job).
+    */
+  def fieldStatsOrTable(conf: org.apache.hadoop.conf.Configuration): Seq[FieldStats] =
+    fieldStats.getOrElse(IndexManifest.readFieldStats(conf, statsLocation))
 }
 
 object IndexManifest {
@@ -845,48 +864,78 @@ object IndexManifest {
     */
   val FormatOffsets = 3
 
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** Every row of a fieldstats table, read on the driver. */
+  def readFieldStats(conf: org.apache.hadoop.conf.Configuration, dir: String): Seq[FieldStats] =
+    new PointReader(conf, dir).read(
+      Seq("field", "sumTotalTermFreq", "sumDocFreq", "termCount", "maxDoc", "docCount"), None) { g =>
+      FieldStats(g.getString("field", 0), g.getLong("sumTotalTermFreq", 0),
+        g.getLong("sumDocFreq", 0), g.getLong("termCount", 0), g.getLong("maxDoc", 0),
+        g.getLong("docCount", 0))
+    }.sortBy(_.field)
+
+  /** Writes `commit.json` — a JSON object with one key per manifest field
+    * (strings escaped by the JSON writer); `fieldStats` is an array of
+    * per-field objects, omitted when None.
+    */
   def commit(spark: SparkSession, m: IndexManifest): Unit = {
+    val root = json.createObjectNode()
+    root.put("maxDoc", m.maxDoc)
+    root.put("docCount", m.docCount)
+    root.put("docsPerRange", m.docsPerRange)
+    root.put("maxDocId", m.maxDocId)
+    root.put("termsGen", m.termsGen)
+    val waves = root.putArray("publishedWaves")
+    m.publishedWaves.foreach(w => waves.add(w))
+    root.put("formatVersion", m.formatVersion)
+    root.put("field", m.field)
+    val analyzed = root.putArray("analyzedFields")
+    m.analyzedFields.foreach(f => analyzed.add(f))
+    val keyword = root.putArray("keywordFields")
+    m.keywordFields.foreach(f => keyword.add(f))
+    m.fieldStats.foreach { fss =>
+      val arr = root.putArray("fieldStats")
+      fss.foreach { fs =>
+        val o = arr.addObject()
+        o.put("field", fs.field)
+        o.put("sumTotalTermFreq", fs.sumTotalTermFreq)
+        o.put("sumDocFreq", fs.sumDocFreq)
+        o.put("termCount", fs.termCount)
+        o.put("maxDoc", fs.maxDoc)
+        o.put("docCount", fs.docCount)
+      }
+    }
     val p = new Path(s"${m.indexPath}/commit.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    def arr(xs: Seq[String]): String = xs.map(x => s""""$x"""").mkString(",")
-    out.write(
-      (s"""{"maxDoc":${m.maxDoc},"docCount":${m.docCount},"docsPerRange":${m.docsPerRange},""" +
-        s""""maxDocId":${m.maxDocId},"termsGen":${m.termsGen},""" +
-        s""""publishedWaves":[${m.publishedWaves.mkString(",")}],""" +
-        s""""formatVersion":${m.formatVersion},""" +
-        s""""field":"${m.field}","analyzedFields":[${arr(m.analyzedFields)}],""" +
-        s""""keywordFields":[${arr(m.keywordFields)}]}""")
-        .getBytes("UTF-8"))
-    out.close()
+    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true)
+    try out.write(json.writeValueAsBytes(root)) finally out.close()
   }
 
   def load(spark: SparkSession, indexPath: String): IndexManifest = {
+    import scala.jdk.CollectionConverters._
+    import com.fasterxml.jackson.databind.JsonNode
     val p = new Path(s"$indexPath/commit.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val txt = scala.io.Source.fromInputStream(in).mkString
-    in.close()
-    def extract(k: String): Option[Long] =
-      s""""$k":(-?\\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toLong)
-    val maxDoc = extract("maxDoc").get
-    val waves = """"publishedWaves":\[([0-9,\s]*)\]""".r.findFirstMatchIn(txt)
-      .map(_.group(1).split(',').map(_.trim).filter(_.nonEmpty).map(_.toInt).toSeq)
-      .getOrElse(Nil)
-    def strArr(k: String): Seq[String] =
-      (s""""$k":\\[([^\\]]*)\\]""").r.findFirstMatchIn(txt)
-        .map(_.group(1).split(',').map(_.trim.stripPrefix("\"").stripSuffix("\""))
-          .filter(_.nonEmpty).toSeq)
-        .getOrElse(Nil)
-    IndexManifest(indexPath, maxDoc, extract("docCount").get,
-      extract("docsPerRange").get.toInt,
+    val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
+    val root = try json.readTree(in) finally in.close()
+    def node(k: String): Option[JsonNode] = Option(root.get(k)).filterNot(_.isNull)
+    def long(k: String): Option[Long] = node(k).map(_.asLong)
+    def strs(k: String): Seq[String] =
+      node(k).fold(Seq.empty[String])(_.elements().asScala.map(_.asText).toSeq)
+    val maxDoc = long("maxDoc").get
+    IndexManifest(indexPath, maxDoc, long("docCount").get,
+      long("docsPerRange").get.toInt,
       // manifests written before maxDocId existed: dense 0-based ids only
-      extract("maxDocId").getOrElse(maxDoc - 1),
-      extract("termsGen").map(_.toInt).getOrElse(0), waves,
-      extract("formatVersion").map(_.toInt).getOrElse(1),
-      field = """"field":"([^"]*)"""".r.findFirstMatchIn(txt)
-        .map(_.group(1)).getOrElse("content"),
-      analyzedFields = strArr("analyzedFields"),
-      keywordFields = strArr("keywordFields"))
+      long("maxDocId").getOrElse(maxDoc - 1),
+      long("termsGen").map(_.toInt).getOrElse(0),
+      node("publishedWaves").fold(Seq.empty[Int])(_.elements().asScala.map(_.asInt).toSeq),
+      long("formatVersion").map(_.toInt).getOrElse(1),
+      field = node("field").map(_.asText).getOrElse("content"),
+      analyzedFields = strs("analyzedFields"),
+      keywordFields = strs("keywordFields"),
+      fieldStats = node("fieldStats").map(_.elements().asScala.map { o =>
+        FieldStats(o.get("field").asText, o.get("sumTotalTermFreq").asLong,
+          o.get("sumDocFreq").asLong, o.get("termCount").asLong, o.get("maxDoc").asLong,
+          o.get("docCount").asLong)
+      }.toSeq))
   }
 }

@@ -279,7 +279,9 @@ object TieredMerge {
 
     delDf match {
       case None =>
-        rows
+        // same file order and page size as invertWave → tight (field, term)
+        // statistics survive merges
+        val merged = rows
           .groupByKey(r => (r.field, r.term, r.rangeId))
           .mapGroups { (_: (String, String, Long), it: Iterator[PostingRow]) =>
             // rows of later merge generations cover non-contiguous doc ranges
@@ -287,16 +289,14 @@ object TieredMerge {
             // does a full entry sort, not just a row-order concat
             PostingRows.merge(it.toArray, newWave)
           }
-          .sortWithinPartitions("field", "term", "rangeId") // same file order as
-          // invertWave → tight (field, term) row-group stats survive merges
-          .write.mode("overwrite").parquet(target)
+        IndexBuilder.writeSorted(merged, target, "field", "term", "rangeId")
       case Some(dels) =>
         // per-rangeId sorted delete arrays joined onto the group's rows: the
         // same bounded-buffer shape as the searcher's ranged-delete path —
         // nothing delete-sized ever reaches the driver
         val byRange = Deletes.byRange(dels, manifest.get.docsPerRange)
           .as[(Long, Array[Long])]
-        rows.joinWith(byRange, rows("rangeId") === byRange("rangeId"), "left_outer")
+        val reclaimed = rows.joinWith(byRange, rows("rangeId") === byRange("rangeId"), "left_outer")
           .groupByKey { case (r, _) => (r.field, r.term, r.rangeId) }
           .flatMapGroups { (_: (String, String, Long), it: Iterator[(PostingRow, (Long, Array[Long]))]) =>
             val buf = it.toArray
@@ -304,8 +304,7 @@ object TieredMerge {
               .getOrElse(Array.emptyLongArray)
             PostingRows.mergeFiltered(buf.map(_._1), newWave, ds).iterator
           }
-          .sortWithinPartitions("field", "term", "rangeId")
-          .write.mode("overwrite").parquet(target)
+        IndexBuilder.writeSorted(reclaimed, target, "field", "term", "rangeId")
         // docs of the group minus deleted rows → the merged wave's docs dir
         // (written BEFORE the log commit point; an orphan is swept by waves())
         if (docsFrom.nonEmpty) {

@@ -70,16 +70,42 @@ final case class TermRow(
     totalTermFreq: Long,
     singletonDocId: Long)
 
-/** Per-segment, per-field statistics (reference computes these at flush:
-  * /root/reference/core/index/termsHashConsumerPerField.go:513-516,657-668).
+/** Published collection statistics of one indexed field (the reference
+  * computes these at flush, core/index/termsHashConsumerPerField.go:513-516,
+  * 657-668):
+  * one row of the `fieldstats` table and one entry of the manifest's
+  * `fieldStats`. `docCount` counts docs with ≥1 token in the field.
   */
-final case class FieldStatsRow(
-    segId: Int,
+final case class FieldStats(
     field: String,
-    docCount: Long,
     sumTotalTermFreq: Long,
     sumDocFreq: Long,
-    termCount: Long)
+    termCount: Long,
+    maxDoc: Long,
+    docCount: Long)
+
+/** Explicit read schemas of the index tables, so opening one launches no
+  * parquet schema-inference job. The `wave` partition column is discovered
+  * from the directory names as before.
+  */
+object TableSchemas {
+  import org.apache.spark.sql.Encoders
+  import org.apache.spark.sql.types.StructType
+
+  private def nullable(s: StructType) = StructType(s.map(_.copy(nullable = true)))
+
+  val terms: StructType = nullable(Encoders.product[TermRow].schema)
+
+  /** Stored docs as the current builder writes them (with `fieldDls`). */
+  val docs: StructType = nullable(Encoders.product[DocRow].schema)
+
+  /** Posting rows; `offPayload` exists from format 3 (offsets) on. */
+  def postings(formatVersion: Int): StructType = {
+    val all = nullable(Encoders.product[PostingRow].schema)
+    if (formatVersion >= IndexManifest.FormatOffsets) all
+    else StructType(all.filterNot(_.name == "offPayload"))
+  }
+}
 
 /** Segment metadata for the manifest (SegmentInfos analogue,
   * /root/reference/core/index/segmentInfos.go:297-340). A segment is a
@@ -128,14 +154,14 @@ final case class IndexConfig(
       * column; disjoint from keywordFields. */
     analyzedFields: Seq[String] = Nil) {
 
-  // Field names persist in the manifest's hand-rolled JSON field-config
-  // arrays (IndexManifest.commit) whose parser splits on bare commas: a
-  // quote/backslash/comma in a name would write a corrupt commit.json or
-  // round-trip to the wrong field set, which forExisting then republishes
-  // DURABLY. Gate at construction — the one entry point every build path
-  // shares — instead of escaping at serialization.
+  // Field names persist in commit.json (escaped by its JSON writer) and are
+  // named again in comma-separated field lists (the graft-search source's
+  // keywordFields option) and in query syntax, where quotes and
+  // backslashes delimit and escape: a name holding a quote, comma or
+  // backslash could be stored but never named back. Gate at construction —
+  // the one entry point every build path shares.
   for (f <- (field +: (analyzedFields ++ keywordFields)))
     require(f.nonEmpty && !f.exists(c => c == '"' || c == ',' || c == '\\'),
       s"""field name '$f' must be non-empty and contain no '"', ',' or '\\' """ +
-        "(names persist in the manifest field-config JSON)")
+        "(names are named back in comma-separated field lists and query syntax)")
 }

@@ -66,7 +66,7 @@ final class MultiSearcher private[search] (val shards: Seq[IndexSearcher],
     * A seeded merged values into the shard caches, durably double-counting
     * df/ttf. The merge+seed critical section is driver-side metadata work;
     * the per-shard FETCHES inside it still run concurrently on the shard
-    * pool (each is an independent searcher's bounded point-lookup job).
+    * pool (each a driver-side point read of one shard's terms table).
     */
   private def seedStats(keys: Seq[(String, String)]): Map[(String, String), TermStats] = synchronized {
     val newKeys = keys.filterNot(mergedTs.contains)

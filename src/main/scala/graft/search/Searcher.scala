@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.codec.PostingsCodec
-import graft.index.IndexManifest
+import graft.index.{IndexManifest, PointReader, TableSchemas}
+import org.apache.parquet.filter2.predicate.FilterApi
 
 /** Compiled, serializable query plan: per-leaf scorers bound to term indexes
   * within the query's term universe (up to 1024 distinct terms, mirroring the
@@ -356,7 +357,7 @@ final class IndexSearcher(
     * caches: a delete view does not change statistics (deleted docs keep
     * counting toward df/ttf/collection stats until a reclaiming merge — the
     * reference's liveDocs semantics), so re-fetching them in the view would
-    * pay an identical terms-dict job for identical values. A snapshot (not
+    * pay an identical terms-dict read for identical values. A snapshot (not
     * shared maps): later seeding of the view (MultiSearcher ownership)
     * must never write through to this searcher.
     */
@@ -408,10 +409,33 @@ final class IndexSearcher(
       extraDeletes, Some(merged), deleteBroadcastMax))
   }
 
-  private lazy val termsDF: DataFrame = spark.read.parquet(manifest.termsLocation)
-  private lazy val postingsDF: DataFrame = spark.read.parquet(s"$indexPath/postings")
-  private lazy val fieldStatsDF: DataFrame = spark.read.parquet(manifest.statsLocation)
+  /** The distributed reads (scored path, ranged-delete joins, multi-term
+    * expansion, suggestions) use explicit schemas: opening a table launches
+    * no schema-inference job.
+    */
+  private lazy val termsDF: DataFrame =
+    spark.read.schema(TableSchemas.terms).parquet(manifest.termsLocation)
+  private lazy val postingsDF: DataFrame =
+    spark.read.schema(TableSchemas.postings(manifest.formatVersion)).parquet(s"$indexPath/postings")
 
+  /** Driver-side point readers: every lookup whose result is collected to
+    * the driver (term stats, driver-local posting rows, stored docs) reads
+    * through these, with no Spark job.
+    */
+  private def hadoopConf = spark.sparkContext.hadoopConfiguration
+  private lazy val termsReader = new PointReader(hadoopConf, manifest.termsLocation)
+  private lazy val postingsReader = new PointReader(hadoopConf, s"$indexPath/postings")
+  private lazy val docsReader = new PointReader(hadoopConf, s"$indexPath/docs")
+
+  /** The index's per-field statistics: the manifest's copy (no I/O), or the
+    * fieldstats table for manifests written before the copy existed.
+    */
+  private lazy val indexFieldStats: Map[String, CollectionStats] =
+    manifest.fieldStatsOrTable(hadoopConf).map(fs => fs.field ->
+      CollectionStats(fs.field, maxDoc = fs.maxDoc, docCount = fs.docCount,
+        sumTotalTermFreq = fs.sumTotalTermFreq, sumDocFreq = fs.sumDocFreq)).toMap
+
+  /** Collection stats [[MultiSearcher]] seeded into this searcher. */
   private val csCache = scala.collection.concurrent.TrieMap.empty[String, CollectionStats]
 
   /** Statistics of field `f`; fails naming the field when this index never
@@ -421,33 +445,14 @@ final class IndexSearcher(
     collectionStatsOpt(f).getOrElse(throw new IllegalArgumentException(
       s"field '$f' is not indexed in $indexPath (no fieldstats row)"))
 
-  /** Batch-fill csCache for every missing field in ONE fieldstats scan —
-    * prepare() runs this concurrently with the terms-dict lookup, so a cold
-    * query pays max(two metadata point jobs), not their sum.
-    */
-  private def warmCollectionStats(fields: Seq[String]): Unit = {
-    val missing = fields.filterNot(csCache.contains)
-    if (missing.nonEmpty)
-      fieldStatsDF.where(col("field").isin(missing: _*)).collect().foreach { r =>
-        csCache.putIfAbsent(r.getAs[String]("field"), CollectionStats(
-          r.getAs[String]("field"),
-          maxDoc = r.getAs[Long]("maxDoc"),
-          docCount = r.getAs[Long]("docCount"),
-          sumTotalTermFreq = r.getAs[Long]("sumTotalTermFreq"),
-          sumDocFreq = r.getAs[Long]("sumDocFreq")))
-      }
-  }
-
   def collectionStats: CollectionStats = collectionStats(field)
 
   /** As [[collectionStats]] but None when this index never indexed `f` —
     * sharded search ([[MultiSearcher]]) merges stats across shards whose
     * field sets may differ.
     */
-  def collectionStatsOpt(f: String): Option[CollectionStats] = {
-    warmCollectionStats(Seq(f))
-    csCache.get(f)
-  }
+  def collectionStatsOpt(f: String): Option[CollectionStats] =
+    csCache.get(f).orElse(indexFieldStats.get(f))
 
   /** Replace the statistics this searcher scores with ([[MultiSearcher]]
     * seeds every shard with GLOBALLY merged stats, so each shard scores
@@ -473,20 +478,21 @@ final class IndexSearcher(
     scala.collection.concurrent.TrieMap.empty[(String, String), Long]
 
   /** Driver-side stats lookup for the query's few (field, term) keys
-    * (broadcast-join equivalent; the terms table never ships anywhere).
+    * through the terms table's point reader (broadcast-join equivalent; the
+    * terms table never ships anywhere).
     * Cached per searcher — repeated query terms cost zero jobs (the
     * reference's TermContext reuse).
     */
   def termStats(keys: Seq[(String, String)]): Map[(String, String), TermStats] = {
     val missing = keys.filterNot(statsCache.contains)
     if (missing.nonEmpty) {
-      val fetched = termsDF
-        .where(pairPredicate(missing))
-        .select("field", "term", "docFreq", "totalTermFreq", "singletonDocId")
-        .collect()
-        .map(r => (r.getString(0), r.getString(1)) ->
-          ((TermStats(r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)), r.getLong(4))))
-        .toMap
+      val fetched = termsReader.read(
+          Seq("field", "term", "docFreq", "totalTermFreq", "singletonDocId"),
+          Some(PointReader.pairs(missing))) { g =>
+        val (f, t) = (g.getString("field", 0), g.getString("term", 0))
+        (f, t) -> ((TermStats(f, t, g.getLong("docFreq", 0), g.getLong("totalTermFreq", 0)),
+          g.getLong("singletonDocId", 0)))
+      }.toMap
       missing.foreach { k =>
         statsCache.put(k, fetched.get(k).map(_._1))
         fetched.get(k).foreach { case (_, sid) => singletonIds.put(k, sid) }
@@ -768,17 +774,7 @@ final class IndexSearcher(
     val termIdx = keys.zipWithIndex.toMap
     val fields = keys.map(_._1).distinct
     val fieldIdx = fields.zipWithIndex.toMap
-    // the two cold metadata lookups (fieldstats, terms dict) are
-    // independent bounded point jobs — overlap them so a fresh searcher's
-    // first query pays ONE job round trip here, not two
-    val csFut =
-      if (fields.exists(f => !csCache.contains(f)))
-        Some(scala.concurrent.Future(warmCollectionStats(fields))(
-          scala.concurrent.ExecutionContext.global))
-      else None
     val stats = termStats(keys)
-    csFut.foreach(f =>
-      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
     val plan = compile(q, stats, termIdx, fieldIdx, mode)
     val pts = Query.phraseTerms(q, field)
     val needPos = keys.map(pts.contains).toArray
@@ -798,24 +794,34 @@ final class IndexSearcher(
     else d.withColumn("fieldDls", typedLit(Map.empty[String, Int]))
   }
 
-  /** Stored-fields lookup (reference reader.Document(hit.Doc),
-    * /root/reference/core/document/document.go:75-133): docId-pushdown
-    * parquet point read, once per call, of the docIds not in the LRU
-    * (`DocKey`), so a repeated lookup — every singleton hit makes one —
-    * costs zero jobs. Rows come back in `docIds` order, once each.
+  /** Stored-fields lookup (the reference's reader.Document(hit.Doc),
+    * core/document/document.go:75-133): a docId point read
+    * through the docs table's driver-side reader, once per call, of the
+    * docIds not in the LRU (`DocKey`), so a repeated lookup — every
+    * singleton hit makes one — costs nothing. Rows come back in `docIds`
+    * order, once each; version-1 rows (no `fieldDls`) read an empty map.
     */
   def doc(docId: Long): Option[graft.index.DocRow] = docs(Seq(docId)).headOption
 
   def docs(docIds: Seq[Long]): Seq[graft.index.DocRow] = {
-    import spark.implicits._
     val hits = docIds.distinct.map(id => id -> cacheGet(DocKey(id)))
     val missing = hits.collect { case (id, None) => id }
     val fetched =
       if (missing.isEmpty) Map.empty[Long, graft.index.DocRow]
-      else docsDF.where(col("docId").isin(missing: _*))
-        .select("docId", "segId", "repo", "path", "commit", "lang", "contentSha",
-          "dl", "norm", "fieldDls")
-        .as[graft.index.DocRow].collect().map(d => d.docId -> d).toMap
+      else docsReader.read(Seq("docId", "segId", "repo", "path", "commit", "lang",
+          "contentSha", "dl", "norm", "fieldDls"), Some(PointReader.longIn("docId", missing))) { g =>
+        def str(c: String) = PointReader.opt(g, c)(g.getString(c, 0)).orNull
+        val fieldDls = PointReader.opt(g, "fieldDls")(g.getGroup("fieldDls", 0)).fold(
+          Map.empty[String, Int]) { m =>
+          (0 until m.getFieldRepetitionCount("key_value")).map { i =>
+            val kv = m.getGroup("key_value", i)
+            kv.getString("key", 0) -> kv.getInteger("value", 0)
+          }.toMap
+        }
+        graft.index.DocRow(g.getLong("docId", 0), g.getInteger("segId", 0), str("repo"),
+          str("path"), str("commit"), str("lang"), str("contentSha"), g.getInteger("dl", 0),
+          g.getInteger("norm", 0).toByte, fieldDls)
+      }.map(d => d.docId -> d).toMap
     missing.foreach(id => cachePut(DocKey(id), fetched.get(id)))
     hits.flatMap { case (id, hit) => hit.getOrElse(fetched.get(id)) }
   }
@@ -1028,7 +1034,7 @@ final class IndexSearcher(
     }
     val p = prepare(q0, mode)
     val rangeId = docId / manifest.docsPerRange
-    val rows = rowsFor(p, Some(RangeSel.Ids(Seq(rangeId)))).collect()
+    val rows = fetchRows(p.keys, p.ge.needPos.exists(identity), Some(Seq(rangeId)))
     Explain.forDoc(p.q, p.ge, rows, rangeId, docId, this, p.stats, mode)
   }
 
@@ -1211,14 +1217,34 @@ final class IndexSearcher(
     val fetched =
       if (missing.isEmpty) Array.empty[PRow]
       else {
-        val rows = rowsForKeys(missing.map(k => (k.field, k.term)),
-          missing.exists(_.positions), None).collect()
+        val rows = fetchRows(missing.map(k => (k.field, k.term)),
+          missing.exists(_.positions), None)
         val byKey = rows.groupBy(r => (r._1, r._2))
         missing.foreach(k => cachePut(k, byKey.getOrElse((k.field, k.term), Array.empty[PRow])))
         rows
       }
     hits.flatMap(_._2).flatten.toArray ++ fetched
   }
+
+  /** Posting rows of `keys` (of the ranges `rangeIds` only, when given)
+    * collected to the driver: through the postings point reader, projecting
+    * `posPayload` only when `anyPos` — or, in RANGED delete mode (each row
+    * carries its range's joined delete array), through the Spark read.
+    */
+  private def fetchRows(keys: Seq[(String, String)], anyPos: Boolean,
+      rangeIds: Option[Seq[Long]]): Array[PRow] =
+    if (keys.isEmpty || rangeIds.exists(_.isEmpty)) Array.empty
+    else if (rangedDeletes) rowsForKeys(keys, anyPos, rangeIds.map(RangeSel.Ids(_))).collect()
+    else {
+      val pred = rangeIds.fold(PointReader.pairs(keys))(rs =>
+        FilterApi.and(PointReader.pairs(keys), PointReader.longIn("rangeId", rs)))
+      postingsReader.read(Seq("field", "term", "rangeId", "firstDocId", "payload") ++
+          (if (anyPos) Seq("posPayload") else Nil), Some(pred)) { g =>
+        (g.getString("field", 0), g.getString("term", 0), g.getLong("rangeId", 0),
+          g.getLong("firstDocId", 0), g.getBinary("payload", 0).getBytes,
+          if (anyPos) PointReader.bytesOrNull(g, "posPayload") else null, null: Array[Long])
+      }.toArray
+    }
 
   /** Union of every delete source as a one-column `docId` DataFrame (ranged
     * path; never collected).
@@ -1280,7 +1306,8 @@ final class IndexSearcher(
   }
 
   /** Query terms' summed docFreq below this → driver-local evaluation (one
-    * fetch job, zero shuffles) — the Lucene-style per-node search path.
+    * driver-side row read, no Spark job) — the Lucene-style per-node search
+    * path.
     * 2M postings ≈ a few MB of packed blocks and ~10 ms of local decode;
     * only genuinely large result sets go distributed, and only they prune
     * under [[Wand.searchTopK]] (0 pins WAND to its pruned plan).
@@ -1378,9 +1405,11 @@ final class IndexSearcher(
     // Unfiltered fetches go through the per-term row cache: a repeated
     // query term costs zero Spark jobs on this searcher
     if (fitsDriver(p) || smallRangeList)
-      localTopK(p,
-        if (rangeFilter.isEmpty) collectRows(p) else rowsFor(p, rangeFilter).collect(),
-        k, after)
+      localTopK(p, rangeFilter match {
+        case None => collectRows(p)
+        case Some(RangeSel.Ids(rs)) => fetchRows(p.keys, p.ge.needPos.exists(identity), Some(rs))
+        case Some(sel) => rowsFor(p, Some(sel)).collect()
+      }, k, after)
     else collectTopK(scored(p, rangeFilter), k, after)
   }
 

@@ -1,0 +1,112 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.analysis.StandardCodeAnalyzer
+import graft.index._
+import graft.search._
+
+/** commit.json round trip, the field statistics it carries, and their
+  * readers: searchers, incremental publish and CheckIndex.
+  */
+class ManifestSpec extends AnyFunSuite with SparkTestBase {
+  import spark.implicits._
+
+  private val cfg = IndexConfig(analyzer = new StandardCodeAnalyzer(),
+    docsPerRange = 128, numSegments = 4, segmentsPerWave = 4, buildPartitions = 8,
+    keywordFields = Seq("lang"), analyzedFields = Seq("path"))
+
+  private def build(n: Int): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-manifest").toString
+    new IndexBuilder(spark, cfg).build(TestCorpus.corpus(n).toDF(), dir)
+    dir
+  }
+
+  private def conf = spark.sparkContext.hadoopConfiguration
+
+  test("commit then load preserves every field, field stats included") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-manifest-rt").toString
+    // names a hand-rolled format could not round-trip: quotes, commas,
+    // backslashes, a non-BMP character, and a field named like a top-level
+    // key whose stats differ from the top-level values
+    val m = IndexManifest(dir, maxDoc = 1234L, docCount = 1200L, docsPerRange = 256,
+      maxDocId = 5000L, termsGen = 3, publishedWaves = Seq(0, 1, 100002),
+      formatVersion = IndexManifest.FormatOffsets, field = "bo\"dy",
+      analyzedFields = Seq("a,b", "c\\d", "𝒳"), keywordFields = Seq("lang", "docCount"),
+      fieldStats = Some(Seq(
+        FieldStats("docCount", sumTotalTermFreq = 7L, sumDocFreq = 6L, termCount = 5L,
+          maxDoc = 4L, docCount = 3L),
+        FieldStats("bo\"dy", 70000000000L, 900L, 80L, 1234L, 1111L))))
+    IndexManifest.commit(spark, m)
+    assert(IndexManifest.load(spark, dir) == m)
+    IndexManifest.commit(spark, m.copy(fieldStats = None, publishedWaves = Nil))
+    assert(IndexManifest.load(spark, dir) == m.copy(fieldStats = None, publishedWaves = Nil))
+  }
+
+  test("publish writes the fieldstats table's rows into the manifest") {
+    val dir = build(300)
+    val m = IndexManifest.load(spark, dir)
+    val table = spark.read.parquet(m.statsLocation).as[FieldStats].collect().sortBy(_.field).toSeq
+    assert(table.map(_.field) == Seq("content", "lang", "path"))
+    assert(m.fieldStats.contains(table))
+    val s = new IndexSearcher(spark, dir)
+    val (cs, jobs) = SparkJobs.count(spark)(Seq("content", "lang", "path").map(s.collectionStats))
+    assert(jobs == 0)
+    assert(cs.map(c => (c.field, c.maxDoc, c.docCount, c.sumTotalTermFreq, c.sumDocFreq)) ==
+      table.map(t => (t.field, t.maxDoc, t.docCount, t.sumTotalTermFreq, t.sumDocFreq)))
+  }
+
+  test("a manifest without field stats falls back to the parquet table") {
+    val dir = build(300)
+    val m = IndexManifest.load(spark, dir)
+    val before = new IndexSearcher(spark, dir)
+    val q = new QueryParser(new StandardCodeAnalyzer(), keywordFields = Set("lang"))
+      .parse("parser lang:go")
+    val expected = before.search(q, 10)
+    IndexManifest.commit(spark, m.copy(fieldStats = None))
+    val old = IndexManifest.load(spark, dir)
+    assert(old.fieldStats.isEmpty)
+    assert(old.fieldStatsOrTable(conf) == m.fieldStats.get)
+    val s = new IndexSearcher(spark, dir)
+    assert(s.collectionStats("lang") == before.collectionStats("lang"))
+    val got = s.search(q, 10)
+    assert(got.totalHits == expected.totalHits)
+    assert(got.scoreDocs.toSeq == expected.scoreDocs.toSeq)
+    // an incremental publish on top takes the old docCounts from the table
+    // and writes a manifest that carries the stats again
+    graft.streaming.StreamingIndexer.appendBatch(spark, new IndexBuilder(spark, cfg),
+      TestCorpus.corpus(340).drop(300).toDF(), 0L, dir)
+    val next = IndexManifest.load(spark, dir)
+    assert(next.fieldStats.contains(
+      spark.read.parquet(next.statsLocation).as[FieldStats].collect().sortBy(_.field).toSeq))
+    assert(next.fieldStats.get.forall(_.maxDoc == 340L))
+    assert(CheckIndex.run(spark, dir).ok)
+  }
+
+  test("forExisting republishes the same field stats") {
+    val dir = build(300)
+    val m = IndexManifest.load(spark, dir)
+    IndexBuilder.forExisting(spark, dir).publish(dir)
+    val again = IndexManifest.load(spark, dir)
+    assert(again.fieldStats.nonEmpty && again.fieldStats == m.fieldStats)
+    assert(again.copy(fieldStats = None) == m.copy(fieldStats = None))
+  }
+
+  test("CheckIndex reports a tampered field-stats entry in commit.json") {
+    val dir = build(300)
+    val report = CheckIndex.run(spark, dir)
+    assert(report.ok, report.problems)
+    val m = IndexManifest.load(spark, dir)
+    val tampered = m.fieldStats.get.map(fs =>
+      if (fs.field == "lang") fs.copy(docCount = fs.docCount + 1) else fs)
+    IndexManifest.commit(spark, m.copy(fieldStats = Some(tampered)))
+    val bad = CheckIndex.run(spark, dir)
+    assert(!bad.ok)
+    assert(bad.problems.exists(p => p.contains("commit.json") && p.contains("lang") &&
+      p.contains("docCount")), bad.problems)
+    // a missing entry is reported too
+    IndexManifest.commit(spark, m.copy(fieldStats = Some(m.fieldStats.get.filterNot(_.field == "path"))))
+    assert(CheckIndex.run(spark, dir).problems.exists(p => p.contains("commit.json") &&
+      p.contains("path")))
+  }
+}
