@@ -21,9 +21,10 @@ import org.apache.spark.sql.functions._
   *  - RANGED (the 100 TB path): per-rangeId sorted delete arrays
   *    (the reference's per-segment liveDocs bitset,
   *    /root/reference/core/codec/lucene40/bitVector.go, keyed by this
-  *    engine's docId ranges) joined onto the query's posting rows — nothing
-  *    delete-shaped is ever collected to the driver, and every aggregation
-  *    buffer is bounded by docsPerRange.
+  *    engine's docId ranges) merged per range into the query's distributed
+  *    evaluation — the delete set is never collected to the driver (a
+  *    driver-local query fetches only the arrays of the ranges it touches),
+  *    and every array is bounded by docsPerRange.
   */
 object Deletes {
 
@@ -131,7 +132,8 @@ object Deletes {
   }
 
   /** Per-range sorted delete arrays: (rangeId, dels) — every aggregation
-    * buffer ≤ docsPerRange ids; joined onto posting rows at query time.
+    * buffer ≤ docsPerRange ids; joined onto posting rows by merge
+    * reclamation.
     */
   def byRange(deletes: DataFrame, docsPerRange: Int): DataFrame =
     deletes

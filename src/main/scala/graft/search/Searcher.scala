@@ -1,11 +1,17 @@
 package graft.search
 
+import scala.reflect.ClassTag
+
+import org.apache.spark.Partitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.codec.PostingsCodec
 import graft.index.{IndexManifest, PointReader, TableSchemas}
-import org.apache.parquet.filter2.predicate.FilterApi
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate, Operators}
+import org.apache.parquet.io.api.Binary
 
 /** Compiled, serializable query plan: per-leaf scorers bound to term indexes
   * within the query's term universe (up to 1024 distinct terms, mirroring the
@@ -74,15 +80,16 @@ private[search] final case class ExactLeaf(s: Similarity.ExactScorer) extends Le
 /** Range selection for filtered evaluation (WAND phases, explain).
   *
   * `Ids` is for BOUNDED driver-side lists (phase-1 budget, a single explain
-  * range): an `isin` keeps parquet row-group pruning on rangeId. `Df` is the
-  * scale path for unbounded survivor sets: a broadcast LEFT SEMI join against
-  * a one-column rangeId DataFrame — nothing range-shaped is ever collected to
-  * the driver.
+  * range): the rangeId predicate prunes row groups and pages. `Df` is the
+  * scale path for unbounded survivor sets: the distributed rangeIds join the
+  * posting rows through the range partitioner of the distributed evaluation
+  * ([[RangeJob.byRange]]) — nothing range-shaped is ever collected to the
+  * driver.
   */
 private[search] sealed trait RangeSel
 private[search] object RangeSel {
   final case class Ids(ids: Seq[Long]) extends RangeSel
-  final case class Df(df: DataFrame) extends RangeSel // single column: rangeId
+  final case class Df(rangeIds: RDD[Long]) extends RangeSel
 }
 
 /** Compiled query + everything the executors need: the expanded, rewritten
@@ -93,7 +100,10 @@ private[search] object RangeSel {
   */
 private[search] final case class Prepared(
     q: Query, keys: Seq[(String, String)], stats: Map[(String, String), TermStats],
-    ge: GroupEval)
+    ge: GroupEval) {
+  /** The keys as `field:term` words — the query in job descriptions. */
+  def keyText: String = keys.map { case (f, t) => s"$f:$t" }.mkString(" ")
+}
 
 /** Key of one entry in a searcher's byte-bounded LRU; `V` is the value
   * stored under it and `weight` its approximate heap size in bytes.
@@ -269,13 +279,15 @@ private[search] object Eval {
   *
   * Read-path plan (restating /root/repo/SURVEY.md §3.2 Spark-first):
   * query-term stats resolve from the terms dictionary via a driver-side
-  * lookup broadcast into the compiled plan (the "broadcast query-term
-  * dictionary"); postings rows of the query (field, term) pairs are scanned
-  * with parquet predicate pushdown, grouped by their docId range —
-  * every boolean/phrase combination completes WITHIN a range group (all
-  * terms' rows for a range meet there), so no per-document shuffle ever
-  * happens; per-partition top-k heaps then merge on the driver
-  * (treeAggregate pattern, reference collector semantics
+  * lookup shipped inside the compiled plan (the "broadcast query-term
+  * dictionary"); postings rows of the query (field, term) pairs are read
+  * with parquet predicate pushdown — on the driver below
+  * [[localSearchMaxPostings]], else by one executor task per postings file
+  * in one plain RDD job — and grouped by their docId range: every
+  * boolean/phrase combination completes WITHIN a range group (all terms'
+  * rows for a range meet there), so no per-document shuffle ever happens;
+  * per-partition top-k heaps then merge on the driver (treeAggregate
+  * pattern, reference collector semantics
   * /root/reference/core/search/collect.go:193-346 incl. tie-break:
   * score desc, docId asc).
   *
@@ -326,16 +338,31 @@ final class IndexSearcher(
       else (persisted ++ extraDeletes).distinct.sorted
     }
 
-  /** liveDocs RANGED path: (rangeId, sorted delete array) — every group
-    * bounded by docsPerRange; cached because deletes change rarely relative
-    * to query volume.
+  /** docId ranges of this index view, and the partitions of its
+    * distributed range evaluation: one per range, at most the cluster's
+    * default parallelism. A range's posting rows and its delete array land
+    * in the same partition index.
+    */
+  private lazy val rangeCount: Long = {
+    val hi = if (manifest.maxDocId >= 0) manifest.maxDocId else manifest.maxDoc - 1
+    math.max(hi, 0L) / manifest.docsPerRange + 1
+  }
+  private lazy val rangeParts: Int =
+    math.min(rangeCount, spark.sparkContext.defaultParallelism.toLong).toInt
+
+  /** liveDocs RANGED path: (rangeId, sorted delete array) per range, every
+    * array bounded by docsPerRange, partitioned and sorted like the
+    * distributed evaluation's rows ([[RangeJob.deleteArrays]]); built and
+    * persisted once per searcher because deletes change rarely relative to
+    * query volume.
     */
   @volatile private var delRangesInit = false
-  private lazy val delRangesDF: DataFrame = {
+  private lazy val delRanges: RDD[(Long, Array[Long])] = {
     delRangesInit = true
-    graft.index.Deletes.byRange(
-      deletesUnion.getOrElse(sys.error("ranged delete view with no delete sources")),
-      manifest.docsPerRange)
+    RangeJob.deleteArrays(
+      deletesUnion.getOrElse(sys.error("ranged delete view with no delete sources")).as[Long].rdd,
+      rangeParts, manifest.docsPerRange)
+      .setName(s"graft ranged deletes of $indexPath")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
@@ -346,7 +373,7 @@ final class IndexSearcher(
     * simply rebuild).
     */
   def close(): Unit = {
-    if (delRangesInit) delRangesDF.unpersist()
+    if (delRangesInit) delRanges.unpersist(blocking = false)
     cache.synchronized {
       cache.clear()
       cacheBytes = 0L
@@ -409,8 +436,8 @@ final class IndexSearcher(
       extraDeletes, Some(merged), deleteBroadcastMax))
   }
 
-  /** The distributed reads (scored path, ranged-delete joins, multi-term
-    * expansion, suggestions) use explicit schemas: opening a table launches
+  /** The Spark reads (WAND's bound scan, multi-term expansion beyond
+    * prefixes, suggestions) use explicit schemas: opening a table launches
     * no schema-inference job.
     */
   private lazy val termsDF: DataFrame =
@@ -418,9 +445,11 @@ final class IndexSearcher(
   private lazy val postingsDF: DataFrame =
     spark.read.schema(TableSchemas.postings(manifest.formatVersion)).parquet(s"$indexPath/postings")
 
-  /** Driver-side point readers: every lookup whose result is collected to
-    * the driver (term stats, driver-local posting rows, stored docs) reads
-    * through these, with no Spark job.
+  /** Parquet point readers: every lookup whose result is collected to the
+    * driver (term stats, prefix expansion, driver-local posting rows, stored
+    * docs) reads through these with no Spark job, and the distributed
+    * evaluation's tasks read their posting files through the same per-file
+    * read ([[PointReader.rdd]]).
     */
   private def hadoopConf = spark.sparkContext.hadoopConfiguration
   private lazy val termsReader = new PointReader(hadoopConf, manifest.termsLocation)
@@ -614,14 +643,25 @@ final class IndexSearcher(
     node(Query.rewrite(q0), 1.0f)
   }
 
-  /** Matching dictionary terms for a prefix: a driver-side sorted range scan
-    * of the terms table. `startsWith` pushes down as parquet
-    * StringStartsWith (row-group pruning on the term column's min/max —
-    * metadata-cheap at any corpus size).
+  /** Matching dictionary terms for a prefix: a seek of the term-sorted
+    * dictionary through the terms point reader, no Spark job. The prefix
+    * becomes the UTF-8 byte range [prefix, successor), so footer and page
+    * statistics skip everything outside it; each file stops after 1025
+    * matches (one past the budget), and the files merge in UTF-8 binary
+    * order — the order of the Spark expansions' `orderBy("term")`.
     */
   private def prefixTerms(f: String, prefix: String): Seq[String] = {
     require(prefix.nonEmpty, "empty prefix (bare '*' queries are not supported)")
-    expansion(f, col("term").startsWith(prefix), s"prefix '$f:$prefix*'", "narrow the prefix")
+    val term = FilterApi.binaryColumn("term")
+    val from: FilterPredicate =
+      FilterApi.gtEq[Binary, Operators.BinaryColumn](term, Binary.fromString(prefix))
+    val inRange = PointReader.utf8Successor(prefix).fold(from)(to =>
+      FilterApi.and(from, FilterApi.lt[Binary, Operators.BinaryColumn](term, to)))
+    val terms = termsReader.read(Seq("field", "term"),
+        Some(FilterApi.and(PointReader.stringIn("field", Seq(f)), inRange)),
+        limitPerFile = 1025)(_.getString("term", 0))
+      .sortWith(graft.index.IndexBuilder.utf8Cmp(_, _) < 0).take(1025)
+    withinBudget(terms, s"prefix '$f:$prefix*'", "narrow the prefix")
   }
 
   /** The sorted dictionary terms of field `f` matching `where`, at most
@@ -629,10 +669,17 @@ final class IndexSearcher(
     * the collect is bounded whatever the vocabulary. `what` names the leaf
     * and `remedy` the fix in the over-budget error.
     */
-  private def expansion(f: String, where: Column, what: String, remedy: String): Seq[String] = {
-    val terms = termsDF.where(col("field") === f && where)
-      .select("term").orderBy("term").limit(1025)
-      .as[String].collect().toSeq
+  private def expansion(f: String, where: Column, what: String, remedy: String): Seq[String] =
+    withinBudget(describe(s"graft expand $what") {
+      termsDF.where(col("field") === f && where)
+        .select("term").orderBy("term").limit(1025)
+        .as[String].collect().toSeq
+    }, what, remedy)
+
+  /** `terms` when within the 1024-term rewrite budget, else the error
+    * naming the leaf (`what`) and its fix (`remedy`).
+    */
+  private def withinBudget(terms: Seq[String], what: String, remedy: String): Seq[String] = {
     require(terms.size <= 1024,
       s"$what expands to more than 1024 terms (reference maxClauseCount is the " +
         s"rewrite budget) — $remedy")
@@ -956,16 +1003,18 @@ final class IndexSearcher(
     val sp = spark
     import sp.implicits._
     cached(SuggestKey(input, maxEdits, topN, f)) {
-      termsDF
-        .where(col("field") === f &&
-          length(col("term")).between(input.length - maxEdits, input.length + maxEdits) &&
-          col("term") =!= input)
-        .select(col("term"), col("docFreq"),
-          levenshtein(col("term"), lit(input)).as("dist"))
-        .where(col("dist") <= maxEdits)
-        .orderBy(col("dist").asc, col("docFreq").desc, col("term").asc)
-        .limit(topN)
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getInt(2))).toSeq
+      describe(s"graft suggest '$f:$input'~$maxEdits") {
+        termsDF
+          .where(col("field") === f &&
+            length(col("term")).between(input.length - maxEdits, input.length + maxEdits) &&
+            col("term") =!= input)
+          .select(col("term"), col("docFreq"),
+            levenshtein(col("term"), lit(input)).as("dist"))
+          .where(col("dist") <= maxEdits)
+          .orderBy(col("dist").asc, col("docFreq").desc, col("term").asc)
+          .limit(topN)
+          .collect().map(r => (r.getString(0), r.getLong(1), r.getInt(2))).toSeq
+      }
     }.toDF("term", "docFreq", "dist")
   }
 
@@ -1043,38 +1092,43 @@ final class IndexSearcher(
     * endOff) — the highlighting/snippet primitive (reference postings
     * carry offsets behind IndexOptions flags, postingsWriter.go:323-381).
     * Requires a format-3 index (IndexConfig.withOffsets); decode is one
-    * pass over the term's posting rows with both delete paths applied —
-    * never a stored-content re-tokenize.
+    * pass over the term's posting rows, read by the distributed evaluation's
+    * per-file tasks, with both delete paths applied — never a stored-content
+    * re-tokenize.
     */
   def offsets(f: String, term: String): DataFrame = {
     require(manifest.formatVersion >= graft.index.IndexManifest.FormatOffsets,
       s"index stores no offsets (format ${manifest.formatVersion}); " +
         "build with IndexConfig(withOffsets = true)")
-    val base = postingsDF.where(pairPredicate(Seq((f, term))))
-      .select(col("rangeId"), col("payload"), col("offPayload"))
-    val withDels =
-      if (rangedDeletes) base.join(delRangesDF, Seq("rangeId"), "left")
-      else base.withColumn("dels", lit(null).cast("array<bigint>"))
-    val smallDels = deletedSorted
-    withDels.select(col("payload"), col("offPayload"), col("dels"))
-      .as[(Array[Byte], Array[Byte], Array[Long])]
-      .flatMap { case (payload, off, dels) =>
-        val dec = PostingsCodec.decode(payload)
-        val offs =
-          if (off == null) null else PostingsCodec.decodeOffsets(off, dec.freqs)
-        (0 until dec.length).iterator.flatMap { i =>
-          val id = dec.docIds(i)
-          val live =
-            (smallDels.isEmpty || java.util.Arrays.binarySearch(smallDels, id) < 0) &&
-              (dels == null || dels.isEmpty ||
-                java.util.Arrays.binarySearch(dels, id) < 0)
-          if (live && offs != null) {
-            val os = offs(i)
-            (0 until os.length by 2).iterator.map(k => (id, os(k), os(k + 1)))
-          } else Iterator.empty
+    val rows = postingsReader.rdd(spark.sparkContext,
+        Seq("field", "term", "rangeId", "payload", "offPayload"),
+        PointReader.pairs(Seq((f, term)))) { g =>
+      (g.getLong("rangeId", 0),
+        (g.getBinary("payload", 0).getBytes, PointReader.bytesOrNull(g, "offPayload")))
+    }
+    val withDels: RDD[(Array[Byte], Array[Byte], Array[Long])] =
+      if (rangedDeletes)
+        RangeJob.byRange(rows, rangeParts, Some(delRanges), None).flatMap {
+          case (_, rs, dels) => rs.iterator.map { case (payload, off) => (payload, off, dels) }
         }
+      else rows.map { case (_, (payload, off)) => (payload, off, null: Array[Long]) }
+    val smallDels = deletedSorted
+    withDels.flatMap { case (payload, off, dels) =>
+      val dec = PostingsCodec.decode(payload)
+      val offs =
+        if (off == null) null else PostingsCodec.decodeOffsets(off, dec.freqs)
+      (0 until dec.length).iterator.flatMap { i =>
+        val id = dec.docIds(i)
+        val live =
+          (smallDels.isEmpty || java.util.Arrays.binarySearch(smallDels, id) < 0) &&
+            (dels == null || dels.isEmpty ||
+              java.util.Arrays.binarySearch(dels, id) < 0)
+        if (live && offs != null) {
+          val os = offs(i)
+          (0 until os.length by 2).iterator.map(k => (id, os(k), os(k + 1)))
+        } else Iterator.empty
       }
-      .toDF("docId", "startOff", "endOff")
+    }.toDF("docId", "startOff", "endOff")
   }
 
   /** Merged, overlap-coalesced matched spans of the query's `f`-field term
@@ -1094,11 +1148,11 @@ final class IndexSearcher(
     val keys = Query.leafKeys(q, field).filter(_._1 == f)
     if (keys.isEmpty || docIds.isEmpty) return Map.empty
     val idSet = docIds.toSet
-    val ranges = docIds.map(_ / manifest.docsPerRange).distinct
-    val rows = postingsDF.where(pairPredicate(keys))
-      .where(col("rangeId").isin(ranges: _*))
-      .select(col("payload"), col("offPayload"))
-      .as[(Array[Byte], Array[Byte])].collect()
+    val ranges = docIds.map(_ / manifest.docsPerRange)
+    val rows = postingsReader.read(Seq("field", "term", "rangeId", "payload", "offPayload"),
+        Some(FilterApi.and(PointReader.pairs(keys), PointReader.longIn("rangeId", ranges)))) { g =>
+      (g.getBinary("payload", 0).getBytes, PointReader.bytesOrNull(g, "offPayload"))
+    }
     val acc = scala.collection.mutable.HashMap
       .empty[Long, scala.collection.mutable.ArrayBuffer[(Int, Int)]]
     rows.foreach { case (payload, off) =>
@@ -1128,38 +1182,6 @@ final class IndexSearcher(
     postingsDF
       .where(pairPredicate(keys))
       .select("field", "term", "rangeId", "docFreq", "maxFreq", "minDl")
-
-  /** Posting rows of the query keys: (field, term, rangeId, firstDocId,
-    * payload, posPayload|null, dels|null). Parquet prunes on (field, term)
-    * row-group min/max and drops `posPayload` unless a phrase needs it.
-    * In RANGED delete mode each row carries its range's sorted delete array
-    * via a left join — the scale path for bulk deletes (duplication factor =
-    * #query terms per range, never O(corpus) driver state).
-    */
-  private def rowsFor(p: Prepared,
-      rangeFilter: Option[RangeSel] = None): Dataset[PRow] =
-    rowsForKeys(p.keys, p.ge.needPos.exists(identity), rangeFilter)
-
-  private def rowsForKeys(keys: Seq[(String, String)], anyPos: Boolean,
-      rangeFilter: Option[RangeSel]): Dataset[PRow] = {
-    var rows = postingsDF.where(pairPredicate(keys))
-    rangeFilter.foreach {
-      case RangeSel.Ids(rs) => rows = rows.where(col("rangeId").isin(rs: _*))
-      case RangeSel.Df(rdf) =>
-        rows = rows.join(broadcast(rdf.select("rangeId")), Seq("rangeId"), "left_semi")
-    }
-    // no positions needed → posPayload column never read (parquet pruning);
-    // a null literal keeps the plan columnar (no typed map ser/de)
-    val posCol = if (anyPos) col("posPayload") else lit(null).cast("binary").as("posPayload")
-    val base = rows.select(col("field"), col("term"), col("rangeId"),
-      col("firstDocId"), col("payload"), posCol)
-    val withDels =
-      if (rangedDeletes) base.join(delRangesDF, Seq("rangeId"), "left")
-      else base.withColumn("dels", lit(null).cast("array<bigint>"))
-    withDels.select(col("field"), col("term"), col("rangeId"), col("firstDocId"),
-      col("payload"), col("posPayload"), col("dels"))
-      .as[PRow]
-  }
 
   /** Per-searcher byte-bounded LRU (the reference's query-cache analogue,
     * natural here because a searcher IS a point-in-time view — Lucene
@@ -1210,7 +1232,7 @@ final class IndexSearcher(
     * served from / inserted into the cache per term.
     */
   private def collectRows(p: Prepared): Array[PRow] = {
-    if (rangedDeletes) return rowsFor(p).collect()
+    if (rangedDeletes) return fetchRows(p.keys, p.ge.needPos.exists(identity), None)
     val keys = p.keys.zip(p.ge.needPos).map { case ((f, t), pos) => RowsKey(f, t, pos) }
     val hits = keys.map(k => k -> cacheGet(k))
     val missing = hits.collect { case (k, None) => k }
@@ -1227,23 +1249,31 @@ final class IndexSearcher(
   }
 
   /** Posting rows of `keys` (of the ranges `rangeIds` only, when given)
-    * collected to the driver: through the postings point reader, projecting
-    * `posPayload` only when `anyPos` — or, in RANGED delete mode (each row
-    * carries its range's joined delete array), through the Spark read.
+    * collected to the driver through the postings point reader, projecting
+    * `posPayload` only when `anyPos`; in RANGED delete mode each row then
+    * carries its range's delete array.
     */
   private def fetchRows(keys: Seq[(String, String)], anyPos: Boolean,
       rangeIds: Option[Seq[Long]]): Array[PRow] =
     if (keys.isEmpty || rangeIds.exists(_.isEmpty)) Array.empty
-    else if (rangedDeletes) rowsForKeys(keys, anyPos, rangeIds.map(RangeSel.Ids(_))).collect()
+    else withRangeDels(postingsReader.read(RangeJob.rowColumns(anyPos),
+      Some(RangeJob.rowPredicate(keys, rangeIds)))(RangeJob.row(anyPos)).toArray)
+
+  /** `rows` with their ranges' delete arrays attached (RANGED mode; other
+    * modes return `rows`): one job over the partitions of the persisted
+    * delete arrays that hold the rows' ranges.
+    */
+  private def withRangeDels(rows: Array[PRow]): Array[PRow] =
+    if (!rangedDeletes || rows.isEmpty) rows
     else {
-      val pred = rangeIds.fold(PointReader.pairs(keys))(rs =>
-        FilterApi.and(PointReader.pairs(keys), PointReader.longIn("rangeId", rs)))
-      postingsReader.read(Seq("field", "term", "rangeId", "firstDocId", "payload") ++
-          (if (anyPos) Seq("posPayload") else Nil), Some(pred)) { g =>
-        (g.getString("field", 0), g.getString("term", 0), g.getLong("rangeId", 0),
-          g.getLong("firstDocId", 0), g.getBinary("payload", 0).getBytes,
-          if (anyPos) PointReader.bytesOrNull(g, "posPayload") else null, null: Array[Long])
-      }.toArray
+      val ranges = rows.map(_._3).toSet
+      val byRange = new RangeJob.ByRange(rangeParts, 1)
+      val dels = describe(s"graft search ranged deletes: ${ranges.size} ranges") {
+        spark.sparkContext.runJob(delRanges,
+          (it: Iterator[(Long, Array[Long])]) => it.filter(d => ranges(d._1)).toArray,
+          ranges.toSeq.map(byRange.getPartition).distinct)
+      }.flatten.toMap
+      rows.map(r => r.copy(_7 = dels.getOrElse(r._3, null)))
     }
 
   /** Union of every delete source as a one-column `docId` DataFrame (ranged
@@ -1284,25 +1314,53 @@ final class IndexSearcher(
   def scoredDocs(q0: Query, mode: ScoreMode): Dataset[ScoredDoc] =
     Query.rewrite(expandPrefixes(q0)) match {
       case MatchAllQuery(b) => matchAllScored(b)
-      case _ => scored(prepare(q0, mode), None)
+      case _ => spark.createDataset(scored(prepare(q0, mode), None))
     }
 
-  /** Distributed scoring of a prepared plan over its posting rows
-    * (optionally only the selected ranges).
+  /** Distributed scoring of a prepared plan as one plain RDD (no Catalyst
+    * plan): one task per postings file that can hold the query keys reads
+    * its rows through the postings reader ([[PointReader.rdd]]). A
+    * single-key plan scores each row in place — every doc lives in exactly
+    * one row; otherwise rows shuffle onto the range partitions and stream one
+    * range at a time through [[GroupEval.eval]], with the range's delete
+    * array (RANGED mode) and, for a distributed range selection, only the
+    * surviving ranges ([[RangeJob.byRange]]).
     */
-  private def scored(p: Prepared, rangeFilter: Option[RangeSel]): Dataset[ScoredDoc] = {
-    val geB = spark.sparkContext.broadcast(p.ge)
-    val ds = rowsFor(p, rangeFilter)
-    if (p.keys.size <= 1)
-      // single-term: every doc lives in exactly one row → no shuffle at all
-      ds.mapPartitions { it =>
-        val ge = geB.value
-        it.flatMap(r => ge.eval(r._3, Iterator.single(r)))
-      }
-    else
-      ds.groupByKey(_._3)
-        .flatMapGroups((rangeId: Long, it: Iterator[PRow]) =>
-          geB.value.eval(rangeId, it))
+  private def scored(p: Prepared, rangeFilter: Option[RangeSel]): RDD[ScoredDoc] =
+    if (p.keys.isEmpty) spark.sparkContext.emptyRDD[ScoredDoc]
+    else {
+      val anyPos = p.ge.needPos.exists(identity)
+      val rows = postingsReader.rdd(spark.sparkContext, RangeJob.rowColumns(anyPos),
+        RangeJob.rowPredicate(p.keys, rangeFilter.collect { case RangeSel.Ids(rs) => rs }))(
+        RangeJob.row(anyPos))
+      RangeJob.score(rows, p.ge, p.keys.size == 1, rangeParts,
+        if (rangedDeletes) Some(delRanges) else None,
+        rangeFilter.collect { case RangeSel.Df(ids) => ids })
+    }
+
+  /** Runs `f` with Spark's job description set to `what` (cut to 200
+    * chars), so listeners and the UI can tell which path and query
+    * launched each job; the caller's description is restored afterwards.
+    */
+  private[search] def describe[A](what: String)(f: => A): A = {
+    val sc = spark.sparkContext
+    val key = "spark.job.description"
+    val prev = sc.getLocalProperty(key)
+    sc.setLocalProperty(key, what.take(200))
+    try f finally sc.setLocalProperty(key, prev)
+  }
+
+  /** Description of a distributed evaluation: the path, its size and the
+    * query's keys.
+    */
+  private def distributedJob(p: Prepared, rangeFilter: Option[RangeSel]): String = {
+    val sel = rangeFilter match {
+      case Some(RangeSel.Ids(rs)) => s", ${rs.size} selected ranges"
+      case Some(RangeSel.Df(_)) => ", distributed survivor ranges"
+      case None => ""
+    }
+    val ranges = if (rangeCount == 1) "1 range" else s"$rangeCount ranges"
+    s"graft search distributed: ${p.keys.size} keys, $ranges$sel: ${p.keyText}"
   }
 
   /** Query terms' summed docFreq below this → driver-local evaluation (one
@@ -1358,7 +1416,7 @@ final class IndexSearcher(
 
   private def topK(q: Query, k: Int, mode: ScoreMode, after: Option[ScoredDoc]): TopDocs =
     Query.rewrite(expandPrefixes(q)) match {
-      case MatchAllQuery(b) => collectTopK(matchAllScored(b), k, after)
+      case MatchAllQuery(b) => RangeJob.topK(matchAllScored(b).rdd, k, after)
       case _ => searchFiltered(prepare(q, mode), k, None, after)
     }
 
@@ -1397,28 +1455,17 @@ final class IndexSearcher(
       return localTopK(p, rows, k, after)
     }
 
-    val smallRangeList = rangeFilter.exists {
-      case RangeSel.Ids(rs) => rs.size <= 256
-      case _ => false
-    }
     // local fast path: fetch the (few) posting rows, evaluate on the driver.
     // Unfiltered fetches go through the per-term row cache: a repeated
-    // query term costs zero Spark jobs on this searcher
-    if (fitsDriver(p) || smallRangeList)
-      localTopK(p, rangeFilter match {
-        case None => collectRows(p)
-        case Some(RangeSel.Ids(rs)) => fetchRows(p.keys, p.ge.needPos.exists(identity), Some(rs))
-        case Some(sel) => rowsFor(p, Some(sel)).collect()
-      }, k, after)
-    else collectTopK(scored(p, rangeFilter), k, after)
-  }
-
-  /** Cursor gate (searchAfter): matches at-or-before the cursor still COUNT
-    * but never enter a heap — captured by value in executor closures.
-    */
-  private def afterGate(after: Option[ScoredDoc]): ScoredDoc => Boolean = after match {
-    case None => _ => true
-    case Some(a) => sd => sd.score < a.score || (sd.score == a.score && sd.docId > a.docId)
+    // query term costs zero Spark jobs on this searcher. A distributed range
+    // selection always evaluates distributed.
+    rangeFilter match {
+      case None if fitsDriver(p) => localTopK(p, collectRows(p), k, after)
+      case Some(RangeSel.Ids(rs)) if rs.size <= 256 || fitsDriver(p) =>
+        localTopK(p, fetchRows(p.keys, p.ge.needPos.exists(identity), Some(rs)), k, after)
+      case _ =>
+        describe(distributedJob(p, rangeFilter))(RangeJob.topK(scored(p, rangeFilter), k, after))
+    }
   }
 
   /** Driver-side count + top-k over posting rows already on the driver
@@ -1428,7 +1475,7 @@ final class IndexSearcher(
     */
   private def localTopK(p: Prepared, rows: Array[PRow], k: Int,
       after: Option[ScoredDoc]): TopDocs = {
-    val keep = afterGate(after)
+    val keep = RangeJob.afterGate(after)
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     val partials = Await.result(
@@ -1443,24 +1490,6 @@ final class IndexSearcher(
     val heap = new BoundedHitQueue(k)
     partials.foreach { case (_, h) => heap.merge(h) }
     TopDocs(partials.map(_._1).sum, heap.toSortedArray)
-  }
-
-  /** Distributed count + top-k: per-partition heaps merge in O(log P)
-    * combiner rounds (treeAggregate, depth 2) — the driver receives O(√P)
-    * pre-merged k-heaps instead of P; at 10^5 partitions × k=1000 a flat
-    * collect would ship 10^8 rows.
-    */
-  private def collectTopK(scored: Dataset[ScoredDoc], k: Int,
-      after: Option[ScoredDoc]): TopDocs = {
-    val keep = afterGate(after)
-    val (total, heap) = scored.rdd.treeAggregate((0L, new BoundedHitQueue(k)))(
-      seqOp = (acc: (Long, BoundedHitQueue), sd: ScoredDoc) => {
-        if (keep(sd)) acc._2.insert(sd.docId, sd.score); (acc._1 + 1, acc._2)
-      },
-      combOp = (a: (Long, BoundedHitQueue), b: (Long, BoundedHitQueue)) =>
-        (a._1 + b._1, a._2.merge(b._2)),
-      depth = 2)
-    TopDocs(total, heap.toSortedArray)
   }
 }
 
@@ -1538,6 +1567,140 @@ private[search] final class GroupEval(
     Eval.eval(node, acc, slot, mode)
 
   private[search] def planRoot: CNode = plan
+}
+
+/** Building blocks of the distributed range evaluation. Every task closure
+  * of a query is written here, not in [[IndexSearcher]]: Spark's closure
+  * cleaner parses the class file of each closure's defining class on every
+  * call, and the searcher's is ~150 KB — moving the closures here took a
+  * warm distributed phrase call on a 6k-doc index (local[4], 4 cores) from
+  * ~22 to ~14 ms of driver time before its job starts. Closures here
+  * capture only what they name.
+  */
+private[search] object RangeJob {
+  /** Partitions `Long` keys by range: `key / width` (width 1 for rangeIds,
+    * docsPerRange for docIds) modulo `numPartitions`, so a range's posting
+    * rows and its deletes land in the same partition index.
+    */
+  final class ByRange(val numPartitions: Int, width: Long) extends Partitioner {
+    def getPartition(key: Any): Int =
+      java.lang.Math.floorMod(key.asInstanceOf[Long] / width, numPartitions.toLong).toInt
+  }
+
+  /** Posting-row columns the evaluation reads: `posPayload` only when a
+    * phrase needs positions (`field` and `term` also feed the predicate).
+    */
+  def rowColumns(anyPos: Boolean): Seq[String] =
+    Seq("field", "term", "rangeId", "firstDocId", "payload") ++
+      (if (anyPos) Seq("posPayload") else Nil)
+
+  /** The keys' rows, of the ranges `rangeIds` only when given. */
+  def rowPredicate(keys: Seq[(String, String)], rangeIds: Option[Seq[Long]]) =
+    rangeIds.fold(PointReader.pairs(keys))(rs =>
+      FilterApi.and(PointReader.pairs(keys), PointReader.longIn("rangeId", rs)))
+
+  /** One posting row as the evaluation's [[PRow]] (no delete array yet). */
+  def row(anyPos: Boolean)(g: Group): PRow =
+    (g.getString("field", 0), g.getString("term", 0), g.getLong("rangeId", 0),
+      g.getLong("firstDocId", 0), g.getBinary("payload", 0).getBytes,
+      if (anyPos) PointReader.bytesOrNull(g, "posPayload") else null, null: Array[Long])
+
+  /** Runs of equal `group(key)` in a key-sorted iterator, one run buffered
+    * at a time.
+    */
+  private def runs[V: ClassTag](it: Iterator[(Long, V)],
+      group: Long => Long): Iterator[(Long, Array[V])] = {
+    val b = it.buffered
+    new Iterator[(Long, Array[V])] {
+      def hasNext: Boolean = b.hasNext
+      def next(): (Long, Array[V]) = {
+        val g = group(b.head._1)
+        val out = Array.newBuilder[V]
+        while (b.hasNext && group(b.head._1) == g) out += b.next()._2
+        (g, out.result())
+      }
+    }
+  }
+
+  /** Sorted, distinct delete arrays per range, on `parts` partitions of
+    * [[ByRange]] and sorted by rangeId within each: the layout
+    * [[byRange]] merges against.
+    */
+  def deleteArrays(docIds: RDD[Long], parts: Int, docsPerRange: Int): RDD[(Long, Array[Long])] =
+    docIds.map(id => (id, id))
+      .repartitionAndSortWithinPartitions(new ByRange(parts, docsPerRange.toLong))
+      .mapPartitions(it => runs(it, _ / docsPerRange).map { case (r, ids) => (r, ids.distinct) })
+
+  /** Scores of `ge`'s plan over `rows`: a single-key plan (`singleKey`)
+    * without deletes or survivors scores each row in place — every doc
+    * lives in exactly one row; otherwise rows stream one range at a time
+    * through [[byRange]] with the range's delete array.
+    */
+  def score(rows: RDD[PRow], ge: GroupEval, singleKey: Boolean, parts: Int,
+      dels: Option[RDD[(Long, Array[Long])]], survivors: Option[RDD[Long]]): RDD[ScoredDoc] =
+    if (singleKey && dels.isEmpty && survivors.isEmpty)
+      rows.flatMap(r => ge.eval(r._3, Iterator.single(r)))
+    else
+      byRange(rows.map(r => (r._3, r)), parts, dels, survivors).flatMap {
+        case (rangeId, rs, ds) => ge.eval(rangeId, rs.iterator.map(_.copy(_7 = ds)))
+      }
+
+  /** Cursor gate (searchAfter): matches at-or-before the cursor still COUNT
+    * but never enter a heap — captured by value in executor closures.
+    */
+  def afterGate(after: Option[ScoredDoc]): ScoredDoc => Boolean = after match {
+    case None => _ => true
+    case Some(a) => sd => sd.score < a.score || (sd.score == a.score && sd.docId > a.docId)
+  }
+
+  /** Distributed count + top-k: per-partition heaps merge in O(log P)
+    * combiner rounds (treeAggregate, depth 2) — the driver receives O(√P)
+    * pre-merged k-heaps instead of P; at 10^5 partitions × k=1000 a flat
+    * collect would ship 10^8 rows.
+    */
+  def topK(scored: RDD[ScoredDoc], k: Int, after: Option[ScoredDoc]): TopDocs = {
+    val keep = afterGate(after)
+    val (total, heap) = scored.treeAggregate((0L, new BoundedHitQueue(k)))(
+      seqOp = (acc: (Long, BoundedHitQueue), sd: ScoredDoc) => {
+        if (keep(sd)) acc._2.insert(sd.docId, sd.score); (acc._1 + 1, acc._2)
+      },
+      combOp = (a: (Long, BoundedHitQueue), b: (Long, BoundedHitQueue)) =>
+        (a._1 + b._1, a._2.merge(b._2)),
+      depth = 2)
+    TopDocs(total, heap.toSortedArray)
+  }
+
+  /** RangeId-keyed values shuffled onto `parts` range partitions, sorted,
+    * and streamed one range at a time (task memory bounded by one range),
+    * each with its delete array from `dels` (null without one) and, when
+    * `survivors` is given, only the ranges it holds — both merged in
+    * rangeId order on the same partitioning.
+    */
+  def byRange[V: ClassTag](rows: RDD[(Long, V)], parts: Int,
+      dels: Option[RDD[(Long, Array[Long])]],
+      survivors: Option[RDD[Long]]): RDD[(Long, Array[V], Array[Long])] = {
+    val part = new ByRange(parts, 1)
+    val ranges = rows.repartitionAndSortWithinPartitions(part).mapPartitions(runs(_, identity))
+    val kept = survivors.fold(ranges)(s =>
+      ranges.zipPartitions(s.map(r => (r, r)).repartitionAndSortWithinPartitions(part)) {
+        (rs, ss) =>
+          val b = ss.map(_._1).buffered
+          rs.filter { case (r, _) =>
+            while (b.hasNext && b.head < r) b.next()
+            b.hasNext && b.head == r
+          }
+      })
+    dels match {
+      case None => kept.map { case (r, vs) => (r, vs, null: Array[Long]) }
+      case Some(d) => kept.zipPartitions(d) { (rs, ds) =>
+        val b = ds.buffered
+        rs.map { case (r, vs) =>
+          while (b.hasNext && b.head._1 < r) b.next()
+          (r, vs, if (b.hasNext && b.head._1 == r) b.head._2 else null)
+        }
+      }
+    }
+  }
 }
 
 /** Size-bounded hit queue with the reference collector's ordering: keep the

@@ -30,14 +30,15 @@ import graft.codec.SmallFloat
   * Scale: the bounds aggregation shuffles metadata rows only (bytes per row),
   * phase selection is a distributed top-B (TakeOrdered), and surviving-range
   * selection collects at most [[SurvivorCollectMax]] ids — beyond that the
-  * survivor set stays distributed and reaches the postings scan as a
-  * broadcast LEFT SEMI join, so nothing driver-side grows with the corpus.
+  * survivor set stays distributed and joins the posting rows on the range
+  * partitions of the distributed evaluation, so nothing driver-side grows
+  * with the corpus.
   */
 object Wand {
 
-  /** Survivor sets up to this size are collected and pushed down as an
-    * `isin` (parquet row-group pruning on rangeId); larger sets stay
-    * distributed (broadcast semi-join). Bounded constant — never O(corpus).
+  /** Survivor sets up to this size are collected and pushed down as a
+    * rangeId predicate (row-group and page pruning); larger sets stay
+    * distributed ([[RangeSel.Df]]). Bounded constant — never O(corpus).
     */
   val SurvivorCollectMax = 256
 
@@ -263,8 +264,10 @@ object Wand {
       .select(col("rangeId"), col("rangeBound"))
 
     // phase 1: best-bound eligible ranges (distributed TakeOrdered, tiny)
-    val phase1 = eligible.orderBy(col("rangeBound").desc, col("rangeId"))
-      .limit(phase1Count).as[(Long, Double)].collect()
+    val phase1 = searcher.describe(s"graft wand phase 1 bounds: ${p.keyText}") {
+      eligible.orderBy(col("rangeBound").desc, col("rangeId"))
+        .limit(phase1Count).as[(Long, Double)].collect()
+    }
     if (phase1.isEmpty) return TopDocs(0, Array.empty)
     val phase1Set = phase1.map(_._1).toSet
     val r1 = searcher.evalRanges(p, Some(RangeSel.Ids(phase1Set.toSeq)), k)
@@ -276,8 +279,8 @@ object Wand {
     val tau = r1.scoreDocs.last.score
 
     // phase 2: only eligible ranges that can still beat τ. Collect a BOUNDED
-    // prefix: small survivor sets get isin pushdown, anything larger stays a
-    // distributed DataFrame feeding a broadcast semi-join.
+    // prefix: small survivor sets get a rangeId pushdown, anything larger
+    // stays distributed and joins the rows on the range partitions.
     // bound >= τ, NOT strict >: for norm-insensitive scorers (b=0) the bound
     // is exactly attainable, and a doc scoring exactly τ with a smaller docId
     // wins the (score desc, docId asc) tie-break — strict > would prune it
@@ -285,14 +288,18 @@ object Wand {
     val survivorsDF = eligible
       .where(col("rangeBound") >= tau && !col("rangeId").isin(phase1Set.toSeq: _*))
       .select("rangeId")
-    val probe = survivorsDF.limit(SurvivorCollectMax + 1).as[Long].collect()
+    val probe = searcher.describe(s"graft wand phase 2 survivors: ${p.keyText}") {
+      survivorsDF.limit(SurvivorCollectMax + 1).as[Long].collect()
+    }
     val merged = new BoundedHitQueue(k)
     r1.scoreDocs.foreach(d => merged.insert(d.docId, d.score))
     var total = r1.totalHits
     if (probe.nonEmpty) {
       val sel =
         if (probe.length <= SurvivorCollectMax) RangeSel.Ids(probe.toSeq)
-        else RangeSel.Df(survivorsDF)
+        else searcher.describe(s"graft wand phase 2 survivors: ${p.keyText}") {
+          RangeSel.Df(survivorsDF.as[Long].rdd)
+        }
       val r2 = searcher.evalRanges(p, Some(sel), k)
       r2.scoreDocs.foreach(d => merged.insert(d.docId, d.score))
       total += r2.totalHits

@@ -425,6 +425,43 @@ class PrefixSpec extends AnyFunSuite with SparkTestBase {
     assert(ok.totalHits == 1) // all terms live in the single doc
   }
 
+  test("prefix expansion seeks the terms dictionary on the driver: ≡ Spark startsWith, no job") {
+    // keyword values whose UTF-8 order differs from UTF-16 order (U+FF41 is
+    // below a surrogate pair in UTF-8, above it in UTF-16), supplementary
+    // values, and 1100 content terms for the over-budget case
+    val dir = java.nio.file.Files.createTempDirectory("graft-prefix-seek").toString
+    val langs = Seq("k𝒳", "kａ", "ka", "kb", "𝒳lang",
+      "𝒳𝒴", "go")
+    val docs = (CodeFile("r", "p", "", "scala", (0 until 1100).map(i => s"tok$i").mkString(" ")) +:
+      langs.zipWithIndex.map { case (l, i) => CodeFile("r", s"p$i", "", l, s"word$i") }).toDF()
+    val cfg = IndexConfig(analyzer = new StandardCodeAnalyzer(),
+      docsPerRange = 64, numSegments = 2, segmentsPerWave = 2, buildPartitions = 4,
+      keywordFields = Seq("lang"))
+    new IndexBuilder(spark, cfg).build(docs, dir)
+    val terms = spark.read.parquet(IndexManifest.load(spark, dir).termsLocation)
+    val s = new IndexSearcher(spark, dir)
+    def expanded(f: String, pre: String): Seq[String] =
+      s.expandPrefixes(PrefixQuery(pre, field = Some(f))) match {
+        case BooleanQuery(cs, _, _) => cs.map(_.query).map { case TermQuery(t, _, _) => t }
+        case other => fail(s"unexpected expansion $other")
+      }
+    for ((f, pre) <- Seq(("content", "tok10"), ("lang", "k"), ("lang", "𝒳"),
+        ("content", "zzz"))) {
+      val exp = terms.where(col("field") === f && col("term").startsWith(pre))
+        .select("term").orderBy("term").as[String].collect().toSeq
+      val (got, jobs) = SparkJobs.count(spark)(expanded(f, pre))
+      assert(jobs == 0, s"$f:$pre* launched $jobs jobs")
+      assert(got == exp, s"$f:$pre*")
+    }
+    assert(expanded("content", "tok10").size == 111 && expanded("lang", "k").size == 4)
+    assert(expanded("content", "zzz").isEmpty)
+    val (err, jobs) = SparkJobs.count(spark)(
+      intercept[IllegalArgumentException](expanded("content", "tok")))
+    assert(jobs == 0)
+    assert(err.getMessage.contains("prefix 'content:tok*' expands to more than 1024 terms"),
+      err.getMessage)
+  }
+
   test("regexp guard: pathological patterns error fast on the driver") {
     // (a+)+ shape: nested quantifier → rejected before any rlike fan-out
     val e1 = intercept[IllegalArgumentException](

@@ -1,6 +1,8 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.TestBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -13,17 +15,27 @@ import org.apache.spark.sql.SparkSession
   */
 object SparkJobs {
   def count[A](spark: SparkSession)(f: => A): (A, Int) = {
+    val (a, descriptions) = described(spark)(f)
+    (a, descriptions.size)
+  }
+
+  /** The `spark.job.description` of every job the block launches, in start
+    * order ("" for a job without one).
+    */
+  def described[A](spark: SparkSession)(f: => A): (A, Seq[String]) = {
     val sc = spark.sparkContext
     TestBusDrain(sc)
-    val n = new AtomicInteger
+    val seen = new ConcurrentLinkedQueue[String]
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse(""))
     }
     sc.addSparkListener(listener)
     try {
       val a = f
       TestBusDrain(sc)
-      (a, n.get)
+      (a, seen.asScala.toSeq)
     } finally sc.removeSparkListener(listener)
   }
 }

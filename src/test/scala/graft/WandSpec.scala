@@ -114,6 +114,32 @@ class WandSpec extends AnyFunSuite with SparkTestBase {
     assert(wand.totalHits < exact.totalHits, "expected pruned ranges on graded tf")
   }
 
+  test("more than SurvivorCollectMax survivors: the distributed survivor join keeps parity") {
+    // 2000 docs in ranges of 4 → 500 ranges; a constant-score leaf bounds
+    // every eligible range at exactly τ, and a deep k leaves τ low, so far
+    // more than 256 ranges survive phase 2
+    val dir = java.nio.file.Files.createTempDirectory("graft-wand-survivors").toString
+    val cfg = IndexConfig(analyzer = new StandardCodeAnalyzer(),
+      docsPerRange = 4, numSegments = 4, segmentsPerWave = 4)
+    new IndexBuilder(spark, cfg).build(TestCorpus.corpus(N).toDF(), dir)
+    val s = new IndexSearcher(spark, dir)
+    for ((q, k) <- Seq[(Query, Int)](
+        ConstantScoreQuery(TermQuery("import"), 1.5f) -> 10,
+        BooleanQuery(Seq(
+          BooleanClause(Occur.SHOULD, TermQuery("parser")),
+          BooleanClause(Occur.SHOULD, TermQuery("buffer")))) -> 150)) {
+      val exact = s.search(q, k, ScoreMode.Ref32)
+      val (wand, jobs) = SparkJobs.described(spark)(Wand.searchTopK(
+        pruning(new IndexSearcher(spark, dir)), q, k, ScoreMode.Ref32, phase1Ranges = 64))
+      assert(jobs.exists(_.contains("distributed survivor ranges")),
+        s"the distributed survivor branch did not run for $q: $jobs")
+      assert(wand.totalHitsIsLowerBound, s"route for $q")
+      assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
+        exact.scoreDocs.map(d => (d.docId, d.score)).toSeq, s"top-k parity for $q")
+      assert(wand.totalHits <= exact.totalHits)
+    }
+  }
+
   test("conjunction (MUST) pruning: pruned == exhaustive") {
     val q = BooleanQuery(Seq(
       BooleanClause(Occur.MUST, TermQuery("import")),

@@ -9,8 +9,15 @@ gives the span's duration, the Spark jobs launched inside it, the time during
 which at least one of those jobs ran ("job ms"; overlapping jobs count once)
 and the rest of the span ("driver ms").
 
+With `--classes` it prints instead, for the whole run, one row per query
+class (the `layer/name` of the spans directly below each operation, e.g.
+`search/phrase`): how many calls, the Spark jobs they launched, their summed
+ms and that sum's share of the busy time (the summed duration of every
+operation).
+
     python3 tools/refresh_spans.py                      # every trace file
     python3 tools/refresh_spans.py path/to/serve-seed901.jsonl
+    python3 tools/refresh_spans.py --classes [path ...]
 """
 import glob
 import json
@@ -32,21 +39,57 @@ def union_ms(intervals):
     return total / 1e6
 
 
-def refresh_rows(spans):
-    """(name, dur_ms, jobs, job_ms, driver_ms) per child span of each refresh."""
-    by_id = {s["id"]: s for s in spans}
+def children_of(spans):
     children = {}
     for s in spans:
         children.setdefault(s["parent"], []).append(s)
+    return children
 
-    def jobs_under(span):
-        out, todo = [], list(children.get(span["id"], []))
-        while todo:
-            c = todo.pop()
+
+def jobs_under(span, children):
+    """(start_ns, end_ns) of every Spark job span below `span`."""
+    out, todo = [], list(children.get(span["id"], []))
+    while todo:
+        c = todo.pop()
+        if c["layer"] == "spark":
+            out.append((c["start_ns"], c["end_ns"]))
+        todo.extend(children.get(c["id"], []))
+    return out
+
+
+def class_rows(spans):
+    """(busy_ms, [(class, calls, jobs, ms)]) over every operation of a run,
+    classes by summed ms, largest first."""
+    children = children_of(spans)
+    ops = [s for s in spans if s["layer"] == "bench" and s["parent"] == 0]
+    busy = sum(o["end_ns"] - o["start_ns"] for o in ops) / 1e6
+    acc = {}
+    for o in ops:
+        for c in children.get(o["id"], []):
             if c["layer"] == "spark":
-                out.append((c["start_ns"], c["end_ns"]))
-            todo.extend(children.get(c["id"], []))
-        return out
+                continue
+            row = acc.setdefault(f'{c["layer"]}/{c["name"]}', [0, 0, 0.0])
+            row[0] += 1
+            row[1] += len(jobs_under(c, children))
+            row[2] += (c["end_ns"] - c["start_ns"]) / 1e6
+    rows = sorted(((k, n, j, ms) for k, (n, j, ms) in acc.items()), key=lambda r: -r[3])
+    return busy, rows
+
+
+def print_classes(path):
+    with open(path) as f:
+        spans = [json.loads(line) for line in f if line.strip()]
+    busy, rows = class_rows(spans)
+    print(f"{path}: busy {busy:.1f} ms")
+    print(f"  {'class':<28} {'calls':>6} {'jobs':>6} {'ms':>9} {'share':>7}")
+    for name, calls, jobs, ms in rows:
+        print(f"  {name:<28} {calls:6d} {jobs:6d} {ms:9.1f} {100 * ms / busy:6.1f}%")
+
+
+def refresh_rows(spans):
+    """(name, dur_ms, jobs, job_ms, driver_ms) per child span of each refresh."""
+    by_id = {s["id"]: s for s in spans}
+    children = children_of(spans)
 
     refresh_ops = sorted({s["op"] for s in spans
                           if s["layer"] == "streaming" and s["name"] == "appendBatch"
@@ -56,7 +99,8 @@ def refresh_rows(spans):
         root = by_id[op]
         rows = []
         for c in sorted(children.get(root["id"], []), key=lambda s: s["start_ns"]):
-            jobs = jobs_under(c) if c["layer"] != "spark" else [(c["start_ns"], c["end_ns"])]
+            jobs = (jobs_under(c, children) if c["layer"] != "spark"
+                    else [(c["start_ns"], c["end_ns"])])
             dur = (c["end_ns"] - c["start_ns"]) / 1e6
             job_ms = union_ms(jobs)
             rows.append((f'{c["layer"]}/{c["name"]}', dur, len(jobs), job_ms, dur - job_ms))
@@ -80,11 +124,13 @@ def print_table(path):
 
 
 def main(argv):
-    paths = argv[1:] or sorted(glob.glob(".bench_work/traces/*.jsonl"))
+    classes = "--classes" in argv[1:]
+    paths = [a for a in argv[1:] if a != "--classes"]
+    paths = paths or sorted(glob.glob(".bench_work/traces/*.jsonl"))
     if not paths:
         sys.exit("no trace files: run perfbench/run.py --workload serve --trace 1 first")
     for p in paths:
-        print_table(p)
+        (print_classes if classes else print_table)(p)
 
 
 if __name__ == "__main__":
