@@ -229,37 +229,27 @@ object FtQueries {
   def searcher(spark: SparkSession, sfDir: String): IndexSearcher =
     searcherCache.getOrElseUpdate(sfDir, new IndexSearcher(spark, indexPath(spark, sfDir)))
 
-  /** A searcher over the SAME shared index scored by an alternative
-    * similarity (cached per model name).
+  /** A view of the shared searcher's commit scored by an alternative
+    * similarity (cached per model name): it shares the base searcher's
+    * stats and row cache, so the per-model searchers pay one terms-dict
+    * read between them.
     */
   def searcherWith(spark: SparkSession, sfDir: String, simName: String,
       sim: => Similarity): IndexSearcher =
     searcherCache.getOrElseUpdate(s"${indexPath(spark, sfDir)}#sim=$simName",
-      // inherit the base searcher's stats caches: df/ttf/collection stats
-      // are similarity-independent, so a fresh per-model searcher would
-      // re-pay an identical terms-dict read for identical values
-      new IndexSearcher(spark, indexPath(spark, sfDir), similarity = sim)
-        .inheritStatsFrom(searcher(spark, sfDir)))
+      searcher(spark, sfDir).withSimilarity(sim))
 
   /** Matching docs scored by `sim`'s exact-double twin — driver-verifies
     * alternative ranking models (TF-IDF coord/queryNorm pipeline, LM
     * Dirichlet) against their SQL formulas, not just unit vectors.
     */
   def matchesSim(spark: SparkSession, sfDir: String, q: Query, simName: String,
-      sim: => Similarity): DataFrame = {
-    // warm the query's (field, term) stats through the SHARED base searcher
-    // and copy them into the per-model searcher: stats are similarity-
-    // independent, so the ~15 alternative-model queries pay ONE terms-dict
-    // job between them instead of one each (Try: multi-term leaves can't
-    // pre-derive keys before expansion — they just skip the warm)
-    val base = searcher(spark, sfDir)
-    scala.util.Try(base.termStats(Query.leafKeys(Query.rewrite(q), base.field)))
-    searcherWith(spark, sfDir, simName, sim).inheritStatsFrom(base)
+      sim: => Similarity): DataFrame =
+    searcherWith(spark, sfDir, simName, sim)
       .scoredDocs(q, ScoreMode.ExactDouble)
       .toDF("doc_id", "score")
       .select(col("doc_id"), round(col("score"), 4).as("score_r"))
       .orderBy("doc_id")
-  }
 
   /** MoreLikeThis matches: the MLT disjunction built from a seed snippet,
     * then every matching doc scored. The seed's candidate set must lie

@@ -32,21 +32,22 @@ final case class Explanation(
 
 private[search] object Explain {
 
-  /** Build the explanation for one doc from its range's raw posting rows.
-    * Values are produced by the SAME plan evaluator the collectors use
-    * ([[GroupEval.scoreAt]]), so root.value == search score by
-    * construction, at every tree level; `mode` only rounds the coord
+  /** Build the explanation for one doc of the prepared plan `p` from its
+    * range's raw posting rows; the statistics shown are the ones `p`
+    * compiled with. Values are produced by the SAME plan evaluator the
+    * collectors use ([[GroupEval.scoreAt]]), so root.value == search score
+    * by construction, at every tree level; `mode` only rounds the coord
     * node's clause sum the way the evaluator does.
     */
   def forDoc(
-      q: Query,
-      ge: GroupEval,
+      p: Prepared,
       rows: Array[PRow],
       rangeId: Long,
       docId: Long,
-      searcher: IndexSearcher,
-      stats: Map[(String, String), TermStats],
+      field: String,
+      simName: String,
       mode: ScoreMode): Explanation = {
+    val ge = p.ge
     val dels = if (rows.isEmpty) null else rows(0)._7
     if (!ge.live(docId, dels))
       return Explanation(0.0, s"doc $docId: deleted (liveDocs)", Nil, isMatch = false)
@@ -60,27 +61,27 @@ private[search] object Explain {
     def node(q: Query, n: CNode): Explanation = (q, n) match {
 
       case (TermQuery(t, boost, f), leaf @ CLeafTerm(idx, fi, scorer)) =>
-        val fieldName = f.getOrElse(searcher.field)
+        val fieldName = f.getOrElse(field)
         val v = scoreOf(leaf)
         if (v.isNaN || idx < 0)
           Explanation(0.0, s"no match: weight($fieldName:$t)", Nil, isMatch = false)
         else {
           val freq = acc.freqs(idx)(slot)
-          val ts = stats((fieldName, t))
-          val cs = searcher.collectionStats(fieldName)
+          val ts = p.stats.terms((fieldName, t))
+          val cs = p.stats.fields(fieldName)
           // detail values COMPOSE: their product in mode arithmetic equals the
           // node value exactly (reference term.go:163-193 — tfNorm × weight);
           // the function arguments live in descriptions, not value nodes
           val ctx = s"termFreq=$freq, docFreq=${ts.docFreq}, maxDoc=${cs.maxDoc}, " +
             s"dl=${acc.dls(fi)(slot)}, normByte=${acc.norms(fi)(slot)}, avgdl=${Bm25.avgdlExact(cs)}"
           Explanation(v,
-            s"product of: weight($fieldName:$t in $docId) [${searcher.similarity.name}" +
+            s"product of: weight($fieldName:$t in $docId) [$simName" +
               (if (boost != 1.0f) s", boost=$boost" else "") + s"] ($ctx)",
             scorer.explainFactors(freq, acc, fi, slot).map { case (l, x) => Explanation(x, l) })
         }
 
       case (PhraseQuery(ts, boost, f, slop), leaf @ CLeafPhrase(idxs, fi, scorer, _)) =>
-        val fieldName = f.getOrElse(searcher.field)
+        val fieldName = f.getOrElse(field)
         val v = scoreOf(leaf)
         val pf = Eval.phraseFreq(idxs, acc, slot, slop)
         if (v.isNaN)
@@ -166,6 +167,6 @@ private[search] object Explain {
         Explanation(if (v.isNaN) 0.0 else v, s"query $q", Nil, isMatch = !v.isNaN)
     }
 
-    node(Query.rewrite(q), ge.planRoot)
+    node(Query.rewrite(p.q), ge.planRoot)
   }
 }

@@ -11,17 +11,20 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * corpus were one index: idf from global docFreq, avgdl from global field
   * totals, tie-breaks on global docIds.
   *
-  * Mechanism: before a query runs, its (field, term) statistics are fetched
-  * from every shard (driver-side point lookups against each shard's terms
-  * dictionary — metadata-sized, cached per key), summed, and SEEDED into
-  * each shard searcher's stats caches ([[IndexSearcher.overrideStats]]).
-  * Each shard then evaluates the query with its ordinary distributed plan —
-  * postings pruned to the query terms, per-range evaluation, its own delete
-  * view — but scores with the merged statistics, so per-shard results are
+  * Mechanism: every shard runs through a view of its own commit
+  * ([[IndexSearcher.withStats]]) whose statistics, per query, are the sums
+  * of the shards' own statistics of the query's (field, term) keys and of
+  * their fields. Each shard's own statistics come from its commit's LRU, so
+  * a repeated key costs a few LRU hits and Long additions. Each view
+  * evaluates the query with its shard's ordinary plan — postings pruned to
+  * the query terms, per-range evaluation, the shard's delete view — but
+  * scores with the merged statistics, so per-shard results are
   * bit-identical to what a monolithic index over the union corpus would
   * produce for the same docs (MultiSearcherSpec pins merge ≡ monolithic for
   * every query shape, both score modes). Top-k merging is then a pure
   * driver-side k-way merge by (score desc, docId asc); totalHits sums.
+  * Merged statistics carry no singleton ids (a summed df of 1 names no
+  * shard's inlined doc), so the singleton fast path stays off in the views.
   *
   * Scale shape: per-shard work is unchanged (one bounded Spark job per
   * shard, no cross-shard shuffle, no data movement between shards); the
@@ -31,9 +34,9 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * CONTRACTS:
   *  - docId spaces must be disjoint across shards (explicit docId columns,
   *    or per-shard id bases) — docIds are global identity here.
-  *  - shard searchers are OWNED by this MultiSearcher once passed in: their
-  *    stats caches are overwritten with merged values, so do not use them
-  *    standalone afterwards.
+  *  - nothing is written into a shard searcher: one passed to
+  *    [[MultiSearcher.of]] keeps answering standalone with its own
+  *    statistics, and concurrent queries share no mutable state.
   *
   * Multi-term queries (prefix/wildcard/fuzzy/range/regexp) expand at the
   * MULTI level: each shard's dictionary is scanned for the leaf, the term
@@ -42,79 +45,49 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * budget applies to the union, and the resulting disjunction's stats are
   * merged like any other terms.
   */
-final class MultiSearcher private[search] (val shards: Seq[IndexSearcher],
-    val field: String) {
-  require(shards.nonEmpty, "MultiSearcher needs at least one shard")
+final class MultiSearcher private[search] (locals: Seq[IndexSearcher], val field: String) {
+  require(locals.nonEmpty, "MultiSearcher needs at least one shard")
 
-  /** Merged stats, computed once per key from freshly-fetched shard-local
-    * values (None = absent in every shard). Keys merge exactly once: after
-    * seeding, shard caches hold MERGED values, so re-fetching them would
-    * double-count — this cache prevents that.
+  /** The shard views queries run through, one per shard in shard order:
+    * each shard's commit and deletes, scored with [[mergedStats]].
     */
-  private val mergedTs =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Option[TermStats]]
-  private val mergedCs =
-    scala.collection.concurrent.TrieMap.empty[String, CollectionStats]
+  val shards: Seq[IndexSearcher] = locals.map(_.withStats(mergedStats))
 
-  /** Merge + seed statistics for `keys` (each key exactly once), returning
-    * the merged stats present in ≥1 shard. Shard caches are overwritten so
-    * subsequent shard-local evaluation scores globally.
-    *
-    * `synchronized`: two concurrent queries on one MultiSearcher (the SQL
-    * surface caches and shares instances) must not interleave here — thread
-    * B could pass the mergedTs filter, then fetch shard stats AFTER thread
-    * A seeded merged values into the shard caches, durably double-counting
-    * df/ttf. The merge+seed critical section is driver-side metadata work;
-    * the per-shard FETCHES inside it still run concurrently on the shard
-    * pool (each a driver-side point read of one shard's terms table).
+  /** The statistics every shard view scores a query with: per key, the
+    * shards' own df and ttf summed (absent when no shard has the key); per
+    * field, the shards' collection stats summed.
     */
-  private def seedStats(keys: Seq[(String, String)]): Map[(String, String), TermStats] = synchronized {
-    val newKeys = keys.filterNot(mergedTs.contains)
-    if (newKeys.nonEmpty) {
-      // local fetch per shard (cached point lookups), then sum df/ttf —
-      // fetched in PARALLEL: latency tracks the slowest shard, not the sum
-      val perShard = inParallel(shards.map(s => () => s.termStats(newKeys)))
-      newKeys.foreach { k =>
-        val present = perShard.flatMap(_.get(k))
-        mergedTs.put(k, present.reduceOption((a, b) =>
-          TermStats(a.field, a.term, a.docFreq + b.docFreq,
-            a.totalTermFreq + b.totalTermFreq)))
-      }
-      val flds = newKeys.map(_._1).distinct.filterNot(mergedCs.contains)
-      flds.foreach(mergedCollectionStats)
-      val seedTs = newKeys.flatMap(k => mergedTs(k).map(k -> _)).toMap
-      val seedCs = newKeys.map(_._1).distinct
-        .flatMap(f => mergedCs.get(f).map(f -> _)).toMap
-      shards.foreach(_.overrideStats(seedCs, seedTs))
-    }
-    keys.flatMap(k => mergedTs(k).map(k -> _)).toMap
+  private def mergedStats(keys: Seq[(String, String)]): StatsView = {
+    val per = locals.map(_.localStats(keys))
+    StatsView(
+      keys.distinct.flatMap(k => per.flatMap(_.terms.get(k)).reduceOption((a, b) =>
+        TermStats(a.field, a.term, a.docFreq + b.docFreq, a.totalTermFreq + b.totalTermFreq))
+        .map(k -> _)).toMap,
+      per.flatMap(_.fields.values).groupBy(_.field).map { case (f, css) =>
+        f -> CollectionStats(f,
+          maxDoc = css.map(_.maxDoc).sum,
+          docCount = css.map(_.docCount).sum,
+          sumTotalTermFreq = css.map(_.sumTotalTermFreq).sum,
+          sumDocFreq = css.map(_.sumDocFreq).sum)
+      },
+      Map.empty)
   }
 
-  /** Summed collection stats for a field (cached; serialized with
-    * [[seedStats]] — same monitor, reentrant from inside it — so a
-    * concurrent query can never observe half-seeded collection stats).
+  /** `q0` with its multi-term leaves expanded across the shards. The
+    * shards' own statistics of its keys are read here, in parallel, so the
+    * views' per-query sums are LRU hits and a cold query waits for the
+    * slowest shard's read, not for their sum.
     */
-  def mergedCollectionStats(f: String): CollectionStats = synchronized {
-    mergedCs.getOrElseUpdate(f, {
-      val css = inParallel(shards.map(s => () => s.collectionStatsOpt(f))).flatten
-      require(css.nonEmpty, s"field '$f' is indexed in no shard")
-      CollectionStats(f,
-        maxDoc = css.map(_.maxDoc).sum,
-        docCount = css.map(_.docCount).sum,
-        sumTotalTermFreq = css.map(_.sumTotalTermFreq).sum,
-        sumDocFreq = css.map(_.sumDocFreq).sum)
-    })
-  }
-
-  private def ensureSeeded(q0: Query): Query = {
+  private def expand(q0: Query): Query = {
     val q = Query.rewrite(expandAcrossShards(q0))
-    seedStats(Query.leafKeys(q, field))
+    val keys = Query.leafKeys(q, field)
+    inParallel(locals.map(s => () => s.localStats(keys)))
     q
   }
 
   /** Multi-term leaves rewrite against the UNION of shard dictionaries —
     * identical terms and clause order to the monolithic expansion, so the
-    * boolean that reaches the shards (and the stats seeded for it) match
+    * boolean that reaches the shards (and the stats merged for it) match
     * single-index behavior exactly. Boost/field thread through unchanged.
     */
   private def expandAcrossShards(q: Query): Query = q match {
@@ -146,8 +119,7 @@ final class MultiSearcher private[search] (val shards: Seq[IndexSearcher],
   /** Per-shard searches run CONCURRENTLY from driver threads — each shard's
     * Spark jobs overlap in the scheduler, so sharded latency tracks the
     * slowest shard instead of the sum (OpBench: sequential sharded WAND was
-    * exactly 2× mono). Shards are independent searcher instances (no shared
-    * mutable state; seeding happens before, single-threaded).
+    * exactly 2× mono). Tasks on this pool never submit to it.
     */
   private lazy val pool = java.util.concurrent.Executors.newFixedThreadPool(
     math.min(shards.length, 16),
@@ -174,13 +146,13 @@ final class MultiSearcher private[search] (val shards: Seq[IndexSearcher],
     * exhaustive collection plan with merged stats).
     */
   def search(q0: Query, k: Int, mode: ScoreMode = ScoreMode.Ref32): TopDocs = {
-    val q = ensureSeeded(q0)
+    val q = expand(q0)
     mergeTop(inParallel(shards.map(s => () => s.search(q, k, mode))), k)
   }
 
   /** Block-max WAND per shard, merged: each shard's pruned top-k is a
-    * superset of its members of the GLOBAL top-k (bounds use the seeded
-    * merged stats), so the merge is exact on docs/scores. totalHits sums the
+    * superset of its members of the GLOBAL top-k (bounds use the merged
+    * stats), so the merge is exact on docs/scores. totalHits sums the
     * shards' counts: exact when no shard pruned (see
     * [[Wand.searchTopK]]), a lower bound — flagged by
     * `totalHitsIsLowerBound` — as soon as one shard pruned, which follows
@@ -188,7 +160,7 @@ final class MultiSearcher private[search] (val shards: Seq[IndexSearcher],
     */
   def searchWand(q0: Query, k: Int, mode: ScoreMode = ScoreMode.Ref32,
       phase1Ranges: Int = 64): TopDocs = {
-    val q = ensureSeeded(q0)
+    val q = expand(q0)
     mergeTop(inParallel(shards.map(s =>
       () => Wand.searchTopK(s, q, k, mode, phase1Ranges))), k)
   }
@@ -197,7 +169,7 @@ final class MultiSearcher private[search] (val shards: Seq[IndexSearcher],
     * joins/facets/sorts stay distributed).
     */
   def scoredDocs(q0: Query, mode: ScoreMode): Dataset[ScoredDoc] = {
-    val q = ensureSeeded(q0)
+    val q = expand(q0)
     shards.map(_.scoredDocs(q, mode)).reduce(_ union _)
   }
 
@@ -208,7 +180,7 @@ final class MultiSearcher private[search] (val shards: Seq[IndexSearcher],
     */
   def facetCounts(q0: Query, facetCol: String, topN: Int = 20): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
-    val q = ensureSeeded(q0)
+    val q = expand(q0)
     shards.map(_.facetCounts(q, facetCol, Int.MaxValue))
       .reduce(_ union _)
       .groupBy(col(facetCol))
@@ -224,7 +196,7 @@ final class MultiSearcher private[search] (val shards: Seq[IndexSearcher],
   def searchSortBy(q0: Query, sortCol: String, k: Int,
       ascending: Boolean = true): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
-    val q = ensureSeeded(q0)
+    val q = expand(q0)
     val ord = if (ascending) col(sortCol).asc else col(sortCol).desc
     shards.map(_.searchSortBy(q, sortCol, k, ascending))
       .reduce(_ union _)
@@ -244,7 +216,7 @@ final class MultiSearcher private[search] (val shards: Seq[IndexSearcher],
       docsPerGroup: Int, mode: ScoreMode = ScoreMode.Ref32): org.apache.spark.sql.DataFrame = {
     // named imports: functions._ would shadow the `mode` parameter
     import org.apache.spark.sql.functions.{broadcast, col, max, row_number}
-    val q = ensureSeeded(q0)
+    val q = expand(q0)
     val union = shards
       .map(_.groupedSearch(q, groupCol, Int.MaxValue, docsPerGroup, mode))
       .reduce(_ union _)
@@ -286,36 +258,37 @@ final class MultiSearcher private[search] (val shards: Seq[IndexSearcher],
     */
   def moreLikeThisQuery(analyzer: graft.analysis.Analyzer, text: String,
       maxQueryTerms: Int = 25, minTermFreq: Int = 1, minDocFreq: Int = 1,
-      queryField: Option[String] = None): Query = {
-    val fn = queryField.getOrElse(field)
-    MoreLikeThis.query(analyzer, text, maxQueryTerms, minTermFreq, minDocFreq, queryField,
-      fn, seedStats, mergedCollectionStats(fn).maxDoc)
-  }
+      queryField: Option[String] = None): Query =
+    shards.head.moreLikeThisQuery(analyzer, text, maxQueryTerms, minTermFreq, minDocFreq,
+      queryField)
 
   /** Explanation from the shard that owns `docId` (disjoint docId spaces);
     * root value == the merged search score for that doc.
     */
   def explain(q0: Query, docId: Long, mode: ScoreMode = ScoreMode.Ref32): Explanation = {
-    val q = ensureSeeded(q0)
+    val q = expand(q0)
     shards.find(_.doc(docId).nonEmpty) match {
       case Some(s) => s.explain(q, docId, mode)
       case None => Explanation(0.0, s"doc $docId: in no shard", Nil, isMatch = false)
     }
   }
 
-  def close(): Unit = { shards.foreach(_.close()); pool.shutdown() }
+  def close(): Unit = { (shards ++ locals).foreach(_.close()); pool.shutdown() }
 }
 
 object MultiSearcher {
-  /** Open shard searchers over `paths` (owned by the returned instance). */
+  /** Open shard searchers over `paths`; close() of the returned instance
+    * closes them.
+    */
   def apply(spark: SparkSession, paths: Seq[String], field: String = "content",
       similarity: Similarity = new Bm25Similarity()): MultiSearcher =
     new MultiSearcher(paths.map(p =>
       new IndexSearcher(spark, p, field, similarity)), field)
 
-  /** Wrap caller-constructed shard searchers (e.g. with per-shard delete
-    * views). They are OWNED by the MultiSearcher from here on — their stats
-    * caches get overwritten with merged values.
+  /** Search caller-constructed shard searchers (e.g. with per-shard delete
+    * views) through merged-stats views; the searchers themselves stay
+    * untouched and keep answering standalone. close() of the returned
+    * instance closes them too.
     */
   def of(shards: Seq[IndexSearcher]): MultiSearcher = {
     require(shards.map(_.field).distinct.size <= 1,

@@ -92,24 +92,43 @@ private[search] object RangeSel {
   final case class Df(rangeIds: RDD[Long]) extends RangeSel
 }
 
+/** The statistics one query compiles and scores with, resolved once per
+  * query by the searcher's stats source: dictionary stats of its present
+  * (field, term) keys, collection stats per field, and the docIds the
+  * dictionary inlines for docFreq == 1 keys (singleton pulsing, reference
+  * postingsWriter.go:412-417; empty for merged cross-shard stats). A value:
+  * the plan, the singleton path, WAND's bounds and explain all read the
+  * same numbers, whatever happens to any cache meanwhile.
+  */
+private[search] final case class StatsView(
+    terms: Map[(String, String), TermStats],
+    fields: Map[String, CollectionStats],
+    singletons: Map[(String, String), Long])
+
 /** Compiled query + everything the executors need: the expanded, rewritten
   * query, its distinct (field, term) keys (a leaf's term index points into
-  * `keys`), their dictionary stats and the per-range evaluator holding the
-  * plan. Exhaustive search, explain and WAND's bound tree all read this one
-  * compilation.
+  * `keys`), the statistics it compiled with and the per-range evaluator
+  * holding the plan. Exhaustive search, explain and WAND's bound tree all
+  * read this one compilation.
   */
 private[search] final case class Prepared(
-    q: Query, keys: Seq[(String, String)], stats: Map[(String, String), TermStats],
-    ge: GroupEval) {
+    q: Query, keys: Seq[(String, String)], stats: StatsView, ge: GroupEval) {
   /** The keys as `field:term` words — the query in job descriptions. */
   def keyText: String = keys.map { case (f, t) => s"$f:$t" }.mkString(" ")
 }
 
-/** Key of one entry in a searcher's byte-bounded LRU; `V` is the value
+/** Key of one entry in a commit's byte-bounded LRU; `V` is the value
   * stored under it and `weight` its approximate heap size in bytes.
   */
 private[search] sealed abstract class CacheKey[V] {
   def weight(v: V): Long
+}
+/** Dictionary stats of one (field, term) and its inlined singleton docId
+  * (negative unless docFreq == 1); None: the term is not in the dictionary.
+  */
+private[search] final case class StatsKey(field: String, term: String)
+    extends CacheKey[Option[(TermStats, Long)]] {
+  def weight(v: Option[(TermStats, Long)]): Long = 160L + 4L * (field.length + term.length)
 }
 /** Collected posting rows of one (field, term), with or without positions. */
 private[search] final case class RowsKey(field: String, term: String, positions: Boolean)
@@ -275,6 +294,135 @@ private[search] object Eval {
   }
 }
 
+/** Everything searchers derive from one commit of one index: manifest,
+  * Spark tables, point readers, field statistics and the byte-bounded LRU
+  * (the reference's query-cache analogue; a commit is a point-in-time view,
+  * so entries never go stale) of what is read per query input: term stats
+  * (absent terms included), posting rows, multi-term expansions,
+  * suggestions and stored docs. Nothing here depends on deletes,
+  * similarity or other indexes, so every searcher view of the commit shares
+  * one instance and pays each read once.
+  */
+private[search] final class CommitState(spark: SparkSession, val indexPath: String) {
+  import spark.implicits._
+
+  val manifest: IndexManifest = IndexManifest.load(spark, indexPath)
+
+  /** The Spark reads (WAND's bound scan, multi-term expansion beyond
+    * prefixes, suggestions) use explicit schemas: opening a table launches
+    * no schema-inference job.
+    */
+  lazy val termsDF: DataFrame =
+    spark.read.schema(TableSchemas.terms).parquet(manifest.termsLocation)
+  lazy val postingsDF: DataFrame =
+    spark.read.schema(TableSchemas.postings(manifest.formatVersion)).parquet(s"$indexPath/postings")
+  /** Stored docs; version-1 indexes predate per-field dls and read an
+    * empty map (the per-field read paths fall back to dl).
+    */
+  lazy val docsDF: DataFrame = {
+    val d = spark.read.parquet(s"$indexPath/docs")
+    if (d.columns.contains("fieldDls")) d
+    else d.withColumn("fieldDls", typedLit(Map.empty[String, Int]))
+  }
+
+  /** Parquet point readers: every lookup whose result is collected to the
+    * driver (term stats, prefix expansion, driver-local posting rows, stored
+    * docs) reads through these with no Spark job, and the distributed
+    * evaluation's tasks read their posting files through the same per-file
+    * read ([[PointReader.rdd]]).
+    */
+  private def hadoopConf = spark.sparkContext.hadoopConfiguration
+  lazy val termsReader = new PointReader(hadoopConf, manifest.termsLocation)
+  lazy val postingsReader = new PointReader(hadoopConf, s"$indexPath/postings")
+  lazy val docsReader = new PointReader(hadoopConf, s"$indexPath/docs")
+
+  /** Per-field statistics: the manifest's copy (no I/O), or the fieldstats
+    * table for manifests written before the copy existed.
+    */
+  lazy val fieldStats: Map[String, CollectionStats] =
+    manifest.fieldStatsOrTable(hadoopConf).map(fs => fs.field ->
+      CollectionStats(fs.field, maxDoc = fs.maxDoc, docCount = fs.docCount,
+        sumTotalTermFreq = fs.sumTotalTermFreq, sumDocFreq = fs.sumDocFreq)).toMap
+
+  /** docId ranges of the commit, and the partitions of its distributed
+    * range evaluation: one per range, at most the cluster's default
+    * parallelism. A range's posting rows and its delete array land in the
+    * same partition index.
+    */
+  lazy val rangeCount: Long = {
+    val hi = if (manifest.maxDocId >= 0) manifest.maxDocId else manifest.maxDoc - 1
+    math.max(hi, 0L) / manifest.docsPerRange + 1
+  }
+  lazy val rangeParts: Int =
+    math.min(rangeCount, spark.sparkContext.defaultParallelism.toLong).toInt
+
+  /** This commit's own statistics of `keys`: dictionary stats and singleton
+    * ids through the LRU (one terms point read for the keys it misses), and
+    * the field statistics.
+    */
+  def stats(keys: Seq[(String, String)]): StatsView = {
+    val entries = getAll(keys.distinct, None: Option[(TermStats, Long)])(k =>
+        StatsKey(k._1, k._2)) { missing =>
+      termsReader.read(Seq("field", "term", "docFreq", "totalTermFreq", "singletonDocId"),
+          Some(PointReader.pairs(missing))) { g =>
+        val (f, t) = (g.getString("field", 0), g.getString("term", 0))
+        (f, t) -> Some((TermStats(f, t, g.getLong("docFreq", 0), g.getLong("totalTermFreq", 0)),
+          g.getLong("singletonDocId", 0)))
+      }.toMap
+    }.flatten
+    StatsView(entries.map { case (ts, _) => (ts.field, ts.term) -> ts }.toMap, fieldStats,
+      entries.collect { case (ts, sid) if ts.docFreq == 1 && sid >= 0 =>
+        (ts.field, ts.term) -> sid }.toMap)
+  }
+
+  /** The LRU's byte budget ([[IndexSearcher.rowCacheMaxBytes]]). */
+  @volatile var maxBytes: Long = 64L << 20
+  private var bytes = 0L
+  private val lru = new java.util.LinkedHashMap[CacheKey[_], (Any, Long)](64, 0.75f, true)
+
+  def get[V](key: CacheKey[V]): Option[V] =
+    lru.synchronized(Option(lru.get(key)).map(_._1.asInstanceOf[V]))
+
+  /** Insert unless present, then evict least-recently-used entries down to
+    * the budget — never the entry just inserted (the live query needs it).
+    */
+  def put[V](key: CacheKey[V], v: V): Unit = lru.synchronized {
+    if (!lru.containsKey(key)) {
+      val w = key.weight(v)
+      lru.put(key, (v, w))
+      bytes += w
+      val it = lru.entrySet().iterator()
+      while (bytes > maxBytes && it.hasNext) {
+        val e = it.next()
+        if (e.getKey != key) {
+          bytes -= e.getValue._2
+          it.remove()
+        }
+      }
+    }
+  }
+
+  def cached[V](key: CacheKey[V])(compute: => V): V =
+    get(key).getOrElse { val v = compute; put(key, v); v }
+
+  /** The values of `keys`: cached entries, plus one `fetch` of the missing
+    * keys, whose results enter the LRU (`absent` for a key it omits).
+    */
+  def getAll[K, V](keys: Seq[K], absent: V)(key: K => CacheKey[V])(
+      fetch: Seq[K] => Map[K, V]): Seq[V] = {
+    val hits = keys.map(k => k -> get(key(k)))
+    val missing = hits.collect { case (k, None) => k }
+    val fetched = if (missing.isEmpty) Map.empty[K, V] else fetch(missing)
+    missing.foreach(k => put(key(k), fetched.getOrElse(k, absent)))
+    hits.map { case (k, hit) => hit.getOrElse(fetched.getOrElse(k, absent)) }
+  }
+
+  /** Summed weight of the LRU's entries. */
+  def bytesInUse: Long = lru.synchronized(bytes)
+
+  def clear(): Unit = lru.synchronized { lru.clear(); bytes = 0L }
+}
+
 /** Distributed BM25 top-k search over a built index.
   *
   * Read-path plan (restating /root/repo/SURVEY.md §3.2 Spark-first):
@@ -297,27 +445,39 @@ private[search] object Eval {
   * core/document/field.go:16-48) with keyword fields indexed as single
   * unanalyzed tokens (StringField).
   */
-final class IndexSearcher(
+final class IndexSearcher private (
     spark: SparkSession,
-    private[graft] val indexPath: String,
-    val field: String = "content",
-    val similarity: Similarity = new Bm25Similarity(),
-    extraDeletes: Array[Long] = Array.emptyLongArray,
-    extraDeletesDF: Option[DataFrame] = None,
+    commit: CommitState,
+    val field: String,
+    val similarity: Similarity,
+    extraDeletes: Array[Long],
+    extraDeletesDF: Option[DataFrame],
     /** Delete sets up to this size ship as a sorted-docId broadcast
       * (8 B/doc); beyond it the searcher switches to the RANGED path:
       * per-rangeId delete arrays joined onto the query's posting rows
       * (per-segment liveDocs,
       * /root/reference/core/codec/lucene40/bitVector.go) — no `.collect()`
       * of deletes on the query path, so bulk refreshes (re-crawl 10% of a
-      * corpus) can never blow the driver. A CONSTRUCTOR parameter (advisor
-      * round-3 fix): the former mutable field was silently ignored once the
-      * delete-path lazy vals had initialized.
+      * corpus) can never blow the driver.
       */
-    val deleteBroadcastMax: Long = 1000000L) extends Serializable {
+    val deleteBroadcastMax: Long,
+    /** The statistics a query scores with; None: the commit's own. */
+    statsOf: Option[Seq[(String, String)] => StatsView],
+    /** This searcher opened `commit`: its close() releases the LRU. */
+    ownsCommit: Boolean) extends Serializable {
   import spark.implicits._
 
-  val manifest: IndexManifest = IndexManifest.load(spark, indexPath)
+  /** A searcher over the index's current commit. */
+  def this(spark: SparkSession, indexPath: String, field: String = "content",
+      similarity: Similarity = new Bm25Similarity(),
+      extraDeletes: Array[Long] = Array.emptyLongArray,
+      extraDeletesDF: Option[DataFrame] = None,
+      deleteBroadcastMax: Long = 1000000L) =
+    this(spark, new CommitState(spark, indexPath), field, similarity, extraDeletes,
+      extraDeletesDF, deleteBroadcastMax, None, ownsCommit = true)
+
+  private[graft] def indexPath: String = commit.indexPath
+  def manifest: IndexManifest = commit.manifest
 
   private lazy val persistedDeleteCount: Long =
     graft.index.Deletes.count(spark, indexPath)
@@ -338,80 +498,51 @@ final class IndexSearcher(
       else (persisted ++ extraDeletes).distinct.sorted
     }
 
-  /** docId ranges of this index view, and the partitions of its
-    * distributed range evaluation: one per range, at most the cluster's
-    * default parallelism. A range's posting rows and its delete array land
-    * in the same partition index.
-    */
-  private lazy val rangeCount: Long = {
-    val hi = if (manifest.maxDocId >= 0) manifest.maxDocId else manifest.maxDoc - 1
-    math.max(hi, 0L) / manifest.docsPerRange + 1
-  }
-  private lazy val rangeParts: Int =
-    math.min(rangeCount, spark.sparkContext.defaultParallelism.toLong).toInt
-
   /** liveDocs RANGED path: (rangeId, sorted delete array) per range, every
     * array bounded by docsPerRange, partitioned and sorted like the
     * distributed evaluation's rows ([[RangeJob.deleteArrays]]); built and
-    * persisted once per searcher because deletes change rarely relative to
-    * query volume.
+    * persisted once per searcher view because deletes change rarely
+    * relative to query volume.
     */
   @volatile private var delRangesInit = false
   private lazy val delRanges: RDD[(Long, Array[Long])] = {
     delRangesInit = true
     RangeJob.deleteArrays(
       deletesUnion.getOrElse(sys.error("ranged delete view with no delete sources")).as[Long].rdd,
-      rangeParts, manifest.docsPerRange)
+      commit.rangeParts, manifest.docsPerRange)
       .setName(s"graft ranged deletes of $indexPath")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
-  /** Release everything this searcher view pins in executor/driver memory:
-    * the cached ranged-delete arrays and the posting-row cache (round-3
-    * judge fix: discarded delete views leaked one persisted DataFrame each
-    * for the JVM lifetime). Idempotent; the searcher remains usable (caches
-    * simply rebuild).
+  /** Release what this searcher pins: its ranged-delete arrays and, on the
+    * searcher that opened the commit (not on views derived from it), the
+    * commit's LRU. Idempotent; the searcher and its views stay usable
+    * (caches simply rebuild).
     */
   def close(): Unit = {
     if (delRangesInit) delRanges.unpersist(blocking = false)
-    cache.synchronized {
-      cache.clear()
-      cacheBytes = 0L
-    }
+    if (ownsCommit) commit.clear()
   }
 
-  /** Derived delete views INHERIT a snapshot of this searcher's stats
-    * caches: a delete view does not change statistics (deleted docs keep
-    * counting toward df/ttf/collection stats until a reclaiming merge — the
-    * reference's liveDocs semantics), so re-fetching them in the view would
-    * pay an identical terms-dict read for identical values. A snapshot (not
-    * shared maps): later seeding of the view (MultiSearcher ownership)
-    * must never write through to this searcher.
+  /** A view of this searcher's commit that differs in deletes, similarity
+    * or stats source only. It shares the commit state — manifest, readers,
+    * field stats, LRU — so it scores against the same commit as this
+    * searcher, whatever was published since, and reads nothing twice.
     */
-  private def inheritCaches(s: IndexSearcher): IndexSearcher =
-    s.inheritStatsFrom(this)
-
-  /** Copy a SNAPSHOT of `parent`'s stats caches into this searcher — sound
-    * whenever both view the same committed index, because df/ttf/collection
-    * stats depend only on the index (not on similarity, and not on delete
-    * views). Snapshot, not shared maps: later seeding of either searcher
-    * (MultiSearcher ownership) must not write through to the other. Do NOT
-    * inherit from a MultiSearcher-owned shard (its caches hold merged
-    * cross-shard values).
-    */
-  private[graft] def inheritStatsFrom(parent: IndexSearcher): IndexSearcher = {
-    require(parent.indexPath == indexPath,
-      s"stats inheritance across different indexes: ${parent.indexPath} vs $indexPath")
-    csCache ++= parent.csCache.snapshot()
-    statsCache ++= parent.statsCache.snapshot()
-    singletonIds ++= parent.singletonIds.snapshot()
-    this
+  private def view(
+      similarity: Similarity = this.similarity,
+      extraDeletes: Array[Long] = this.extraDeletes,
+      extraDeletesDF: Option[DataFrame] = this.extraDeletesDF,
+      statsOf: Option[Seq[(String, String)] => StatsView] = this.statsOf): IndexSearcher = {
+    val v = new IndexSearcher(spark, commit, field, similarity, extraDeletes, extraDeletesDF,
+      deleteBroadcastMax, statsOf, ownsCommit = false)
+    v.localSearchMaxPostings = localSearchMaxPostings
+    v
   }
 
-  /** A view of this index with additional (non-persisted) deleted docIds. */
+  /** A view of this commit with additional (non-persisted) deleted docIds. */
   def withDeletes(docIds: Array[Long]): IndexSearcher =
-    inheritCaches(new IndexSearcher(spark, indexPath, field, similarity,
-      extraDeletes ++ docIds, extraDeletesDF, deleteBroadcastMax))
+    view(extraDeletes = extraDeletes ++ docIds)
 
   /** A view with every doc MATCHING `q` deleted (reference delete-by-query
     * buffering, /root/reference/core/index/bufferedDeletes.go): the match
@@ -432,40 +563,30 @@ final class IndexSearcher(
         .union(docIds.select(col(docIds.columns.head).cast("long").as("docId")))
       case None => docIds
     }
-    inheritCaches(new IndexSearcher(spark, indexPath, field, similarity,
-      extraDeletes, Some(merged), deleteBroadcastMax))
+    view(extraDeletesDF = Some(merged))
   }
 
-  /** The Spark reads (WAND's bound scan, multi-term expansion beyond
-    * prefixes, suggestions) use explicit schemas: opening a table launches
-    * no schema-inference job.
+  /** A view of this commit scored by `sim` (statistics do not depend on
+    * the similarity).
     */
-  private lazy val termsDF: DataFrame =
-    spark.read.schema(TableSchemas.terms).parquet(manifest.termsLocation)
-  private lazy val postingsDF: DataFrame =
-    spark.read.schema(TableSchemas.postings(manifest.formatVersion)).parquet(s"$indexPath/postings")
+  private[graft] def withSimilarity(sim: Similarity): IndexSearcher = view(similarity = sim)
 
-  /** Parquet point readers: every lookup whose result is collected to the
-    * driver (term stats, prefix expansion, driver-local posting rows, stored
-    * docs) reads through these with no Spark job, and the distributed
-    * evaluation's tasks read their posting files through the same per-file
-    * read ([[PointReader.rdd]]).
+  /** A view of this commit scoring with `statsOf`'s statistics — the merged
+    * cross-shard view [[MultiSearcher]] runs each shard through.
     */
-  private def hadoopConf = spark.sparkContext.hadoopConfiguration
-  private lazy val termsReader = new PointReader(hadoopConf, manifest.termsLocation)
-  private lazy val postingsReader = new PointReader(hadoopConf, s"$indexPath/postings")
-  private lazy val docsReader = new PointReader(hadoopConf, s"$indexPath/docs")
+  private[search] def withStats(statsOf: Seq[(String, String)] => StatsView): IndexSearcher =
+    view(statsOf = Some(statsOf))
 
-  /** The index's per-field statistics: the manifest's copy (no I/O), or the
-    * fieldstats table for manifests written before the copy existed.
+  /** The statistics a query with `keys` scores with: the commit's own, or
+    * the stats source this view was derived with.
     */
-  private lazy val indexFieldStats: Map[String, CollectionStats] =
-    manifest.fieldStatsOrTable(hadoopConf).map(fs => fs.field ->
-      CollectionStats(fs.field, maxDoc = fs.maxDoc, docCount = fs.docCount,
-        sumTotalTermFreq = fs.sumTotalTermFreq, sumDocFreq = fs.sumDocFreq)).toMap
+  private[search] def stats(keys: Seq[(String, String)]): StatsView =
+    statsOf.fold(commit.stats(keys))(_(keys))
 
-  /** Collection stats [[MultiSearcher]] seeded into this searcher. */
-  private val csCache = scala.collection.concurrent.TrieMap.empty[String, CollectionStats]
+  /** This commit's own statistics of `keys`, whatever this view scores
+    * with — what [[MultiSearcher]] sums across shards.
+    */
+  private[search] def localStats(keys: Seq[(String, String)]): StatsView = commit.stats(keys)
 
   /** Statistics of field `f`; fails naming the field when this index never
     * indexed it.
@@ -480,59 +601,31 @@ final class IndexSearcher(
     * sharded search ([[MultiSearcher]]) merges stats across shards whose
     * field sets may differ.
     */
-  def collectionStatsOpt(f: String): Option[CollectionStats] =
-    csCache.get(f).orElse(indexFieldStats.get(f))
+  def collectionStatsOpt(f: String): Option[CollectionStats] = stats(Nil).fields.get(f)
 
-  /** Replace the statistics this searcher scores with ([[MultiSearcher]]
-    * seeds every shard with GLOBALLY merged stats, so each shard scores
-    * exactly as if its docs lived in one monolithic index). Entries
-    * overwrite both caches; a seeded term with no local postings simply
-    * never matches here (freq 0), which is the monolithic behavior for docs
-    * of this shard. The singleton fast path self-disables for seeded keys
-    * (their singletonDocId is never cached).
-    */
-  private[search] def overrideStats(cs: Map[String, CollectionStats],
-      ts: Map[(String, String), TermStats]): Unit = {
-    cs.foreach { case (f, v) => csCache.put(f, v) }
-    ts.foreach { case (k, v) => statsCache.put(k, Some(v)); singletonIds.remove(k) }
-  }
-
-  private val statsCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Option[TermStats]]
-  /** docId inlined in the terms dict for docFreq==1 terms (singleton pulsing,
-    * reference postingsWriter.go:412-417); filled by the same fetch as
-    * statsCache, so a cached key always has its singleton id too.
-    */
-  private val singletonIds =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Long]
-
-  /** Driver-side stats lookup for the query's few (field, term) keys
-    * through the terms table's point reader (broadcast-join equivalent; the
-    * terms table never ships anywhere).
-    * Cached per searcher — repeated query terms cost zero jobs (the
+  /** Dictionary stats of the query's few (field, term) keys that are
+    * present: a driver-side point read of the terms table for the keys the
+    * commit's LRU misses (broadcast-join equivalent; the terms table never
+    * ships anywhere), so repeated query terms cost zero jobs (the
     * reference's TermContext reuse).
     */
-  def termStats(keys: Seq[(String, String)]): Map[(String, String), TermStats] = {
-    val missing = keys.filterNot(statsCache.contains)
-    if (missing.nonEmpty) {
-      val fetched = termsReader.read(
-          Seq("field", "term", "docFreq", "totalTermFreq", "singletonDocId"),
-          Some(PointReader.pairs(missing))) { g =>
-        val (f, t) = (g.getString("field", 0), g.getString("term", 0))
-        (f, t) -> ((TermStats(f, t, g.getLong("docFreq", 0), g.getLong("totalTermFreq", 0)),
-          g.getLong("singletonDocId", 0)))
-      }.toMap
-      missing.foreach { k =>
-        statsCache.put(k, fetched.get(k).map(_._1))
-        fetched.get(k).foreach { case (_, sid) => singletonIds.put(k, sid) }
-      }
-    }
-    keys.flatMap(k => statsCache(k).map(k -> _)).toMap
-  }
+  def termStats(keys: Seq[(String, String)]): Map[(String, String), TermStats] =
+    stats(keys).terms
 
   /** Single-field convenience (default field). */
   def termStatsOf(terms: Seq[String]): Map[String, TermStats] =
     termStats(terms.map(t => (field, t))).map { case ((_, t), ts) => t -> ts }
+
+  /** Byte budget of the commit's LRU ([[CommitState]]), shared by every
+    * view of the commit; close() of the searcher that opened the commit
+    * empties it. Posting-row entries are bypassed under ranged deletes
+    * (rows would bake in a join product).
+    */
+  def rowCacheMaxBytes: Long = commit.maxBytes
+  def rowCacheMaxBytes_=(n: Long): Unit = commit.maxBytes = n
+
+  /** Summed weight of the commit LRU's entries. */
+  private[graft] def cacheBytesInUse: Long = commit.bytesInUse
 
   /** Exact pushdown predicate for a set of (field, term) pairs: one
     * `field = f AND term IN (...)` disjunct per field (parquet row-group
@@ -553,11 +646,12 @@ final class IndexSearcher(
     */
   private def compile(
       q0: Query,
-      stats: Map[(String, String), TermStats],
+      view: StatsView,
       termIdx: Map[(String, String), Int],
       fieldIdx: Map[String, Int],
       mode: ScoreMode): CNode = {
     val sim = similarity
+    val stats = view.terms
     val exact = mode == ScoreMode.ExactDouble
     def fld(of: Option[String]): String = of.getOrElse(field)
     def unsupported(q: Query): Nothing = q match {
@@ -568,8 +662,8 @@ final class IndexSearcher(
           "as FilteredQuery(MatchAllQuery(), filter)")
     }
     def normWeight(ts: TermStats, fn: String, boost: Double): Double =
-      if (exact) sim.exactValueForNormalization(ts, collectionStats(fn), boost)
-      else sim.valueForNormalization(ts, collectionStats(fn), boost.toFloat).toDouble
+      if (exact) sim.exactValueForNormalization(ts, view.fields(fn), boost)
+      else sim.valueForNormalization(ts, view.fields(fn), boost.toFloat).toDouble
     def v(q: Query, topBoost: Double): Double = q match {
       case TermQuery(t, boost, f) =>
         stats.get((fld(f), t)).fold(0.0)(normWeight(_, fld(f), mode.round(boost * topBoost)))
@@ -609,14 +703,14 @@ final class IndexSearcher(
         stats.get((fn, t)) match {
           case Some(ts) =>
             CLeafTerm(termIdx((fn, t)), fieldIdx(fn),
-              termLeaf(ts, collectionStats(fn), boost * topBoost))
+              termLeaf(ts, view.fields(fn), boost * topBoost))
           case None => CLeafTerm(-1, 0, null)
         }
       case PhraseQuery(ts, boost, f, slop) =>
         val fn = fld(f)
         if (ts.forall(t => stats.contains((fn, t))))
           CLeafPhrase(ts.map(t => termIdx((fn, t))).toArray, fieldIdx(fn),
-            phraseLeaf(ts.map(t => stats((fn, t))), collectionStats(fn), boost * topBoost), slop)
+            phraseLeaf(ts.map(t => stats((fn, t))), view.fields(fn), boost * topBoost), slop)
         else CLeafTerm(-1, 0, null)
       case BooleanQuery(clauses, msm, boost) =>
         val b = boost * topBoost
@@ -657,7 +751,7 @@ final class IndexSearcher(
       FilterApi.gtEq[Binary, Operators.BinaryColumn](term, Binary.fromString(prefix))
     val inRange = PointReader.utf8Successor(prefix).fold(from)(to =>
       FilterApi.and(from, FilterApi.lt[Binary, Operators.BinaryColumn](term, to)))
-    val terms = termsReader.read(Seq("field", "term"),
+    val terms = commit.termsReader.read(Seq("field", "term"),
         Some(FilterApi.and(PointReader.stringIn("field", Seq(f)), inRange)),
         limitPerFile = 1025)(_.getString("term", 0))
       .sortWith(graft.index.IndexBuilder.utf8Cmp(_, _) < 0).take(1025)
@@ -671,7 +765,7 @@ final class IndexSearcher(
     */
   private def expansion(f: String, where: Column, what: String, remedy: String): Seq[String] =
     withinBudget(describe(s"graft expand $what") {
-      termsDF.where(col("field") === f && where)
+      commit.termsDF.where(col("field") === f && where)
         .select("term").orderBy("term").limit(1025)
         .as[String].collect().toSeq
     }, what, remedy)
@@ -761,8 +855,8 @@ final class IndexSearcher(
   /** Expanded term list for ONE multi-term leaf against THIS searcher's
     * dictionary — [[MultiSearcher]] unions these across shards (the union
     * of per-shard expansions over a partitioned corpus IS the monolithic
-    * expansion: same matching terms, same sorted order). Cached per
-    * searcher under the leaf itself with boost and field normalized away,
+    * expansion: same matching terms, same sorted order). Cached in the
+    * commit's LRU under the leaf itself with boost and field normalized away,
     * so each expansion kind has its own key space and a boost never splits
     * an entry.
     */
@@ -775,7 +869,7 @@ final class IndexSearcher(
       case q: TermRangeQuery => q.copy(boost = 1.0f, field = None)
       case q: RegexpQuery => q.copy(boost = 1.0f, field = None)
     }
-    cached(ExpansionKey(fn, leaf)) {
+    commit.cached(ExpansionKey(fn, leaf)) {
       leaf match {
         case PrefixQuery(p, _, _) => prefixTerms(fn, p)
         case WildcardQuery(pat, _, _) => wildcardTerms(fn, pat)
@@ -821,7 +915,7 @@ final class IndexSearcher(
     val termIdx = keys.zipWithIndex.toMap
     val fields = keys.map(_._1).distinct
     val fieldIdx = fields.zipWithIndex.toMap
-    val stats = termStats(keys)
+    val stats = this.stats(keys)
     val plan = compile(q, stats, termIdx, fieldIdx, mode)
     val pts = Query.phraseTerms(q, field)
     val needPos = keys.map(pts.contains).toArray
@@ -831,15 +925,6 @@ final class IndexSearcher(
   }
 
   def sparkSession: SparkSession = spark
-
-  /** Stored docs; version-1 indexes predate per-field dls and read an empty
-    * map (the per-field read paths fall back to dl), not an AnalysisException.
-    */
-  private lazy val docsDF: DataFrame = {
-    val d = spark.read.parquet(s"$indexPath/docs")
-    if (d.columns.contains("fieldDls")) d
-    else d.withColumn("fieldDls", typedLit(Map.empty[String, Int]))
-  }
 
   /** Stored-fields lookup (the reference's reader.Document(hit.Doc),
     * core/document/document.go:75-133): a docId point read
@@ -851,11 +936,8 @@ final class IndexSearcher(
   def doc(docId: Long): Option[graft.index.DocRow] = docs(Seq(docId)).headOption
 
   def docs(docIds: Seq[Long]): Seq[graft.index.DocRow] = {
-    val hits = docIds.distinct.map(id => id -> cacheGet(DocKey(id)))
-    val missing = hits.collect { case (id, None) => id }
-    val fetched =
-      if (missing.isEmpty) Map.empty[Long, graft.index.DocRow]
-      else docsReader.read(Seq("docId", "segId", "repo", "path", "commit", "lang",
+    commit.getAll(docIds.distinct, None: Option[graft.index.DocRow])(DocKey) { missing =>
+      commit.docsReader.read(Seq("docId", "segId", "repo", "path", "commit", "lang",
           "contentSha", "dl", "norm", "fieldDls"), Some(PointReader.longIn("docId", missing))) { g =>
         def str(c: String) = PointReader.opt(g, c)(g.getString(c, 0)).orNull
         val fieldDls = PointReader.opt(g, "fieldDls")(g.getGroup("fieldDls", 0)).fold(
@@ -868,9 +950,8 @@ final class IndexSearcher(
         graft.index.DocRow(g.getLong("docId", 0), g.getInteger("segId", 0), str("repo"),
           str("path"), str("commit"), str("lang"), str("contentSha"), g.getInteger("dl", 0),
           g.getInteger("norm", 0).toByte, fieldDls)
-      }.map(d => d.docId -> d).toMap
-    missing.foreach(id => cachePut(DocKey(id), fetched.get(id)))
-    hits.flatMap { case (id, hit) => hit.getOrElse(fetched.get(id)) }
+      }.map(d => d.docId -> Some(d)).toMap
+    }.flatten
   }
 
   /** MoreLikeThis: a SHOULD disjunction of the text's most interesting
@@ -889,9 +970,9 @@ final class IndexSearcher(
     */
   private def requireMetadataColumn(c: String, role: String): Unit = {
     val internal = Set("docId", "segId", "dl", "norm", "fieldDls", "wave", "contentSha")
-    require(docsDF.columns.contains(c) && !internal.contains(c),
+    require(commit.docsDF.columns.contains(c) && !internal.contains(c),
       s"$role column '$c' is not a stored metadata column " +
-        s"(available: ${docsDF.columns.filterNot(internal).mkString(", ")})")
+        s"(available: ${commit.docsDF.columns.filterNot(internal).mkString(", ")})")
   }
 
   /** Facet counts — the distinct values of a stored metadata column among
@@ -908,7 +989,7 @@ final class IndexSearcher(
     requireMetadataColumn(facetCol, "facet")
     scoredDocs(q, ScoreMode.Ref32) // prepare() expands multi-term leaves
       .select(col("docId"))
-      .join(docsDF.select(col("docId"), col(facetCol)), "docId")
+      .join(commit.docsDF.select(col("docId"), col(facetCol)), "docId")
       .groupBy(col(facetCol))
       .agg(count(lit(1)).as("matchCount"))
       .orderBy(col("matchCount").desc, col(facetCol))
@@ -933,7 +1014,7 @@ final class IndexSearcher(
     val ord = if (ascending) col(sortCol).asc else col(sortCol).desc
     scoredDocs(q, ScoreMode.Ref32) // prepare() expands multi-term leaves
       .select(col("docId"))
-      .join(docsDF.select(col("docId"), col(sortCol)), "docId")
+      .join(commit.docsDF.select(col("docId"), col(sortCol)), "docId")
       .orderBy(ord, col("docId").asc)
       .limit(k)
       .select(col("docId"), col(sortCol))
@@ -964,7 +1045,7 @@ final class IndexSearcher(
     require(topGroups > 0 && docsPerGroup > 0,
       s"topGroups/docsPerGroup must be positive, got $topGroups/$docsPerGroup")
     val hits = scoredDocs(q, mode).toDF("docId", "score")
-      .join(docsDF.select(col("docId"), col(groupCol)), "docId")
+      .join(commit.docsDF.select(col("docId"), col(groupCol)), "docId")
     val heapAgg = udaf(new GroupTopHits(docsPerGroup))
     val grouped = hits.groupBy(col(groupCol))
       .agg(heapAgg(col("docId"), col("score")).as("c"),
@@ -1002,9 +1083,9 @@ final class IndexSearcher(
     // (the result rebuilds as a LocalRelation)
     val sp = spark
     import sp.implicits._
-    cached(SuggestKey(input, maxEdits, topN, f)) {
+    commit.cached(SuggestKey(input, maxEdits, topN, f)) {
       describe(s"graft suggest '$f:$input'~$maxEdits") {
-        termsDF
+        commit.termsDF
           .where(col("field") === f &&
             length(col("term")).between(input.length - maxEdits, input.length + maxEdits) &&
             col("term") =!= input)
@@ -1084,7 +1165,7 @@ final class IndexSearcher(
     val p = prepare(q0, mode)
     val rangeId = docId / manifest.docsPerRange
     val rows = fetchRows(p.keys, p.ge.needPos.exists(identity), Some(Seq(rangeId)))
-    Explain.forDoc(p.q, p.ge, rows, rangeId, docId, this, p.stats, mode)
+    Explain.forDoc(p, rows, rangeId, docId, field, similarity.name, mode)
   }
 
   /** Per-occurrence CHARACTER OFFSETS of `term` in field `f` across all
@@ -1100,7 +1181,7 @@ final class IndexSearcher(
     require(manifest.formatVersion >= graft.index.IndexManifest.FormatOffsets,
       s"index stores no offsets (format ${manifest.formatVersion}); " +
         "build with IndexConfig(withOffsets = true)")
-    val rows = postingsReader.rdd(spark.sparkContext,
+    val rows = commit.postingsReader.rdd(spark.sparkContext,
         Seq("field", "term", "rangeId", "payload", "offPayload"),
         PointReader.pairs(Seq((f, term)))) { g =>
       (g.getLong("rangeId", 0),
@@ -1108,7 +1189,7 @@ final class IndexSearcher(
     }
     val withDels: RDD[(Array[Byte], Array[Byte], Array[Long])] =
       if (rangedDeletes)
-        RangeJob.byRange(rows, rangeParts, Some(delRanges), None).flatMap {
+        RangeJob.byRange(rows, commit.rangeParts, Some(delRanges), None).flatMap {
           case (_, rs, dels) => rs.iterator.map { case (payload, off) => (payload, off, dels) }
         }
       else rows.map { case (_, (payload, off)) => (payload, off, null: Array[Long]) }
@@ -1149,7 +1230,7 @@ final class IndexSearcher(
     if (keys.isEmpty || docIds.isEmpty) return Map.empty
     val idSet = docIds.toSet
     val ranges = docIds.map(_ / manifest.docsPerRange)
-    val rows = postingsReader.read(Seq("field", "term", "rangeId", "payload", "offPayload"),
+    val rows = commit.postingsReader.read(Seq("field", "term", "rangeId", "payload", "offPayload"),
         Some(FilterApi.and(PointReader.pairs(keys), PointReader.longIn("rangeId", ranges)))) { g =>
       (g.getBinary("payload", 0).getBytes, PointReader.bytesOrNull(g, "offPayload"))
     }
@@ -1179,54 +1260,9 @@ final class IndexSearcher(
     * pruning): feeds WAND bound computation.
     */
   def postingRowsMeta(keys: Seq[(String, String)]): DataFrame =
-    postingsDF
+    commit.postingsDF
       .where(pairPredicate(keys))
       .select("field", "term", "rangeId", "docFreq", "maxFreq", "minDl")
-
-  /** Per-searcher byte-bounded LRU (the reference's query-cache analogue,
-    * natural here because a searcher IS a point-in-time view — Lucene
-    * IndexReader semantics — so entries can never go stale within it). It
-    * holds everything a searcher derives from the index per query input:
-    * collected posting rows per (field, term, positionsLoaded), so repeated
-    * query terms cost ZERO Spark jobs; multi-term expansions; spelling
-    * suggestions; stored-doc rows per docId (`DocKey`, read by singleton
-    * hits and [[docs]]). [[rowCacheMaxBytes]] bounds the whole; close()
-    * empties it. Posting-row entries are bypassed under ranged deletes (rows
-    * would bake in a join product). Term and collection statistics stay
-    * out: MultiSearcher seeds merged values into them, and evicting one
-    * would silently re-fetch shard-local stats.
-    */
-  var rowCacheMaxBytes: Long = 64L << 20
-  private var cacheBytes = 0L
-  private val cache = new java.util.LinkedHashMap[CacheKey[_], (Any, Long)](64, 0.75f, true)
-
-  private def cacheGet[V](key: CacheKey[V]): Option[V] =
-    cache.synchronized(Option(cache.get(key)).map(_._1.asInstanceOf[V]))
-
-  /** Insert unless present, then evict least-recently-used entries down to
-    * the budget — never the entry just inserted (the live query needs it).
-    */
-  private def cachePut[V](key: CacheKey[V], v: V): Unit = cache.synchronized {
-    if (!cache.containsKey(key)) {
-      val w = key.weight(v)
-      cache.put(key, (v, w))
-      cacheBytes += w
-      val it = cache.entrySet().iterator()
-      while (cacheBytes > rowCacheMaxBytes && it.hasNext) {
-        val e = it.next()
-        if (e.getKey != key) {
-          cacheBytes -= e.getValue._2
-          it.remove()
-        }
-      }
-    }
-  }
-
-  private def cached[V](key: CacheKey[V])(compute: => V): V =
-    cacheGet(key).getOrElse { val v = compute; cachePut(key, v); v }
-
-  /** Summed weight of the LRU's entries. */
-  private[graft] def cacheBytesInUse: Long = cache.synchronized(cacheBytes)
 
   /** Collected rows for a full-key (unfiltered) driver-local evaluation,
     * served from / inserted into the cache per term.
@@ -1234,18 +1270,11 @@ final class IndexSearcher(
   private def collectRows(p: Prepared): Array[PRow] = {
     if (rangedDeletes) return fetchRows(p.keys, p.ge.needPos.exists(identity), None)
     val keys = p.keys.zip(p.ge.needPos).map { case ((f, t), pos) => RowsKey(f, t, pos) }
-    val hits = keys.map(k => k -> cacheGet(k))
-    val missing = hits.collect { case (k, None) => k }
-    val fetched =
-      if (missing.isEmpty) Array.empty[PRow]
-      else {
-        val rows = fetchRows(missing.map(k => (k.field, k.term)),
-          missing.exists(_.positions), None)
-        val byKey = rows.groupBy(r => (r._1, r._2))
-        missing.foreach(k => cachePut(k, byKey.getOrElse((k.field, k.term), Array.empty[PRow])))
-        rows
-      }
-    hits.flatMap(_._2).flatten.toArray ++ fetched
+    commit.getAll(keys, Array.empty[PRow])(identity) { missing =>
+      val byKey = fetchRows(missing.map(k => (k.field, k.term)), missing.exists(_.positions), None)
+        .groupBy(r => (r._1, r._2))
+      missing.flatMap(k => byKey.get((k.field, k.term)).map(k -> _)).toMap
+    }.flatten.toArray
   }
 
   /** Posting rows of `keys` (of the ranges `rangeIds` only, when given)
@@ -1256,7 +1285,7 @@ final class IndexSearcher(
   private def fetchRows(keys: Seq[(String, String)], anyPos: Boolean,
       rangeIds: Option[Seq[Long]]): Array[PRow] =
     if (keys.isEmpty || rangeIds.exists(_.isEmpty)) Array.empty
-    else withRangeDels(postingsReader.read(RangeJob.rowColumns(anyPos),
+    else withRangeDels(commit.postingsReader.read(RangeJob.rowColumns(anyPos),
       Some(RangeJob.rowPredicate(keys, rangeIds)))(RangeJob.row(anyPos)).toArray)
 
   /** `rows` with their ranges' delete arrays attached (RANGED mode; other
@@ -1267,7 +1296,7 @@ final class IndexSearcher(
     if (!rangedDeletes || rows.isEmpty) rows
     else {
       val ranges = rows.map(_._3).toSet
-      val byRange = new RangeJob.ByRange(rangeParts, 1)
+      val byRange = new RangeJob.ByRange(commit.rangeParts, 1)
       val dels = describe(s"graft search ranged deletes: ${ranges.size} ranges") {
         spark.sparkContext.runJob(delRanges,
           (it: Iterator[(Long, Array[Long])]) => it.filter(d => ranges(d._1)).toArray,
@@ -1295,7 +1324,7 @@ final class IndexSearcher(
     */
   private def matchAllScored(boost: Float): Dataset[ScoredDoc] = {
     val score = boost.toDouble
-    val ids = docsDF.select(col("docId")).as[Long]
+    val ids = commit.docsDF.select(col("docId")).as[Long]
     val live =
       if (!rangedDeletes) {
         val delB = spark.sparkContext.broadcast(deletedSorted)
@@ -1330,10 +1359,10 @@ final class IndexSearcher(
     if (p.keys.isEmpty) spark.sparkContext.emptyRDD[ScoredDoc]
     else {
       val anyPos = p.ge.needPos.exists(identity)
-      val rows = postingsReader.rdd(spark.sparkContext, RangeJob.rowColumns(anyPos),
+      val rows = commit.postingsReader.rdd(spark.sparkContext, RangeJob.rowColumns(anyPos),
         RangeJob.rowPredicate(p.keys, rangeFilter.collect { case RangeSel.Ids(rs) => rs }))(
         RangeJob.row(anyPos))
-      RangeJob.score(rows, p.ge, p.keys.size == 1, rangeParts,
+      RangeJob.score(rows, p.ge, p.keys.size == 1, commit.rangeParts,
         if (rangedDeletes) Some(delRanges) else None,
         rangeFilter.collect { case RangeSel.Df(ids) => ids })
     }
@@ -1359,7 +1388,7 @@ final class IndexSearcher(
       case Some(RangeSel.Df(_)) => ", distributed survivor ranges"
       case None => ""
     }
-    val ranges = if (rangeCount == 1) "1 range" else s"$rangeCount ranges"
+    val ranges = if (commit.rangeCount == 1) "1 range" else s"${commit.rangeCount} ranges"
     s"graft search distributed: ${p.keys.size} keys, $ranges$sel: ${p.keyText}"
   }
 
@@ -1378,7 +1407,7 @@ final class IndexSearcher(
     * hundreds of MB onto the driver), are within [[localSearchMaxPostings]].
     */
   private[search] def fitsDriver(p: Prepared): Boolean = {
-    val stats = p.keys.map(p.stats.get)
+    val stats = p.keys.map(p.stats.terms.get)
     val dfSum = stats.map(_.fold(0L)(_.docFreq)).sum
     val posSum = stats.zip(p.ge.needPos).collect { case (Some(ts), true) => ts.totalTermFreq }.sum
     dfSum <= localSearchMaxPostings && posSum <= localSearchMaxPostings
@@ -1434,14 +1463,14 @@ final class IndexSearcher(
     // candidate docs' dl/norm come from the stored per-field dls, so the
     // query completes with ZERO postings reads (terms + docs point lookups
     // only). Phrases (need positions) and ranged deletes fall through.
-    val present = p.keys.flatMap(kk => p.stats.get(kk).map(kk -> _))
+    val present = p.keys.flatMap(kk => p.stats.terms.get(kk).map(kk -> _))
+    val singles = p.stats.singletons
     if (rangeFilter.isEmpty && !rangedDeletes && !p.ge.needPos.exists(identity) &&
-      present.nonEmpty &&
-      present.forall { case (kk, ts) => ts.docFreq == 1 && singletonIds.get(kk).exists(_ >= 0) }) {
-      val docIds = present.map { case (kk, _) => singletonIds(kk) }.distinct
+      present.nonEmpty && present.forall { case (kk, _) => singles.contains(kk) }) {
+      val docIds = present.map { case (kk, _) => singles(kk) }.distinct
       val byId = docs(docIds).map(d => d.docId -> d).toMap
       val rows: Array[PRow] = present.flatMap { case ((f, t), ts) =>
-        val docId = singletonIds((f, t))
+        val docId = singles((f, t))
         byId.get(docId).map { d =>
           val dl = if (f == field) d.dl else d.fieldDls.getOrElse(f, 1)
           val enc = PostingsCodec.encode(
@@ -1457,7 +1486,7 @@ final class IndexSearcher(
 
     // local fast path: fetch the (few) posting rows, evaluate on the driver.
     // Unfiltered fetches go through the per-term row cache: a repeated
-    // query term costs zero Spark jobs on this searcher. A distributed range
+    // query term costs zero Spark jobs on this commit. A distributed range
     // selection always evaluates distributed.
     rangeFilter match {
       case None if fitsDriver(p) => localTopK(p, collectRows(p), k, after)

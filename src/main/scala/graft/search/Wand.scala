@@ -82,7 +82,7 @@ object Wand {
     val q = Query.rewrite(searcher.expandPrefixes(q0))
     if (Query.leafKeys(q, searcher.field).isEmpty) return searcher.search(q, k, mode)
     val p = searcher.prepare(q, mode)
-    if (p.stats.values.forall(_.docFreq == 1) || searcher.fitsDriver(p))
+    if (p.stats.terms.values.forall(_.docFreq == 1) || searcher.fitsDriver(p))
       searcher.evalRanges(p, None, k)
     else pruned(searcher, p, k, phase1Ranges)
   }

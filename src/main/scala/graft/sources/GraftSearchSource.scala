@@ -136,11 +136,11 @@ object GraftSearchTable {
   private[graft] def cachedSearchers: Seq[IndexSearcher] =
     searchers.values.map(_._2).toSeq
 
-  // sharded views: `index 'dirA,dirB,…'` → a MultiSearcher over DEDICATED
-  // shard searchers (never the single-index cache entries — the merged-stat
-  // seeding would corrupt them for standalone views). Freshness token =
-  // every shard's token joined, so a publish/delete/merge on ANY shard
-  // refreshes the whole group; eviction closes all shards.
+  // sharded views: `index 'dirA,dirB,…'` → a MultiSearcher over its own
+  // shard searchers, so evicting it closes nothing the single-index entries
+  // still use. Freshness token = every shard's token joined, so a
+  // publish/delete/merge on ANY shard refreshes the whole group; eviction
+  // closes all shards.
   private val multiSearchers =
     scala.collection.concurrent.TrieMap.empty[(String, String, String), (String, MultiSearcher)]
 

@@ -154,4 +154,27 @@ class DeletesSpec extends AnyFunSuite with SparkTestBase {
     view.close()
     assert(view.search(TermQuery("parser"), 10).totalHits > 0)
   }
+
+  test("close() of a view releases its own deletes; close() of the root releases the LRU") {
+    val root = new IndexSearcher(spark, indexPath,
+      extraDeletesDF = Some(spark.range(0, 20).selectExpr("id * 5 as docId")))
+    val q = TermQuery("parser")
+    val rootHits = root.search(q, 10)
+    val rootRdds = spark.sparkContext.getPersistentRDDs.keySet
+    val view = root.withDeletesDF(spark.range(0, 20).selectExpr("id * 5 + 1 as docId"))
+    val viewHits = view.search(q, 10)
+    assert(spark.sparkContext.getPersistentRDDs.keySet.size == rootRdds.size + 1)
+    val lruBytes = root.cacheBytesInUse
+    assert(lruBytes > 0) // term stats: the shared LRU holds them under ranged deletes too
+    view.close()
+    assert(spark.sparkContext.getPersistentRDDs.keySet == rootRdds, "view released the root's deletes")
+    assert(root.cacheBytesInUse == lruBytes, "view emptied the shared LRU")
+    assert(root.search(q, 10).scoreDocs.toSeq == rootHits.scoreDocs.toSeq)
+    root.close()
+    assert(root.cacheBytesInUse == 0)
+    assert(spark.sparkContext.getPersistentRDDs.keySet.size < rootRdds.size)
+    // both stay usable: caches and delete arrays rebuild
+    assert(view.search(q, 10).scoreDocs.toSeq == viewHits.scoreDocs.toSeq)
+    assert(root.search(q, 10).scoreDocs.toSeq == rootHits.scoreDocs.toSeq)
+  }
 }

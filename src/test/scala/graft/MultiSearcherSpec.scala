@@ -178,6 +178,67 @@ class MultiSearcherSpec extends AnyFunSuite with SparkTestBase {
       m.scoreDocs.map(d => (d.docId, d.score)).toSeq)
   }
 
+  private val modes = Seq[ScoreMode](ScoreMode.Ref32, ScoreMode.ExactDouble)
+  private def pairs(t: TopDocs) = t.scoreDocs.map(d => (d.docId, d.score)).toSeq
+
+  test("shards passed to MultiSearcher.of keep answering standalone with their own stats") {
+    val shards = Seq(shardAPath, shardBPath).map(p => p -> new IndexSearcher(spark, p))
+    val m = MultiSearcher.of(shards.map(_._2))
+    for (q <- battery; mode <- modes) {
+      assert(pairs(m.search(q, 12, mode)) == pairs(mono.search(q, 12, mode)), s"q=$q mode=$mode")
+      for ((dir, s) <- shards) {
+        val fresh = new IndexSearcher(spark, dir)
+        val keys = Query.leafKeys(Query.rewrite(q), "content")
+        assert(s.termStats(keys) == fresh.termStats(keys), s"termStats q=$q")
+        assert(s.collectionStats == fresh.collectionStats)
+        val (got, exp) = (s.search(q, 12, mode), fresh.search(q, 12, mode))
+        assert(got.totalHits == exp.totalHits && pairs(got) == pairs(exp),
+          s"standalone shard $dir q=$q mode=$mode")
+      }
+    }
+  }
+
+  test("concurrent queries on one cold MultiSearcher ≡ sequential; no df double-counted") {
+    val an = new StandardCodeAnalyzer()
+    val seed = "merge scorer index buffer"
+    def op(name: String)(f: MultiSearcher => TopDocs) = name -> f
+    val ops = Seq(
+      op("term")(_.search(TermQuery("merge"), 10, ScoreMode.Ref32)),
+      op("boolean")(_.search(battery(3), 10, ScoreMode.ExactDouble)),
+      op("phrase")(_.search(PhraseQuery(Seq("posting", "list")), 10, ScoreMode.Ref32)),
+      op("prefix")(_.search(PrefixQuery("uniqtoken_1"), 10, ScoreMode.ExactDouble)),
+      op("mlt")(m => m.search(m.moreLikeThisQuery(an, seed), 10, ScoreMode.Ref32)))
+    val sequential = {
+      val m = MultiSearcher(spark, Seq(shardAPath, shardBPath))
+      ops.map { case (_, op) => op(m) }
+    }
+    val shards = Seq(shardAPath, shardBPath).map(new IndexSearcher(spark, _))
+    val m = MultiSearcher.of(shards)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      // each thread asks every query twice, starting at a different one
+      val runs = (0 until 4).map { t =>
+        pool.submit(new java.util.concurrent.Callable[Seq[(Int, TopDocs)]] {
+          def call(): Seq[(Int, TopDocs)] = (0 until 2 * ops.size).map { j =>
+            val i = (t + j) % ops.size
+            i -> ops(i)._2(m)
+          }
+        })
+      }.flatMap(_.get())
+      runs.foreach { case (i, got) =>
+        assert(got.totalHits == sequential(i).totalHits && pairs(got) == pairs(sequential(i)),
+          s"${ops(i)._1}: concurrent ≠ sequential")
+      }
+    } finally pool.shutdown()
+    val keys = (Seq[Query](TermQuery("merge"), battery(3), PhraseQuery(Seq("posting", "list")),
+      mono.moreLikeThisQuery(an, seed)) :+ mono.expandPrefixes(PrefixQuery("uniqtoken_1")))
+      .flatMap(q => Query.leafKeys(Query.rewrite(q), "content")).distinct
+    Seq(shardAPath, shardBPath).zip(shards).foreach { case (dir, s) =>
+      assert(s.termStats(keys) == new IndexSearcher(spark, dir).termStats(keys), s"shard $dir")
+    }
+    m.shards.foreach(v => assert(v.termStats(keys) == mono.termStats(keys), "merged ≠ monolithic"))
+  }
+
   test("multi-term queries expand against the UNION dictionary ≡ monolithic") {
     val qs: Seq[Query] = Seq(
       PrefixQuery("mer"), // common stem — terms present in both shards

@@ -148,4 +148,32 @@ class RowCacheSpec extends AnyFunSuite with SparkTestBase {
     assert(s.doc(ids.last) == Some(truth.last))
     intercept[Exception](s.doc(ids.head))
   }
+
+  test("term stats share the byte budget: an absent-term flood stays within it") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-lru-stats").toString
+    val cfg = IndexConfig(analyzer = new StandardCodeAnalyzer(),
+      docsPerRange = 128, numSegments = 4, segmentsPerWave = 4)
+    new IndexBuilder(spark, cfg).build(TestCorpus.corpus(400).toDF(), dir)
+    val s = new IndexSearcher(spark, dir)
+    s.rowCacheMaxBytes = 16L << 10
+    val q = BooleanQuery(Seq(
+      BooleanClause(Occur.SHOULD, TermQuery("parser")),
+      BooleanClause(Occur.SHOULD, TermQuery("uniqtoken_7"))))
+    val before = s.search(q, 10, ScoreMode.Ref32)
+    // 10k lookups of terms the dictionary does not hold, 100 per call
+    for (b <- 0 until 100) {
+      assert(s.termStats((0 until 100).map(i => ("content", s"absent_${b}_$i"))).isEmpty)
+      assert(s.cacheBytesInUse <= s.rowCacheMaxBytes, s"after batch $b")
+    }
+    // the query's stats entries were evicted: answering it needs the dictionary
+    val terms = new java.io.File(s.manifest.termsLocation)
+    val aside = new java.io.File(s"$dir/terms-aside")
+    assert(terms.renameTo(aside))
+    intercept[Exception](s.search(q, 10, ScoreMode.Ref32))
+    assert(aside.renameTo(terms))
+    val again = s.search(q, 10, ScoreMode.Ref32)
+    assert(again.totalHits == before.totalHits)
+    assert(again.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
+      before.scoreDocs.map(d => (d.docId, d.score)).toSeq)
+  }
 }

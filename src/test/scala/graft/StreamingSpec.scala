@@ -86,6 +86,51 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     assert(CheckIndex.run(spark, dir).ok)
   }
 
+  test("views derived after an append score with their parent's commit") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-stream-views").toString
+    val cfg = IndexConfig(analyzer = new StandardCodeAnalyzer(),
+      docsPerRange = 64, numSegments = 4, segmentsPerWave = 4,
+      explicitDocIdCol = Some("docId"))
+    val builder = new IndexBuilder(spark, cfg)
+    val all = (0 until 300).map(i => (i.toLong, TestCorpus.corpus(300)(i)))
+    def df(rows: Seq[(Long, graft.index.CodeFile)]) =
+      rows.map { case (id, f) => (id, f.repo, f.path, f.commit, f.lang, f.content) }
+        .toDF("docId", "repo", "path", "commit", "lang", "content")
+    builder.build(df(all.take(150)), dir)
+    val queries = Seq[Query](TermQuery("import"),
+      BooleanQuery(Seq(
+        BooleanClause(Occur.MUST, TermQuery("parser")),
+        BooleanClause(Occur.SHOULD, TermQuery("buffer")))),
+      PhraseQuery(Seq("posting", "list")))
+    def pairs(t: TopDocs) = t.scoreDocs.map(d => (d.docId, d.score)).toSeq
+    // references on the 150-doc commit, before the append
+    val tfidf = new TfIdfSimilarity()
+    val ref = new IndexSearcher(spark, dir)
+    val refTfidf = new IndexSearcher(spark, dir, similarity = tfidf)
+    val expected = queries.map(q => (ref.search(q, 300), refTfidf.search(q, 300)))
+    val keys = Seq(("content", "import"), ("content", "parser"))
+    val oldStats = ref.termStats(keys)
+
+    val s0 = new IndexSearcher(spark, dir)
+    val victim = s0.search(queries.head, 300).scoreDocs.head.docId
+    StreamingIndexer.appendBatch(spark, builder, df(all.drop(150)), batchId = 0L, dir)
+    assert(new IndexSearcher(spark, dir).termStats(keys) != oldStats, "the append changed df")
+
+    val deleted = s0.withDeletes(Array(victim))
+    val rescored = s0.withSimilarity(tfidf) // the FtQueries.searcherWith derivation
+    assert(deleted.manifest.maxDoc == 150 && rescored.manifest.maxDoc == 150)
+    assert(deleted.termStats(keys) == oldStats && rescored.termStats(keys) == oldStats)
+    queries.zip(expected).foreach { case (q, (bm25, tf)) =>
+      val d = deleted.search(q, 300)
+      val live = pairs(bm25).filterNot(_._1 == victim)
+      assert(d.totalHits == bm25.totalHits - (pairs(bm25).size - live.size), s"totalHits $q")
+      assert(pairs(d) == live, s"delete view scores $q with the parent's commit")
+      val r = rescored.search(q, 300)
+      assert(r.totalHits == tf.totalHits && pairs(r) == pairs(tf),
+        s"similarity view scores $q with the parent's commit")
+    }
+  }
+
   test("incremental publish: dictionary == full recompute; replay is a no-op; generations swept") {
     val dir = java.nio.file.Files.createTempDirectory("graft-stream-inc").toString
     val cfg = IndexConfig(analyzer = new StandardCodeAnalyzer(),
