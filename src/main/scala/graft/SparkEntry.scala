@@ -252,7 +252,7 @@ object SparkEntry {
       FtQueries.sortedDF(s, d, TermQuery("merge"), "repo", 15, ascending = false)),
     "ft_grouped" -> ((s, d) => // result grouping (round-5, Lucene
       // grouping-module analogue): top-3 lang groups by best `merge spark`
-      // hit, top-4 docs per group — windowed per-group rank + broadcast
+      // hit, top-4 docs per group — per-group top-k heap + broadcast
       // group leaderboard, raw-float64 rank comparisons
       FtQueries.groupedDF(s, d, BooleanQuery(Seq(
         BooleanClause(Occur.SHOULD, TermQuery("merge")),
@@ -298,9 +298,9 @@ object SparkEntry {
       FtQueries.shardedWandTopK(s, d, BooleanQuery(Seq(
         BooleanClause(Occur.SHOULD, TermQuery("merge")),
         BooleanClause(Occur.SHOULD, TermQuery("window")))), 10)),
-    "ft_sharded_facets" -> ((s, d) => // facet counts ACROSS shards: each
-      // shard contributes FULL value counts, the union re-sums per value —
-      // identical to the monolithic ft_facets twin
+    "ft_sharded_facets" -> ((s, d) => // facet counts ACROSS shards: the
+      // single-index plan over the union of both shards' match sets and
+      // docs columns — identical to the monolithic ft_facets twin
       FtQueries.shardedFacetsDF(s, d, BooleanQuery(Seq(
         BooleanClause(Occur.SHOULD, TermQuery("merge")),
         BooleanClause(Occur.SHOULD, TermQuery("vector")))), "lang")),

@@ -707,11 +707,11 @@ object IndexBuilder {
     */
   /** UTF-8 binary string order expressed over UTF-16 chars (surrogate
     * adjustment) — matches Spark's UTF8String comparison exactly. Shared by
-    * [[StageKeyOrder]] (stage-1 docId assignment) and
-    * MultiSearcher.expandAcrossShards (cross-shard expansion unions must
-    * sort in the SAME order as the monolithic dictionary scan's
-    * orderBy("term"), or the float64 disjunction sum order diverges for
-    * supplementary-plane vocabularies).
+    * [[StageKeyOrder]] (stage-1 docId assignment) and, as [[utf8Order]], by
+    * every driver-side term sort that must agree with a dictionary scan's
+    * orderBy("term"): prefix expansion, MultiSearcher.expandAcrossShards
+    * (otherwise the float64 disjunction sum order diverges for
+    * supplementary-plane vocabularies) and the suggestion merge.
     */
   private[graft] def utf8Cmp(a: String, b: String): Int = {
     if (a == null || b == null) return java.lang.Boolean.compare(b == null, a == null)
@@ -731,6 +731,11 @@ object IndexBuilder {
       i += 1
     }
     a.length - b.length
+  }
+
+  /** [[utf8Cmp]] as an Ordering (Ordering.String is UTF-16 code-unit order). */
+  private[graft] val utf8Order: Ordering[String] = new Ordering[String] {
+    def compare(a: String, b: String): Int = utf8Cmp(a, b)
   }
 
   private final case class StageKeyOrder(hIdx: Int)

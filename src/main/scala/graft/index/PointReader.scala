@@ -26,10 +26,13 @@ import org.apache.spark.util.SerializableConfiguration
   * page min/max statistics do the seek.
   *
   * The table is listed (`listStatus`, recursively through `wave=N`
-  * partition dirs, skipping `_`/`.` entries as Spark does) and every
-  * footer read ONCE, on first use; a reader is a point-in-time view, like
-  * the searcher that owns it. Each read projects only the columns it names
-  * and filters on `pred` at three levels: row groups whose footer
+  * partition dirs, skipping `_`/`.` entries as Spark does) when the reader
+  * is made, and every footer is read ONCE, on first use: a reader is a
+  * point-in-time view, like the searcher that owns it — files written
+  * after it was made (an appended wave) stay invisible to it. A listing
+  * failure (a missing table) surfaces on first use. Each read projects
+  * only the columns it names and filters on `pred` at three levels: row
+  * groups whose footer
   * statistics exclude it are skipped before the file is opened, parquet's
   * column index skips pages inside the surviving row groups, and the
   * record filter drops the remaining non-matching rows — so the result
@@ -45,15 +48,22 @@ import org.apache.spark.util.SerializableConfiguration
   * distributed scan of the table needs no Catalyst plan.
   */
 final class PointReader(conf: Configuration, dir: String) {
-  private lazy val files: Vector[(String, InputFile, ParquetMetadata)] = {
+  private val listed: scala.util.Try[Vector[FileStatus]] = scala.util.Try {
     val root = new Path(dir)
     val fs = root.getFileSystem(conf)
     def hidden(p: Path) = p.getName.startsWith("_") || p.getName.startsWith(".")
     def list(p: Path): Seq[FileStatus] =
       fs.listStatus(p).toSeq.filterNot(s => hidden(s.getPath))
         .flatMap(s => if (s.isDirectory) list(s.getPath) else Seq(s))
+    list(root).toVector
+  }
+
+  /** The files this reader serves, as listed when it was made. */
+  def paths: Vector[String] = listed.get.map(_.getPath.toString)
+
+  private lazy val files: Vector[(String, InputFile, ParquetMetadata)] = {
     val options = HadoopReadOptions.builder(conf).build()
-    list(root).toVector.map { st => // a missing table fails here, loudly
+    listed.get.map { st => // a missing table fails here, loudly
       val in: InputFile =
         if (st.getPath.toUri.getScheme == "file")
           new LocalInputFile(java.nio.file.Paths.get(st.getPath.toUri))

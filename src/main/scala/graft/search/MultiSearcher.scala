@@ -1,6 +1,6 @@
 package graft.search
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** Sharded search over several index directories with GLOBALLY CONSISTENT
   * scoring — the Spark-scale analogue of Lucene's MultiReader/IndexSearcher
@@ -21,8 +21,9 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * scores with the merged statistics, so per-shard results are
   * bit-identical to what a monolithic index over the union corpus would
   * produce for the same docs (MultiSearcherSpec pins merge ≡ monolithic for
-  * every query shape, both score modes). Top-k merging is then a pure
-  * driver-side k-way merge by (score desc, docId asc); totalHits sums.
+  * every query shape, both score modes). Top-k merging is then the shards'
+  * top-k through one driver-side [[BoundedHitQueue]] (score desc, docId
+  * asc); totalHits sums.
   * Merged statistics carry no singleton ids (a summed df of 1 names no
   * shard's inlined doc), so the singleton fast path stays off in the views.
   *
@@ -38,6 +39,12 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *    [[MultiSearcher.of]] keeps answering standalone with its own
   *    statistics, and concurrent queries share no mutable state.
   *
+  * Facets, sort-by-field, grouping and suggestions are the single-index
+  * implementations of [[SearchModules]], run over the union of the shards'
+  * match sets and docs columns (one Spark plan whose partial aggregation is
+  * the per-shard reduce) and over every shard's full suggestion list
+  * (merged on the driver).
+  *
   * Multi-term queries (prefix/wildcard/fuzzy/range/regexp) expand at the
   * MULTI level: each shard's dictionary is scanned for the leaf, the term
   * lists union (over a partitioned corpus that IS the monolithic dictionary
@@ -45,7 +52,8 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * budget applies to the union, and the resulting disjunction's stats are
   * merged like any other terms.
   */
-final class MultiSearcher private[search] (locals: Seq[IndexSearcher], val field: String) {
+final class MultiSearcher private[search] (locals: Seq[IndexSearcher], val field: String)
+    extends SearchModules {
   require(locals.nonEmpty, "MultiSearcher needs at least one shard")
 
   /** The shard views queries run through, one per shard in shard order:
@@ -98,11 +106,7 @@ final class MultiSearcher private[search] (locals: Seq[IndexSearcher], val field
       // supplementary-plane terms and would reorder the disjunction's
       // float64 sum vs the monolithic expansion)
       val union = inParallel(shards.map(s => () => s.expansionTerms(m)))
-        .flatten.distinct
-        .sorted(new Ordering[String] {
-          def compare(a: String, b: String): Int =
-            graft.index.IndexBuilder.utf8Cmp(a, b)
-        })
+        .flatten.distinct.sorted(graft.index.IndexBuilder.utf8Order)
       require(union.size <= 1024,
         s"$m expands to more than 1024 terms across the shards — raise " +
           "specificity (reference maxClauseCount is the rewrite budget)")
@@ -133,14 +137,14 @@ final class MultiSearcher private[search] (locals: Seq[IndexSearcher], val field
     futs.map(_.get())
   }
 
-  /** k-way merge by the heap's exact ordering: score desc, docId asc. */
-  private def mergeTop(per: Seq[TopDocs], k: Int): TopDocs =
-    TopDocs(
-      per.map(_.totalHits).sum,
-      per.flatMap(_.scoreDocs)
-        .sortBy(d => (-d.score, d.docId))
-        .take(k).toArray,
-      per.exists(_.totalHitsIsLowerBound))
+  /** The shards' top-k through one [[BoundedHitQueue]] (score desc, docId
+    * asc); totalHits sums.
+    */
+  private def mergeTop(per: Seq[TopDocs], k: Int): TopDocs = {
+    val heap = new BoundedHitQueue(k)
+    per.foreach(_.scoreDocs.foreach(d => heap.insert(d.docId, d.score)))
+    TopDocs(per.map(_.totalHits).sum, heap.toSortedArray, per.exists(_.totalHitsIsLowerBound))
+  }
 
   /** Global top-k + exact global totalHits (each shard runs its ordinary
     * exhaustive collection plan with merged stats).
@@ -173,83 +177,18 @@ final class MultiSearcher private[search] (locals: Seq[IndexSearcher], val field
     shards.map(_.scoredDocs(q, mode)).reduce(_ union _)
   }
 
-  /** Facet value counts over all matches ACROSS shards: each shard
-    * contributes its FULL value counts (value-cardinality rows, never
-    * corpus rows — per-shard topN truncation would miscount values split
-    * across shards), the union re-sums per value, TakeOrdered topN.
-    */
-  def facetCounts(q0: Query, facetCol: String, topN: Int = 20): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    val q = expand(q0)
-    shards.map(_.facetCounts(q, facetCol, Int.MaxValue))
-      .reduce(_ union _)
-      .groupBy(col(facetCol))
-      .agg(sum(col("matchCount")).as("matchCount"))
-      .orderBy(col("matchCount").desc, col(facetCol))
-      .limit(topN)
-  }
+  private[search] def sparkSession: SparkSession = locals.head.sparkSession
 
-  /** Sort-by-field top-k across shards: per-shard TakeOrdered top-k (each
-    * shard's local top-k contains its members of the global one), unioned
-    * and re-limited in Spark so sort-value typing/comparison stays native.
-    */
-  def searchSortBy(q0: Query, sortCol: String, k: Int,
-      ascending: Boolean = true): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    val q = expand(q0)
-    val ord = if (ascending) col(sortCol).asc else col(sortCol).desc
-    shards.map(_.searchSortBy(q, sortCol, k, ascending))
-      .reduce(_ union _)
-      .orderBy(ord, col("docId").asc)
-      .limit(k)
-  }
+  /** The shards' docs columns, unioned (each shard checks the column). */
+  private[search] def docsColumn(c: String, role: String): DataFrame =
+    shards.map(_.docsColumn(c, role)).reduce(_ union _)
 
-  /** Grouped search across shards: each shard returns its per-group top
-    * `docsPerGroup` for ALL groups (no per-shard group truncation — a
-    * group's global rank is unknowable shard-locally), then the bounded
-    * union re-ranks within groups and rebuilds the leaderboard. Sound
-    * because within-group ordering is (score desc, docId asc) on
-    * merged-stat scores: each shard's per-group top-d contains its members
-    * of the global per-group top-d.
+  /** Every shard's FULL candidate list (vocabulary-bounded, cached per
+    * shard): a per-shard topN could drop a term whose summed df wins.
     */
-  def groupedSearch(q0: Query, groupCol: String, topGroups: Int,
-      docsPerGroup: Int, mode: ScoreMode = ScoreMode.Ref32): org.apache.spark.sql.DataFrame = {
-    // named imports: functions._ would shadow the `mode` parameter
-    import org.apache.spark.sql.functions.{broadcast, col, max, row_number}
-    val q = expand(q0)
-    val union = shards
-      .map(_.groupedSearch(q, groupCol, Int.MaxValue, docsPerGroup, mode))
-      .reduce(_ union _)
-      .drop("groupTop", "rank")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(groupCol)).orderBy(col("score").desc, col("docId").asc)
-    val leaders = union.groupBy(col(groupCol))
-      .agg(max(col("score")).as("groupTop"))
-      .orderBy(col("groupTop").desc, col(groupCol)).limit(topGroups)
-    union.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= docsPerGroup)
-      .join(broadcast(leaders), Seq(groupCol))
-      .select(col(groupCol), col("groupTop"), col("rank"), col("docId"), col("score"))
-  }
-
-  /** Spell suggestions across shards: every shard contributes its FULL
-    * candidate set (per-shard topN would drop a term whose SUMMED df wins
-    * globally), then union → per-term df sum → (dist, df desc, term) topN.
-    * Candidate sets within ≤2 edits are vocabulary-bounded, never
-    * corpus-sized.
-    */
-  def suggestTerms(input: String, maxEdits: Int = 2, topN: Int = 5,
-      f: String = field): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{col, min, sum}
-    shards.map(_.suggestTerms(input, maxEdits, Int.MaxValue, f))
-      .reduce(_ union _)
-      .groupBy(col("term"))
-      // (term, docFreq, dist) — the single-index column order
-      .agg(sum(col("docFreq")).as("docFreq"), min(col("dist")).as("dist"))
-      .orderBy(col("dist"), col("docFreq").desc, col("term"))
-      .limit(topN)
-      .select(col("term"), col("docFreq"), col("dist"))
-  }
+  private[search] def suggestions(input: String, maxEdits: Int, topN: Option[Int],
+      f: String): Seq[(String, Long, Int)] =
+    inParallel(shards.map(s => () => s.suggestions(input, maxEdits, None, f))).flatten
 
   /** MoreLikeThis across shards: the single-index term selection
     * ([[MoreLikeThis]]) ranked with MERGED df and maxDoc, so the selected

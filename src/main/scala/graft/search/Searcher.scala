@@ -141,8 +141,10 @@ private[search] final case class ExpansionKey(field: String, leaf: MultiTermQuer
     extends CacheKey[Seq[String]] {
   def weight(ts: Seq[String]): Long = 64L + ts.map(48L + 2L * _.length).sum
 }
-/** Spelling suggestions (term, docFreq, distance) for one input. */
-private[search] final case class SuggestKey(input: String, maxEdits: Int, topN: Int,
+/** Spelling suggestions (term, docFreq, distance) for one input: the
+  * first topN, or all of them when None.
+  */
+private[search] final case class SuggestKey(input: String, maxEdits: Int, topN: Option[Int],
     field: String) extends CacheKey[Seq[(String, Long, Int)]] {
   def weight(ss: Seq[(String, Long, Int)]): Long = 64L + ss.map(64L + 2L * _._1.length).sum
 }
@@ -308,33 +310,37 @@ private[search] final class CommitState(spark: SparkSession, val indexPath: Stri
 
   val manifest: IndexManifest = IndexManifest.load(spark, indexPath)
 
-  /** The Spark reads (WAND's bound scan, multi-term expansion beyond
-    * prefixes, suggestions) use explicit schemas: opening a table launches
-    * no schema-inference job.
-    */
-  lazy val termsDF: DataFrame =
-    spark.read.schema(TableSchemas.terms).parquet(manifest.termsLocation)
-  lazy val postingsDF: DataFrame =
-    spark.read.schema(TableSchemas.postings(manifest.formatVersion)).parquet(s"$indexPath/postings")
-  /** Stored docs; version-1 indexes predate per-field dls and read an
-    * empty map (the per-field read paths fall back to dl).
-    */
-  lazy val docsDF: DataFrame = {
-    val d = spark.read.parquet(s"$indexPath/docs")
-    if (d.columns.contains("fieldDls")) d
-    else d.withColumn("fieldDls", typedLit(Map.empty[String, Int]))
-  }
-
   /** Parquet point readers: every lookup whose result is collected to the
     * driver (term stats, prefix expansion, driver-local posting rows, stored
     * docs) reads through these with no Spark job, and the distributed
     * evaluation's tasks read their posting files through the same per-file
-    * read ([[PointReader.rdd]]).
+    * read ([[PointReader.rdd]]). Each lists its table now, with the
+    * manifest, so the commit's postings and docs are the files present when
+    * it opened: a wave appended later is invisible to it (its stats are not
+    * in this manifest).
     */
   private def hadoopConf = spark.sparkContext.hadoopConfiguration
-  lazy val termsReader = new PointReader(hadoopConf, manifest.termsLocation)
-  lazy val postingsReader = new PointReader(hadoopConf, s"$indexPath/postings")
-  lazy val docsReader = new PointReader(hadoopConf, s"$indexPath/docs")
+  val termsReader = new PointReader(hadoopConf, manifest.termsLocation)
+  val postingsReader = new PointReader(hadoopConf, s"$indexPath/postings")
+  val docsReader = new PointReader(hadoopConf, s"$indexPath/docs")
+
+  /** The Spark reads (WAND's bound scan, multi-term expansion beyond
+    * prefixes, suggestions) use explicit schemas: opening a table launches
+    * no schema-inference job. Postings and docs read the readers' files.
+    */
+  lazy val termsDF: DataFrame =
+    spark.read.schema(TableSchemas.terms).parquet(manifest.termsLocation)
+  lazy val postingsDF: DataFrame =
+    spark.read.schema(TableSchemas.postings(manifest.formatVersion))
+      .option("basePath", s"$indexPath/postings").parquet(postingsReader.paths: _*)
+  /** Stored docs; version-1 indexes predate per-field dls and read an
+    * empty map (the per-field read paths fall back to dl).
+    */
+  lazy val docsDF: DataFrame = {
+    val d = spark.read.option("basePath", s"$indexPath/docs").parquet(docsReader.paths: _*)
+    if (d.columns.contains("fieldDls")) d
+    else d.withColumn("fieldDls", typedLit(Map.empty[String, Int]))
+  }
 
   /** Per-field statistics: the manifest's copy (no I/O), or the fieldstats
     * table for manifests written before the copy existed.
@@ -464,7 +470,7 @@ final class IndexSearcher private (
     /** The statistics a query scores with; None: the commit's own. */
     statsOf: Option[Seq[(String, String)] => StatsView],
     /** This searcher opened `commit`: its close() releases the LRU. */
-    ownsCommit: Boolean) extends Serializable {
+    ownsCommit: Boolean) extends SearchModules with Serializable {
   import spark.implicits._
 
   /** A searcher over the index's current commit. */
@@ -754,7 +760,7 @@ final class IndexSearcher private (
     val terms = commit.termsReader.read(Seq("field", "term"),
         Some(FilterApi.and(PointReader.stringIn("field", Seq(f)), inRange)),
         limitPerFile = 1025)(_.getString("term", 0))
-      .sortWith(graft.index.IndexBuilder.utf8Cmp(_, _) < 0).take(1025)
+      .sorted(graft.index.IndexBuilder.utf8Order).take(1025)
     withinBudget(terms, s"prefix '$f:$prefix*'", "narrow the prefix")
   }
 
@@ -965,139 +971,34 @@ final class IndexSearcher private (
       fn, termStats, collectionStats(fn).maxDoc)
   }
 
-  /** Fails unless `c` is a stored metadata column of the docs table (not
-    * one of the engine's own columns); `role` names its use in the error.
-    */
-  private def requireMetadataColumn(c: String, role: String): Unit = {
+  private[search] def docsColumn(c: String, role: String): DataFrame = {
     val internal = Set("docId", "segId", "dl", "norm", "fieldDls", "wave", "contentSha")
     require(commit.docsDF.columns.contains(c) && !internal.contains(c),
       s"$role column '$c' is not a stored metadata column " +
         s"(available: ${commit.docsDF.columns.filterNot(internal).mkString(", ")})")
+    commit.docsDF.select(col("docId"), col(c))
   }
 
-  /** Facet counts — the distinct values of a stored metadata column among
-    * ALL docs matching the query, with match counts, topN by (count desc,
-    * value asc). The Lucene facet-module analogue (never ported in the
-    * reference). Fully distributed at every step: the match set stays a
-    * Dataset (the same range-group evaluation as [[scoredDocs]], so deletes
-    * apply), hash-joins the docs table on docId, and the groupBy
-    * partial-aggregates map-side before one value-cardinality-sized
-    * shuffle; `limit(topN)` is a distributed TakeOrdered. Counting needs no
-    * scores, so matching runs in Ref32 mode.
+  /** One Spark scan of the vocabulary-sized terms table with the
+    * length-window prefilter of [[fuzzyTerms]] (postings untouched), ranked
+    * and limited when `topN` is given. Cached like the expansions: one
+    * input's candidates are vocabulary-bounded, so a repeat runs no job.
     */
-  def facetCounts(q: Query, facetCol: String, topN: Int = 20): DataFrame = {
-    requireMetadataColumn(facetCol, "facet")
-    scoredDocs(q, ScoreMode.Ref32) // prepare() expands multi-term leaves
-      .select(col("docId"))
-      .join(commit.docsDF.select(col("docId"), col(facetCol)), "docId")
-      .groupBy(col(facetCol))
-      .agg(count(lit(1)).as("matchCount"))
-      .orderBy(col("matchCount").desc, col(facetCol))
-      .limit(topN)
-  }
-
-  /** Sort-by-field top-k — the Lucene Sort/TopFieldCollector analogue
-    * (never ported in the reference: no SortField exists under
-    * core/search/). Matching runs Ref32 (relevance scores are unused when
-    * sorting by a field, like Lucene's non-scoring TopFieldCollector); the
-    * match set stays a distributed Dataset (deletes apply), hash-joins the
-    * docs table for the sort column, and `orderBy(...).limit(k)` plans as
-    * Spark's TakeOrderedAndProject — per-partition k-bounded heaps merged
-    * on the driver, never a global sort. Deterministic tie-break: equal
-    * sort values order by docId asc, whatever the sort direction (Lucene's
-    * implicit final docId comparator).
-    */
-  def searchSortBy(q: Query, sortCol: String, k: Int,
-      ascending: Boolean = true): DataFrame = {
-    requireMetadataColumn(sortCol, "sort")
-    require(k > 0, s"k must be positive, got $k")
-    val ord = if (ascending) col(sortCol).asc else col(sortCol).desc
-    scoredDocs(q, ScoreMode.Ref32) // prepare() expands multi-term leaves
-      .select(col("docId"))
-      .join(commit.docsDF.select(col("docId"), col(sortCol)), "docId")
-      .orderBy(ord, col("docId").asc)
-      .limit(k)
-      .select(col("docId"), col(sortCol))
-  }
-
-  /** Result grouping — the Lucene grouping-module analogue (never ported):
-    * the top `topGroups` groups of a stored metadata column ranked by their
-    * BEST hit (max score desc, group value asc — Lucene's
-    * groupSort=relevance), each carrying its top `docsPerGroup` hits
-    * (score desc, docId asc). Fully distributed: the scored match set
-    * hash-joins the docs table on docId; within-group ranks come from ONE
-    * k-bounded per-group HEAP aggregation ([[GroupTopHits]]) computed in the
-    * same pass as the groupTop max — partial aggregation caps every task's
-    * state at groups × docsPerGroup entries, so a skewed group column (one
-    * group owning most of the match set — the 100× hazard of low-cardinality
-    * columns like lang/repo) can never push a group's whole match set
-    * through one task the way the former row_number window did. The
-    * topGroups-sized leaderboard derives from the same aggregation and
-    * BROADCASTS back onto the exploded per-group hits. One key-aligned
-    * shuffle, bounded by groups × docsPerGroup after partial aggregation.
-    * Group ranking compares UNROUNDED scores — legal because exact-double
-    * scores reproduce bit-for-bit (CLAUDE.md raw-score rank-window rule);
-    * Ref32 works too when no SQL twin is needed.
-    */
-  def groupedSearch(q: Query, groupCol: String, topGroups: Int,
-      docsPerGroup: Int, mode: ScoreMode = ScoreMode.Ref32): DataFrame = {
-    requireMetadataColumn(groupCol, "group")
-    require(topGroups > 0 && docsPerGroup > 0,
-      s"topGroups/docsPerGroup must be positive, got $topGroups/$docsPerGroup")
-    val hits = scoredDocs(q, mode).toDF("docId", "score")
-      .join(commit.docsDF.select(col("docId"), col(groupCol)), "docId")
-    val heapAgg = udaf(new GroupTopHits(docsPerGroup))
-    val grouped = hits.groupBy(col(groupCol))
-      .agg(heapAgg(col("docId"), col("score")).as("c"),
-        max(col("score")).as("groupTop"))
-    val leaders = grouped
-      .select(col(groupCol), col("groupTop"))
-      .orderBy(col("groupTop").desc, col(groupCol)).limit(topGroups)
-    grouped.join(broadcast(leaders.select(col(groupCol))), Seq(groupCol))
-      .select(col(groupCol), col("groupTop"),
-        posexplode(col("c.hits")).as(Seq("pos", "h")))
-      .select(col(groupCol), col("groupTop"),
-        (col("pos") + 1).cast("int").as("rank"),
-        col("h.docId").as("docId"), col("h.score").as("score"))
-  }
-
-  /** Spelling suggestions — the Lucene suggest/spellchecker analogue (never
-    * ported): dictionary terms within `maxEdits` CLASSIC Levenshtein edits
-    * of `input` (the FuzzyQuery distance, so DuckDB's `levenshtein`
-    * reproduces it), ranked (distance asc, docFreq desc, term asc), topN.
-    * The exact input term is excluded (a suggestion you typed is not a
-    * suggestion). Distributed over the vocabulary-sized terms table with
-    * the same length-window prefilter as [[fuzzyTerms]]; `limit(topN)` is a
-    * distributed TakeOrdered — postings are never touched. docFreq is the
-    * INDEXED df (point-in-time, like Lucene's spellchecker — query-time
-    * deletes don't re-rank suggestions).
-    */
-  def suggestTerms(input: String, maxEdits: Int = 2, topN: Int = 5,
-      f: String = field): DataFrame = {
-    require(maxEdits >= 1 && maxEdits <= 2,
-      s"suggest maxEdits must be 1..2 (Lucene's classic bound), got $maxEdits")
-    require(topN > 0, s"topN must be positive, got $topN")
-    // cached like the multi-term expansions: the candidate set is
-    // vocabulary-bounded (≤2 edits of one input) and topN-limited, so the
-    // collected rows are tiny — a repeated suggestion costs zero Spark jobs
-    // (the result rebuilds as a LocalRelation)
-    val sp = spark
-    import sp.implicits._
+  private[search] def suggestions(input: String, maxEdits: Int, topN: Option[Int],
+      f: String): Seq[(String, Long, Int)] =
     commit.cached(SuggestKey(input, maxEdits, topN, f)) {
       describe(s"graft suggest '$f:$input'~$maxEdits") {
-        commit.termsDF
+        val all = commit.termsDF
           .where(col("field") === f &&
             length(col("term")).between(input.length - maxEdits, input.length + maxEdits) &&
             col("term") =!= input)
           .select(col("term"), col("docFreq"),
             levenshtein(col("term"), lit(input)).as("dist"))
           .where(col("dist") <= maxEdits)
-          .orderBy(col("dist").asc, col("docFreq").desc, col("term").asc)
-          .limit(topN)
+        topN.fold(all)(all.orderBy(col("dist").asc, col("docFreq").desc, col("term").asc).limit)
           .collect().map(r => (r.getString(0), r.getLong(1), r.getInt(2))).toSeq
       }
-    }.toDF("term", "docFreq", "dist")
-  }
+    }
 
   /** True when a group quantified by `*`, `+` or `{n}` has a body (nested
     * groups included) that already holds a `*` or `+` quantifier — the
@@ -1774,53 +1675,4 @@ object BoundedHitQueue {
       if (a.score != b.score) java.lang.Double.compare(a.score, b.score)
       else java.lang.Long.compare(b.docId, a.docId)
   }
-}
-
-/** One hit inside a per-group bounded heap ([[GroupTopHits]]). */
-final case class GroupHit(docId: Long, score: Double)
-
-/** Buffer/output of [[GroupTopHits]]: hits sorted (score desc, docId asc),
-  * never more than the group's docsPerGroup bound.
-  */
-final case class GroupTopBuf(hits: Seq[GroupHit])
-
-/** Per-group top-d heap AGGREGATOR — the skew-safe replacement for the
-  * row_number window in [[IndexSearcher.groupedSearch]]: partial (map-side)
-  * aggregation bounds every task's state at groups × d entries, so one
-  * low-cardinality group owning most of the match set can never funnel its
-  * whole match set through a single window task. The kept set and its order
-  * are EXACTLY the window's (score desc, docId asc — the BoundedHitQueue
-  * tie-break), so ranks explode identically.
-  */
-final class GroupTopHits(d: Int)
-    extends org.apache.spark.sql.expressions.Aggregator[(Long, Double), GroupTopBuf, GroupTopBuf] {
-  import org.apache.spark.sql.{Encoder, Encoders}
-  private def better(a: GroupHit, b: GroupHit): Boolean =
-    a.score > b.score || (a.score == b.score && a.docId < b.docId)
-  def zero: GroupTopBuf = GroupTopBuf(Vector.empty)
-  def reduce(b: GroupTopBuf, x: (Long, Double)): GroupTopBuf = {
-    val h = GroupHit(x._1, x._2)
-    val j = b.hits.indexWhere(e => better(h, e))
-    val i = if (j < 0) b.hits.size else j
-    if (i >= d) b
-    else GroupTopBuf(((b.hits.take(i) :+ h) ++ b.hits.drop(i)).take(d))
-  }
-  def merge(x: GroupTopBuf, y: GroupTopBuf): GroupTopBuf = {
-    val out = Vector.newBuilder[GroupHit]
-    var i = 0
-    var j = 0
-    var n = 0
-    while (n < d && (i < x.hits.size || j < y.hits.size)) {
-      if (j >= y.hits.size || (i < x.hits.size && better(x.hits(i), y.hits(j)))) {
-        out += x.hits(i); i += 1
-      } else {
-        out += y.hits(j); j += 1
-      }
-      n += 1
-    }
-    GroupTopBuf(out.result())
-  }
-  def finish(b: GroupTopBuf): GroupTopBuf = b
-  def bufferEncoder: Encoder[GroupTopBuf] = Encoders.product[GroupTopBuf]
-  def outputEncoder: Encoder[GroupTopBuf] = Encoders.product[GroupTopBuf]
 }

@@ -7,7 +7,8 @@ import graft.search._
 
 /** Hot-path latency of the round-5 serving surfaces against the driver
   * tables: monolithic vs SHARDED search (MultiSearcher over the doc_id%2
-  * pair), exhaustive vs WAND on both, and RRF hybrid fusion. Protocol per
+  * pair), exhaustive vs WAND on both, RRF hybrid fusion, and the module
+  * analogues (facets on both, sharded grouping and suggest). Protocol per
   * BENCH.md: ≥20 INTERLEAVED reps per op on warmed searchers, p50 + p95
   * reported (host noise arrives in windows — interleaving exposes it to
   * every op equally).
@@ -36,7 +37,12 @@ object OpBench {
       ("mono_wand", () => { Wand.searchTopK(mono, q, 10, ScoreMode.ExactDouble); () }),
       ("sharded_search", () => { multi.search(q, 10, ScoreMode.ExactDouble); () }),
       ("sharded_wand", () => { multi.searchWand(q, 10, ScoreMode.ExactDouble); () }),
-      ("hybrid_rrf", () => { FtQueries.hybridDF(spark, sfDir, q, 0L, 50, 60, 10).collect(); () }))
+      ("hybrid_rrf", () => { FtQueries.hybridDF(spark, sfDir, q, 0L, 50, 60, 10).collect(); () }),
+      ("mono_facets", () => { mono.facetCounts(q, "lang").collect(); () }),
+      ("sharded_facets", () => { multi.facetCounts(q, "lang").collect(); () }),
+      ("sharded_grouped", () => {
+        multi.groupedSearch(q, "lang", 3, 4, ScoreMode.ExactDouble).collect(); () }),
+      ("sharded_suggest", () => { multi.suggestTerms("sart", 2, 5).collect(); () }))
 
     // warm every path (index builds resume from cache; stats caches fill)
     ops.foreach { case (_, f) => f(); f() }
@@ -56,7 +62,7 @@ object OpBench {
     println(f"| op | p50 ms | p95 ms |  ($reps interleaved reps, $sfDir)")
     ops.foreach { case (name, _) =>
       val v = times(name)
-      println(f"| $name%-14s | ${pct(v, 0.50)}%8.1f | ${pct(v, 0.95)}%8.1f |")
+      println(f"| $name%-15s | ${pct(v, 0.50)}%8.1f | ${pct(v, 0.95)}%8.1f |")
     }
     spark.stop()
   }

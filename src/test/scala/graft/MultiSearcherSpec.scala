@@ -268,14 +268,22 @@ class MultiSearcherSpec extends AnyFunSuite with SparkTestBase {
       val lang = if (i % 10 == 0) s"minor${i % 3}" else "dominant"
       (i.toLong, "r", s"p$i", s"c$i", lang, s"merge tok$i shared merge words")
     }.toDF("doc_id", "repo", "path", "commit", "lang", "content")
-    val dir = java.nio.file.Files.createTempDirectory("graft-group-skew").toString
-    new IndexBuilder(spark, cfg).build(rows, dir)
+    def built(tag: String, keep: org.apache.spark.sql.Column) = {
+      val dir = java.nio.file.Files.createTempDirectory(s"graft-group-skew$tag").toString
+      new IndexBuilder(spark, cfg).build(rows.where(keep), dir)
+      dir
+    }
+    val dir = built("", lit(true))
     val s = new IndexSearcher(spark, dir)
+    // the same rows in two shards split by docId: the dominant group spans both
+    val sharded = MultiSearcher(spark,
+      Seq(built("-lo", col("doc_id") < 200), built("-hi", col("doc_id") >= 200)))
     val q = TermQuery("merge")
     def norm(rs: Array[org.apache.spark.sql.Row]) = rs
       .map(r => (r.getString(0), r.getDouble(1), r.getInt(2), r.getLong(3), r.getDouble(4)))
       .sortBy(t => (t._1, t._3)).toSeq
     val got = norm(s.groupedSearch(q, "lang", 10, 3, ScoreMode.ExactDouble).collect())
+    val gotSharded = norm(sharded.groupedSearch(q, "lang", 10, 3, ScoreMode.ExactDouble).collect())
     // independent window reference over the same scored match set
     val hits = s.scoredDocs(q, ScoreMode.ExactDouble).toDF("docId", "score")
       .join(spark.read.parquet(s"$dir/docs").select(col("docId"), col("lang")), "docId")
@@ -289,7 +297,46 @@ class MultiSearcherSpec extends AnyFunSuite with SparkTestBase {
       .select(col("lang"), col("groupTop"), col("rank"), col("docId"), col("score"))
       .collect())
     assert(got == ref)
+    assert(gotSharded == ref)
     assert(got.count(_._1 == "dominant") == 3) // dominant group capped at docsPerGroup
     assert(got.nonEmpty && ref.nonEmpty)
+  }
+
+  test("sharded grouping with more groups than topGroups returns exactly topGroups") {
+    val q = BooleanQuery(Seq(
+      BooleanClause(Occur.SHOULD, TermQuery("merge")),
+      BooleanClause(Occur.SHOULD, TermQuery("vector"))))
+    def grouped(r: org.apache.spark.sql.DataFrame) = r.collect()
+      .map(x => (x.getString(0), x.getDouble(1), x.getInt(2), x.getLong(3), x.getDouble(4)))
+      .sortBy(t => (t._1, t._3)).toSeq
+    assert(mono.facetCounts(q, "repo", topN = 100).count() > 5) // more groups than topGroups
+    for (mode <- modes) {
+      val mg = grouped(mono.groupedSearch(q, "repo", 5, 2, mode))
+      val sg = grouped(multi.groupedSearch(q, "repo", 5, 2, mode))
+      assert(sg.map(_._1).distinct.size == 5, s"mode=$mode")
+      assert(sg == mg, s"mode=$mode")
+    }
+  }
+
+  test("a warm sharded suggestion launches no Spark job; answers ≡ monolithic") {
+    def sug(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getInt(2))).toSeq
+    val m = MultiSearcher(spark, Seq(shardAPath, shardBPath))
+    for ((in, edits, topN) <- Seq(("merg", 2, 5), ("scorr", 2, 3), ("w12", 1, 8))) {
+      val cold = sug(m.suggestTerms(in, edits, topN))
+      val (warm, jobs) = SparkJobs.count(spark)(sug(m.suggestTerms(in, edits, topN)))
+      assert(jobs == 0, s"$in: warm suggestion launched $jobs jobs")
+      assert(warm == cold && warm == sug(mono.suggestTerms(in, edits, topN)), in)
+      assert(warm.nonEmpty, in)
+    }
+  }
+
+  test("MultiSearcher rejects engine columns and unknown columns like the single index") {
+    val q = TermQuery("merge")
+    for (c <- Seq("norm", "nope")) {
+      intercept[IllegalArgumentException](multi.facetCounts(q, c))
+      intercept[IllegalArgumentException](multi.searchSortBy(q, c, 5))
+      intercept[IllegalArgumentException](multi.groupedSearch(q, c, 3, 2))
+    }
   }
 }

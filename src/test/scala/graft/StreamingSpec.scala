@@ -131,6 +131,49 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("a searcher opened before an append reads only its own commit's postings and docs") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-stream-pit").toString
+    val cfg = IndexConfig(analyzer = new StandardCodeAnalyzer(),
+      docsPerRange = 64, numSegments = 4, segmentsPerWave = 4,
+      explicitDocIdCol = Some("docId"))
+    val builder = new IndexBuilder(spark, cfg)
+    val all = (0 until 300).map(i => (i.toLong, TestCorpus.corpus(300)(i)))
+    def df(rows: Seq[(Long, graft.index.CodeFile)]) =
+      rows.map { case (id, f) => (id, f.repo, f.path, f.commit, f.lang, f.content) }
+        .toDF("docId", "repo", "path", "commit", "lang", "content")
+    builder.build(df(all.take(150)), dir)
+    val queries = Seq[Query](TermQuery("import"),
+      BooleanQuery(Seq(
+        BooleanClause(Occur.MUST, TermQuery("parser")),
+        BooleanClause(Occur.SHOULD, TermQuery("buffer")))),
+      PhraseQuery(Seq("posting", "list")),
+      MatchAllQuery())
+    def pairs(t: TopDocs) = t.scoreDocs.map(d => (d.docId, d.score)).toSeq
+    val ref = new IndexSearcher(spark, dir)
+    val maxDocId = ref.manifest.maxDocId
+    val expected = queries.map(q => ref.search(q, 300))
+    // opened before the append, first asked after it: driver-local and
+    // distributed (zero driver-local bound) evaluation
+    val local = new IndexSearcher(spark, dir)
+    val distributed = pruning(new IndexSearcher(spark, dir))
+    StreamingIndexer.appendBatch(spark, builder, df(all.drop(150)), batchId = 0L, dir)
+    assert(new IndexSearcher(spark, dir).manifest.maxDoc == 300)
+
+    for (s <- Seq(local, distributed); (q, exp) <- queries.zip(expected)) {
+      val got = s.search(q, 300)
+      assert(got.totalHits == exp.totalHits && pairs(got) == pairs(exp), s"search $q")
+      assert(got.scoreDocs.forall(_.docId <= maxDocId), s"docIds of $q")
+      exp.scoreDocs.take(3).foreach(d => assert(s.explain(q, d.docId).value == d.score))
+    }
+    val appended = 152L // an appended doc whose first word is "import"
+    assert(new IndexSearcher(spark, dir).explain(TermQuery("import"), appended).isMatch)
+    assert(!local.explain(TermQuery("import"), appended).isMatch)
+    assert(local.docs(Seq(0L, maxDocId, maxDocId + 1, 299L)).map(_.docId) == Seq(0L, maxDocId))
+    val wand = Wand.searchTopK(distributed, queries(1), 10, ScoreMode.Ref32)
+    assert(pairs(wand) == pairs(expected(1)).take(10))
+    assert(local.facetCounts(MatchAllQuery(), "lang").collect().map(_.getLong(1)).sum == 150)
+  }
+
   test("incremental publish: dictionary == full recompute; replay is a no-op; generations swept") {
     val dir = java.nio.file.Files.createTempDirectory("graft-stream-inc").toString
     val cfg = IndexConfig(analyzer = new StandardCodeAnalyzer(),
