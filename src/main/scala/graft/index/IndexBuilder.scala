@@ -59,9 +59,6 @@ final class IndexBuilder(spark: SparkSession, val config: IndexConfig = IndexCon
     val stagedPath = s"$indexPath/staged"
     val docsPath = s"$indexPath/docs"
     val postingsRoot = s"$indexPath/postings"
-    val termsPath = s"$indexPath/terms"
-    val statsPath = s"$indexPath/fieldstats"
-    val segmentsPath = s"$indexPath/segments"
 
     // ---- stage 1: deterministic docIds -------------------------------
     val extras = extraFieldCols
@@ -354,14 +351,14 @@ final class IndexBuilder(spark: SparkSession, val config: IndexConfig = IndexCon
     Await.result(docsJob, scala.concurrent.duration.Duration.Inf)
   }
 
-  /** Aggregate one wave's postings metadata into `termsPartial/wave=N` —
-    * the tree-wise dictionary fold input ([[publish]] folds per-wave
-    * partials when every live wave has one; vocabulary-sized instead of
-    * (field, term, rangeId)-sized). Written by merge outputs (TieredMerge)
-    * and available on demand; NOT written during the batch invert — measured
-    * on the scaling corpus, aggregating the freshly-written wave there
-    * double-pays the dictionary aggregation (the single-wave publish does it
-    * anyway) and LOWERS fused N→4N efficiency.
+  /** Aggregate one wave's postings metadata into `termsPartial/wave=N`: the
+    * wave's dictionary delta, vocabulary-sized instead of (field, term,
+    * rangeId)-sized, which [[publish]] folds in place of the wave's posting
+    * rows. Written by merge outputs (TieredMerge) and available on demand;
+    * NOT written during the batch invert — measured on the scaling corpus,
+    * aggregating the freshly-written wave there double-pays the dictionary
+    * aggregation (the publish fold does it anyway) and LOWERS fused N→4N
+    * efficiency.
     */
   def writeTermsPartial(indexPath: String, wave: Int): Unit =
     IndexBuilder.writeTermsPartial(spark, indexPath, wave)
@@ -370,171 +367,33 @@ final class IndexBuilder(spark: SparkSession, val config: IndexConfig = IndexCon
   private def formatVersion: Int =
     if (config.withOffsets) IndexManifest.FormatOffsets else IndexManifest.CurrentFormat
 
-  /** Stage 3: (re)publish terms dict, stats, segment metadata, commit. */
+  /** Stage 3: commit the whole index — every live wave folded onto no base.
+    * The commit is generation 0 when the index has none yet, else the live
+    * generation + 1, so readers of the live commit keep their files.
+    */
   def publish(indexPath: String): IndexManifest = {
-    val t0 = System.nanoTime()
-    def mark(tag: String): Unit =
-      if (sys.env.contains("SPARK_GRAFT_PUBLISH_TIMING"))
-        System.err.println(f"[publish] $tag at ${(System.nanoTime() - t0) / 1e9}%.2f s")
     // crash-consistency sweep: a merge that died mid-flight leaves either an
     // uncommitted merged wave or logged-retired source dirs — both would
     // double postings for every reader of <index>/postings. waves() deletes
     // them on load (two-phase commit; see TieredMerge.waves). Merges must not
     // run concurrently with publish.
-    val liveWaves = TieredMerge.waves(spark, indexPath)
-    mark("waves-swept")
-    val stagedPath = s"$indexPath/staged"
-    val docsPath = s"$indexPath/docs"
-    val termsPath = s"$indexPath/terms"
-    val statsPath = s"$indexPath/fieldstats"
-    val segmentsPath = s"$indexPath/segments"
-    val postings = spark.read.schema(TableSchemas.postings(formatVersion)).parquet(s"$indexPath/postings")
-
-    // terms aggregation and the docs rollup are independent → submit
-    // concurrently (publish's wall is mostly fixed cost, which otherwise
-    // drags N→4N scaling efficiency down)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    // the aggregated dictionary is CACHED so the fieldstats job reads the
-    // cache concurrently with the parquet write instead of re-reading the
-    // written dictionary after it — one fewer serial barrier (publish fixed
-    // cost weighs 4x heavier on the 4N level of the scaling ratio).
-    // TREE-WISE fold (round-4): when every live wave has its termsPartial
-    // (written during invert/merge), the dictionary folds vocabulary-sized
-    // per-wave partials — input is nWaves × vocab rows, NOT the full
-    // (field, term, rangeId) posting metadata; a wave built by older code or
-    // an interrupted partial write falls back to the direct postings scan.
-    val partialsOk = liveWaves.nonEmpty &&
-      liveWaves.forall(w => exists(s"$indexPath/termsPartial/wave=${w.wave}/_SUCCESS"))
-    val termsSrc =
-      if (partialsOk)
-        spark.read.parquet(
-          liveWaves.map(w => s"$indexPath/termsPartial/wave=${w.wave}"): _*)
-          .withColumnRenamed("singletonDocId", "firstDocId") // fold-compatible
-      else postings
-    val termsAgg = termsSrc
-      .groupBy("field", "term")
-      .agg(
-        sum("docFreq").as("docFreq"),
-        sum("ttf").as("totalTermFreq"),
-        when(sum("docFreq") === 1L, max("firstDocId")).otherwise(-1L).as("singletonDocId"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val termsJob = Future(IndexBuilder.writeSorted(termsAgg, termsPath, "field", "term"))
-    val docs = spark.read.parquet(docsPath)
-    // one pass over docs: rollup gives per-segment rows, the global totals
-    // row, AND every field's docCount (conditional aggs over the stored
-    // per-field dls — no second scan, no explode) in a single shuffle
-    val indexedFields =
-      (Seq(config.field) ++ config.analyzedFields ++ config.keywordFields).distinct
-    val baseAggs = Seq(
-      min("docId").as("docLo"), max("docId").as("docHi"),
-      count(lit(1)).as("docCount"),
-      sum(when(col("dl") > 0, 1L).otherwise(0L)).as("nonEmpty"))
-    // the PRIMARY field's docCount is just dl > 0 — only EXTRA fields touch
-    // the fieldDls map column. With no extra fields the rollup scan reads
-    // narrow primitive columns only (the map column's row-by-row decode was
-    // the single largest publish cost: ~2.6 s of a 3 s publish at 8 cores
-    // on the 2^21-doc scaling corpus)
-    val fieldAggs = indexedFields.map(f =>
-      if (f == config.field) sum(when(col("dl") > 0, 1L).otherwise(0L)).as(s"dc_$f")
-      else sum(when(element_at(col("fieldDls"), f) > 0, 1L).otherwise(0L)).as(s"dc_$f"))
-    val allAggs = baseAggs ++ fieldAggs
-    val docRoll = docs.rollup("segId")
-      .agg(allAggs.head, allAggs.tail: _*)
-      .collect()
-    mark("docRoll-collected")
-    val fieldStats = termsAgg.groupBy("field").agg(
-      sum("totalTermFreq").as("sumTotalTermFreq"),
-      sum("docFreq").as("sumDocFreq"),
-      count(lit(1)).as("termCount"))
-    val globalRow0 = docRoll.find(_.isNullAt(0)).get
-    // per-field docCount = docs with ≥1 token IN THAT FIELD (round-2 judge
-    // fix: the global nonEmpty count was stamped onto every field's row —
-    // wrong for keyword/extra fields and uncaught by CheckIndex). Values
-    // come from the rollup's global row → a literal CASE, no join
-    val dcByField = indexedFields.zipWithIndex.map { case (f, i) =>
-      f -> globalRow0.getLong(5 + i)
-    }
-    val docCountCol = dcByField.foldLeft(lit(0L)) { case (acc, (f, n)) =>
-      when(col("field") === f, lit(n)).otherwise(acc)
-    }
-    val statsJob = Future {
-      fieldStats
-        .withColumn("docCount", docCountCol)
-        .withColumn("maxDoc", lit(globalRow0.getLong(3)))
-        .select("field", "sumTotalTermFreq", "sumDocFreq", "termCount", "maxDoc", "docCount")
-        .write.mode("overwrite").parquet(statsPath)
-    }
-    val globalRow = docRoll.find(_.isNullAt(0)).get
-    val maxDoc = globalRow.getLong(3)
-    val docCount = globalRow.getLong(4)
-    val maxDocId = globalRow.getLong(2) // true max(docId): append base for sparse id spaces
-
-    // segment metadata is a driver-local handful of rows (one per segId) —
-    // written as JSONL via the filesystem directly: a Spark parquet job here
-    // is ~0.2 s of fixed scheduler cost per publish that never parallelizes
-    val segMetas = docRoll.filter(!_.isNullAt(0))
-      .map(r => SegmentMeta(r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        generation = 1, lineage = s"$stagedPath WHERE segId=${r.getInt(0)}"))
-      .sortBy(_.segId)
-    val segOut = fs(indexPath).create(new Path(s"$segmentsPath.json"), true)
-    segMetas.foreach { sm =>
-      segOut.write((s"""{"segId":${sm.segId},"docLo":${sm.docLo},"docHi":${sm.docHi},""" +
-        s""""docCount":${sm.docCount},"generation":${sm.generation},"lineage":"${sm.lineage}"}""" +
-        "\n").getBytes("UTF-8"))
-    }
-    segOut.close()
-    mark("segments-written")
-    Await.result(termsJob, scala.concurrent.duration.Duration.Inf)
-    mark("terms-done")
-    Await.result(statsJob, scala.concurrent.duration.Duration.Inf)
-    mark("stats-done")
-    termsAgg.unpersist()
-    // the manifest carries a copy of the (field-count-sized) table, read back
-    // on the driver, so searchers read collection stats with no I/O
-    val publishedStats = IndexManifest.readFieldStats(spark.sparkContext.hadoopConfiguration, statsPath)
-
-    // two-phase commit: all data dirs are durable; the marker makes it live.
-    // publishedWaves records which waves' term contributions this dictionary
-    // covers (replay idempotence for streaming's incremental publish)
-    val m = IndexManifest(indexPath, maxDoc, docCount, config.docsPerRange, maxDocId,
-      termsGen = 0, publishedWaves = liveWaves.map(_.wave).sorted, formatVersion = formatVersion,
-      field = config.field, analyzedFields = config.analyzedFields,
-      keywordFields = config.keywordFields, fieldStats = Some(publishedStats))
-    // the generation that was live BEFORE this commit survives one round
-    // for in-flight readers (same grace publishIncremental gives); older
-    // stale generations are dead and swept
-    val prevGen =
+    val liveWaves = TieredMerge.waves(spark, indexPath).map(_.wave)
+    val prev =
       if (exists(s"$indexPath/commit.json"))
-        scala.util.Try(IndexManifest.load(spark, indexPath).termsGen).getOrElse(0)
-      else 0
-    IndexManifest.commit(spark, m)
-    fs(indexPath).listStatus(new Path(indexPath)).map(_.getPath)
-      .filter { p =>
-        val n = p.getName
-        def genOf(prefix: String): Option[Int] =
-          if (n.startsWith(prefix)) n.stripPrefix(prefix).toIntOption else None
-        genOf("terms_g").exists(_ != prevGen) || genOf("fieldstats_g").exists(_ != prevGen)
-      }
-      .foreach(p => fs(indexPath).delete(p, true))
-    m
+        scala.util.Try(IndexManifest.load(spark, indexPath)).toOption
+      else None
+    fold(indexPath, prev, base = None, liveWaves)
   }
 
-  /** INCREMENTAL publish for streaming append cadence: fold ONE new wave's
-    * term contributions into the committed dictionary instead of
-    * re-aggregating the whole index. Cost is O(new wave) + O(vocabulary
+  /** INCREMENTAL publish for streaming append cadence: the committed index
+    * plus ONE new wave's deltas. Cost is O(new wave) + O(vocabulary
     * rewrite) — never a full postings or docs scan, so per-batch publish
-    * stays flat as the index grows (the full publish is O(index) per batch:
-    * the remaining scale cliff of the streaming path in rounds 1–2).
+    * stays flat as the index grows.
     *
-    * Crash/replay discipline (same two-phase story as the rest of the
-    * index): the new terms/fieldstats generations are written to fresh dirs,
-    * and the manifest commit atomically flips the pointer + appends the wave
-    * to `publishedWaves`. A replayed batch (at-least-once foreachBatch) is a
-    * no-op once its wave is listed; a crash before commit leaves the old
-    * generation live and the replay re-derives the new one from it. The
-    * previous generation is kept one round for in-flight readers; older ones
-    * are swept.
+    * Crash/replay discipline: a replayed batch (at-least-once foreachBatch)
+    * is a no-op once its wave is listed in `publishedWaves`; a crash before
+    * the commit leaves the old generation live and the replay re-derives the
+    * new one from it.
     */
   def publishIncremental(indexPath: String, wave: Int): IndexManifest = {
     if (!exists(s"$indexPath/commit.json"))
@@ -549,132 +408,96 @@ final class IndexBuilder(spark: SparkSession, val config: IndexConfig = IndexCon
       // which re-aggregates whatever is actually on disk (consistent
       // dictionary; the overwritten wave's old rows are gone either way).
       val r = spark.read.schema(TableSchemas.docs).parquet(s"$indexPath/docs/wave=$wave")
-        .agg(count(lit(1)).as("n"), min("docId").as("lo"), max("docId").as("hi")).collect()(0)
-      val segPath0 = new Path(s"$indexPath/segments.json")
-      val fs0 = fs(indexPath)
-      val segTxt =
-        if (fs0.exists(segPath0)) {
-          val in = fs0.open(segPath0)
-          val t = scala.io.Source.fromInputStream(in).mkString; in.close(); t
-        } else ""
-      val sameContent =
-        s""""segId":$wave,"docLo":(-?\\d+),"docHi":(-?\\d+),"docCount":(\\d+)""".r
-          .findFirstMatchIn(segTxt)
-          .exists(m => m.group(1).toLong == r.getLong(1) &&
-            m.group(2).toLong == r.getLong(2) && m.group(3).toLong == r.getLong(0))
+        .agg(count(lit(1)), min("docId"), max("docId")).collect()(0)
+      val sameContent = IndexManifest.readSegments(spark, indexPath).find(_.segId == wave)
+        .exists(s => s.docCount == r.getLong(0) && s.docLo == r.getLong(1) && s.docHi == r.getLong(2))
       return if (sameContent) prev else publish(indexPath)
     }
-    val gen = prev.termsGen + 1
-    val termsOut = s"$indexPath/terms_g$gen"
-    val statsOut = s"$indexPath/fieldstats_g$gen"
+    fold(indexPath, Some(prev), base = Some(prev), Seq(wave))
+  }
 
-    // independent inputs run as CONCURRENT jobs (the same fixed-cost story
-    // as full publish: per-batch wall is scheduler-dominated at small sizes)
+  /** The one two-phase commit: generation g+1 (g = `prev`'s, none → 0) is
+    * `base` — its dictionary, doc totals, field docCounts and segment rows;
+    * None starts empty — plus the deltas of `waves`. Data dirs are written
+    * first, then `commit.json` flips the pointer; generations g+1 and g are
+    * kept (g for in-flight readers of the previous commit), older ones swept.
+    */
+  private def fold(indexPath: String, prev: Option[IndexManifest],
+      base: Option[IndexManifest], waves: Seq[Int]): IndexManifest = {
+    require(waves.nonEmpty, s"no postings waves to publish under $indexPath")
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
+    val gen = prev.fold(0)(_.termsGen + 1)
 
-    // 1) merged dictionary = full-outer fold of (old, wave delta); singleton
-    // survives only while the TOTAL df is 1, from whichever side holds it
-    val termsJob = Future {
-      // the wave's termsPartial (written during invert) IS the delta — a
-      // vocabulary-sized read instead of re-aggregating the wave's postings
-      val delta =
-        if (exists(s"$indexPath/termsPartial/wave=$wave/_SUCCESS"))
-          spark.read.parquet(s"$indexPath/termsPartial/wave=$wave")
-            .select(col("field"), col("term"), col("docFreq").as("dDf"),
-              col("ttf").as("dTtf"), col("singletonDocId").as("dSingle"))
-        else spark.read.schema(TableSchemas.postings(formatVersion))
-          .parquet(s"$indexPath/postings/wave=$wave")
-          .groupBy("field", "term")
-          .agg(
-            sum("docFreq").as("dDf"),
-            sum("ttf").as("dTtf"),
-            when(sum("docFreq") === 1L, max("firstDocId")).otherwise(-1L).as("dSingle"))
-      val merged = spark.read.schema(TableSchemas.terms).parquet(prev.termsLocation)
-        .join(delta, Seq("field", "term"), "full_outer")
-        .select(col("field"), col("term"),
-          (coalesce(col("docFreq"), lit(0L)) + coalesce(col("dDf"), lit(0L))).as("docFreq"),
-          (coalesce(col("totalTermFreq"), lit(0L)) + coalesce(col("dTtf"), lit(0L))).as("totalTermFreq"),
-          when(coalesce(col("docFreq"), lit(0L)) + coalesce(col("dDf"), lit(0L)) === 1L,
-            coalesce(col("singletonDocId"), col("dSingle"))).otherwise(-1L).as("singletonDocId"))
-      IndexBuilder.writeSorted(merged, termsOut, "field", "term")
+    // docs: one rollup gives the segment rows, the totals row and every
+    // field's docCount. A full publish reads every doc dir (a non-reclaiming
+    // merge leaves its sources' docs where they were). Runs concurrently
+    // with the dictionary write below.
+    val docsRoot = s"$indexPath/docs"
+    val docs = spark.read.schema(TableSchemas.docs).option("basePath", docsRoot)
+      .parquet((if (base.isEmpty) Seq(docsRoot) else waves.map(w => s"$docsRoot/wave=$w")): _*)
+    val fields = (Seq(config.field) ++ config.analyzedFields ++ config.keywordFields).distinct
+    // the PRIMARY field's docCount is just dl > 0 — only EXTRA fields touch
+    // the fieldDls map column, whose row-by-row decode was the single largest
+    // publish cost (~2.6 s of a 3 s publish at 8 cores on the 2^21-doc
+    // scaling corpus)
+    def present(f: String) =
+      if (f == config.field) col("dl") > 0 else element_at(col("fieldDls"), f) > 0
+    val aggs = Seq(min("docId"), max("docId"), count(lit(1)), min("wave")) ++
+      fields.map(f => sum(when(present(f), 1L).otherwise(0L)))
+    val rollup = Future(docs.rollup("segId").agg(aggs.head, aggs.tail: _*).collect())
+
+    // dictionary: base rows + every wave's delta, one group per (field, term).
+    // Each field's sums ride along the write as observed metrics, so nothing
+    // re-reads the written dictionary.
+    val sums = new org.apache.spark.sql.Observation()
+    val sumCols = fields.zipWithIndex.flatMap { case (f, i) =>
+      def of(c: org.apache.spark.sql.Column) = sum(when(col("field") === f, c).otherwise(0L))
+      Seq(of(col("totalTermFreq")).as(s"ttf$i"), of(col("docFreq")).as(s"df$i"), of(lit(1L)).as(s"n$i"))
     }
+    val dict = IndexBuilder.foldTerms(
+      (base.map(b => spark.read.schema(TableSchemas.terms).parquet(b.termsLocation)).toSeq ++
+        IndexBuilder.waveDeltas(spark, indexPath, waves, formatVersion)).reduce(_ unionByName _))
+    IndexBuilder.writeSorted(dict.observe(sums, sumCols.head, sumCols.tail: _*),
+      IndexManifest.generationDir(indexPath, "terms", gen), "field", "term")
 
-    // 2) docCount/maxDoc increments from the new wave's docs partition only,
-    // added to the committed docCounts (the manifest's field stats)
-    val indexedFields =
-      (Seq(config.field) ++ config.analyzedFields ++ config.keywordFields).distinct
-    val batchAggs = Seq(count(lit(1)).as("n"), min("docId").as("lo"), max("docId").as("hi"),
-      sum(when(col("dl") > 0, 1L).otherwise(0L)).as("ne")) ++
-      indexedFields.map(f => // primary field avoids the map column (see publish)
-        if (f == config.field) sum(when(col("dl") > 0, 1L).otherwise(0L)).as(s"dc_$f")
-        else sum(when(element_at(col("fieldDls"), f) > 0, 1L).otherwise(0L)).as(s"dc_$f"))
-    val batchRowF = Future {
-      spark.read.schema(TableSchemas.docs).parquet(s"$indexPath/docs/wave=$wave")
-        .agg(batchAggs.head, batchAggs.tail: _*).collect()(0)
-    }
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val oldDc = prev.fieldStatsOrTable(hadoopConf).map(fs => fs.field -> fs.docCount).toMap
-    val batchRow = Await.result(batchRowF, Duration.Inf)
-    val batchN = batchRow.getLong(0)
-    val newMaxDoc = prev.maxDoc + batchN
-    val dcCol = indexedFields.zipWithIndex.map { case (f, i) =>
-      f -> (oldDc.getOrElse(f, 0L) + batchRow.getLong(4 + i))
-    }.foldLeft(lit(0L)) { case (acc, (f, n)) => when(col("field") === f, lit(n)).otherwise(acc) }
+    val (totals, segRows) = Await.result(rollup, Duration.Inf).partition(_.isNullAt(0))
+    val total = totals.head
+    val added = fields.zipWithIndex.map { case (f, i) => f -> total.getLong(5 + i) }.toMap
+    val baseDc = base.fold(Map.empty[String, Long])(
+      _.fieldStatsOrTable(spark.sparkContext.hadoopConfiguration).map(s => s.field -> s.docCount).toMap)
+    val maxDoc = base.fold(0L)(_.maxDoc) + total.getLong(3)
+    val maxDocId = math.max(base.fold(-1L)(_.maxDocId), total.getLong(2))
 
-    // 3) per-field sums from the merged dictionary (a vocabulary-sized scan)
-    Await.result(termsJob, Duration.Inf)
-    val statsJob = Future {
-      spark.read.schema(TableSchemas.terms).parquet(termsOut)
-        .groupBy("field").agg(
-          sum("totalTermFreq").as("sumTotalTermFreq"),
-          sum("docFreq").as("sumDocFreq"),
-          count(lit(1)).as("termCount"))
-        .withColumn("docCount", dcCol)
-        .withColumn("maxDoc", lit(newMaxDoc))
-        .select("field", "sumTotalTermFreq", "sumDocFreq", "termCount", "maxDoc", "docCount")
-        .write.mode("overwrite").parquet(statsOut)
-    }
+    // segment rows: the waves' rows replace any same-segId row of the base
+    // (a crash between this write and the commit leaves them behind)
+    val segs = segRows.map(r => SegmentMeta(r.getInt(0), r.getLong(1), r.getLong(2),
+      r.getLong(3), generation = 1, lineage = s"$docsRoot/wave=${r.get(4)}")).toSeq
+    val kept = if (base.isEmpty) Nil
+      else IndexManifest.readSegments(spark, indexPath).filterNot(s => segs.exists(_.segId == s.segId))
+    IndexManifest.writeSegments(spark, indexPath, (kept ++ segs).sortBy(_.segId))
 
-    // 4) segment metadata: append this wave's row (driver-side JSONL,
-    // overlapped with the stats job)
-    val segPath = new Path(s"$indexPath/segments.json")
-    val fsys = fs(indexPath)
-    val prevSegs =
-      if (fsys.exists(segPath)) {
-        val in = fsys.open(segPath)
-        val txt = scala.io.Source.fromInputStream(in).mkString
-        in.close()
-        // idempotent on replay: a crash between this write and the manifest
-        // commit leaves the wave's row in segments.json but NOT in
-        // publishedWaves — the re-run must replace, not duplicate, the row
-        txt.linesIterator.filterNot(_.contains(s""""segId":$wave,""")).map(_ + "\n").mkString
-      } else ""
-    val out = fsys.create(segPath, true)
-    out.write(prevSegs.getBytes("UTF-8"))
-    out.write((s"""{"segId":$wave,"docLo":${batchRow.getLong(1)},"docHi":${batchRow.getLong(2)},""" +
-      s""""docCount":$batchN,"generation":1,"lineage":"stream/wave=$wave"}""" + "\n").getBytes("UTF-8"))
-    out.close()
-    Await.result(statsJob, Duration.Inf)
-    val publishedStats = IndexManifest.readFieldStats(hadoopConf, statsOut)
+    // one row per field the dictionary holds; the table and the manifest
+    // carry the same rows, so searchers read collection stats with no I/O
+    val observed = sums.get
+    def sumOf(k: String): Long = observed.get(k).collect { case v: Long => v }.getOrElse(0L)
+    val stats = fields.zipWithIndex.filter { case (_, i) => sumOf(s"n$i") > 0 }.map { case (f, i) =>
+      FieldStats(f, sumOf(s"ttf$i"), sumOf(s"df$i"), sumOf(s"n$i"), maxDoc,
+        baseDc.getOrElse(f, 0L) + added(f))
+    }.sortBy(_.field)
+    stats.toDS().coalesce(1).write.mode("overwrite")
+      .parquet(IndexManifest.generationDir(indexPath, "fieldstats", gen))
 
-    // 5) atomic flip + sweep generations older than the one we keep for
-    // in-flight readers
-    val m = IndexManifest(indexPath, newMaxDoc, prev.docCount + batchRow.getLong(3),
-      config.docsPerRange, math.max(prev.maxDocId, batchRow.getLong(2)),
-      termsGen = gen, publishedWaves = prev.publishedWaves :+ wave, formatVersion = formatVersion,
-      field = config.field, analyzedFields = config.analyzedFields,
-      keywordFields = config.keywordFields, fieldStats = Some(publishedStats))
+    val m = IndexManifest(indexPath, maxDoc, base.fold(0L)(_.docCount) + added(config.field),
+      config.docsPerRange, maxDocId, termsGen = gen,
+      publishedWaves = base.fold(Seq.empty[Int])(_.publishedWaves) ++ waves,
+      formatVersion = formatVersion, field = config.field, analyzedFields = config.analyzedFields,
+      keywordFields = config.keywordFields, fieldStats = Some(stats))
     IndexManifest.commit(spark, m)
+    val fsys = fs(indexPath)
     fsys.listStatus(new Path(indexPath)).map(_.getPath)
-      .filter { p =>
-        val n = p.getName
-        def genOf(prefix: String): Option[Int] =
-          if (n.startsWith(prefix)) n.stripPrefix(prefix).toIntOption else None
-        genOf("terms_g").exists(_ < gen - 1) || genOf("fieldstats_g").exists(_ < gen - 1) ||
-          ((n == "terms" || n == "fieldstats") && gen > 1) // gen-0 dead once g1 superseded
-      }
+      .filter(p => IndexManifest.generationOf(p.getName).exists(g => g != gen && g != gen - 1))
       .foreach(p => fsys.delete(p, true))
     m
   }
@@ -750,6 +573,53 @@ object IndexBuilder {
     }
   }
 
+  /** The dictionary fold: rows of (field, term, docFreq, totalTermFreq,
+    * singletonDocId) — posting rows, per-wave partials or a committed
+    * dictionary alike — summed per (field, term). A term keeps a singleton
+    * docId only while its summed df is 1, taken from the one row that holds it.
+    */
+  private[index] def foldTerms(rows: DataFrame): DataFrame =
+    rows.groupBy("field", "term").agg(
+      sum("docFreq").as("docFreq"),
+      sum("totalTermFreq").as("totalTermFreq"),
+      when(sum("docFreq") === 1L, max("singletonDocId")).otherwise(-1L).as("singletonDocId"))
+
+  /** Some waves' posting rows as [[foldTerms]] input (a row's firstDocId
+    * is its doc when its df is 1).
+    */
+  private def postingDeltas(spark: SparkSession, indexPath: String, waves: Seq[Int],
+      formatVersion: Int): DataFrame =
+    spark.read.schema(TableSchemas.postings(formatVersion))
+      .parquet(waves.map(w => s"$indexPath/postings/wave=$w"): _*)
+      .select(col("field"), col("term"), col("docFreq").cast("long").as("docFreq"),
+        col("ttf").as("totalTermFreq"), col("firstDocId").as("singletonDocId"))
+
+  /** The waves' dictionary deltas as [[foldTerms]] input: a wave's
+    * `termsPartial` when it has one, else its posting rows.
+    */
+  private[index] def waveDeltas(spark: SparkSession, indexPath: String, waves: Seq[Int],
+      formatVersion: Int): Seq[DataFrame] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val (partial, raw) = waves.partition { w =>
+      val ok = new Path(s"$indexPath/termsPartial/wave=$w/_SUCCESS")
+      ok.getFileSystem(conf).exists(ok)
+    }
+    val partials = if (partial.isEmpty) Nil else Seq(
+      spark.read.schema(TableSchemas.termsPartial)
+        .parquet(partial.map(w => s"$indexPath/termsPartial/wave=$w"): _*)
+        .withColumnRenamed("ttf", "totalTermFreq"))
+    partials ++ (if (raw.isEmpty) Nil else Seq(postingDeltas(spark, indexPath, raw, formatVersion)))
+  }
+
+  /** Writes one wave's `termsPartial/wave=N` (see the builder's
+    * [[IndexBuilder.writeTermsPartial]]) — the fold of its posting rows,
+    * shared by the builder and merge outputs (TieredMerge.execute).
+    */
+  def writeTermsPartial(spark: SparkSession, indexPath: String, wave: Int): Unit =
+    foldTerms(postingDeltas(spark, indexPath, Seq(wave), IndexManifest.CurrentFormat))
+      .withColumnRenamed("totalTermFreq", "ttf")
+      .write.mode("overwrite").parquet(s"$indexPath/termsPartial/wave=$wave")
+
   /** A builder whose field config MATCHES an existing committed index —
     * the only safe way to republish one you didn't just build (advisor
     * round-4 fix: Cli merge/expunge used a default IndexConfig, stamping
@@ -757,20 +627,6 @@ object IndexBuilder {
     * zeroing the extra fields' docCounts). The analyzer is caller-supplied
     * (publish itself never tokenizes).
     */
-  /** Aggregate one wave's postings into `termsPartial/wave=N` (the tree-wise
-    * dictionary fold input) — ONE implementation shared by the builder and
-    * merge outputs (TieredMerge.execute), so the df/ttf/singleton fold shape
-    * cannot drift between the two (advisor round-4 fix).
-    */
-  def writeTermsPartial(spark: SparkSession, indexPath: String, wave: Int): Unit =
-    spark.read.parquet(s"$indexPath/postings/wave=$wave")
-      .groupBy("field", "term")
-      .agg(
-        sum("docFreq").as("docFreq"),
-        sum("ttf").as("ttf"),
-        when(sum("docFreq") === 1L, max("firstDocId")).otherwise(-1L).as("singletonDocId"))
-      .write.mode("overwrite").parquet(s"$indexPath/termsPartial/wave=$wave")
-
   def forExisting(spark: SparkSession, indexPath: String,
       analyzer: graft.analysis.Analyzer = new graft.analysis.StandardCodeAnalyzer())
       : IndexBuilder = {
@@ -836,17 +692,15 @@ final case class IndexManifest(indexPath: String, maxDoc: Long, docCount: Long,
       */
     fieldStats: Option[Seq[FieldStats]] = None) {
 
-  /** Committed terms-dictionary dir. Generation 0 is the full-publish dir
-    * ("terms"); incremental publishes write generational dirs and flip the
-    * pointer at manifest commit (the atomic step), so a crash mid-write
-    * never corrupts the live dictionary.
+  /** Committed terms-dictionary dir. Every commit writes a fresh
+    * generation and flips the pointer at manifest commit (the atomic step),
+    * so a crash mid-write never corrupts the live dictionary and readers of
+    * the previous commit keep theirs.
     */
-  def termsLocation: String =
-    if (termsGen <= 0) s"$indexPath/terms" else s"$indexPath/terms_g$termsGen"
+  def termsLocation: String = IndexManifest.generationDir(indexPath, "terms", termsGen)
 
   /** Committed fieldstats dir (same generation discipline as terms). */
-  def statsLocation: String =
-    if (termsGen <= 0) s"$indexPath/fieldstats" else s"$indexPath/fieldstats_g$termsGen"
+  def statsLocation: String = IndexManifest.generationDir(indexPath, "fieldstats", termsGen)
 
   /** Per-field statistics: the manifest's copy, else the fieldstats table
     * read on the driver (no Spark job).
@@ -870,6 +724,56 @@ object IndexManifest {
   val FormatOffsets = 3
 
   private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** Generation `gen`'s dir of a generational table ("terms" or
+    * "fieldstats"): the bare name for the first commit, `<table>_g<gen>`
+    * after it.
+    */
+  def generationDir(indexPath: String, table: String, gen: Int): String =
+    if (gen <= 0) s"$indexPath/$table" else s"$indexPath/${table}_g$gen"
+
+  /** The generation a dir name of [[generationDir]] holds; None for others. */
+  def generationOf(name: String): Option[Int] = name match {
+    case "terms" | "fieldstats" => Some(0)
+    case _ => Seq("terms_g", "fieldstats_g").find(name.startsWith)
+      .flatMap(p => name.stripPrefix(p).toIntOption)
+  }
+
+  private def segmentsPath(spark: SparkSession, indexPath: String) = {
+    val p = new Path(s"$indexPath/segments.json")
+    (p, p.getFileSystem(spark.sparkContext.hadoopConfiguration))
+  }
+
+  /** Writes `segments.json`: one JSON object per segment and line. */
+  def writeSegments(spark: SparkSession, indexPath: String, segs: Seq[SegmentMeta]): Unit = {
+    val (p, fs) = segmentsPath(spark, indexPath)
+    val out = fs.create(p, true)
+    try segs.foreach { s =>
+      val o = json.createObjectNode()
+      o.put("segId", s.segId)
+      o.put("docLo", s.docLo)
+      o.put("docHi", s.docHi)
+      o.put("docCount", s.docCount)
+      o.put("generation", s.generation)
+      o.put("lineage", s.lineage)
+      out.write(json.writeValueAsBytes(o))
+      out.write('\n')
+    } finally out.close()
+  }
+
+  /** The rows of `segments.json`; empty when the index has none. */
+  def readSegments(spark: SparkSession, indexPath: String): Seq[SegmentMeta] = {
+    val (p, fs) = segmentsPath(spark, indexPath)
+    if (!fs.exists(p)) return Nil
+    val in = fs.open(p)
+    val txt = try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+      finally in.close()
+    txt.linesIterator.filter(_.nonEmpty).map { line =>
+      val o = json.readTree(line)
+      SegmentMeta(o.get("segId").asInt, o.get("docLo").asLong, o.get("docHi").asLong,
+        o.get("docCount").asLong, o.get("generation").asInt, o.get("lineage").asText)
+    }.toSeq
+  }
 
   /** Every row of a fieldstats table, read on the driver. */
   def readFieldStats(conf: org.apache.hadoop.conf.Configuration, dir: String): Seq[FieldStats] =

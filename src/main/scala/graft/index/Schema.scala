@@ -96,6 +96,12 @@ object TableSchemas {
 
   val terms: StructType = nullable(Encoders.product[TermRow].schema)
 
+  /** Per-wave dictionary partials (`termsPartial/wave=N`); `ttf` is the
+    * terms table's `totalTermFreq`.
+    */
+  val termsPartial: StructType =
+    StructType.fromDDL("field STRING, term STRING, docFreq BIGINT, ttf BIGINT, singletonDocId BIGINT")
+
   /** Stored docs as the current builder writes them (with `fieldDls`). */
   val docs: StructType = nullable(Encoders.product[DocRow].schema)
 

@@ -15,9 +15,9 @@ import graft.index.{IndexBuilder, IndexConfig, IndexManifest}
   * at-least-once foreachBatch.
   *
   * Scale notes: the per-batch work is the same bounded-group invert as the
-  * batch builder (one shuffle per batch); publish re-aggregates the terms
-  * dictionary, which is incremental-izable (delta-merge of per-wave term
-  * stats) when batch cadence demands it.
+  * batch builder (one shuffle per batch), then an incremental publish that
+  * folds the wave's deltas into the committed dictionary and stats
+  * (O(batch) + O(vocabulary), never a full index scan).
   */
 object StreamingIndexer {
   val StreamingWaveBase = 100000

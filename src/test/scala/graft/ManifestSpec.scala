@@ -89,7 +89,34 @@ class ManifestSpec extends AnyFunSuite with SparkTestBase {
     IndexBuilder.forExisting(spark, dir).publish(dir)
     val again = IndexManifest.load(spark, dir)
     assert(again.fieldStats.nonEmpty && again.fieldStats == m.fieldStats)
-    assert(again.copy(fieldStats = None) == m.copy(fieldStats = None))
+    assert(again.termsGen > m.termsGen, "a republish commits a fresh generation")
+    assert(again.copy(fieldStats = None, termsGen = m.termsGen) == m.copy(fieldStats = None))
+  }
+
+  test("a republish commits a fresh generation; a searcher opened before it still answers") {
+    val dir = build(150)
+    val queries = Seq(TermQuery("parser"), PrefixQuery("w1"))
+    val reference = new IndexSearcher(spark, dir)
+    val expected = queries.map(q => reference.search(q, 20))
+    val old = new IndexSearcher(spark, dir) // opened, never queried: every lookup is cold
+    val gen = IndexManifest.load(spark, dir).termsGen
+    IndexBuilder.forExisting(spark, dir).publish(dir)
+    assert(IndexManifest.load(spark, dir).termsGen > gen)
+    queries.zip(expected).foreach { case (q, exp) =>
+      val got = old.search(q, 20)
+      assert(got.totalHits == exp.totalHits && got.scoreDocs.toSeq == exp.scoreDocs.toSeq, q)
+    }
+    assert(CheckIndex.run(spark, dir).ok)
+  }
+
+  test("segments.json round-trips every row; a lineage may hold quotes and backslashes") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-segments").toString
+    val segs = Seq(
+      SegmentMeta(3, 0L, 99L, 100L, 1, "C:\\idx \"q\"\\docs/wave=0"),
+      SegmentMeta(100001, 100L, 159L, 60L, 1, "a,b}\n{\"segId\":7,"))
+    IndexManifest.writeSegments(spark, dir, segs)
+    assert(IndexManifest.readSegments(spark, dir) == segs)
+    assert(IndexManifest.readSegments(spark, s"$dir/absent").isEmpty)
   }
 
   test("CheckIndex reports a tampered field-stats entry in commit.json") {

@@ -184,11 +184,22 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     def df(rows: Seq[(Long, graft.index.CodeFile)]) =
       rows.map { case (id, f) => (id, f.repo, f.path, f.commit, f.lang, f.content) }
         .toDF("docId", "repo", "path", "commit", "lang", "content")
+    def checked(): Unit = {
+      val report = CheckIndex.run(spark, dir)
+      assert(report.ok, report.problems)
+    }
     builder.build(df(all.take(120)), dir)
+    checked()
     StreamingIndexer.appendBatch(spark, builder, df(all.slice(120, 180)), batchId = 0L, dir)
+    checked()
+    val preBatch1 = IndexManifest.load(spark, dir)
     StreamingIndexer.appendBatch(spark, builder, df(all.drop(180)), batchId = 1L, dir)
+    checked()
 
     val m = IndexManifest.load(spark, dir)
+    def statsTable(mf: IndexManifest) =
+      spark.read.parquet(mf.statsLocation).as[FieldStats].collect().sortBy(_.field).toSeq
+    val incrementalStats = statsTable(m)
     assert(m.termsGen == 2, s"two increments → gen 2, got ${m.termsGen}")
     assert(m.publishedWaves.count(_ >= StreamingIndexer.StreamingWaveBase) == 2)
     assert(m.maxDoc == 240 && m.maxDocId == 239)
@@ -208,14 +219,13 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     val m2 = IndexManifest.load(spark, dir)
     assert(m2.termsGen == 2 && m2.maxDoc == 240, "replay must not advance the generation")
     assert(dict(m2.termsLocation) == incremental)
+    checked()
 
     // crash-window replay: roll the manifest back to before batch 1 (batch
     // 1's row already sits in segments.json and its wave dir is durable) —
     // the re-run must REPLACE the segment row, not duplicate it, and
     // re-derive the identical dictionary from the still-live g1
-    val preBatch1 = m.copy(termsGen = 1,
-      publishedWaves = m.publishedWaves.filterNot(_ == StreamingIndexer.StreamingWaveBase + 1),
-      maxDoc = 180, docCount = 180, maxDocId = 179)
+    assert(preBatch1.termsGen == 1 && preBatch1.maxDoc == 180 && preBatch1.maxDocId == 179)
     IndexManifest.commit(spark, preBatch1)
     StreamingIndexer.appendBatch(spark, builder, df(all.drop(180)), batchId = 1L, dir)
     val m2b = IndexManifest.load(spark, dir)
@@ -229,13 +239,18 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     val waveRows = segLines.count(_.contains(
       s""""segId":${StreamingIndexer.StreamingWaveBase + 1},"""))
     assert(waveRows == 1, s"crash replay duplicated the segment row ($waveRows)")
+    checked()
 
     // ground truth: a full publish re-aggregates everything from postings
     builder.publish(dir)
     val m3 = IndexManifest.load(spark, dir)
-    assert(m3.termsGen == 0)
+    assert(m3.termsGen > m2b.termsGen, "a full publish commits a fresh generation")
     assert(dict(m3.termsLocation) == incremental,
       "incrementally-folded dictionary must equal the full recompute")
+    // the rest of the commit folds exactly too: totals, field stats, table rows
+    assert((m.maxDoc, m.docCount, m.maxDocId) == (m3.maxDoc, m3.docCount, m3.maxDocId))
+    assert(m.fieldStats.nonEmpty && m.fieldStats == m3.fieldStats)
+    assert(incrementalStats == statsTable(m3))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/terms_g1")),
       "full publish sweeps stale generations")
     assert(CheckIndex.run(spark, dir).ok)
@@ -248,7 +263,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       .copy(path = s"rewrite/$i.scala", content = s"rewritten uniqrw_$i")))
     StreamingIndexer.appendBatch(spark, builder, df(replacement), batchId = 1L, dir)
     val mR = IndexManifest.load(spark, dir)
-    assert(mR.termsGen == 0, "content change must trigger the full-publish fallback")
+    assert(mR.termsGen > m3.termsGen, "content change must trigger the full-publish fallback")
     assert(new IndexSearcher(spark, dir).search(TermQuery("rewritten"), 50).totalHits == 30,
       "new wave content must be reflected in the dictionary")
     assert(CheckIndex.run(spark, dir).ok, "index must stay self-consistent after the fallback")
