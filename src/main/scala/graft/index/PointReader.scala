@@ -109,10 +109,11 @@ final class PointReader(conf: Configuration, dir: String) {
   /** The rows [[read]] returns, as an RDD with one partition per file that
     * can match `pred` ([[filesFor]]): each task opens its file on the
     * executor and streams it through the same per-file reader, so the
-    * driver plans nothing beyond the file list.
+    * driver plans nothing beyond the file list, and keeps at most
+    * `limitPerFile` of its rows.
     */
-  def rdd[T: ClassTag](sc: SparkContext, columns: Seq[String], pred: FilterPredicate)(
-      row: Group => T): RDD[T] = {
+  def rdd[T: ClassTag](sc: SparkContext, columns: Seq[String], pred: FilterPredicate,
+      limitPerFile: Int = Int.MaxValue)(row: Group => T): RDD[T] = {
     val paths = filesFor(pred)
     if (confB == null) synchronized {
       if (confB == null) confB = sc.broadcast(new SerializableConfiguration(conf))
@@ -124,7 +125,7 @@ final class PointReader(conf: Configuration, dir: String) {
       val rows = new PointReader.FileRows(ParquetFileReader.open(PointReader.inputFile(path, c),
         HadoopReadOptions.builder(c).withRecordFilter(filter).build()), columns, filter)
       Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => rows.close()))
-      rows.map(row)
+      rows.take(limitPerFile).map(row)
     })
   }
 }

@@ -100,8 +100,9 @@ final class MultiSearcher private[search] (locals: Seq[IndexSearcher], val field
     */
   private def expandAcrossShards(q: Query): Query = q match {
     case m: MultiTermQuery =>
-      // per-shard dictionary scans in parallel (independent bounded jobs);
-      // union sorted in UTF-8 BINARY order (Spark's orderBy("term") order —
+      // per-shard dictionary reads in parallel (driver-side seeks, or one
+      // bounded job each for the pattern and fuzzy kinds); union sorted in
+      // UTF-8 BINARY order (Spark's orderBy("term") order —
       // Ordering.String is UTF-16 code-unit order, which diverges for
       // supplementary-plane terms and would reorder the disjunction's
       // float64 sum vs the monolithic expansion)

@@ -61,12 +61,12 @@ final case class PrefixQuery(prefix: String, boost: Float = 1.0f,
   * Absent in the reference (the classic QP lexes the tokens but the
   * handlers panic, queryParserBase.go:220-226) — additive, evaluated like
   * [[PrefixQuery]] by analysis-time dictionary expansion: the literal
-  * prefix before the first wildcard pushes down as a range scan
-  * (StringStartsWith), the rest filters DISTRIBUTED as an anchored regex,
-  * and the ≤1024 surviving terms become a sorted SHOULD disjunction with
-  * per-term statistics. A LEADING wildcard loses the pushdown and scans the
-  * vocabulary — vocabulary-sized, never corpus-sized, but prefer an
-  * anchored pattern at scale.
+  * prefix before the first wildcard bounds a byte-range read of the terms
+  * table, the full pattern is checked as an anchored regex in the tasks of
+  * one job over the terms files, and the ≤1024 surviving terms become a
+  * sorted SHOULD disjunction with per-term statistics. A LEADING wildcard
+  * has no byte range and scans the field's vocabulary — vocabulary-sized,
+  * never corpus-sized, but prefer an anchored pattern at scale.
   */
 final case class WildcardQuery(pattern: String, boost: Float = 1.0f,
     field: Option[String] = None) extends MultiTermQuery
@@ -74,12 +74,12 @@ final case class WildcardQuery(pattern: String, boost: Float = 1.0f,
 /** Fuzzy term query `term~N` (N = max Levenshtein edits, 0..2; bare `~`
   * means 2 — classic syntax; the reference has no fuzzy machinery at all).
   * Engine-defined distance = CLASSIC Levenshtein (insert/delete/substitute,
-  * no transpositions) so Spark's `levenshtein` evaluates the expansion
-  * distributed over the dictionary and DuckDB's `levenshtein` reproduces it
-  * in the oracle. Expansion terms score with their OWN statistics
-  * (SCORING_BOOLEAN_QUERY_REWRITE), same as prefix/wildcard; a
-  * length-window prefilter (|len(term) − len(q)| ≤ N) prunes the scan
-  * before the distance evaluation.
+  * no transpositions) over code points, so Spark's `levenshtein` (whose
+  * `UTF8String` distance the expansion's tasks run over the dictionary)
+  * and DuckDB's `levenshtein` in the oracle agree with it. Expansion terms
+  * score with their OWN statistics (SCORING_BOOLEAN_QUERY_REWRITE), same
+  * as prefix/wildcard; a length window (|len(term) − len(q)| ≤ N, both in
+  * code points) skips the distance for most terms.
   */
 final case class FuzzyQuery(term: String, maxEdits: Int = 2,
     boost: Float = 1.0f, field: Option[String] = None) extends MultiTermQuery
@@ -87,9 +87,9 @@ final case class FuzzyQuery(term: String, maxEdits: Int = 2,
 /** Term range query `field:[a TO b]` (inclusive) / `{a TO b}` (exclusive),
   * absent in the reference. Bounds compare as raw term strings
   * (lexicographic — the dictionary's sort order); `None` leaves a side
-  * open. Both bounds push down to the parquet dictionary scan
-  * (GreaterThan/LessThan on the term column); the 1024-clause cap is the
-  * rewrite budget like every other multi-term query.
+  * open. Both bounds are parquet predicates of a driver-side read of the
+  * terms table (UTF-8 byte order, no Spark job); the 1024-clause cap is
+  * the rewrite budget like every other multi-term query.
   */
 final case class TermRangeQuery(lower: Option[String], upper: Option[String],
     includeLower: Boolean = true, includeUpper: Boolean = true,
@@ -98,10 +98,11 @@ final case class TermRangeQuery(lower: Option[String], upper: Option[String],
 /** Regexp term query `/pattern/` — anchored full-term match over the
   * dictionary. The reference lexes REGEXPTERM but panics in the handler
   * (/root/reference/queryparser/classic/queryParserBase.go:192-193), so the
-  * SEMANTICS are engine-defined: Java regex via Spark's codegen'd `rlike`
-  * (`^(?:pattern)$` anchoring), evaluated distributed over the
-  * vocabulary-sized terms table with the pattern's leading literal run
-  * pushed down as a StringStartsWith prefix. The pattern is matched against
+  * SEMANTICS are engine-defined: Java regex as Spark's `rlike` runs it
+  * (`^(?:pattern)$` anchoring), checked in the tasks of one job over the
+  * vocabulary-sized terms table, with the pattern's leading literal run
+  * (when no quantifier or alternation can skip it) as a byte range. The
+  * pattern is matched against
   * index terms AS STORED (analyzed fields hold lowercase terms — write
   * lowercase patterns; lowering a regex would corrupt classes like [A-Z]).
   */

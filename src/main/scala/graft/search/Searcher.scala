@@ -4,14 +4,15 @@ import scala.reflect.ClassTag
 
 import org.apache.spark.Partitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.codec.PostingsCodec
-import graft.index.{IndexManifest, PointReader, TableSchemas}
+import graft.index.{IndexManifest, PointReader}
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate, Operators}
 import org.apache.parquet.io.api.Binary
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Compiled, serializable query plan: per-leaf scorers bound to term indexes
   * within the query's term universe (up to 1024 distinct terms, mirroring the
@@ -297,7 +298,7 @@ private[search] object Eval {
 }
 
 /** Everything searchers derive from one commit of one index: manifest,
-  * Spark tables, point readers, field statistics and the byte-bounded LRU
+  * point readers, the docs table, field statistics and the byte-bounded LRU
   * (the reference's query-cache analogue; a commit is a point-in-time view,
   * so entries never go stale) of what is read per query input: term stats
   * (absent terms included), posting rows, multi-term expansions,
@@ -306,35 +307,24 @@ private[search] object Eval {
   * one instance and pays each read once.
   */
 private[search] final class CommitState(spark: SparkSession, val indexPath: String) {
-  import spark.implicits._
-
   val manifest: IndexManifest = IndexManifest.load(spark, indexPath)
 
-  /** Parquet point readers: every lookup whose result is collected to the
-    * driver (term stats, prefix expansion, driver-local posting rows, stored
-    * docs) reads through these with no Spark job, and the distributed
-    * evaluation's tasks read their posting files through the same per-file
-    * read ([[PointReader.rdd]]). Each lists its table now, with the
-    * manifest, so the commit's postings and docs are the files present when
-    * it opened: a wave appended later is invisible to it (its stats are not
-    * in this manifest).
+  /** Parquet point readers, the only read of the terms and postings
+    * tables: driver lookups (term stats, prefix and range expansion, posting
+    * rows, stored docs) read through these with no Spark job, and every job
+    * over terms or postings runs the same per-file read in its tasks
+    * ([[PointReader.rdd]]). Each lists its table now, with the manifest, so
+    * the commit's files are those present when it opened: a wave appended
+    * later is invisible to it (its stats are not in this manifest).
     */
   private def hadoopConf = spark.sparkContext.hadoopConfiguration
   val termsReader = new PointReader(hadoopConf, manifest.termsLocation)
   val postingsReader = new PointReader(hadoopConf, s"$indexPath/postings")
   val docsReader = new PointReader(hadoopConf, s"$indexPath/docs")
 
-  /** The Spark reads (WAND's bound scan, multi-term expansion beyond
-    * prefixes, suggestions) use explicit schemas: opening a table launches
-    * no schema-inference job. Postings and docs read the readers' files.
-    */
-  lazy val termsDF: DataFrame =
-    spark.read.schema(TableSchemas.terms).parquet(manifest.termsLocation)
-  lazy val postingsDF: DataFrame =
-    spark.read.schema(TableSchemas.postings(manifest.formatVersion))
-      .option("basePath", s"$indexPath/postings").parquet(postingsReader.paths: _*)
-  /** Stored docs; version-1 indexes predate per-field dls and read an
-    * empty map (the per-field read paths fall back to dl).
+  /** Stored docs as a Spark table for facets, sort, grouping and
+    * match-all; version-1 indexes predate per-field dls and read an empty
+    * map (the per-field read paths fall back to dl).
     */
   lazy val docsDF: DataFrame = {
     val d = spark.read.option("basePath", s"$indexPath/docs").parquet(docsReader.paths: _*)
@@ -633,16 +623,6 @@ final class IndexSearcher private (
   /** Summed weight of the commit LRU's entries. */
   private[graft] def cacheBytesInUse: Long = commit.bytesInUse
 
-  /** Exact pushdown predicate for a set of (field, term) pairs: one
-    * `field = f AND term IN (...)` disjunct per field (parquet row-group
-    * pruning works on both columns).
-    */
-  private def pairPredicate(keys: Seq[(String, String)]) =
-    if (keys.isEmpty) lit(false) // zero term leaves → zero hits, not a crash
-    else keys.groupBy(_._1).map { case (f, ks) =>
-      col("field") === f && col("term").isin(ks.map(_._2).distinct: _*)
-    }.reduce(_ || _)
-
   /** Compile a rewritten query into a plan whose leaves carry scorers
     * bound to `mode` — the one place a score mode is chosen. TF-IDF's
     * two-phase queryNorm (search.go:152-169: v = Σ leaf weight², qn = f(v);
@@ -743,98 +723,109 @@ final class IndexSearcher private (
     node(Query.rewrite(q0), 1.0f)
   }
 
-  /** Matching dictionary terms for a prefix: a seek of the term-sorted
-    * dictionary through the terms point reader, no Spark job. The prefix
-    * becomes the UTF-8 byte range [prefix, successor), so footer and page
-    * statistics skip everything outside it; each file stops after 1025
-    * matches (one past the budget), and the files merge in UTF-8 binary
-    * order — the order of the Spark expansions' `orderBy("term")`.
+  /** Sorted terms of field `f` in the UTF-8 byte range `range` passing
+    * `check`, at most 1024 — the reference maxClauseCount as the rewrite
+    * budget, so the read is bounded whatever the vocabulary; `what` names
+    * the leaf and `remedy` the fix in the over-budget error. Each terms
+    * file yields at most 1025 matches (one past the budget) in its term
+    * order, and the files merge in UTF-8 binary order, Spark's
+    * `orderBy("term")`.
     */
-  private def prefixTerms(f: String, prefix: String): Seq[String] = {
-    require(prefix.nonEmpty, "empty prefix (bare '*' queries are not supported)")
-    val term = FilterApi.binaryColumn("term")
-    val from: FilterPredicate =
-      FilterApi.gtEq[Binary, Operators.BinaryColumn](term, Binary.fromString(prefix))
-    val inRange = PointReader.utf8Successor(prefix).fold(from)(to =>
-      FilterApi.and(from, FilterApi.lt[Binary, Operators.BinaryColumn](term, to)))
-    val terms = commit.termsReader.read(Seq("field", "term"),
-        Some(FilterApi.and(PointReader.stringIn("field", Seq(f)), inRange)),
-        limitPerFile = 1025)(_.getString("term", 0))
-      .sorted(graft.index.IndexBuilder.utf8Order).take(1025)
-    withinBudget(terms, s"prefix '$f:$prefix*'", "narrow the prefix")
-  }
-
-  /** The sorted dictionary terms of field `f` matching `where`, at most
-    * 1024 — the reference maxClauseCount acting as the rewrite budget, so
-    * the collect is bounded whatever the vocabulary. `what` names the leaf
-    * and `remedy` the fix in the over-budget error.
-    */
-  private def expansion(f: String, where: Column, what: String, remedy: String): Seq[String] =
-    withinBudget(describe(s"graft expand $what") {
-      commit.termsDF.where(col("field") === f && where)
-        .select("term").orderBy("term").limit(1025)
-        .as[String].collect().toSeq
-    }, what, remedy)
-
-  /** `terms` when within the 1024-term rewrite budget, else the error
-    * naming the leaf (`what`) and its fix (`remedy`).
-    */
-  private def withinBudget(terms: Seq[String], what: String, remedy: String): Seq[String] = {
+  private def dictionaryTerms(f: String, range: Option[FilterPredicate],
+      check: Option[TermCheck], what: String, remedy: String): Seq[String] = {
+    val terms = scanTerms(f, range, check, Seq("field", "term"), 1025, s"graft expand $what")(
+      _.getString("term", 0)).sorted(graft.index.IndexBuilder.utf8Order).take(1025)
     require(terms.size <= 1024,
       s"$what expands to more than 1024 terms (reference maxClauseCount is the " +
         s"rewrite budget) — $remedy")
     terms
   }
 
-  /** `term` starts with `pre` (parquet StringStartsWith pushdown) — no
-    * condition for an empty literal prefix.
+  /** Rows of field `f`'s dictionary in `range` passing `check`, at most
+    * `limitPerFile` from each terms file. Without a check the cap bounds a
+    * driver-side read (no Spark job); a check may reject any number of rows
+    * before the cap, so those files are read by the tasks of one job
+    * described `job`, each running the same per-file read
+    * ([[PointReader.rdd]]).
     */
-  private def startsWithLiteral(pre: String): Column =
-    if (pre.nonEmpty) col("term").startsWith(pre) else lit(true)
+  private def scanTerms[T: ClassTag](f: String, range: Option[FilterPredicate],
+      check: Option[TermCheck], columns: Seq[String], limitPerFile: Int, job: String)(
+      row: Group => T): Seq[T] = {
+    val pred = (PointReader.stringIn("field", Seq(f)) +: (range.toSeq ++ check.map(_.predicate)))
+      .reduce(FilterApi.and)
+    if (check.isEmpty) commit.termsReader.read(columns, Some(pred), limitPerFile)(row)
+    else describe(job) {
+      commit.termsReader.rdd(spark.sparkContext, columns, pred, limitPerFile)(row).collect().toSeq
+    }
+  }
+
+  /** `term` within UTF-8 byte bounds, each (bound, inclusive); None when
+    * both sides are open.
+    */
+  private def termRange(lo: Option[(Binary, Boolean)],
+      hi: Option[(Binary, Boolean)]): Option[FilterPredicate] = {
+    val t = FilterApi.binaryColumn("term")
+    // typed as FilterPredicate: the branches' inferred common type is
+    // package-private in parquet and fails access checks at run time
+    (lo.map[FilterPredicate] { case (b, inc) =>
+      if (inc) FilterApi.gtEq[Binary, Operators.BinaryColumn](t, b)
+      else FilterApi.gt[Binary, Operators.BinaryColumn](t, b)
+    } ++ hi.map[FilterPredicate] { case (b, inc) =>
+      if (inc) FilterApi.ltEq[Binary, Operators.BinaryColumn](t, b)
+      else FilterApi.lt[Binary, Operators.BinaryColumn](t, b)
+    }).reduceOption(FilterApi.and)
+  }
+
+  /** The terms starting with `prefix`: [prefix, UTF-8 successor). */
+  private def startsWith(prefix: String): Option[FilterPredicate] =
+    if (prefix.isEmpty) None
+    else termRange(Some((Binary.fromString(prefix), true)),
+      PointReader.utf8Successor(prefix).map((_, false)))
 
   /** Matching dictionary terms for a wildcard pattern (`*` any run, `?` one
-    * char): the literal prefix before the first wildcard pushes down
-    * (StringStartsWith), the full pattern filters DISTRIBUTED as an anchored
-    * regex BEFORE the 1025-row limit (filtering after the limit could drop
-    * matching terms hiding behind non-matching prefix-mates). A leading
-    * wildcard degrades to a vocabulary scan — dictionary-sized, never
-    * corpus-sized.
+    * char): the literal prefix before the first wildcard bounds the byte
+    * range, and the full pattern, as an anchored regex, is the row check
+    * of one job over the terms files. A leading wildcard scans the field's
+    * whole vocabulary — dictionary-sized, never corpus-sized.
     */
   private def wildcardTerms(f: String, pattern: String): Seq[String] = {
     require(pattern.exists(c => c != '*' && c != '?'),
       s"wildcard pattern '$pattern' has no literal characters")
-    val pre = pattern.takeWhile(c => c != '*' && c != '?')
-    // anchored regex from the pattern, literals quoted
-    val rx = pattern.map {
-      case '*' => ".*"
-      case '?' => "."
-      case c => java.util.regex.Pattern.quote(c.toString)
-    }.mkString("^", "", "$")
-    expansion(f, startsWithLiteral(pre) && col("term").rlike(rx),
-      s"wildcard '$f:$pattern'", "narrow the pattern")
+    // literal runs are quoted whole, so a surrogate pair stays one character
+    val rx = pattern.split("(?<=[*?])|(?=[*?])").map {
+      case "*" => ".*"
+      case "?" => "."
+      case run => java.util.regex.Pattern.quote(run)
+    }.mkString
+    dictionaryTerms(f, startsWith(pattern.takeWhile(c => c != '*' && c != '?')),
+      Some(RegexCheck(rx)), s"wildcard '$f:$pattern'", "narrow the pattern")
   }
 
   /** Matching dictionary terms for an anchored regex: the pattern's leading
-    * LITERAL run (chars before the first regex metacharacter) pushes down as
-    * StringStartsWith; the full `^(?:pat)$` match filters distributed via
-    * the codegen'd `rlike` before the 1025-row cap — a vocabulary-sized
-    * scan, never corpus-sized (same shape as [[wildcardTerms]]).
+    * literal run bounds the byte range — minus its last character when a
+    * quantifier that allows zero repeats follows it, and not at all when
+    * the pattern holds an alternation — and the full `^(?:pat)$` match is
+    * the row check (same shape as [[wildcardTerms]]).
     */
   private def regexpTerms(f: String, pattern: String): Seq[String] = {
     require(pattern.nonEmpty, "empty regexp pattern")
-    // cheap insurance on a user-facing query type: the pattern fans out
-    // through rlike over the vocabulary, so a catastrophic-backtracking
-    // pattern would stall every dictionary task. Dictionary-sized input
-    // already caps the blast radius; these guards make the failure a fast
-    // driver-side error instead.
+    // cheap insurance on a user-facing query type: the pattern runs over
+    // the vocabulary, so a catastrophic-backtracking pattern would stall
+    // every dictionary task. Dictionary-sized input already caps the blast
+    // radius; these guards make the failure a fast driver-side error.
     require(pattern.length <= 256,
       s"regexp pattern is ${pattern.length} chars — cap is 256")
     java.util.regex.Pattern.compile(pattern) // fail fast on driver with a clear error
     require(!nestsQuantifier(pattern),
       s"regexp '/$pattern/' nests a quantifier inside a quantified group " +
         "(catastrophic-backtracking guard) — rewrite without nested quantifiers")
-    val pre = pattern.takeWhile(c => !"\\^$.|?*+()[]{}".contains(c))
-    expansion(f, startsWithLiteral(pre) && col("term").rlike(s"^(?:$pattern)$$"),
+    val run = pattern.takeWhile(c => !"\\^$.|?*+()[]{}".contains(c))
+    val pre =
+      if (pattern.contains('|')) ""
+      else if (run.nonEmpty && run.length < pattern.length && "?*{".contains(pattern(run.length)))
+        run.substring(0, run.offsetByCodePoints(run.length, -1))
+      else run
+    dictionaryTerms(f, startsWith(pre), Some(RegexCheck(pattern)),
       s"regexp '$f:/$pattern/'", "narrow the pattern")
   }
 
@@ -864,7 +855,10 @@ final class IndexSearcher private (
     * expansion: same matching terms, same sorted order). Cached in the
     * commit's LRU under the leaf itself with boost and field normalized away,
     * so each expansion kind has its own key space and a boost never splits
-    * an entry.
+    * an entry. Prefix and term range (either side open, in UTF-8 byte
+    * order) are byte ranges of `term` read on the driver; fuzzy checks
+    * CLASSIC Levenshtein distance over the field's vocabulary
+    * ([[FuzzyCheck]]), a vocabulary-sized scan, never corpus-sized.
     */
   private[search] def expansionTerms(m: MultiTermQuery): Seq[String] = {
     val fn = m.field.getOrElse(field)
@@ -877,40 +871,22 @@ final class IndexSearcher private (
     }
     commit.cached(ExpansionKey(fn, leaf)) {
       leaf match {
-        case PrefixQuery(p, _, _) => prefixTerms(fn, p)
+        case PrefixQuery(p, _, _) =>
+          require(p.nonEmpty, "empty prefix (bare '*' queries are not supported)")
+          dictionaryTerms(fn, startsWith(p), None, s"prefix '$fn:$p*'", "narrow the prefix")
         case WildcardQuery(pat, _, _) => wildcardTerms(fn, pat)
-        case FuzzyQuery(t, e, _, _) => fuzzyTerms(fn, t, e)
-        case TermRangeQuery(lo, hi, il, iu, _, _) => rangeTerms(fn, lo, hi, il, iu)
+        case FuzzyQuery(t, e, _, _) =>
+          require(e >= 0 && e <= 2, s"fuzzy maxEdits must be 0..2 (Lucene's classic bound), got $e")
+          dictionaryTerms(fn, None, Some(FuzzyCheck(t, e)), s"fuzzy '$fn:$t~$e'",
+            "raise specificity")
+        case TermRangeQuery(lo, hi, il, iu, _, _) =>
+          require(lo.nonEmpty || hi.nonEmpty, "term range needs at least one bound")
+          dictionaryTerms(fn, termRange(lo.map(l => (Binary.fromString(l), il)),
+              hi.map(h => (Binary.fromString(h), iu))), None,
+            s"range '$fn:[${lo.getOrElse("*")} TO ${hi.getOrElse("*")}]'", "narrow the bounds")
         case RegexpQuery(pat, _, _) => regexpTerms(fn, pat)
       }
     }
-  }
-
-  /** Matching dictionary terms within `maxEdits` CLASSIC Levenshtein edits:
-    * a length-window prefilter (|len − len(q)| ≤ maxEdits) bounds the
-    * distance evaluation, which runs DISTRIBUTED via the codegen'd
-    * `levenshtein` expression — the whole expansion is a vocabulary-sized
-    * scan, never corpus-sized.
-    */
-  private def fuzzyTerms(f: String, q: String, maxEdits: Int): Seq[String] = {
-    require(maxEdits >= 0 && maxEdits <= 2,
-      s"fuzzy maxEdits must be 0..2 (Lucene's classic bound), got $maxEdits")
-    expansion(f,
-      length(col("term")).between(q.length - maxEdits, q.length + maxEdits) &&
-        levenshtein(col("term"), lit(q)) <= maxEdits,
-      s"fuzzy '$f:$q~$maxEdits'", "raise specificity")
-  }
-
-  /** Dictionary terms within a lexicographic [lower, upper] range (either
-    * side open): both bounds push down to the parquet scan.
-    */
-  private def rangeTerms(f: String, lo: Option[String], hi: Option[String],
-      incLo: Boolean, incHi: Boolean): Seq[String] = {
-    require(lo.nonEmpty || hi.nonEmpty, "term range needs at least one bound")
-    val above = lo.fold(lit(true))(l => if (incLo) col("term") >= l else col("term") > l)
-    val below = hi.fold(lit(true))(h => if (incHi) col("term") <= h else col("term") < h)
-    expansion(f, above && below,
-      s"range '$f:[${lo.getOrElse("*")} TO ${hi.getOrElse("*")}]'", "narrow the bounds")
   }
 
   private[search] def prepare(q0: Query, mode: ScoreMode): Prepared = {
@@ -979,25 +955,24 @@ final class IndexSearcher private (
     commit.docsDF.select(col("docId"), col(c))
   }
 
-  /** One Spark scan of the vocabulary-sized terms table with the
-    * length-window prefilter of [[fuzzyTerms]] (postings untouched), ranked
-    * and limited when `topN` is given. Cached like the expansions: one
-    * input's candidates are vocabulary-bounded, so a repeat runs no job.
+  /** Suggestion candidates of `input`: one job over field `f`'s vocabulary
+    * with the fuzzy expansion's [[FuzzyCheck]] (postings untouched), the
+    * input dropped,
+    * ranked and cut on the driver when `topN` is given. Cached like the
+    * expansions: one input's candidates are vocabulary-bounded, so a repeat
+    * runs no job.
     */
   private[search] def suggestions(input: String, maxEdits: Int, topN: Option[Int],
       f: String): Seq[(String, Long, Int)] =
     commit.cached(SuggestKey(input, maxEdits, topN, f)) {
-      describe(s"graft suggest '$f:$input'~$maxEdits") {
-        val all = commit.termsDF
-          .where(col("field") === f &&
-            length(col("term")).between(input.length - maxEdits, input.length + maxEdits) &&
-            col("term") =!= input)
-          .select(col("term"), col("docFreq"),
-            levenshtein(col("term"), lit(input)).as("dist"))
-          .where(col("dist") <= maxEdits)
-        topN.fold(all)(all.orderBy(col("dist").asc, col("docFreq").desc, col("term").asc).limit)
-          .collect().map(r => (r.getString(0), r.getLong(1), r.getInt(2))).toSeq
+      val u = UTF8String.fromString(input)
+      val all = scanTerms(f, None, Some(FuzzyCheck(input, maxEdits)),
+          Seq("field", "term", "docFreq"), Int.MaxValue, s"graft suggest '$f:$input'~$maxEdits")(
+          g => (g.getString("term", 0), g.getLong("docFreq", 0))).collect {
+        case (t, df) if t != input => (t, df, UTF8String.fromString(t).levenshteinDistance(u))
       }
+      topN.fold(all)(all.sortBy { case (t, df, dist) => (dist, -df, t) }(
+        Ordering.Tuple3(Ordering.Int, Ordering.Long, graft.index.IndexBuilder.utf8Order)).take)
     }
 
   /** True when a group quantified by `*`, `+` or `{n}` has a body (nested
@@ -1157,13 +1132,17 @@ final class IndexSearcher private (
     acc.map { case (id, spans) => id -> Snippets.coalesce(spans.toSeq) }.toMap
   }
 
-  /** Posting-row METADATA of the query keys (no payloads → Parquet column
-    * pruning): feeds WAND bound computation.
+  /** WAND's bound scan: `(key, maxFreq, minDl)` of the posting rows of
+    * `keys` (payloads never read), one task per postings file
+    * ([[PointReader.rdd]]), grouped by rangeId on the range partitions.
     */
-  def postingRowsMeta(keys: Seq[(String, String)]): DataFrame =
-    commit.postingsDF
-      .where(pairPredicate(keys))
-      .select("field", "term", "rangeId", "docFreq", "maxFreq", "minDl")
+  private[search] def rowBoundsByRange(
+      keys: Seq[(String, String)]): RDD[(Long, Iterable[((String, String), Int, Int)])] =
+    commit.postingsReader.rdd(spark.sparkContext,
+        Seq("field", "term", "rangeId", "maxFreq", "minDl"), PointReader.pairs(keys)) { g =>
+      (g.getLong("rangeId", 0), ((g.getString("field", 0), g.getString("term", 0)),
+        g.getInteger("maxFreq", 0), g.getInteger("minDl", 0)))
+    }.groupByKey(new RangeJob.ByRange(commit.rangeParts, 1))
 
   /** Collected rows for a full-key (unfiltered) driver-local evaluation,
     * served from / inserted into the cache per term.

@@ -1,7 +1,5 @@
 package graft.search
 
-import org.apache.spark.sql.functions._
-
 import graft.codec.SmallFloat
 
 /** Block-max-WAND-style pruned top-k (north-star requirement; additive over
@@ -27,12 +25,15 @@ import graft.codec.SmallFloat
   * bound. Both phases read row *metadata* without payloads (Parquet column
   * pruning); payload decode happens only for surviving ranges.
   *
-  * Scale: the bounds aggregation shuffles metadata rows only (bytes per row),
-  * phase selection is a distributed top-B (TakeOrdered), and surviving-range
+  * Scale: the bound scan is one plain RDD over the postings reader's
+  * per-file read ([[IndexSearcher.rowBoundsByRange]]): metadata columns
+  * only, grouped by rangeId on the range partitions of the distributed
+  * evaluation, so its shuffle moves a few bytes per row and builds no
+  * Catalyst plan. Phase 1 is a `takeOrdered` of that RDD, phase 2 filters
+  * the same RDD (both read the one shuffle's output), and surviving-range
   * selection collects at most [[SurvivorCollectMax]] ids — beyond that the
   * survivor set stays distributed and joins the posting rows on the range
-  * partitions of the distributed evaluation, so nothing driver-side grows
-  * with the corpus.
+  * partitions, so nothing driver-side grows with the corpus.
   */
 object Wand {
 
@@ -221,8 +222,6 @@ object Wand {
     }
 
   private def pruned(searcher: IndexSearcher, p: Prepared, k: Int, phase1Count: Int): TopDocs = {
-    val spark = searcher.sparkSession
-    import spark.implicits._
     val root = boundTree(p.ge.planRoot)
     if (root == BNever) return TopDocs(0, Array.empty)
 
@@ -238,35 +237,26 @@ object Wand {
     }
     val scoringKeys = treeIdxs(root).distinct.map(p.keys)
 
-    // per-range bound + eligibility in ONE typed pass over the range's
-    // metadata rows (groupByKey on rangeId): <= #query keys x #live waves
-    // entries of a few bytes each per group -- a bounded buffer, never
-    // O(docs). Typed rows, no string codec (round-4 judge fix: the former
-    // concat_ws encoding would break on a term containing the separator).
+    // per-range bound + eligibility over the range's metadata rows, which
+    // one shuffle groups by rangeId; both phases' jobs read that shuffle's
+    // output, so the metadata is scanned once per query
     val termIdx = p.keys.zipWithIndex.toMap
-    val nTerms = p.keys.size
-    val eligible = searcher.postingRowsMeta(scoringKeys)
-      .select(col("field"), col("term"), col("rangeId"), col("maxFreq"), col("minDl"))
-      .as[(String, String, Long, Int, Int)]
-      .groupByKey(_._3)
-      .mapGroups { (rangeId: Long, it: Iterator[(String, String, Long, Int, Int)]) =>
-        val byIdx = new Array[scala.collection.mutable.ArrayBuffer[(Int, Int)]](nTerms)
-        it.foreach { case (f, t, _, maxFreq, minDl) =>
-          val i = termIdx((f, t))
-          if (byIdx(i) == null) byIdx(i) = scala.collection.mutable.ArrayBuffer.empty
-          byIdx(i) += ((maxFreq, minDl))
-        }
-        val (b, e) = evalNode(root, byIdx)
-        (rangeId, b, e)
+    val eligible = searcher.rowBoundsByRange(scoringKeys).flatMap { case (rangeId, rows) =>
+      val byIdx = new Array[scala.collection.mutable.ArrayBuffer[(Int, Int)]](termIdx.size)
+      rows.foreach { case (key, maxFreq, minDl) =>
+        val i = termIdx(key)
+        if (byIdx(i) == null) byIdx(i) = scala.collection.mutable.ArrayBuffer.empty
+        byIdx(i) += ((maxFreq, minDl))
       }
-      .toDF("rangeId", "rangeBound", "eligible")
-      .where(col("eligible"))
-      .select(col("rangeId"), col("rangeBound"))
+      val (b, e) = evalNode(root, byIdx)
+      if (e) Some((rangeId, b)) else None
+    }
 
-    // phase 1: best-bound eligible ranges (distributed TakeOrdered, tiny)
+    // phase 1: best-bound eligible ranges (bound desc, rangeId asc; a
+    // distributed top-B, tiny)
     val phase1 = searcher.describe(s"graft wand phase 1 bounds: ${p.keyText}") {
-      eligible.orderBy(col("rangeBound").desc, col("rangeId"))
-        .limit(phase1Count).as[(Long, Double)].collect()
+      eligible.takeOrdered(phase1Count)(
+        Ordering.by[(Long, Double), (Double, Long)](r => (-r._2, r._1)))
     }
     if (phase1.isEmpty) return TopDocs(0, Array.empty)
     val phase1Set = phase1.map(_._1).toSet
@@ -285,11 +275,9 @@ object Wand {
     // is exactly attainable, and a doc scoring exactly τ with a smaller docId
     // wins the (score desc, docId asc) tie-break — strict > would prune it
     // and break 'pruned ≡ exhaustive' (advisor round-2 fix, WandSpec case)
-    val survivorsDF = eligible
-      .where(col("rangeBound") >= tau && !col("rangeId").isin(phase1Set.toSeq: _*))
-      .select("rangeId")
+    val survivors = eligible.filter(r => r._2 >= tau && !phase1Set(r._1)).map(_._1)
     val probe = searcher.describe(s"graft wand phase 2 survivors: ${p.keyText}") {
-      survivorsDF.limit(SurvivorCollectMax + 1).as[Long].collect()
+      survivors.mapPartitions(_.take(SurvivorCollectMax + 1)).collect()
     }
     val merged = new BoundedHitQueue(k)
     r1.scoreDocs.foreach(d => merged.insert(d.docId, d.score))
@@ -297,9 +285,7 @@ object Wand {
     if (probe.nonEmpty) {
       val sel =
         if (probe.length <= SurvivorCollectMax) RangeSel.Ids(probe.toSeq)
-        else searcher.describe(s"graft wand phase 2 survivors: ${p.keyText}") {
-          RangeSel.Df(survivorsDF.as[Long].rdd)
-        }
+        else RangeSel.Df(survivors)
       val r2 = searcher.evalRanges(p, Some(sel), k)
       r2.scoreDocs.foreach(d => merged.insert(d.docId, d.score))
       total += r2.totalHits

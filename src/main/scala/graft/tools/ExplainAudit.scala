@@ -1,16 +1,18 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
-/** Prints formatted physical plans for the hot paths so scan pushdown /
-  * column pruning / codegen coverage can be audited (the "explain and
-  * iterate" loop). Usage: runMain graft.tools.ExplainAudit <indexPath> <sfDir>
+/** Prints formatted physical plans of the Catalyst pipelines (quality,
+  * exact dedup, ANN brute force) so their scan pushdown, exchanges and
+  * codegen coverage can be audited (the "explain and iterate" loop). The
+  * searcher reads its terms and postings through point readers, not
+  * Catalyst, so it has no plan here.
+  * Usage: runMain graft.tools.ExplainAudit <sfDir>
   */
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
-    val indexPath = args.headOption.getOrElse("/tmp/vidx")
-    val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.01")
+    require(args.length == 1, "usage: ExplainAudit <sfDir>")
+    val sfDir = args(0)
     val spark = SparkSession.builder().master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.ui.enabled", "false").getOrCreate()
@@ -20,31 +22,6 @@ object ExplainAudit {
       println(s"\n========== $name ==========")
       println(df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode))
-    }
-
-    audit("postings scan, term pushdown + column pruning") {
-      spark.read.parquet(s"$indexPath/postings")
-        .where(col("field") === "content" && col("term").isin("merge", "sort"))
-        .select("term", "rangeId", "firstDocId", "payload")
-    }
-
-    audit("postings metadata scan (WAND bounds: no payload columns)") {
-      spark.read.parquet(s"$indexPath/postings")
-        .where(col("term").isin("merge"))
-        .select("term", "rangeId", "docFreq", "maxFreq", "minDl")
-    }
-
-    audit("multi-field pair predicate (OR of field=AND term-IN) pushdown") {
-      // the searcher's pairPredicate shape for a fielded query
-      spark.read.parquet(s"$indexPath/postings")
-        .where((col("field") === "content" && col("term").isin("merge", "sort")) ||
-          (col("field") === "lang" && col("term").isin("de")))
-        .select("field", "term", "rangeId", "firstDocId", "payload")
-    }
-
-    audit("terms dict point lookup") {
-      spark.read.parquet(graft.index.IndexManifest.load(spark, indexPath).termsLocation)
-        .where(col("term") === "merge")
     }
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")

@@ -11,7 +11,9 @@ import graft.search._
   * analogues (facets on both, sharded grouping and suggest). Protocol per
   * BENCH.md: ≥20 INTERLEAVED reps per op on warmed searchers, p50 + p95
   * reported (host noise arrives in windows — interleaving exposes it to
-  * every op equally).
+  * every op equally). `cold_*` rows clear their searcher's LRU (`close()`)
+  * before every rep, so each rep reads the terms table; `mono_wand_pruned`
+  * has a zero driver-local bound, so each rep runs WAND's bound scan.
   *
   * Usage: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 sbt 'runMain graft.tools.OpBench'
   */
@@ -31,6 +33,10 @@ object OpBench {
       BooleanClause(Occur.SHOULD, TermQuery("spark"))))
     val mono = FtQueries.searcher(spark, sfDir)
     val multi = FtQueries.multiSearcher(spark, sfDir)
+    val cold = new IndexSearcher(spark, FtQueries.indexPath(spark, sfDir))
+    val pruned = new IndexSearcher(spark, FtQueries.indexPath(spark, sfDir))
+    pruned.localSearchMaxPostings = 0
+    def coldOp(f: IndexSearcher => Any): () => Unit = () => { cold.close(); f(cold); () }
 
     val ops: Seq[(String, () => Unit)] = Seq(
       ("mono_search", () => { mono.search(q, 10, ScoreMode.ExactDouble); () }),
@@ -42,7 +48,14 @@ object OpBench {
       ("sharded_facets", () => { multi.facetCounts(q, "lang").collect(); () }),
       ("sharded_grouped", () => {
         multi.groupedSearch(q, "lang", 3, 4, ScoreMode.ExactDouble).collect(); () }),
-      ("sharded_suggest", () => { multi.suggestTerms("sart", 2, 5).collect(); () }))
+      ("sharded_suggest", () => { multi.suggestTerms("sart", 2, 5).collect(); () }),
+      ("mono_wand_pruned", () => { Wand.searchTopK(pruned, q, 10, ScoreMode.ExactDouble); () }),
+      ("cold_suggest", coldOp(_.suggestTerms("sart", 2, 5).collect()))) ++
+      Seq("wildcard" -> "*ue*", "regexp" -> "/s[ct][a-z]+/", "fuzzy" -> "vale~2",
+          "range" -> "commit:[100 TO 104]").map { case (kind, text) =>
+        val cq = FtQueries.parser.parse(text)
+        (s"cold_$kind", coldOp(_.search(cq, 10, ScoreMode.ExactDouble)))
+      }
 
     // warm every path (index builds resume from cache; stats caches fill)
     ops.foreach { case (_, f) => f(); f() }
@@ -62,7 +75,7 @@ object OpBench {
     println(f"| op | p50 ms | p95 ms |  ($reps interleaved reps, $sfDir)")
     ops.foreach { case (name, _) =>
       val v = times(name)
-      println(f"| $name%-15s | ${pct(v, 0.50)}%8.1f | ${pct(v, 0.95)}%8.1f |")
+      println(f"| $name%-16s | ${pct(v, 0.50)}%8.1f | ${pct(v, 0.95)}%8.1f |")
     }
     spark.stop()
   }

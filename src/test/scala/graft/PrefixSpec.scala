@@ -425,10 +425,11 @@ class PrefixSpec extends AnyFunSuite with SparkTestBase {
     assert(ok.totalHits == 1) // all terms live in the single doc
   }
 
-  test("prefix expansion seeks the terms dictionary on the driver: ≡ Spark startsWith, no job") {
-    // keyword values whose UTF-8 order differs from UTF-16 order (U+FF41 is
-    // below a surrogate pair in UTF-8, above it in UTF-16), supplementary
-    // values, and 1100 content terms for the over-budget case
+  /** Keyword values whose UTF-8 order differs from UTF-16 order (U+FF41 is
+    * below a surrogate pair in UTF-8, above it in UTF-16), supplementary
+    * values, and 1100 content terms for the over-budget case.
+    */
+  private lazy val seekDir = {
     val dir = java.nio.file.Files.createTempDirectory("graft-prefix-seek").toString
     val langs = Seq("k𝒳", "kａ", "ka", "kb", "𝒳lang",
       "𝒳𝒴", "go")
@@ -438,6 +439,11 @@ class PrefixSpec extends AnyFunSuite with SparkTestBase {
       docsPerRange = 64, numSegments = 2, segmentsPerWave = 2, buildPartitions = 4,
       keywordFields = Seq("lang"))
     new IndexBuilder(spark, cfg).build(docs, dir)
+    dir
+  }
+
+  test("prefix expansion seeks the terms dictionary on the driver: ≡ Spark startsWith, no job") {
+    val dir = seekDir
     val terms = spark.read.parquet(IndexManifest.load(spark, dir).termsLocation)
     val s = new IndexSearcher(spark, dir)
     def expanded(f: String, pre: String): Seq[String] =
@@ -460,6 +466,24 @@ class PrefixSpec extends AnyFunSuite with SparkTestBase {
     assert(jobs == 0)
     assert(err.getMessage.contains("prefix 'content:tok*' expands to more than 1024 terms"),
       err.getMessage)
+  }
+
+  // '𝒳𝒴' is 2 code points but 4 UTF-16 units: a length window taken from
+  // the query's UTF-16 length skips it
+  test("fuzzy length window counts code points on both sides") {
+    val s = new IndexSearcher(spark, seekDir)
+    val fuzzy = s.expandPrefixes(FuzzyQuery("𝒳𝒴", 1, field = Some("lang"))) match {
+      case BooleanQuery(cs, _, _) => cs.map(_.query).collect { case TermQuery(t, _, _) => t }
+      case other => fail(s"unexpected expansion $other")
+    }
+    assert(fuzzy == Seq("𝒳𝒴"))
+  }
+
+  test("suggest length window counts code points on both sides") {
+    val s = new IndexSearcher(spark, seekDir)
+    val suggested = s.suggestTerms("𝒳𝒴𝒵", maxEdits = 1, topN = 5, f = "lang").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getInt(2))).toSeq
+    assert(suggested == Seq(("𝒳𝒴", 1L, 1)))
   }
 
   test("regexp guard: pathological patterns error fast on the driver") {

@@ -23,13 +23,26 @@ object SparkJobs {
     * order ("" for a job without one).
     */
   def described[A](spark: SparkSession)(f: => A): (A, Seq[String]) = {
+    val (a, started) = jobs(spark)(f)
+    (a, started.map(_.description))
+  }
+
+  /** One started job: its description ("" without one) and the SQL
+    * execution it belongs to (`spark.sql.execution.id`; None for a job
+    * launched outside any Catalyst query).
+    */
+  final case class Job(description: String, sqlExecutionId: Option[String])
+
+  /** Every job the block launches, in start order. */
+  def jobs[A](spark: SparkSession)(f: => A): (A, Seq[Job]) = {
     val sc = spark.sparkContext
     TestBusDrain(sc)
-    val seen = new ConcurrentLinkedQueue[String]
+    val seen = new ConcurrentLinkedQueue[Job]
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties).flatMap(p =>
-          Option(p.getProperty("spark.job.description"))).getOrElse(""))
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        seen.add(Job(prop("spark.job.description").getOrElse(""), prop("spark.sql.execution.id")))
+      }
     }
     sc.addSparkListener(listener)
     try {
