@@ -14,8 +14,8 @@ import graft.search.{IndexSearcher, MultiSearcher, QueryParser, ScoreMode}
   * sbt "runMain graft.Cli search <indexDir> <k> <query...>"   # classic query syntax
   * sbt "runMain graft.Cli delete <indexDir> <field> <term>"   # persistent delete-by-term
   * sbt "runMain graft.Cli check <indexDir>"                   # CheckIndex validation
-  * sbt "runMain graft.Cli merge <indexDir>"                   # tiered merge (reclaim-aware) + republish
-  * sbt "runMain graft.Cli expunge <indexDir> [minFrac]"       # rewrite delete-heavy waves + republish
+  * sbt "runMain graft.Cli merge <indexDir>"                   # tiered merge (reclaim-aware), each merge committed
+  * sbt "runMain graft.Cli expunge <indexDir> [minFrac]"       # rewrite delete-heavy waves, each committed
   * sbt "runMain graft.Cli facets <indexDir> <col> <query...>" # value counts over all matches
   * sbt "runMain graft.Cli suggest <indexDir> <term> [maxEdits]" # did-you-mean spelling suggestions
   * sbt "runMain graft.Cli sort <indexDir> <col> <k> <query...>" # matches ordered by a stored column
@@ -121,12 +121,7 @@ object Cli {
       }
     case "merge" :: indexDir :: Nil =>
       val delsBefore = graft.index.Deletes.count(spark, indexDir)
-      val merged = graft.index.TieredMerge.maybeMergeReclaim(spark, indexDir)
-      // republish with the COMMITTED field config (docsPerRange, extra
-      // fields) — a default IndexConfig would corrupt the manifest of an
-      // index built with other settings (advisor round-4 fix)
-      if (merged.nonEmpty)
-        IndexBuilder.forExisting(spark, indexDir).publish(indexDir)
+      val merged = graft.index.TieredMerge.maybeMergeReclaim(spark, indexDir) // each merge commits
       val delsAfter = graft.index.Deletes.count(spark, indexDir)
       println(s"MERGED ${merged.size} groups into waves ${merged.mkString(",")}; " +
         s"deletes $delsBefore -> $delsAfter")
@@ -134,8 +129,6 @@ object Cli {
       val frac = rest.headOption.map(_.toDouble).getOrElse(0.1)
       val delsBefore = graft.index.Deletes.count(spark, indexDir)
       val rewritten = graft.index.TieredMerge.expungeDeletes(spark, indexDir, frac)
-      if (rewritten.nonEmpty)
-        IndexBuilder.forExisting(spark, indexDir).publish(indexDir)
       val delsAfter = graft.index.Deletes.count(spark, indexDir)
       println(s"EXPUNGED ${rewritten.size} waves (deleted fraction >= $frac); " +
         s"deletes $delsBefore -> $delsAfter")

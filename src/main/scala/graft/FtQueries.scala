@@ -90,10 +90,8 @@ object FtQueries {
         graft.index.Hashing.sha256Hex(sfDir).take(12)
       val built = new IndexBuilder(spark, surfaceConfig(_.copy(segmentsPerWave = 1)))
       built.build(surfaceCorpus(spark, sfDir), dir, resume = true)
-      if (graft.index.TieredMerge.waves(spark, dir).size > 1) {
+      if (graft.index.TieredMerge.waves(spark, dir).size > 1)
         graft.index.TieredMerge.maybeMerge(spark, dir, segsPerTier = 1, maxMergeAtOnce = 10)
-        built.publish(dir)
-      }
       dir
     })
 
@@ -107,17 +105,15 @@ object FtQueries {
         graft.index.Hashing.sha256Hex(sfDir).take(12)
       val built = new IndexBuilder(spark, surfaceConfig(_.copy(segmentsPerWave = 1)))
       built.build(surfaceCorpus(spark, sfDir), dir, resume = true)
-      if (graft.index.TieredMerge.waves(spark, dir).size > 1) {
+      if (graft.index.TieredMerge.waves(spark, dir).size > 1)
         graft.index.TieredMerge.maybeMergeWith(spark, dir,
           graft.index.TieredMerge.planLog(_, mergeFactor = 3), positional = true)
-        built.publish(dir)
-      }
       dir
     })
 
   /** A DELETE-RECLAIMED twin: built in single-segment waves, 20% of docs
-    * (doc_id % 5 == 0) deleted, fully merged WITH delete reclamation, then
-    * republished. Queries against it run with NO query-time delete view —
+    * (doc_id % 5 == 0) deleted, fully merged WITH delete reclamation (each
+    * merge commits). Queries against it run with NO query-time delete view —
     * matching the oracle (which recomputes BM25 over the survivor corpus
     * only) proves the dead postings are physically gone AND df/ttf/docCount/
     * avgdl were re-derived from the survivors.
@@ -135,7 +131,6 @@ object FtQueries {
               .where(col("doc_id") % 5 === 0)
               .select(col("doc_id").cast("long").as("docId")))
         graft.index.TieredMerge.maybeMerge(spark, dir, segsPerTier = 1, maxMergeAtOnce = 10)
-        built.publish(dir)
       }
       dir
     })
@@ -155,8 +150,7 @@ object FtQueries {
       val builder = new IndexBuilder(spark, surfaceConfig())
       builder.build(corpus.where(col("doc_id") < splitAt), dir, resume = true)
       val streamWave = graft.streaming.StreamingIndexer.StreamingWaveBase
-      val p = new org.apache.hadoop.fs.Path(s"$dir/postings/wave=$streamWave/_SUCCESS")
-      if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      if (!graft.index.IndexManifest.load(spark, dir).waves.exists(_.wave == streamWave))
         graft.streaming.StreamingIndexer.appendBatch(spark, builder,
           corpus.where(col("doc_id") >= splitAt), batchId = 0L, dir)
       dir

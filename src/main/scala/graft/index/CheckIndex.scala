@@ -1,17 +1,24 @@
 package graft.index
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.codec.PostingsCodec
 
 /** Offline index validator (reference CheckIndex,
-  * /root/reference/core/index/checkIndex.go:17-509): recomputes doc/term
-  * counts and stats from the raw postings and cross-checks the published
-  * manifest/terms/fieldstats (and the manifest's copy of the field stats) —
-  * the "doc-count/term-count metrics" leg of the north-star checkpoint story.
+  * core/index/checkIndex.go:17-509): checks that every file
+  * the commit lists exists with its recorded size, recomputes doc/term
+  * counts and stats from the listed postings and docs, and cross-checks the
+  * published manifest/terms/fieldstats (and the manifest's copy of the
+  * field stats) — the "doc-count/term-count metrics" leg of the north-star
+  * checkpoint story.
   */
 object CheckIndex {
+  /** `unlisted`: files under `postings/`, `docs/`, `termsPartial/`, `terms*`
+    * and `fieldstats*` the live commit does not name — not problems: the
+    * previous commit's files and a crash's leftovers stay until the next commit.
+    */
   final case class Report(
       maxDoc: Long,
       docCount: Long,
@@ -19,7 +26,8 @@ object CheckIndex {
       sumDocFreq: Long,
       sumTotalTermFreq: Long,
       postingRows: Long,
-      problems: Seq[String]) {
+      problems: Seq[String],
+      unlisted: Seq[String] = Nil) {
     def ok: Boolean = problems.isEmpty
   }
 
@@ -28,7 +36,25 @@ object CheckIndex {
     val problems = scala.collection.mutable.ArrayBuffer.empty[String]
 
     val manifest = IndexManifest.load(spark, indexPath)
-    val docs = spark.read.parquet(s"$indexPath/docs")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(indexPath).getFileSystem(conf)
+    val listed = manifest.waves.flatMap(_.files) ++ manifest.termsFiles
+    listed.foreach { f =>
+      scala.util.Try(fs.getFileStatus(new Path(s"$indexPath/${f.path}")).getLen).toOption match {
+        case Some(n) if n == f.bytes => ()
+        case n => problems += s"listed file ${f.path} " +
+          n.fold("is missing")(b => s"has $b bytes, the commit says ${f.bytes}")
+      }
+    }
+    val names = listed.map(_.path).toSet
+    val statsRel = IndexManifest.generationRel("fieldstats", manifest.termsGen)
+    val unlisted = (IndexManifest.WaveTables ++ fs.listStatus(new Path(indexPath))
+        .map(_.getPath.getName).filter(n => IndexManifest.generationOf(n).isDefined && n != statsRel))
+      .flatMap(IndexManifest.listFiles(conf, indexPath, _)).map(_.path).filterNot(names).sorted
+    if (manifest.waves.isEmpty) problems += s"the commit lists no waves (manifest.maxDoc ${manifest.maxDoc})"
+    if (problems.nonEmpty) return Report(0, 0, 0, 0, 0, 0, problems.toSeq, unlisted)
+
+    val docs = spark.read.parquet(manifest.paths("docs"): _*)
     // format gate (advisor round-3 fix): a pre-fieldDls index must produce a
     // clean 'rebuild required' report, not an AnalysisException mid-run
     if (manifest.formatVersion < IndexManifest.CurrentFormat ||
@@ -38,9 +64,9 @@ object CheckIndex {
         s"index format version ${manifest.formatVersion} outside supported " +
           s"[${IndexManifest.CurrentFormat}, ${IndexManifest.FormatOffsets}] " +
           s"(docs ${if (docs.columns.contains("fieldDls")) "have" else "LACK"} " +
-          "per-field dls) — rebuild the index with the current builder"))
-    val postings = spark.read.parquet(s"$indexPath/postings")
-    val terms = spark.read.parquet(manifest.termsLocation)
+          "per-field dls) — rebuild the index with the current builder"), unlisted)
+    val postings = spark.read.parquet(manifest.paths("postings"): _*)
+    val terms = spark.read.parquet(manifest.termsPaths: _*)
     val stats = spark.read.parquet(manifest.statsLocation)
 
     val nDocs = docs.count()
@@ -132,6 +158,6 @@ object CheckIndex {
 
     val docCount = stats.agg(max("docCount")).collect()(0).getLong(0)
     Report(nDocs, docCount, t.getLong(2), t.getLong(0), t.getLong(1),
-      agg.getLong(3), problems.toSeq)
+      agg.getLong(3), problems.toSeq, unlisted)
   }
 }

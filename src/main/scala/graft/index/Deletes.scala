@@ -39,7 +39,8 @@ object Deletes {
 
   /** Delete every document containing ANY of the given (field, term) keys —
     * the reference's delete-by-term (bufferedDeletes.go), restated as one
-    * distributed pass: decode the matching posting rows' docIds (parquet
+    * distributed pass over the commit's postings files: decode the matching
+    * posting rows' docIds (parquet
     * (field, term) pushdown, payload-only column read) and append them.
     * No docId ever touches the driver.
     */
@@ -59,7 +60,7 @@ object Deletes {
     val pred = keys.groupBy(_._1).map { case (f, ks) =>
       col("field") === f && col("term").isin(ks.map(_._2).distinct: _*)
     }.reduce(_ || _)
-    Some(spark.read.parquet(s"$indexPath/postings")
+    Some(spark.read.parquet(IndexManifest.load(spark, indexPath).paths("postings"): _*)
       .where(pred)
       .select("payload")
       .as[Array[Byte]]

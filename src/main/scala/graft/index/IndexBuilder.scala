@@ -62,7 +62,9 @@ final class IndexBuilder(spark: SparkSession, val config: IndexConfig = IndexCon
 
     // ---- stage 1: deterministic docIds -------------------------------
     val extras = extraFieldCols
-    if (!resume || !exists(s"$stagedPath/_SUCCESS")) {
+    val sc = spark.sparkContext
+    if (!resume || !exists(s"$stagedPath/_SUCCESS"))
+        Jobs.describe(sc, s"graft build stage 1: docIds of $indexPath") {
       extras.foreach(c => require(corpus.columns.contains(c),
         s"analyzed/keyword field '$c' is not a column of the input (have: ${corpus.columns.mkString(",")})"))
       val staged = config.explicitDocIdCol match {
@@ -138,37 +140,38 @@ final class IndexBuilder(spark: SparkSession, val config: IndexConfig = IndexCon
     // ---- stage 2: invert + flush, in resumable waves of segments ------
     // distinct over the parquet segId column (one narrow-column job) — works
     // for both the current flat layout and older partitionBy(segId=) dirs
-    val segIds = spark.read.parquet(stagedPath).select("segId").distinct()
-      .collect().map(_.getInt(0)).sorted
+    val segIds = Jobs.describe(sc, s"graft build segments of $indexPath") {
+      spark.read.parquet(stagedPath).select("segId").distinct()
+        .collect().map(_.getInt(0)).sorted
+    }
 
-    // waves folded into a merged wave by TieredMerge: their postings live in
+    // waves the commit covers through a merged wave: their postings live in
     // the merge output — re-inverting them would duplicate postings
-    val retired = if (resume) TieredMerge.retiredWaves(spark, indexPath) else Set.empty[Int]
+    val committed = if (resume) IndexManifest.current(spark, indexPath) else None
+    val retired = committed.fold(Set.empty[Int])(_.retired)
+    val waveSegs = segIds.grouped(config.segmentsPerWave).toSeq
     var invertedAny = false
-    for ((waveSegs, wave) <- segIds.grouped(config.segmentsPerWave).zipWithIndex) {
+    for ((segs, wave) <- waveSegs.zipWithIndex) {
       val wavePostings = s"$postingsRoot/wave=$wave"
       val waveDocs = s"$docsPath/wave=$wave"
       if (!retired.contains(wave) &&
         (!resume || !exists(s"$wavePostings/_SUCCESS") || !exists(s"$waveDocs/_SUCCESS"))) {
-        val staged = spark.read.parquet(stagedPath)
-          .where(col("segId").isin(waveSegs.map(Integer.valueOf): _*)) // partition-pruned
-        invertWave(staged, wave, indexPath)
+        Jobs.describe(sc, s"graft invert wave $wave: staged rows") {
+          invertWave(spark.read.parquet(stagedPath)
+            .where(col("segId").isin(segs.map(Integer.valueOf): _*)), wave, indexPath) // partition-pruned
+        }
         invertedAny = true
       }
     }
 
-    // Resume NO-OP fast path: nothing was (re)inverted and the committed
-    // manifest already covers exactly the live wave set under the same
-    // field config — the published dictionary/stats/segments are current,
-    // so the full publish would re-aggregate identical outputs. waves()
-    // still runs (its crash-consistency sweep is the load-time invariant);
-    // any mismatch — uncommitted index, config drift, wave-set drift — falls
-    // through to the full publish exactly as before.
-    if (resume && !invertedAny && exists(s"$indexPath/commit.json")) {
-      scala.util.Try(IndexManifest.load(spark, indexPath)).toOption match {
-        case Some(m) if m.publishedWaves.nonEmpty &&
-            m.publishedWaves.toSet ==
-              TieredMerge.waves(spark, indexPath).map(_.wave).toSet &&
+    // Resume NO-OP fast path: nothing was (re)inverted and the commit
+    // covers every wave of this build under the same field config, so a full
+    // publish would re-aggregate identical outputs. Any mismatch — no commit,
+    // config drift, a wave written but never committed — publishes.
+    if (resume && !invertedAny) {
+      committed match {
+        case Some(m) if m.waves.nonEmpty &&
+            waveSegs.indices.toSet.subsetOf(m.waves.flatMap(_.covers).toSet) &&
             m.formatVersion == formatVersion &&
             m.field == config.field &&
             m.analyzedFields == config.analyzedFields &&
@@ -183,10 +186,12 @@ final class IndexBuilder(spark: SparkSession, val config: IndexConfig = IndexCon
 
   /** Invert + flush one wave of docId-assigned rows: the reusable unit shared
     * by the batch build and the streaming appender. Expects columns
-    * (docId, segId, repo, path, commit, lang, content).
+    * (docId, segId, repo, path, commit, lang, content). Returns the number
+    * of docs written, observed on the docs write.
     */
-  def invertWave(stagedDf: DataFrame, wave: Int, indexPath: String): Unit = {
-    val analyzerB = spark.sparkContext.broadcast(config.analyzer)
+  def invertWave(stagedDf: DataFrame, wave: Int, indexPath: String): Long = {
+    val sc = spark.sparkContext
+    val analyzerB = sc.broadcast(config.analyzer)
     val fieldName = config.field
     val withPositions = config.withPositions
     val withOffsets = config.withOffsets
@@ -221,7 +226,8 @@ final class IndexBuilder(spark: SparkSession, val config: IndexConfig = IndexCon
     // boundary
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
-    val docsJob = Future {
+    val docCount = new org.apache.spark.sql.Observation()
+    val docsJob = Future(Jobs.describe(sc, s"graft invert wave $wave: docs") {
       staged.map { row =>
         val docId = row.getLong(0)
         val segId = row.getInt(1)
@@ -244,8 +250,9 @@ final class IndexBuilder(spark: SparkSession, val config: IndexConfig = IndexCon
         DocRow(docId, segId, row.getString(2), row.getString(3), row.getString(4),
           row.getString(5), Hashing.sha256Hex(content), dl,
           SmallFloat.encodeNorm(dl, 0), fieldDls.result())
-      }.write.mode("overwrite").parquet(s"$indexPath/docs/wave=$wave")
-    }
+      }.observe(docCount, count(lit(1)).as("n"))
+        .write.mode("overwrite").parquet(s"$indexPath/docs/wave=$wave")
+    })
 
     // postings, two-level (the reference's DWPT design restated):
     //  map side — one in-RAM inverted index PER PARTITION, flushed as
@@ -345,98 +352,87 @@ final class IndexBuilder(spark: SparkSession, val config: IndexConfig = IndexCon
       .mapGroups { (_: (String, String, Long), it: Iterator[PostingRow]) =>
         PostingRows.merge(it.toArray, wave)
       }
-    IndexBuilder.writeSorted(postingRows, s"$indexPath/postings/wave=$wave",
-      "field", "term", "rangeId")
+    Jobs.describe(sc, s"graft invert wave $wave: postings") {
+      IndexBuilder.writeSorted(postingRows, s"$indexPath/postings/wave=$wave",
+        "field", "term", "rangeId")
+    }
 
     Await.result(docsJob, scala.concurrent.duration.Duration.Inf)
+    docCount.get("n").asInstanceOf[Long]
   }
-
-  /** Aggregate one wave's postings metadata into `termsPartial/wave=N`: the
-    * wave's dictionary delta, vocabulary-sized instead of (field, term,
-    * rangeId)-sized, which [[publish]] folds in place of the wave's posting
-    * rows. Written by merge outputs (TieredMerge) and available on demand;
-    * NOT written during the batch invert — measured on the scaling corpus,
-    * aggregating the freshly-written wave there double-pays the dictionary
-    * aggregation (the publish fold does it anyway) and LOWERS fused N→4N
-    * efficiency.
-    */
-  def writeTermsPartial(indexPath: String, wave: Int): Unit =
-    IndexBuilder.writeTermsPartial(spark, indexPath, wave)
 
   /** The manifest format this builder writes: 3 with offsets, else 2. */
   private def formatVersion: Int =
     if (config.withOffsets) IndexManifest.FormatOffsets else IndexManifest.CurrentFormat
 
-  /** Stage 3: commit the whole index — every live wave folded onto no base.
-    * The commit is generation 0 when the index has none yet, else the live
-    * generation + 1, so readers of the live commit keep their files.
+  /** Stage 3: commit the whole index — the commit's merged waves plus
+    * every complete built wave they do not cover, folded onto no base; an
+    * uncommitted merge output is never adopted. Generation 0 when the index
+    * has no commit, else the live one + 1. Merges must not run concurrently.
     */
   def publish(indexPath: String): IndexManifest = {
-    // crash-consistency sweep: a merge that died mid-flight leaves either an
-    // uncommitted merged wave or logged-retired source dirs — both would
-    // double postings for every reader of <index>/postings. waves() deletes
-    // them on load (two-phase commit; see TieredMerge.waves). Merges must not
-    // run concurrently with publish.
-    val liveWaves = TieredMerge.waves(spark, indexPath).map(_.wave)
-    val prev =
-      if (exists(s"$indexPath/commit.json"))
-        scala.util.Try(IndexManifest.load(spark, indexPath)).toOption
-      else None
-    fold(indexPath, prev, base = None, liveWaves)
+    val prev = IndexManifest.current(spark, indexPath)
+    val retired = prev.fold(Set.empty[Int])(_.retired)
+    fold(indexPath, prev, base = None,
+      prev.fold(Seq.empty[WaveEntry])(_.waves.filter(_.wave >= TieredMerge.MergeWaveBase)) ++
+        IndexManifest.builtWaves(conf, indexPath).filterNot(e => retired(e.wave)))
   }
+
+  private def conf = spark.sparkContext.hadoopConfiguration
 
   /** INCREMENTAL publish for streaming append cadence: the committed index
     * plus ONE new wave's deltas. Cost is O(new wave) + O(vocabulary
     * rewrite) — never a full postings or docs scan, so per-batch publish
     * stays flat as the index grows.
     *
-    * Crash/replay discipline: a replayed batch (at-least-once foreachBatch)
-    * is a no-op once its wave is listed in `publishedWaves`; a crash before
-    * the commit leaves the old generation live and the replay re-derives the
-    * new one from it.
+    * Replays (at-least-once foreachBatch): a batch whose wave the commit
+    * lists re-lists its rewritten files under the same generation when its
+    * docs match the committed segment row, else (a checkpoint-less restart
+    * reusing a batch id) falls back to a full publish.
     */
   def publishIncremental(indexPath: String, wave: Int): IndexManifest = {
-    if (!exists(s"$indexPath/commit.json"))
-      return publish(indexPath) // first commit: nothing to increment on
-    val prev = IndexManifest.load(spark, indexPath)
-    if (prev.publishedWaves.contains(wave)) {
-      // the replay no-op is only sound while the wave's CONTENT is
-      // unchanged — a checkpoint-less stream restart reuses batch ids with
-      // NEW data, and invertWave has already overwritten the wave dirs by
-      // the time we run. Compare the wave's docs aggregate against its
-      // committed segment row; divergence falls back to a FULL publish,
-      // which re-aggregates whatever is actually on disk (consistent
-      // dictionary; the overwritten wave's old rows are gone either way).
-      val r = spark.read.schema(TableSchemas.docs).parquet(s"$indexPath/docs/wave=$wave")
-        .agg(count(lit(1)), min("docId"), max("docId")).collect()(0)
-      val sameContent = IndexManifest.readSegments(spark, indexPath).find(_.segId == wave)
-        .exists(s => s.docCount == r.getLong(0) && s.docLo == r.getLong(1) && s.docHi == r.getLong(2))
-      return if (sameContent) prev else publish(indexPath)
+    val prev = IndexManifest.current(spark, indexPath)
+      .getOrElse(return publish(indexPath)) // first commit: nothing to increment on
+    val entry = IndexManifest.listWave(conf, indexPath, wave)
+    prev.waves.find(_.wave == wave) match {
+      case None => fold(indexPath, Some(prev), base = Some(prev), Seq(entry))
+      case Some(_) =>
+        val r = Jobs.describe(spark.sparkContext, s"graft commit: replay check of wave $wave") {
+          spark.read.schema(TableSchemas.docs).parquet(IndexManifest.resolve(indexPath, entry.of("docs")): _*)
+            .agg(count(lit(1)), min("docId"), max("docId")).collect()(0)
+        }
+        val sameContent = IndexManifest.readSegments(spark, indexPath).find(_.segId == wave)
+          .exists(s => s.docCount == r.getLong(0) && s.docLo == r.getLong(1) && s.docHi == r.getLong(2))
+        // same content: same generation, so no sweep — sweeping here would
+        // count the replay as a commit and drop the generation before it
+        if (!sameContent) publish(indexPath)
+        else IndexManifest.commit(spark,
+          prev.copy(waves = prev.waves.map(e => if (e.wave == wave) entry else e)))
     }
-    fold(indexPath, Some(prev), base = Some(prev), Seq(wave))
   }
 
-  /** The one two-phase commit: generation g+1 (g = `prev`'s, none → 0) is
-    * `base` — its dictionary, doc totals, field docCounts and segment rows;
-    * None starts empty — plus the deltas of `waves`. Data dirs are written
-    * first, then `commit.json` flips the pointer; generations g+1 and g are
-    * kept (g for in-flight readers of the previous commit), older ones swept.
+  /** The one two-phase commit through a fold: generation g+1 (g = `prev`'s,
+    * none → 0) is `base` — its waves, dictionary, doc totals, field
+    * docCounts and segment rows; None starts empty — plus the deltas of
+    * `waves`. Data dirs are written first, then `commit.json` lists the
+    * commit's files and flips the pointer ([[IndexBuilder.commit]]).
     */
-  private def fold(indexPath: String, prev: Option[IndexManifest],
-      base: Option[IndexManifest], waves: Seq[Int]): IndexManifest = {
+  private[index] def fold(indexPath: String, prev: Option[IndexManifest],
+      base: Option[IndexManifest], waves: Seq[WaveEntry]): IndexManifest = {
     require(waves.nonEmpty, s"no postings waves to publish under $indexPath")
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
+    val sc = spark.sparkContext
     val gen = prev.fold(0)(_.termsGen + 1)
 
-    // docs: one rollup gives the segment rows, the totals row and every
-    // field's docCount. A full publish reads every doc dir (a non-reclaiming
-    // merge leaves its sources' docs where they were). Runs concurrently
-    // with the dictionary write below.
+    // docs: one rollup over the waves' listed docs files gives the segment
+    // rows, the totals row and every field's docCount. A non-reclaiming
+    // merged wave lists its sources' docs files. Runs concurrently with the
+    // dictionary write below.
     val docsRoot = s"$indexPath/docs"
     val docs = spark.read.schema(TableSchemas.docs).option("basePath", docsRoot)
-      .parquet((if (base.isEmpty) Seq(docsRoot) else waves.map(w => s"$docsRoot/wave=$w")): _*)
+      .parquet(IndexManifest.resolve(indexPath, waves.flatMap(_.of("docs"))): _*)
     val fields = (Seq(config.field) ++ config.analyzedFields ++ config.keywordFields).distinct
     // the PRIMARY field's docCount is just dl > 0 — only EXTRA fields touch
     // the fieldDls map column, whose row-by-row decode was the single largest
@@ -446,7 +442,9 @@ final class IndexBuilder(spark: SparkSession, val config: IndexConfig = IndexCon
       if (f == config.field) col("dl") > 0 else element_at(col("fieldDls"), f) > 0
     val aggs = Seq(min("docId"), max("docId"), count(lit(1)), min("wave")) ++
       fields.map(f => sum(when(present(f), 1L).otherwise(0L)))
-    val rollup = Future(docs.rollup("segId").agg(aggs.head, aggs.tail: _*).collect())
+    val rollup = Future(Jobs.describe(sc, s"graft commit gen $gen: docs rollup") {
+      docs.rollup("segId").agg(aggs.head, aggs.tail: _*).collect()
+    })
 
     // dictionary: base rows + every wave's delta, one group per (field, term).
     // Each field's sums ride along the write as observed metrics, so nothing
@@ -457,16 +455,19 @@ final class IndexBuilder(spark: SparkSession, val config: IndexConfig = IndexCon
       Seq(of(col("totalTermFreq")).as(s"ttf$i"), of(col("docFreq")).as(s"df$i"), of(lit(1L)).as(s"n$i"))
     }
     val dict = IndexBuilder.foldTerms(
-      (base.map(b => spark.read.schema(TableSchemas.terms).parquet(b.termsLocation)).toSeq ++
+      (base.map(b => spark.read.schema(TableSchemas.terms).parquet(b.termsPaths: _*)).toSeq ++
         IndexBuilder.waveDeltas(spark, indexPath, waves, formatVersion)).reduce(_ unionByName _))
-    IndexBuilder.writeSorted(dict.observe(sums, sumCols.head, sumCols.tail: _*),
-      IndexManifest.generationDir(indexPath, "terms", gen), "field", "term")
+    val termsRel = IndexManifest.generationRel("terms", gen)
+    Jobs.describe(sc, s"graft commit gen $gen: dictionary") {
+      IndexBuilder.writeSorted(dict.observe(sums, sumCols.head, sumCols.tail: _*),
+        s"$indexPath/$termsRel", "field", "term")
+    }
 
     val (totals, segRows) = Await.result(rollup, Duration.Inf).partition(_.isNullAt(0))
     val total = totals.head
     val added = fields.zipWithIndex.map { case (f, i) => f -> total.getLong(5 + i) }.toMap
     val baseDc = base.fold(Map.empty[String, Long])(
-      _.fieldStatsOrTable(spark.sparkContext.hadoopConfiguration).map(s => s.field -> s.docCount).toMap)
+      _.fieldStatsOrTable(conf).map(s => s.field -> s.docCount).toMap)
     val maxDoc = base.fold(0L)(_.maxDoc) + total.getLong(3)
     val maxDocId = math.max(base.fold(-1L)(_.maxDocId), total.getLong(2))
 
@@ -486,20 +487,17 @@ final class IndexBuilder(spark: SparkSession, val config: IndexConfig = IndexCon
       FieldStats(f, sumOf(s"ttf$i"), sumOf(s"df$i"), sumOf(s"n$i"), maxDoc,
         baseDc.getOrElse(f, 0L) + added(f))
     }.sortBy(_.field)
-    stats.toDS().coalesce(1).write.mode("overwrite")
-      .parquet(IndexManifest.generationDir(indexPath, "fieldstats", gen))
+    Jobs.describe(sc, s"graft commit gen $gen: fieldstats") {
+      stats.toDS().coalesce(1).write.mode("overwrite")
+        .parquet(s"$indexPath/${IndexManifest.generationRel("fieldstats", gen)}")
+    }
 
-    val m = IndexManifest(indexPath, maxDoc, base.fold(0L)(_.docCount) + added(config.field),
-      config.docsPerRange, maxDocId, termsGen = gen,
-      publishedWaves = base.fold(Seq.empty[Int])(_.publishedWaves) ++ waves,
-      formatVersion = formatVersion, field = config.field, analyzedFields = config.analyzedFields,
-      keywordFields = config.keywordFields, fieldStats = Some(stats))
-    IndexManifest.commit(spark, m)
-    val fsys = fs(indexPath)
-    fsys.listStatus(new Path(indexPath)).map(_.getPath)
-      .filter(p => IndexManifest.generationOf(p.getName).exists(g => g != gen && g != gen - 1))
-      .foreach(p => fsys.delete(p, true))
-    m
+    IndexBuilder.commit(spark, prev, IndexManifest(indexPath, maxDoc,
+      base.fold(0L)(_.docCount) + added(config.field), config.docsPerRange, maxDocId,
+      termsGen = gen, waves = (base.fold(Seq.empty[WaveEntry])(_.waves) ++ waves).sortBy(_.age),
+      termsFiles = IndexManifest.listFiles(conf, indexPath, termsRel), formatVersion = formatVersion,
+      field = config.field, analyzedFields = config.analyzedFields,
+      keywordFields = config.keywordFields, fieldStats = Some(stats)))
   }
 
 }
@@ -584,41 +582,65 @@ object IndexBuilder {
       sum("totalTermFreq").as("totalTermFreq"),
       when(sum("docFreq") === 1L, max("singletonDocId")).otherwise(-1L).as("singletonDocId"))
 
-  /** Some waves' posting rows as [[foldTerms]] input (a row's firstDocId
-    * is its doc when its df is 1).
+  /** Posting rows of some files as [[foldTerms]] input (a row's
+    * firstDocId is its doc when its df is 1).
     */
-  private def postingDeltas(spark: SparkSession, indexPath: String, waves: Seq[Int],
+  private def postingDeltas(spark: SparkSession, paths: Seq[String],
       formatVersion: Int): DataFrame =
-    spark.read.schema(TableSchemas.postings(formatVersion))
-      .parquet(waves.map(w => s"$indexPath/postings/wave=$w"): _*)
+    spark.read.schema(TableSchemas.postings(formatVersion)).parquet(paths: _*)
       .select(col("field"), col("term"), col("docFreq").cast("long").as("docFreq"),
         col("ttf").as("totalTermFreq"), col("firstDocId").as("singletonDocId"))
 
   /** The waves' dictionary deltas as [[foldTerms]] input: a wave's
-    * `termsPartial` when it has one, else its posting rows.
+    * `termsPartial` files when it lists them, else its posting rows.
     */
-  private[index] def waveDeltas(spark: SparkSession, indexPath: String, waves: Seq[Int],
+  private[index] def waveDeltas(spark: SparkSession, indexPath: String, waves: Seq[WaveEntry],
       formatVersion: Int): Seq[DataFrame] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val (partial, raw) = waves.partition { w =>
-      val ok = new Path(s"$indexPath/termsPartial/wave=$w/_SUCCESS")
-      ok.getFileSystem(conf).exists(ok)
-    }
+    val (partial, raw) = waves.partition(_.of("termsPartial").nonEmpty)
+    def paths(ws: Seq[WaveEntry], table: String) = IndexManifest.resolve(indexPath, ws.flatMap(_.of(table)))
     val partials = if (partial.isEmpty) Nil else Seq(
-      spark.read.schema(TableSchemas.termsPartial)
-        .parquet(partial.map(w => s"$indexPath/termsPartial/wave=$w"): _*)
+      spark.read.schema(TableSchemas.termsPartial).parquet(paths(partial, "termsPartial"): _*)
         .withColumnRenamed("ttf", "totalTermFreq"))
-    partials ++ (if (raw.isEmpty) Nil else Seq(postingDeltas(spark, indexPath, raw, formatVersion)))
+    partials ++ (if (raw.isEmpty) Nil else Seq(postingDeltas(spark, paths(raw, "postings"), formatVersion)))
   }
 
-  /** Writes one wave's `termsPartial/wave=N` (see the builder's
-    * [[IndexBuilder.writeTermsPartial]]) — the fold of its posting rows,
-    * shared by the builder and merge outputs (TieredMerge.execute).
+  /** Writes a merge output's `termsPartial/wave=N`: the fold of the posting
+    * rows in its `postings/wave=N` dir, the wave's dictionary delta —
+    * vocabulary-sized instead of (field, term, rangeId)-sized — which a full
+    * fold reads in place of its posting rows. The batch invert writes none:
+    * measured on the scaling corpus, it double-pays the dictionary
+    * aggregation the publish fold does anyway.
     */
-  def writeTermsPartial(spark: SparkSession, indexPath: String, wave: Int): Unit =
-    foldTerms(postingDeltas(spark, indexPath, Seq(wave), IndexManifest.CurrentFormat))
+  private[index] def writeTermsPartial(spark: SparkSession, indexPath: String, wave: Int): Unit =
+    foldTerms(postingDeltas(spark, Seq(s"$indexPath/postings/wave=$wave"), IndexManifest.CurrentFormat))
       .withColumnRenamed("totalTermFreq", "ttf")
       .write.mode("overwrite").parquet(s"$indexPath/termsPartial/wave=$wave")
+
+  /** Makes `next` the live commit, then sweeps — the one place wave dirs
+    * and terms/fieldstats generations are deleted: whatever neither `next`
+    * nor `prev` lists goes (Lucene's keep-last-two-commits
+    * `IndexDeletionPolicy`), so readers of `prev` keep their files. The
+    * merge logs and delete stages of the format before listed commits go too.
+    */
+  private[index] def commit(spark: SparkSession, prev: Option[IndexManifest],
+      next: IndexManifest): IndexManifest = {
+    val keep = IndexManifest.commit(spark, next) +: prev.toSeq
+    val dirs = keep.flatMap(_.waves.flatMap(_.files)).map(f => f.path.split('/').take(2).mkString("/")).toSet
+    val gens = keep.map(_.termsGen).toSet
+    val root = new Path(next.indexPath)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def ls(p: Path) = scala.util.Try(fs.listStatus(p).toSeq).getOrElse(Nil)
+    (IndexManifest.WaveTables.flatMap(t => ls(new Path(root, t))
+        .filter(st => st.isDirectory && st.getPath.getName.startsWith("wave=") &&
+          !dirs(s"$t/${st.getPath.getName}"))) ++
+      ls(root).filter { st =>
+        val name = st.getPath.getName
+        IndexManifest.generationOf(name).exists(g => !gens(g)) ||
+          name.matches("merges_\\d+\\.json") || name.startsWith("deletes_stage_")
+      })
+      .foreach(st => fs.delete(st.getPath, true))
+    next
+  }
 
   /** A builder whose field config MATCHES an existing committed index —
     * the only safe way to republish one you didn't just build (advisor
@@ -662,15 +684,31 @@ object Hashing {
   }
 }
 
-/** Commit-point summary. Heavyweight metadata lives in parquet
-  * (segments/fieldstats/terms); this marker is the `segments_N` analogue.
-  * `maxDocId` is the true max assigned id — the append base for streaming
-  * (NOT maxDoc, which is the doc COUNT and collides under sparse explicit
-  * id spaces).
+/** One committed data file: its path under the index root and its size. */
+final case class IndexFile(path: String, bytes: Long)
+
+/** One live wave of a commit: its number, the original (built or streamed)
+  * waves it covers — itself, or every source of a merge — and its files:
+  * postings, docs and `termsPartial`. A non-reclaiming merge leaves its
+  * sources' docs files where they are and lists them.
+  */
+final case class WaveEntry(wave: Int, covers: Seq[Int], files: Seq[IndexFile]) {
+  /** The files of one table ("postings", "docs" or "termsPartial"). */
+  def of(table: String): Seq[IndexFile] = files.filter(_.path.startsWith(s"$table/"))
+
+  /** Arrival position: a merged wave sorts at its oldest source's age. */
+  def age: Int = covers.min
+}
+
+/** The commit point, the `segments_N` analogue: it names every file a
+  * reader opens — each live wave's files in age order and the terms
+  * generation's files — so readers never list a directory. `maxDocId` is
+  * the true max assigned id — the append base for streaming (NOT maxDoc,
+  * which is the doc COUNT and collides under sparse explicit id spaces).
   */
 final case class IndexManifest(indexPath: String, maxDoc: Long, docCount: Long,
     docsPerRange: Int, maxDocId: Long = -1L,
-    termsGen: Int = 0, publishedWaves: Seq[Int] = Nil,
+    termsGen: Int = 0, waves: Seq[WaveEntry] = Nil, termsFiles: Seq[IndexFile] = Nil,
     /** On-disk index schema generation (advisor round-3 fix: readers gate on
       * this instead of crashing mid-run on a missing column). Manifests
       * written before the field existed load as version 1.
@@ -697,16 +735,25 @@ final case class IndexManifest(indexPath: String, maxDoc: Long, docCount: Long,
     * so a crash mid-write never corrupts the live dictionary and readers of
     * the previous commit keep theirs.
     */
-  def termsLocation: String = IndexManifest.generationDir(indexPath, "terms", termsGen)
+  def termsLocation: String = s"$indexPath/${IndexManifest.generationRel("terms", termsGen)}"
 
   /** Committed fieldstats dir (same generation discipline as terms). */
-  def statsLocation: String = IndexManifest.generationDir(indexPath, "fieldstats", termsGen)
+  def statsLocation: String = s"$indexPath/${IndexManifest.generationRel("fieldstats", termsGen)}"
 
   /** Per-field statistics: the manifest's copy, else the fieldstats table
     * read on the driver (no Spark job).
     */
   def fieldStatsOrTable(conf: org.apache.hadoop.conf.Configuration): Seq[FieldStats] =
     fieldStats.getOrElse(IndexManifest.readFieldStats(conf, statsLocation))
+
+  /** Paths of the live waves' files of one table. */
+  def paths(table: String): Seq[String] = IndexManifest.resolve(indexPath, waves.flatMap(_.of(table)))
+
+  /** Paths of the terms generation's files. */
+  def termsPaths: Seq[String] = IndexManifest.resolve(indexPath, termsFiles)
+
+  /** Original waves whose postings live in a merged wave. */
+  def retired: Set[Int] = waves.flatMap(e => e.covers.filterNot(_ == e.wave)).toSet
 }
 
 object IndexManifest {
@@ -726,13 +773,88 @@ object IndexManifest {
   private val json = new com.fasterxml.jackson.databind.ObjectMapper()
 
   /** Generation `gen`'s dir of a generational table ("terms" or
-    * "fieldstats"): the bare name for the first commit, `<table>_g<gen>`
-    * after it.
+    * "fieldstats") under the index root: the bare name for the first
+    * commit, `<table>_g<gen>` after it.
     */
-  def generationDir(indexPath: String, table: String, gen: Int): String =
-    if (gen <= 0) s"$indexPath/$table" else s"$indexPath/${table}_g$gen"
+  def generationRel(table: String, gen: Int): String =
+    if (gen <= 0) table else s"${table}_g$gen"
 
-  /** The generation a dir name of [[generationDir]] holds; None for others. */
+  /** The tables written per wave, in `<table>/wave=N` dirs. */
+  val WaveTables: Seq[String] = Seq("postings", "docs", "termsPartial")
+
+  /** Absolute paths of committed files. */
+  def resolve(indexPath: String, files: Seq[IndexFile]): Seq[String] =
+    files.map(f => s"$indexPath/${f.path}")
+
+  /** The data files under `rel` (relative to the index root), recursively,
+    * skipping `_` and `.` entries as Spark does. Only writers and the
+    * upgrade of a manifest without a file list look at directories.
+    */
+  def listFiles(conf: org.apache.hadoop.conf.Configuration, indexPath: String,
+      rel: String): Seq[IndexFile] = {
+    val fs = new Path(indexPath).getFileSystem(conf)
+    def list(r: String): Seq[IndexFile] =
+      (try fs.listStatus(new Path(s"$indexPath/$r")).toSeq
+       catch { case _: java.io.FileNotFoundException => Nil })
+        .filterNot(st => st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith("."))
+        .flatMap { st =>
+          val sub = s"$r/${st.getPath.getName}"
+          if (st.isDirectory) list(sub) else Seq(IndexFile(sub, st.getLen))
+        }
+    list(rel).sortBy(_.path)
+  }
+
+  /** One original wave as its dirs hold it now. */
+  def listWave(conf: org.apache.hadoop.conf.Configuration, indexPath: String, wave: Int): WaveEntry =
+    WaveEntry(wave, Seq(wave),
+      WaveTables.flatMap(t => listFiles(conf, indexPath, s"$t/wave=$wave")))
+
+  /** Every complete built or streamed wave on disk (postings and docs both
+    * carry `_SUCCESS`; merge outputs excluded), listed — what a full
+    * publish adopts.
+    */
+  def builtWaves(conf: org.apache.hadoop.conf.Configuration, indexPath: String): Seq[WaveEntry] = {
+    val fs = new Path(indexPath).getFileSystem(conf)
+    def done(t: String, w: Int) = fs.exists(new Path(s"$indexPath/$t/wave=$w/_SUCCESS"))
+    wavesOnDisk(conf, indexPath).toSeq.sortBy(_._1).collect {
+      case (w, files) if w < TieredMerge.MergeWaveBase && done("postings", w) && done("docs", w) =>
+        WaveEntry(w, Seq(w), files)
+    }
+  }
+
+  /** The files of every `wave=N` dir of postings, docs and termsPartial. */
+  private def wavesOnDisk(conf: org.apache.hadoop.conf.Configuration,
+      indexPath: String): Map[Int, Seq[IndexFile]] =
+    WaveTables.flatMap(t => listFiles(conf, indexPath, t))
+      .groupBy(_.path.split('/')(1)).collect {
+        case (dir, files) if dir.startsWith("wave=") && dir.drop(5).toIntOption.isDefined =>
+          dir.drop(5).toInt -> files
+      }
+
+  /** `commit.json` and the file system it goes through: the raw one, with
+    * no checksum side file, so a rename replaces the commit in one step.
+    */
+  private def commitFile(conf: org.apache.hadoop.conf.Configuration,
+      indexPath: String): (org.apache.hadoop.fs.FileSystem, Path) = {
+    val p = new Path(s"$indexPath/commit.json")
+    (p.getFileSystem(conf) match {
+      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+      case fs => fs
+    }, p)
+  }
+
+  /** The live commit's text, None when the index has none. */
+  def commitText(conf: org.apache.hadoop.conf.Configuration, indexPath: String): Option[String] = {
+    val (fs, p) = commitFile(conf, indexPath)
+    val in = try fs.open(p) catch { case _: java.io.FileNotFoundException => return None }
+    try Some(new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)) finally in.close()
+  }
+
+  /** The live commit, None when the index has none. */
+  def current(spark: SparkSession, indexPath: String): Option[IndexManifest] =
+    commitText(spark.sparkContext.hadoopConfiguration, indexPath).map(parse(spark, indexPath, _))
+
+  /** The generation a dir name of [[generationRel]] holds; None for others. */
   def generationOf(name: String): Option[Int] = name match {
     case "terms" | "fieldstats" => Some(0)
     case _ => Seq("terms_g", "fieldstats_g").find(name.startsWith)
@@ -776,27 +898,42 @@ object IndexManifest {
   }
 
   /** Every row of a fieldstats table, read on the driver. */
-  def readFieldStats(conf: org.apache.hadoop.conf.Configuration, dir: String): Seq[FieldStats] =
-    new PointReader(conf, dir).read(
+  def readFieldStats(conf: org.apache.hadoop.conf.Configuration, dir: String): Seq[FieldStats] = {
+    val (root, rel) = (new Path(dir).getParent.toString, new Path(dir).getName)
+    new PointReader(conf, resolve(root, listFiles(conf, root, rel))).read(
       Seq("field", "sumTotalTermFreq", "sumDocFreq", "termCount", "maxDoc", "docCount"), None) { g =>
       FieldStats(g.getString("field", 0), g.getLong("sumTotalTermFreq", 0),
         g.getLong("sumDocFreq", 0), g.getLong("termCount", 0), g.getLong("maxDoc", 0),
         g.getLong("docCount", 0))
     }.sortBy(_.field)
+  }
 
   /** Writes `commit.json` — a JSON object with one key per manifest field
     * (strings escaped by the JSON writer); `fieldStats` is an array of
     * per-field objects, omitted when None.
     */
-  def commit(spark: SparkSession, m: IndexManifest): Unit = {
+  def commit(spark: SparkSession, m: IndexManifest): IndexManifest = {
     val root = json.createObjectNode()
     root.put("maxDoc", m.maxDoc)
     root.put("docCount", m.docCount)
     root.put("docsPerRange", m.docsPerRange)
     root.put("maxDocId", m.maxDocId)
     root.put("termsGen", m.termsGen)
-    val waves = root.putArray("publishedWaves")
-    m.publishedWaves.foreach(w => waves.add(w))
+    def putFiles(arr: com.fasterxml.jackson.databind.node.ArrayNode, files: Seq[IndexFile]): Unit =
+      files.foreach { f =>
+        val o = arr.addObject()
+        o.put("path", f.path)
+        o.put("bytes", f.bytes)
+      }
+    val waves = root.putArray("waves")
+    m.waves.foreach { e =>
+      val o = waves.addObject()
+      o.put("wave", e.wave)
+      val covers = o.putArray("covers")
+      e.covers.foreach(w => covers.add(w))
+      putFiles(o.putArray("files"), e.files)
+    }
+    putFiles(root.putArray("termsFiles"), m.termsFiles)
     root.put("formatVersion", m.formatVersion)
     root.put("field", m.field)
     val analyzed = root.putArray("analyzedFields")
@@ -815,28 +952,44 @@ object IndexManifest {
         o.put("docCount", fs.docCount)
       }
     }
-    val p = new Path(s"${m.indexPath}/commit.json")
-    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true)
+    // written aside, then renamed over the live commit: a reader sees the
+    // old commit or the new one, never a partial file. A file system whose
+    // plain rename never replaces (HDFS) replaces through its atomic
+    // overwriting rename.
+    val conf = spark.sparkContext.hadoopConfiguration
+    val (fs, p) = commitFile(conf, m.indexPath)
+    val tmp = new Path(s"${m.indexPath}/.commit.json.tmp")
+    val out = fs.create(tmp, true)
     try out.write(json.writeValueAsBytes(root)) finally out.close()
+    if (!fs.rename(tmp, p))
+      org.apache.hadoop.fs.FileContext.getFileContext(p.toUri, conf)
+        .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    m
   }
 
-  def load(spark: SparkSession, indexPath: String): IndexManifest = {
+  def load(spark: SparkSession, indexPath: String): IndexManifest =
+    current(spark, indexPath).getOrElse(throw new java.io.FileNotFoundException(s"$indexPath/commit.json"))
+
+  private def parse(spark: SparkSession, indexPath: String, text: String): IndexManifest = {
     import scala.jdk.CollectionConverters._
     import com.fasterxml.jackson.databind.JsonNode
-    val p = new Path(s"$indexPath/commit.json")
-    val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
-    val root = try json.readTree(in) finally in.close()
+    val root = json.readTree(text)
     def node(k: String): Option[JsonNode] = Option(root.get(k)).filterNot(_.isNull)
     def long(k: String): Option[Long] = node(k).map(_.asLong)
     def strs(k: String): Seq[String] =
       node(k).fold(Seq.empty[String])(_.elements().asScala.map(_.asText).toSeq)
+    def files(n: JsonNode): Seq[IndexFile] =
+      n.elements().asScala.map(o => IndexFile(o.get("path").asText, o.get("bytes").asLong)).toSeq
     val maxDoc = long("maxDoc").get
-    IndexManifest(indexPath, maxDoc, long("docCount").get,
+    val m = IndexManifest(indexPath, maxDoc, long("docCount").get,
       long("docsPerRange").get.toInt,
       // manifests written before maxDocId existed: dense 0-based ids only
       long("maxDocId").getOrElse(maxDoc - 1),
       long("termsGen").map(_.toInt).getOrElse(0),
-      node("publishedWaves").fold(Seq.empty[Int])(_.elements().asScala.map(_.asInt).toSeq),
+      node("waves").fold(Seq.empty[WaveEntry])(_.elements().asScala.map(o => WaveEntry(
+        o.get("wave").asInt, o.get("covers").elements().asScala.map(_.asInt).toSeq,
+        files(o.get("files")))).toSeq),
+      node("termsFiles").fold(Seq.empty[IndexFile])(files),
       long("formatVersion").map(_.toInt).getOrElse(1),
       field = node("field").map(_.asText).getOrElse("content"),
       analyzedFields = strs("analyzedFields"),
@@ -846,5 +999,44 @@ object IndexManifest {
           o.get("sumDocFreq").asLong, o.get("termCount").asLong, o.get("maxDoc").asLong,
           o.get("docCount").asLong)
       }.toSeq))
+    if (node("waves").isDefined) m else upgraded(spark.sparkContext.hadoopConfiguration, m)
+  }
+
+  /** A manifest written before commits listed their files, with its files
+    * as the dirs and that format's merge logs (`merges_N.json`: `into`, its
+    * `merged` sources, and the `docsFrom` docs dirs a reclaiming merge
+    * rewrote) hold them. Every `postings/wave=N` dir is a live wave unless
+    * a log retired it or it is a merge output no log names (both crash
+    * leftovers); a merged wave covers its sources' original waves and lists
+    * their docs dirs, or its own when it reclaimed. The next commit writes
+    * the list, and its sweep removes the leftovers and the logs.
+    */
+  private def upgraded(conf: org.apache.hadoop.conf.Configuration, m: IndexManifest): IndexManifest = {
+    import scala.jdk.CollectionConverters._
+    val root = new Path(m.indexPath)
+    val fs = root.getFileSystem(conf)
+    def ls(p: Path) = scala.util.Try(fs.listStatus(p).toSeq).getOrElse(Nil)
+    def ints(n: com.fasterxml.jackson.databind.JsonNode) =
+      Option(n).fold(Seq.empty[Int])(_.elements().asScala.map(_.asInt).toSeq)
+    // into → (merged, docsFrom)
+    val logs = ls(root).filter(st => st.getPath.getName.matches("merges_\\d+\\.json")).map { st =>
+      val in = fs.open(st.getPath)
+      val o = try json.readTree(in) finally in.close()
+      o.get("into").asInt -> (ints(o.get("merged")), ints(o.get("docsFrom")))
+    }.toMap
+    val retired = logs.values.flatMap(_._1).toSet
+    def dirs(t: String) = ls(new Path(root, t)).map(_.getPath.getName)
+      .collect { case d if d.startsWith("wave=") && d.drop(5).toIntOption.isDefined => d.drop(5).toInt }.toSet
+    val docDirs = dirs("docs") -- logs.values.flatMap(_._2)
+    def covers(w: Int): Seq[Int] = logs.get(w).fold(Seq(w))(_._1.flatMap(covers))
+    def docsOf(w: Int): Seq[Int] =
+      if (docDirs(w)) Seq(w) else logs.get(w).fold(Seq.empty[Int])(_._1.flatMap(docsOf))
+    def files(t: String, w: Int) = listFiles(conf, m.indexPath, s"$t/wave=$w")
+    val live = dirs("postings").filter(w => !retired(w) && (w < TieredMerge.MergeWaveBase || logs.contains(w)))
+    m.copy(
+      waves = live.toSeq.map(w => WaveEntry(w, covers(w).distinct.sorted,
+        files("postings", w) ++ docsOf(w).distinct.sorted.flatMap(files("docs", _)) ++
+          files("termsPartial", w))).sortBy(_.age),
+      termsFiles = listFiles(conf, m.indexPath, generationRel("terms", m.termsGen)))
   }
 }

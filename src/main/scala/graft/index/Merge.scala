@@ -1,9 +1,6 @@
 package graft.index
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
-
-import graft.codec.{PostingEntry, PostingsCodec}
 
 /** Tiered merge over build waves.
   *
@@ -31,117 +28,17 @@ object TieredMerge {
     */
   val MergeWaveBase = 1000000
 
-  final case class WaveInfo(wave: Int, bytes: Long, path: String)
+  final case class WaveInfo(wave: Int, bytes: Long)
 
-  /** One committed merge. `docsFrom` lists the ORIGINAL doc-wave dirs this
-    * merge folded into `docs/wave=<into>` while reclaiming deletes (empty for
-    * non-reclaiming merges, whose docs stay at their original wave dirs).
+  /** The live commit's waves in age order (a merged wave at its oldest
+    * source's position — LogMergePolicy's positional selection assumes it),
+    * each with its postings bytes; none before the first commit.
     */
-  final case class MergeRecord(into: Int, merged: Seq[Int], docsFrom: Seq[Int])
+  def waves(spark: SparkSession, indexPath: String): Seq[WaveInfo] =
+    IndexManifest.current(spark, indexPath).fold(Seq.empty[WaveInfo])(infos)
 
-  def mergeRecords(spark: SparkSession, indexPath: String): Seq[MergeRecord] = {
-    val root = new Path(indexPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Nil
-    fs.listStatus(root).toSeq
-      .filter(s => s.getPath.getName.startsWith("merges_") && s.getPath.getName.endsWith(".json"))
-      .flatMap { s =>
-        val in = fs.open(s.getPath)
-        val txt = try scala.io.Source.fromInputStream(in).mkString finally in.close()
-        def ints(key: String): Seq[Int] =
-          (s""""$key":\\[([0-9,]*)\\]""").r.findFirstMatchIn(txt)
-            .map(_.group(1).split(',').filter(_.nonEmpty).map(_.toInt).toSeq)
-            .getOrElse(Nil)
-        """"into":(\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toInt)
-          .map(into => MergeRecord(into, ints("merged"), ints("docsFrom")))
-      }
-  }
-
-  /** (mergedInto → sources) pairs from the merges_N.json logs. */
-  def mergeLog(spark: SparkSession, indexPath: String): Map[Int, Seq[Int]] =
-    mergeRecords(spark, indexPath).map(r => r.into -> r.merged).toMap
-
-  /** Waves retired by past merges: build resume must NOT re-invert segments
-    * whose wave was folded into a merged wave — the postings already live
-    * there.
-    */
-  def retiredWaves(spark: SparkSession, indexPath: String): Set[Int] =
-    mergeLog(spark, indexPath).values.flatten.toSet
-
-  /** Waves in GENERATIONAL (arrival) order: a merged wave sorts at its
-    * OLDEST source's position, resolved transitively from the merge logs.
-    * LogMergePolicy's positional selection assumes this order — raw wave
-    * numbers would sort merged waves (≥ MergeWaveBase) after newer
-    * streaming waves, repeatedly re-merging the big merged wave with
-    * handfuls of fresh tiny ones (quadratic write amplification).
-    */
-  def wavesByAge(spark: SparkSession, indexPath: String): Seq[WaveInfo] = {
-    val ws = waves(spark, indexPath)
-    val logs = mergeLog(spark, indexPath)
-    def oldest(w: Int, depth: Int): Double = logs.get(w) match {
-      case Some(srcs) if srcs.nonEmpty && depth < 64 => srcs.map(oldest(_, depth + 1)).min
-      case _ => w.toDouble
-    }
-    ws.sortBy(w => oldest(w.wave, 0))
-  }
-
-  /** Live waves. Two-phase-commit discipline (the merges_N.json log is the
-    * commit point of a merge):
-    *  - a wave listed as `merged` in any log is DEAD even if its dir still
-    *    exists (crash after log write, before source deletion) — its postings
-    *    live in the merged wave; reading both would double df/freq/scores;
-    *  - a merge-numbered wave (≥ MergeWaveBase) with NO log is an UNCOMMITTED
-    *    merge output (crash after the merged wave's _SUCCESS, before the log)
-    *    — its sources are still live, so reading it would double postings.
-    * Both kinds of leftover are deleted here on load, restoring the invariant
-    * that the postings dir holds exactly the committed wave set.
-    */
-  def waves(spark: SparkSession, indexPath: String): Seq[WaveInfo] = {
-    val root = new Path(s"$indexPath/postings")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Nil
-    val records = mergeRecords(spark, indexPath)
-    val retired = records.flatMap(_.merged).toSet
-    val committedMerges = records.map(_.into).toSet
-    // doc-wave dirs folded into a reclaiming merge's docs/wave=<into>:
-    // leftovers (crash between log commit and source deletion) are dead —
-    // reading them would resurrect reclaimed docs in publish's doc stats
-    val deadDocWaves = records.flatMap(_.docsFrom).toSet
-    deadDocWaves.foreach { w =>
-      val d = new Path(s"$indexPath/docs/wave=$w")
-      if (fs.exists(d)) fs.delete(d, true)
-    }
-    // staged applied-delete sets from an interrupted reclaiming merge are
-    // NEVER applied at recovery (subtracting a set whose merge never
-    // committed would resurrect those docs) — lingering reclaimed ids in the
-    // live table are harmless no-ops, so the stage is simply discarded
-    fs.listStatus(new Path(indexPath)).toSeq
-      .filter(_.getPath.getName.startsWith("deletes_stage_"))
-      .foreach(s => fs.delete(s.getPath, true))
-    fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("wave="))
-      .flatMap { s =>
-        val w = s.getPath.getName.stripPrefix("wave=").toInt
-        val dead = retired.contains(w) ||
-          (w >= MergeWaveBase && !committedMerges.contains(w))
-        if (dead) {
-          fs.delete(s.getPath, true)
-          val partial = new Path(s"$indexPath/termsPartial/wave=$w")
-          if (fs.exists(partial)) fs.delete(partial, true)
-          // an UNCOMMITTED merge output may have written its docs dir too
-          // (reclaiming merges write docs before the log commit point)
-          if (w >= MergeWaveBase && !committedMerges.contains(w)) {
-            val orphanDocs = new Path(s"$indexPath/docs/wave=$w")
-            if (fs.exists(orphanDocs)) fs.delete(orphanDocs, true)
-          }
-          None
-        } else {
-          val size = fs.getContentSummary(s.getPath).getLength
-          Some(WaveInfo(w, size, s.getPath.toString))
-        }
-      }
-      .sortBy(_.wave)
-  }
+  private def infos(m: IndexManifest): Seq[WaveInfo] =
+    m.waves.map(e => WaveInfo(e.wave, e.of("postings").map(_.bytes).sum))
 
   /** Reference budget math, reduced to the append-only case.
     *
@@ -214,194 +111,159 @@ object TieredMerge {
     out.result()
   }
 
-  /** The doc-wave dirs holding wave `w`'s documents: its own `docs/wave=w`
-    * when present (original waves; reclaiming merge outputs), else the
-    * transitive ORIGINAL sources from the merge logs (non-reclaiming merges
-    * leave docs at their original dirs).
-    */
-  def docWaveDirs(spark: SparkSession, indexPath: String, w: Int,
-      logs: Map[Int, Seq[Int]]): Seq[Int] = {
-    val fs = new Path(indexPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def walk(v: Int, depth: Int): Seq[Int] =
-      if (fs.exists(new Path(s"$indexPath/docs/wave=$v"))) Seq(v)
-      else if (depth < 64) logs.get(v).toSeq.flatten.flatMap(walk(_, depth + 1))
-      else Nil
-    walk(w, 0)
-  }
-
-  /** Execute one merge: bounded-group re-encode of the selected waves into a
-    * new wave dir, then atomically retire the sources.
-    *
-    * '''Delete reclamation''' (reference TieredMergePolicy scores
-    * `reclaimedDeletes`, /root/reference/core/index/merge.go:327-380; Lucene
-    * drops per-segment liveDocs at merge): when the index has a committed
-    * manifest and a deletes table, the re-encode DROPS deleted entries, the
-    * group's doc waves are rewritten minus deleted rows into
-    * `docs/wave=<new>`, and the reclaimed ids are cleared from the deletes
-    * table (crash-safe [[Deletes.swapIn]]). Callers must `publish()` after
-    * a reclaiming merge so df/ttf/docCount reflect the survivors. With
-    * `reclaimDeletes=false` (or no deletes) behavior is the round-3
-    * verbatim re-encode.
+  /** Execute one merge: bounded-group re-encode of the selected waves'
+    * listed postings into a new wave, committed in place of its sources
+    * ([[mergeRound]]). Returns the new wave.
     */
   def execute(spark: SparkSession, indexPath: String, group: Seq[WaveInfo],
-      reclaimDeletes: Boolean = true): Int = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val all = waves(spark, indexPath)
-    val newWave = math.max(all.map(_.wave).max + 1, MergeWaveBase)
-    val target = s"$indexPath/postings/wave=$newWave"
-    val fs = new Path(indexPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    val manifest =
-      if (fs.exists(new Path(s"$indexPath/commit.json")))
-        scala.util.Try(IndexManifest.load(spark, indexPath)).toOption
-      else None
-    // localCheckpoint = a TRUE point-in-time snapshot: the postings filter,
-    // the docs anti-join, and the applied-set staging below must all see the
-    // SAME delete set even if appends race the merge (a lazy DataFrame would
-    // re-read the live dir per job and could stage an id the postings job
-    // never filtered)
-    val delDf = if (reclaimDeletes && manifest.isDefined)
-      Deletes.df(spark, indexPath).map(_.distinct().localCheckpoint()) else None
-
-    // indexes written before format 3 lack the offPayload column — degrade
-    // to null (no offsets) instead of an AnalysisException on as[PostingRow]
-    val rawRows = spark.read.parquet(group.map(_.path): _*)
-    val rows = (if (rawRows.columns.contains("offPayload")) rawRows
-      else rawRows.withColumn("offPayload",
-        org.apache.spark.sql.functions.lit(null).cast("binary"))).as[PostingRow]
-    val logs = mergeLog(spark, indexPath)
-    // the group's doc coverage (original wave dirs) — reclamation folds these
-    // into docs/wave=<new>; empty when not reclaiming
-    val docsFrom: Seq[Int] =
-      if (delDf.isDefined) group.flatMap(w => docWaveDirs(spark, indexPath, w.wave, logs)).distinct.sorted
-      else Nil
-
-    delDf match {
-      case None =>
-        // same file order and page size as invertWave → tight (field, term)
-        // statistics survive merges
-        val merged = rows
-          .groupByKey(r => (r.field, r.term, r.rangeId))
-          .mapGroups { (_: (String, String, Long), it: Iterator[PostingRow]) =>
-            // rows of later merge generations cover non-contiguous doc ranges
-            // (tier selection is by size, not adjacency) → PostingRows.merge
-            // does a full entry sort, not just a row-order concat
-            PostingRows.merge(it.toArray, newWave)
-          }
-        IndexBuilder.writeSorted(merged, target, "field", "term", "rangeId")
-      case Some(dels) =>
-        // per-rangeId sorted delete arrays joined onto the group's rows: the
-        // same bounded-buffer shape as the searcher's ranged-delete path —
-        // nothing delete-sized ever reaches the driver
-        val byRange = Deletes.byRange(dels, manifest.get.docsPerRange)
-          .as[(Long, Array[Long])]
-        val reclaimed = rows.joinWith(byRange, rows("rangeId") === byRange("rangeId"), "left_outer")
-          .groupByKey { case (r, _) => (r.field, r.term, r.rangeId) }
-          .flatMapGroups { (_: (String, String, Long), it: Iterator[(PostingRow, (Long, Array[Long]))]) =>
-            val buf = it.toArray
-            val ds = buf.collectFirst { case (_, d) if d != null => d._2 }
-              .getOrElse(Array.emptyLongArray)
-            PostingRows.mergeFiltered(buf.map(_._1), newWave, ds).iterator
-          }
-        IndexBuilder.writeSorted(reclaimed, target, "field", "term", "rangeId")
-        // docs of the group minus deleted rows → the merged wave's docs dir
-        // (written BEFORE the log commit point; an orphan is swept by waves())
-        if (docsFrom.nonEmpty) {
-          val docsUnion = spark.read.parquet(
-            docsFrom.map(w => s"$indexPath/docs/wave=$w"): _*)
-          docsUnion.join(dels, Seq("docId"), "left_anti")
-            .write.mode("overwrite").parquet(s"$indexPath/docs/wave=$newWave")
-          // stage the APPLIED set (snapshot ∩ group coverage) — the ids this
-          // merge physically reclaimed. The swap below subtracts it from the
-          // CURRENT table, so deletes appended DURING the merge survive
-          // instead of being silently discarded by a stale survivor snapshot
-          // (advisor round-4 fix): an id deleted mid-merge keeps its row
-          // (its postings were NOT filtered) and stays query-time-filtered.
-          // Coverage must be read from the SOURCE doc dirs (still present),
-          // hence staging now, applying only after the log commit point.
-          dels.join(docsUnion.select(col("docId")), Seq("docId"), "left_semi")
-            .write.mode("overwrite").parquet(s"$indexPath/deletes_stage_$newWave")
-        }
-    }
-
-    // merged wave's terms partial (publish folds partials tree-wise): from
-    // the POST-FILTER postings, so reclaimed entries are already excluded.
-    // Written before the commit point — an orphan's partial is swept with it.
-    IndexBuilder.writeTermsPartial(spark, indexPath, newWave)
-
-    // Two-phase commit (advisor round-2 fix): the merges log is written
-    // DURABLY before any source deletion. Crash windows:
-    //  - before the log: the merged wave (postings AND docs) is an
-    //    uncommitted orphan — waves() deletes it on next load, sources stay
-    //    live (no double postings); a staged deletes snapshot is swept;
-    //  - after the log, before deletions: sources are logged-retired —
-    //    waves() treats them as dead and deletes the leftovers on load
-    //    (including docsFrom doc dirs);
-    //  - after the log, before the deletes swap: reclaimed ids linger in the
-    //    deletes table — harmless (their postings are gone; filtering is a
-    //    no-op) until the next reclaiming merge's swap sweeps them.
-    val docsFromJson = if (docsFrom.nonEmpty) s""","docsFrom":[${docsFrom.mkString(",")}]""" else ""
-    val log = fs.create(new Path(s"$indexPath/merges_$newWave.json"), true)
-    log.write(
-      (s"""{"merged":[${group.map(_.wave).mkString(",")}],"into":$newWave,""" +
-        s""""bytes":${group.map(_.bytes).sum}$docsFromJson}""").getBytes("UTF-8"))
-    log.close()
-    group.foreach(w => fs.delete(new Path(w.path), true))
-    docsFrom.foreach(w => fs.delete(new Path(s"$indexPath/docs/wave=$w"), true))
-
-    val stage = new Path(s"$indexPath/deletes_stage_$newWave")
-    if (docsFrom.nonEmpty && fs.exists(stage)) {
-      // post-reclaim table = CURRENT deletes minus the applied set: computed
-      // at swap time, not merge-start time, so appends that raced the merge
-      // are preserved. (A writer racing the swap itself still needs the
-      // single-writer rule that already covers merge-vs-publish.)
-      val applied = spark.read.parquet(stage.toString).select("docId")
-      val survivors = Deletes.df(spark, indexPath) match {
-        case Some(cur) => cur.join(applied, Seq("docId"), "left_anti")
-        case None => Seq.empty[Long].toDF("docId")
-      }
-      Deletes.swapIn(spark, indexPath, survivors)
-      fs.delete(stage, true)
-    }
-    newWave
-  }
+      reclaimDeletes: Boolean = true): Int =
+    mergeRound(spark, indexPath, IndexManifest.load(spark, indexPath), Seq(group), reclaimDeletes).head
 
   /** Rewrite every live wave whose deleted-doc fraction is at least
     * `minDeletedFraction` as a single-member reclaiming merge — the
-    * reference's expungeDeletes. Returns the new wave ids; callers must
-    * `publish()` afterwards so stats reflect the survivors.
+    * reference's expungeDeletes — in one round, so the survivors' stats are
+    * folded once. Returns the new wave ids.
     */
   def expungeDeletes(spark: SparkSession, indexPath: String,
       minDeletedFraction: Double = 0.1): Seq[Int] = {
     val fracs = deletedFractions(spark, indexPath)
-    waves(spark, indexPath)
-      .filter(w => fracs.getOrElse(w.wave, 0.0) >= minDeletedFraction)
-      .map(w => execute(spark, indexPath, Seq(w)))
+    IndexManifest.current(spark, indexPath).fold(Seq.empty[Int])(m => mergeRound(spark, indexPath, m,
+      infos(m).filter(w => fracs.getOrElse(w.wave, 0.0) >= minDeletedFraction).map(Seq(_))))
+  }
+
+  /** One merge output, written and not yet committed: its sources, its
+    * wave entry and the delete ids it reclaimed (None: a plain merge).
+    */
+  private final case class Written(sources: Seq[WaveEntry], out: WaveEntry,
+      applied: Option[org.apache.spark.sql.DataFrame])
+
+  /** Merges disjoint groups of `prev`'s waves, then commits every output in
+    * place of its sources in one commit. It deletes nothing: the next
+    * commit's sweep removes the sources ([[IndexBuilder.commit]]), and an
+    * output a crash left uncommitted is never read. Plain merges change no
+    * term's stats, so their commit keeps the live dictionary. When a merge
+    * reclaimed deletes, the commit folds every live wave afresh (survivor
+    * stats) and the reclaimed ids leave the deletes table.
+    */
+  private def mergeRound(spark: SparkSession, indexPath: String, prev: IndexManifest,
+      groups: Seq[Seq[WaveInfo]], reclaimDeletes: Boolean = true): Seq[Int] = {
+    import spark.implicits._
+    if (groups.isEmpty) return Nil
+    val first = math.max(prev.waves.map(_.wave).max + 1, MergeWaveBase)
+    val written = groups.zipWithIndex.map { case (g, i) =>
+      write(spark, indexPath, prev, g, first + i, reclaimDeletes)
+    }
+    val sources = written.flatMap(_.sources).toSet
+    val waves = (prev.waves.filterNot(sources) ++ written.map(_.out)).sortBy(_.age)
+    written.flatMap(_.applied).reduceOption(_ union _) match {
+      case None => IndexBuilder.commit(spark, Some(prev), prev.copy(waves = waves))
+      case Some(applied) =>
+        IndexBuilder.forExisting(spark, indexPath).fold(indexPath, Some(prev), base = None, waves)
+        // post-reclaim deletes = CURRENT deletes minus the applied sets:
+        // deletes appended during the merge survive (their postings were
+        // NOT filtered). A crash before the swap leaves reclaimed ids as
+        // harmless no-ops; a writer racing the swap needs the single-writer
+        // rule that covers merge-vs-publish.
+        Jobs.describe(spark.sparkContext, s"graft merge: deletes left after waves ${written.map(_.out.wave).mkString(",")}") {
+          Deletes.swapIn(spark, indexPath, Deletes.df(spark, indexPath) match {
+            case Some(cur) => cur.join(applied, Seq("docId"), "left_anti")
+            case None => Seq.empty[Long].toDF("docId")
+          })
+        }
+    }
+    written.map(_.out.wave)
+  }
+
+  /** Writes the merge of `group` as wave `newWave`: its postings and
+    * `termsPartial`. When deletes hit the group's docs (reference
+    * TieredMergePolicy scores `reclaimedDeletes`,
+    * /root/reference/core/index/merge.go:327-380; Lucene drops per-segment
+    * liveDocs at merge), their postings entries are dropped and the group's
+    * docs minus them go to `docs/wave=<new>`; else the merged wave lists its
+    * sources' docs.
+    */
+  private def write(spark: SparkSession, indexPath: String, prev: IndexManifest,
+      group: Seq[WaveInfo], newWave: Int, reclaimDeletes: Boolean): Written = {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val sources = group.map(g => prev.waves.find(_.wave == g.wave)
+      .getOrElse(sys.error(s"wave ${g.wave} is not live under $indexPath")))
+    def paths(table: String) = IndexManifest.resolve(indexPath, sources.flatMap(_.of(table)))
+    Jobs.describe(spark.sparkContext, s"graft merge waves ${group.map(_.wave).mkString(",")} into $newWave") {
+      lazy val docsUnion = spark.read.parquet(paths("docs"): _*)
+      // the ids this merge reclaims: the deletes ∩ the group's docs, as a
+      // point-in-time snapshot (localCheckpoint), so the postings filter, the
+      // docs anti-join and the swap below see the same set even if deletes
+      // are appended during the merge. None of them: a plain merge.
+      val applied = (if (reclaimDeletes) Deletes.df(spark, indexPath) else None)
+        .map(_.join(docsUnion.select(col("docId")), Seq("docId"), "left_semi").distinct().localCheckpoint())
+        .filterNot(_.isEmpty)
+
+      // indexes written before format 3 lack the offPayload column — degrade
+      // to null (no offsets) instead of an AnalysisException on as[PostingRow]
+      val rawRows = spark.read.parquet(paths("postings"): _*)
+      val rows = (if (rawRows.columns.contains("offPayload")) rawRows
+        else rawRows.withColumn("offPayload",
+          org.apache.spark.sql.functions.lit(null).cast("binary"))).as[PostingRow]
+      val merged = applied match {
+        case None =>
+          rows.groupByKey(r => (r.field, r.term, r.rangeId))
+            .mapGroups { (_: (String, String, Long), it: Iterator[PostingRow]) =>
+              // rows of later merge generations cover non-contiguous doc ranges
+              // (tier selection is by size, not adjacency) → PostingRows.merge
+              // does a full entry sort, not just a row-order concat
+              PostingRows.merge(it.toArray, newWave)
+            }
+        case Some(dels) =>
+          // per-rangeId sorted delete arrays joined onto the group's rows: the
+          // same bounded-buffer shape as the searcher's ranged-delete path —
+          // nothing delete-sized ever reaches the driver
+          val byRange = Deletes.byRange(dels, prev.docsPerRange).as[(Long, Array[Long])]
+          rows.joinWith(byRange, rows("rangeId") === byRange("rangeId"), "left_outer")
+            .groupByKey { case (r, _) => (r.field, r.term, r.rangeId) }
+            .flatMapGroups { (_: (String, String, Long), it: Iterator[(PostingRow, (Long, Array[Long]))]) =>
+              val buf = it.toArray
+              val ds = buf.collectFirst { case (_, d) if d != null => d._2 }
+                .getOrElse(Array.emptyLongArray)
+              PostingRows.mergeFiltered(buf.map(_._1), newWave, ds).iterator
+            }
+      }
+      // same file order and page size as invertWave → tight (field, term)
+      // statistics survive merges
+      IndexBuilder.writeSorted(merged, s"$indexPath/postings/wave=$newWave", "field", "term", "rangeId")
+      applied.foreach(dels => docsUnion.join(dels, Seq("docId"), "left_anti")
+        .write.mode("overwrite").parquet(s"$indexPath/docs/wave=$newWave"))
+      IndexBuilder.writeTermsPartial(spark, indexPath, newWave)
+      def written(t: String) =
+        IndexManifest.listFiles(spark.sparkContext.hadoopConfiguration, indexPath, s"$t/wave=$newWave")
+      Written(sources, WaveEntry(newWave, sources.flatMap(_.covers).distinct.sorted, written("postings") ++
+        (if (applied.isEmpty) sources.flatMap(_.of("docs")) else written("docs")) ++ written("termsPartial")), applied)
+    }
   }
 
   /** Deleted-doc fraction per live wave (feeds [[plan]]'s reclaim scoring
-    * and [[expungeDeletes]]): TWO bounded jobs over docs ⋈ deletes, grouped
-    * by the docs dirs' wave partition — nothing per-doc reaches the driver.
+    * and [[expungeDeletes]]): TWO bounded jobs over the commit's docs ⋈
+    * deletes, grouped by the docs dirs' wave partition — nothing per-doc
+    * reaches the driver. A docs dir counts toward the live wave that lists
+    * it (a non-reclaiming merged wave lists its sources' docs).
     */
   def deletedFractions(spark: SparkSession, indexPath: String): Map[Int, Double] = {
-    import org.apache.spark.sql.functions.{col, count, lit}
+    import org.apache.spark.sql.functions.{count, lit}
     if (!Deletes.exists(spark, indexPath)) return Map.empty
+    val m = IndexManifest.load(spark, indexPath)
     val dels = Deletes.df(spark, indexPath).get.distinct()
-    val docsAll = spark.read.parquet(s"$indexPath/docs")
-    val tot = docsAll.groupBy("wave").agg(count(lit(1)).as("n")).collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val del = docsAll.join(dels, Seq("docId"), "left_semi")
-      .groupBy("wave").agg(count(lit(1)).as("n")).collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    // doc-wave fractions are re-keyed to the OWNING live postings wave
-    // (non-reclaiming merges leave docs at original wave dirs)
-    val logs = mergeLog(spark, indexPath)
-    waves(spark, indexPath).map { w =>
-      val dirs = docWaveDirs(spark, indexPath, w.wave, logs)
-      val t = dirs.map(d => tot.getOrElse(d, 0L)).sum
-      val d = dirs.map(x => del.getOrElse(x, 0L)).sum
-      w.wave -> (if (t == 0) 0.0 else d.toDouble / t)
+    val owner = m.waves.flatMap(e => e.of("docs").map(f =>
+      f.path.split('/')(1).stripPrefix("wave=").toInt -> e.wave)).toMap
+    val docs = spark.read.option("basePath", s"$indexPath/docs").parquet(m.paths("docs"): _*)
+    def perWave(d: org.apache.spark.sql.DataFrame): Map[Int, Long] =
+      Jobs.describe(spark.sparkContext, s"graft deleted fractions of $indexPath") {
+        d.groupBy("wave").agg(count(lit(1)).as("n")).collect()
+      }.toSeq.map(r => owner(r.getInt(0)) -> r.getLong(1)).groupMapReduce(_._1)(_._2)(_ + _)
+    val tot = perWave(docs)
+    val del = perWave(docs.join(dels, Seq("docId"), "left_semi"))
+    m.waves.map { e =>
+      val t = tot.getOrElse(e.wave, 0L)
+      e.wave -> (if (t == 0) 0.0 else del.getOrElse(e.wave, 0L).toDouble / t)
     }.toMap
   }
 
@@ -421,21 +283,22 @@ object TieredMerge {
       plan(segs, segsPerTier, maxMergeAtOnce,
         delFracByWave = deletedFractions(spark, indexPath)))
 
-  /** Merge driver loop with a pluggable policy. Size-based policies (tiered)
-    * see waves in number order; POSITIONAL policies (planLog) must receive
-    * generational order, so the driver feeds them [[wavesByAge]].
+  /** Merge driver loop with a pluggable policy; each planning round's
+    * merges commit together ([[mergeRound]]) before the next round plans.
+    * Size-based policies (tiered) see waves in number order; POSITIONAL
+    * policies (planLog) must receive generational order, the commit's own
+    * ([[waves]]).
     */
   def maybeMergeWith(spark: SparkSession, indexPath: String,
       policy: Seq[WaveInfo] => Seq[Seq[WaveInfo]],
       positional: Boolean = false): Seq[Int] = {
     val done = scala.collection.mutable.ArrayBuffer.empty[Int]
-    var continue = true
-    while (continue) {
-      val ws =
-        if (positional) wavesByAge(spark, indexPath) else waves(spark, indexPath)
-      val p = policy(ws)
-      if (p.isEmpty) continue = false
-      else p.foreach(g => done += execute(spark, indexPath, g))
+    var round = IndexManifest.current(spark, indexPath)
+    while (round.isDefined) {
+      val ws = infos(round.get)
+      val merged = mergeRound(spark, indexPath, round.get, policy(if (positional) ws else ws.sortBy(_.wave)))
+      done ++= merged
+      round = if (merged.isEmpty) None else IndexManifest.current(spark, indexPath)
     }
     done.toSeq
   }

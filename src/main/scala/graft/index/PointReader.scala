@@ -3,7 +3,7 @@ package graft.index
 import scala.reflect.ClassTag
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
@@ -20,57 +20,36 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.util.SerializableConfiguration
 
-/** Driver-side point reads of one parquet table directory, with no Spark
-  * job — the in-memory terms-index role of Lucene's BlockTree `.tip`
-  * (SURVEY.md §2.3): the files' footers are the index, their row-group and
-  * page min/max statistics do the seek.
+/** Driver-side point reads of one parquet table, with no Spark job — the
+  * in-memory terms-index role of Lucene's BlockTree `.tip` (SURVEY.md
+  * §2.3): the files' footers are the index, their row-group and page
+  * min/max statistics do the seek.
   *
-  * The table is listed (`listStatus`, recursively through `wave=N`
-  * partition dirs, skipping `_`/`.` entries as Spark does) when the reader
-  * is made, and every footer is read ONCE, on first use: a reader is a
-  * point-in-time view, like the searcher that owns it — files written
-  * after it was made (an appended wave) stay invisible to it. A listing
-  * failure (a missing table) surfaces on first use. Each read projects
-  * only the columns it names and filters on `pred` at three levels: row
-  * groups whose footer
+  * The reader serves exactly the files it is given — a commit's list, so
+  * it never lists a directory and is a point-in-time view like the
+  * searcher that owns it — and reads every footer ONCE, on first use; a
+  * missing file surfaces then. Each read projects only the columns it
+  * names and filters on `pred` at three levels: row groups whose footer
   * statistics exclude it are skipped before the file is opened, parquet's
   * column index skips pages inside the surviving row groups, and the
   * record filter drops the remaining non-matching rows — so the result
-  * equals `spark.read.parquet(dir).where(pred)`. Files open from the
-  * listed statuses, never from a per-file status call: local files through
-  * parquet's `LocalInputFile` (Hadoop's checksummed local file system made
-  * each read about three times slower), others through
-  * `HadoopInputFile.fromStatus`. Footers decode with options built once
-  * from `conf`. Thread-safe: reads share only the immutable footers.
+  * equals `spark.read.parquet(paths: _*).where(pred)`. Local files open
+  * through parquet's `LocalInputFile` (Hadoop's checksummed local file
+  * system made each read about three times slower), others through
+  * Hadoop. Footers decode with options built once from `conf`.
+  * Thread-safe: reads share only the immutable footers.
   *
   * The same per-file read also runs on executors ([[rdd]]): the footers
   * pick the files that can match, and one task per file reads it, so a
   * distributed scan of the table needs no Catalyst plan.
   */
-final class PointReader(conf: Configuration, dir: String) {
-  private val listed: scala.util.Try[Vector[FileStatus]] = scala.util.Try {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(conf)
-    def hidden(p: Path) = p.getName.startsWith("_") || p.getName.startsWith(".")
-    def list(p: Path): Seq[FileStatus] =
-      fs.listStatus(p).toSeq.filterNot(s => hidden(s.getPath))
-        .flatMap(s => if (s.isDirectory) list(s.getPath) else Seq(s))
-    list(root).toVector
-  }
-
-  /** The files this reader serves, as listed when it was made. */
-  def paths: Vector[String] = listed.get.map(_.getPath.toString)
-
+final class PointReader(conf: Configuration, val paths: Seq[String]) {
   private lazy val files: Vector[(String, InputFile, ParquetMetadata)] = {
     val options = HadoopReadOptions.builder(conf).build()
-    listed.get.map { st => // a missing table fails here, loudly
-      val in: InputFile =
-        if (st.getPath.toUri.getScheme == "file")
-          new LocalInputFile(java.nio.file.Paths.get(st.getPath.toUri))
-        else HadoopInputFile.fromStatus(st, conf)
+    paths.toVector.map { path =>
+      val in = PointReader.inputFile(path, conf)
       val stream = in.newStream()
-      (st.getPath.toString, in,
-        try ParquetFileReader.readFooter(in, options, stream) finally stream.close())
+      (path, in, try ParquetFileReader.readFooter(in, options, stream) finally stream.close())
     }
   }
 
@@ -136,7 +115,8 @@ object PointReader {
     * slower), others through Hadoop.
     */
   private def inputFile(path: String, conf: Configuration): InputFile = {
-    val p = new Path(path)
+    val raw = new Path(path)
+    val p = raw.getFileSystem(conf).makeQualified(raw)
     if (p.toUri.getScheme == "file") new LocalInputFile(java.nio.file.Paths.get(p.toUri))
     else HadoopInputFile.fromPath(p, conf)
   }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.codec.PostingsCodec
-import graft.index.{IndexManifest, PointReader}
+import graft.index.{IndexManifest, Jobs, PointReader}
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate, Operators}
 import org.apache.parquet.io.api.Binary
@@ -313,14 +313,14 @@ private[search] final class CommitState(spark: SparkSession, val indexPath: Stri
     * tables: driver lookups (term stats, prefix and range expansion, posting
     * rows, stored docs) read through these with no Spark job, and every job
     * over terms or postings runs the same per-file read in its tasks
-    * ([[PointReader.rdd]]). Each lists its table now, with the manifest, so
-    * the commit's files are those present when it opened: a wave appended
-    * later is invisible to it (its stats are not in this manifest).
+    * ([[PointReader.rdd]]). Each reads exactly the files the commit lists,
+    * so a wave written or merged after the commit, committed or not, is
+    * invisible to it.
     */
   private def hadoopConf = spark.sparkContext.hadoopConfiguration
-  val termsReader = new PointReader(hadoopConf, manifest.termsLocation)
-  val postingsReader = new PointReader(hadoopConf, s"$indexPath/postings")
-  val docsReader = new PointReader(hadoopConf, s"$indexPath/docs")
+  val termsReader = new PointReader(hadoopConf, manifest.termsPaths)
+  val postingsReader = new PointReader(hadoopConf, manifest.paths("postings"))
+  val docsReader = new PointReader(hadoopConf, manifest.paths("docs"))
 
   /** Stored docs as a Spark table for facets, sort, grouping and
     * match-all; version-1 indexes predate per-field dls and read an empty
@@ -754,7 +754,7 @@ final class IndexSearcher private (
     val pred = (PointReader.stringIn("field", Seq(f)) +: (range.toSeq ++ check.map(_.predicate)))
       .reduce(FilterApi.and)
     if (check.isEmpty) commit.termsReader.read(columns, Some(pred), limitPerFile)(row)
-    else describe(job) {
+    else Jobs.describe(spark.sparkContext, job) {
       commit.termsReader.rdd(spark.sparkContext, columns, pred, limitPerFile)(row).collect().toSeq
     }
   }
@@ -1177,7 +1177,7 @@ final class IndexSearcher private (
     else {
       val ranges = rows.map(_._3).toSet
       val byRange = new RangeJob.ByRange(commit.rangeParts, 1)
-      val dels = describe(s"graft search ranged deletes: ${ranges.size} ranges") {
+      val dels = Jobs.describe(spark.sparkContext, s"graft search ranged deletes: ${ranges.size} ranges") {
         spark.sparkContext.runJob(delRanges,
           (it: Iterator[(Long, Array[Long])]) => it.filter(d => ranges(d._1)).toArray,
           ranges.toSeq.map(byRange.getPartition).distinct)
@@ -1246,18 +1246,6 @@ final class IndexSearcher private (
         if (rangedDeletes) Some(delRanges) else None,
         rangeFilter.collect { case RangeSel.Df(ids) => ids })
     }
-
-  /** Runs `f` with Spark's job description set to `what` (cut to 200
-    * chars), so listeners and the UI can tell which path and query
-    * launched each job; the caller's description is restored afterwards.
-    */
-  private[search] def describe[A](what: String)(f: => A): A = {
-    val sc = spark.sparkContext
-    val key = "spark.job.description"
-    val prev = sc.getLocalProperty(key)
-    sc.setLocalProperty(key, what.take(200))
-    try f finally sc.setLocalProperty(key, prev)
-  }
 
   /** Description of a distributed evaluation: the path, its size and the
     * query's keys.
@@ -1373,7 +1361,7 @@ final class IndexSearcher private (
       case Some(RangeSel.Ids(rs)) if rs.size <= 256 || fitsDriver(p) =>
         localTopK(p, fetchRows(p.keys, p.ge.needPos.exists(identity), Some(rs)), k, after)
       case _ =>
-        describe(distributedJob(p, rangeFilter))(RangeJob.topK(scored(p, rangeFilter), k, after))
+        Jobs.describe(spark.sparkContext, distributedJob(p, rangeFilter))(RangeJob.topK(scored(p, rangeFilter), k, after))
     }
   }
 

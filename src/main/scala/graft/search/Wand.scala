@@ -1,6 +1,7 @@
 package graft.search
 
 import graft.codec.SmallFloat
+import graft.index.Jobs
 
 /** Block-max-WAND-style pruned top-k (north-star requirement; additive over
   * the reference — Lucene 4.10 predates impacts, /root/repo/SURVEY.md §4.2).
@@ -254,7 +255,7 @@ object Wand {
 
     // phase 1: best-bound eligible ranges (bound desc, rangeId asc; a
     // distributed top-B, tiny)
-    val phase1 = searcher.describe(s"graft wand phase 1 bounds: ${p.keyText}") {
+    val phase1 = Jobs.describe(eligible.sparkContext, s"graft wand phase 1 bounds: ${p.keyText}") {
       eligible.takeOrdered(phase1Count)(
         Ordering.by[(Long, Double), (Double, Long)](r => (-r._2, r._1)))
     }
@@ -276,7 +277,7 @@ object Wand {
     // wins the (score desc, docId asc) tie-break — strict > would prune it
     // and break 'pruned ≡ exhaustive' (advisor round-2 fix, WandSpec case)
     val survivors = eligible.filter(r => r._2 >= tau && !phase1Set(r._1)).map(_._1)
-    val probe = searcher.describe(s"graft wand phase 2 survivors: ${p.keyText}") {
+    val probe = Jobs.describe(eligible.sparkContext, s"graft wand phase 2 survivors: ${p.keyText}") {
       survivors.mapPartitions(_.take(SurvivorCollectMax + 1)).collect()
     }
     val merged = new BoundedHitQueue(k)

@@ -2,6 +2,8 @@ package graft.sources
 
 import java.util
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -61,35 +63,38 @@ object GraftSearchTable {
     StructField("score", DoubleType, nullable = false)))
 
   // searchers are expensive to warm (manifest + stats cache) → share per
-  // (index, field) across queries in this JVM, keyed by a freshness token so
-  // any publish (streaming append, rebuild), delete, OR merge (which
-  // rewrites postings waves without touching commit.json) is picked up by
-  // the next query instead of silently serving stale results. One live
-  // searcher per (index, field): a token change EVICTS the previous
-  // generation (no unbounded growth under frequent publishes).
+  // (index, field, similarity) across queries in this JVM, keyed by a
+  // freshness token: the commit (which names every file a searcher reads,
+  // so any publish, append or merge changes it) plus the deletes dir. One
+  // live searcher per key: a token change replaces it and closes the one
+  // it displaces (no unbounded growth under frequent publishes).
   private val searchers =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), (String, IndexSearcher)]
+    new java.util.concurrent.ConcurrentHashMap[(String, String, String), (String, IndexSearcher)]
 
   private def freshness(spark: SparkSession, index: String): String = {
     val conf = spark.sparkContext.hadoopConfiguration
-    def ls(dir: String): String = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) "-"
-      else fs.listStatus(p)
-        .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
+    val d = new org.apache.hadoop.fs.Path(s"$index/deletes")
+    val fs = d.getFileSystem(conf)
+    val dels =
+      if (!fs.exists(d)) "-"
+      else fs.listStatus(d).map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
         .sorted.mkString("|")
-    }
-    val c = new org.apache.hadoop.fs.Path(s"$index/commit.json")
-    val fs = c.getFileSystem(conf)
-    val commitTxt =
-      if (!fs.exists(c)) "-"
-      else {
-        val in = fs.open(c)
-        try scala.io.Source.fromInputStream(in).mkString finally in.close()
-      }
-    // full strings, no lossy hashing: commit content + deletes + wave dirs
-    s"$commitTxt/${ls(s"$index/deletes")}/${ls(s"$index/postings")}"
+    // full strings, no lossy hashing
+    s"${graft.index.IndexManifest.commitText(conf, index).getOrElse("-")}/$dels"
+  }
+
+  /** The cached value of `key` when its token is `tok`, else `open()`'s,
+    * which replaces it; atomic per key, so concurrent callers that see a new
+    * token open one value between them. The displaced value is closed.
+    */
+  private[graft] def reuseOrOpen[K, V](cache: java.util.concurrent.ConcurrentHashMap[K, (String, V)],
+      key: K, tok: String)(open: => V)(close: V => Unit): V = {
+    var displaced: Option[V] = None
+    val (_, v) = cache.compute(key, (_, cur) =>
+      if (cur != null && cur._1 == tok) cur
+      else { displaced = Option(cur).map(_._2); (tok, open) })
+    displaced.foreach(close)
+    v
   }
 
   /** `similarity` option → scoring model (default bm25). */
@@ -117,24 +122,13 @@ object GraftSearchTable {
   private[graft] def searcher(index: String, field: String,
       simName: String = "bm25"): IndexSearcher = {
     val spark = SparkSession.active
-    val tok = freshness(spark, index)
-    val k = (index, field, simName.toLowerCase)
-    searchers.get(k) match {
-      case Some((t, s)) if t == tok => s
-      case prev =>
-        // the evicted generation releases its pinned caches (ranged-delete
-        // DF, posting-row cache) — round-3 judge fix: eviction without
-        // close() pinned one cache entry per publish for the JVM lifetime
-        prev.foreach(_._2.close())
-        val s = new IndexSearcher(spark, index, field, similarityFor(simName))
-        searchers.put(k, (tok, s))
-        s
-    }
+    reuseOrOpen(searchers, (index, field, simName.toLowerCase), freshness(spark, index))(
+      new IndexSearcher(spark, index, field, similarityFor(simName)))(_.close())
   }
 
   /** Test hook: live cached searchers (for cache-release assertions). */
   private[graft] def cachedSearchers: Seq[IndexSearcher] =
-    searchers.values.map(_._2).toSeq
+    searchers.values().asScala.map(_._2).toSeq
 
   // sharded views: `index 'dirA,dirB,…'` → a MultiSearcher over its own
   // shard searchers, so evicting it closes nothing the single-index entries
@@ -142,22 +136,15 @@ object GraftSearchTable {
   // publish/delete/merge on ANY shard refreshes the whole group; eviction
   // closes all shards.
   private val multiSearchers =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), (String, MultiSearcher)]
+    new java.util.concurrent.ConcurrentHashMap[(String, String, String), (String, MultiSearcher)]
 
   private[graft] def multiSearcher(indexes: String, field: String,
       simName: String = "bm25"): MultiSearcher = {
     val spark = SparkSession.active
     val dirs = indexes.split(',').map(_.trim).filter(_.nonEmpty).toSeq
-    val tok = dirs.map(freshness(spark, _)).mkString("§")
-    val k = (indexes, field, simName.toLowerCase)
-    multiSearchers.get(k) match {
-      case Some((t, m)) if t == tok => m
-      case prev =>
-        prev.foreach(_._2.close())
-        val m = MultiSearcher(spark, dirs, field, similarityFor(simName))
-        multiSearchers.put(k, (tok, m))
-        m
-    }
+    reuseOrOpen(multiSearchers, (indexes, field, simName.toLowerCase),
+      dirs.map(freshness(spark, _)).mkString("§"))(
+      MultiSearcher(spark, dirs, field, similarityFor(simName)))(_.close())
   }
 }
 

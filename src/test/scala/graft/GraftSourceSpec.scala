@@ -1,10 +1,14 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.analysis.StandardCodeAnalyzer
 import graft.index._
 import graft.search._
+import graft.sources.GraftSearchTable
+import graft.streaming.StreamingIndexer
 
 /** The DataSource V2 SQL surface: `graft-search` views answer through the
   * real engine, compose with plain SQL, and push LIMIT down into k.
@@ -76,6 +80,59 @@ class GraftSourceSpec extends AnyFunSuite with SparkTestBase {
     Deletes.append(spark, dir, Seq(before.head))
     val after = hits()
     assert(after.length == before.length - 1 && !after.contains(before.head))
+  }
+
+  test("concurrent queries across a publish: one searcher per key, displaced ones closed") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-src-race").toString
+    val cfg = IndexConfig(analyzer = new StandardCodeAnalyzer(),
+      docsPerRange = 128, numSegments = 4, segmentsPerWave = 4)
+    val builder = new IndexBuilder(spark, cfg)
+    builder.build(TestCorpus.corpus(200).toDF(), dir)
+    def hits(): Seq[(Long, Double)] = spark.read.format("graft-search")
+      .option("index", dir).option("query", "import parser").option("k", "20")
+      .load().collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq.sortBy(h => (-h._2, h._1))
+    val beforeAnswer = hits()
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[IndexSearcher]()
+    seen.add(GraftSearchTable.searcher(dir, "content"))
+    val answers = new java.util.concurrent.ConcurrentLinkedQueue[Seq[(Long, Double)]]()
+    val published = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = (0 until 4).map { _ =>
+      new Thread(() => {
+        var afterPublish = 0
+        try while (afterPublish < 6) {
+          if (published.get()) afterPublish += 1
+          seen.add(GraftSearchTable.searcher(dir, "content"))
+          answers.add(hits())
+        } catch { case t: Throwable => failures.add(t) }
+      })
+    }
+    threads.foreach(_.start())
+    StreamingIndexer.appendBatch(spark, builder, TestCorpus.corpus(260).drop(200).toDF(), 0L, dir)
+    published.set(true)
+    threads.foreach(_.join())
+    assert(failures.isEmpty, failures.asScala.mkString("; "))
+    val afterAnswer = hits()
+    assert(afterAnswer != beforeAnswer)
+    assert(answers.asScala.forall(a => a == beforeAnswer || a == afterAnswer))
+    assert(GraftSearchTable.cachedSearchers.count(_.indexPath == dir) == 1)
+    assert(seen.size >= 2, "the publish never replaced the cached searcher")
+
+    // the cache's open-or-reuse under the same race, with values that record
+    // their closing: tokens flip while 4 threads ask, yet the key keeps one
+    // value and every value it displaced was closed
+    val cache = new java.util.concurrent.ConcurrentHashMap[String, (String, java.util.concurrent.atomic.AtomicBoolean)]
+    val opened = new java.util.concurrent.ConcurrentLinkedQueue[java.util.concurrent.atomic.AtomicBoolean]()
+    val askers = (0 until 4).map(t => new Thread(() => (0 until 400).foreach { i =>
+      GraftSearchTable.reuseOrOpen(cache, "key", ((i + t * 7) / 25).toString) {
+        val v = new java.util.concurrent.atomic.AtomicBoolean(false); opened.add(v); v
+      }(_.set(true))
+    }))
+    askers.foreach(_.start())
+    askers.foreach(_.join())
+    val live = cache.get("key")._2
+    assert(cache.size == 1 && !live.get && opened.size > 1)
+    assert(opened.asScala.filterNot(_ eq live).forall(_.get), "a displaced value was never closed")
   }
 
   test("free-text default is lenient: colon queries search; strictFields opts back in") {

@@ -30,7 +30,12 @@ class ManifestSpec extends AnyFunSuite with SparkTestBase {
     // backslashes, a non-BMP character, and a field named like a top-level
     // key whose stats differ from the top-level values
     val m = IndexManifest(dir, maxDoc = 1234L, docCount = 1200L, docsPerRange = 256,
-      maxDocId = 5000L, termsGen = 3, publishedWaves = Seq(0, 1, 100002),
+      maxDocId = 5000L, termsGen = 3,
+      waves = Seq(WaveEntry(0, Seq(0), Seq(IndexFile("postings/wave=0/p\"a,rt.parquet", 10L),
+          IndexFile("docs/wave=0/part.parquet", 20L))),
+        WaveEntry(TieredMerge.MergeWaveBase, Seq(1, 100002),
+          Seq(IndexFile("postings/wave=1000000/part.parquet", 30L)))),
+      termsFiles = Seq(IndexFile("terms_g3/part-0.parquet", 40L)),
       formatVersion = IndexManifest.FormatOffsets, field = "bo\"dy",
       analyzedFields = Seq("a,b", "c\\d", "𝒳"), keywordFields = Seq("lang", "docCount"),
       fieldStats = Some(Seq(
@@ -39,8 +44,92 @@ class ManifestSpec extends AnyFunSuite with SparkTestBase {
         FieldStats("bo\"dy", 70000000000L, 900L, 80L, 1234L, 1111L))))
     IndexManifest.commit(spark, m)
     assert(IndexManifest.load(spark, dir) == m)
-    IndexManifest.commit(spark, m.copy(fieldStats = None, publishedWaves = Nil))
-    assert(IndexManifest.load(spark, dir) == m.copy(fieldStats = None, publishedWaves = Nil))
+    IndexManifest.commit(spark, m.copy(fieldStats = None, waves = Nil, termsFiles = Nil))
+    assert(IndexManifest.load(spark, dir) == m.copy(fieldStats = None, waves = Nil, termsFiles = Nil))
+  }
+
+  test("a manifest written before commits listed their files loads with the files on disk") {
+    val dir = build(300)
+    val m = IndexManifest.load(spark, dir)
+    assert(m.waves.map(_.wave) == Seq(0) && m.waves.head.of("postings").nonEmpty &&
+      m.waves.head.of("docs").nonEmpty && m.termsFiles.nonEmpty)
+    val q = new QueryParser(new StandardCodeAnalyzer()).parse("parser \"posting list\"")
+    val expected = new IndexSearcher(spark, dir).search(q, 10)
+    ManifestSpec.dropFileList(spark, dir)
+    assert(IndexManifest.load(spark, dir) == m)
+    val got = new IndexSearcher(spark, dir).search(q, 10)
+    assert(got.totalHits == expected.totalHits && got.scoreDocs.toSeq == expected.scoreDocs.toSeq)
+    // the next commit writes the list again
+    IndexBuilder.forExisting(spark, dir).publish(dir)
+    assert(IndexManifest.load(spark, dir).waves == m.waves)
+  }
+
+  test("an index merged under merge logs upgrades through them: resume re-inverts nothing") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-manifest-logs").toString
+    val builder = new IndexBuilder(spark, cfg.copy(segmentsPerWave = 1))
+    val corpus = TestCorpus.corpus(300).toDF()
+    builder.build(corpus, dir)
+    Deletes.append(spark, dir, spark.read.parquet(s"$dir/docs/wave=0", s"$dir/docs/wave=1")
+      .select("docId").as[Long].collect().filter(_ % 3 == 0).toSeq)
+    val into = TieredMerge.execute(spark, dir, TieredMerge.waves(spark, dir).filter(_.wave < 2))
+    val q = new QueryParser(new StandardCodeAnalyzer()).parse("parser \"posting list\"")
+    val expected = new IndexSearcher(spark, dir).search(q, 10)
+    val m = IndexManifest.load(spark, dir)
+    assert(m.waves.map(_.wave) == Seq(into, 2, 3))
+
+    // the layout of the older format after that reclaiming merge, with the
+    // leftovers of a crash while it deleted its sources (postings/wave=0 gone,
+    // postings/wave=1 and both docs dirs not yet) and an uncommitted output
+    def rm(rel: String) = org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$dir/$rel"))
+    rm("postings/wave=0")
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(s"$dir/postings/wave=2"),
+      new java.io.File(s"$dir/postings/wave=${into + 1}"))
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/merges_$into.json"),
+      s"""{"merged":[0,1],"into":$into,"bytes":1,"docsFrom":[0,1]}""".getBytes("UTF-8"))
+    ManifestSpec.dropFileList(spark, dir)
+
+    val upgraded = IndexManifest.load(spark, dir)
+    assert(upgraded.waves == m.waves)
+    val got = new IndexSearcher(spark, dir).search(q, 10)
+    assert(got.totalHits == expected.totalHits && got.scoreDocs.toSeq == expected.scoreDocs.toSeq)
+    assert(CheckIndex.run(spark, dir).maxDoc == m.maxDoc)
+    val (_, jobs) = SparkJobs.described(spark)(builder.build(corpus, dir, resume = true))
+    assert(!jobs.exists(_.startsWith("graft invert")), jobs)
+    assert(new IndexSearcher(spark, dir).search(q, 10).totalHits == expected.totalHits)
+
+    // the next commit writes the list and sweeps the leftovers and the log
+    IndexBuilder.forExisting(spark, dir).publish(dir)
+    assert(IndexManifest.load(spark, dir).waves.map(_.wave) == Seq(into, 2, 3))
+    Seq("postings/wave=1", "docs/wave=0", "docs/wave=1", s"postings/wave=${into + 1}", s"merges_$into.json")
+      .foreach(rel => assert(!new java.io.File(s"$dir/$rel").exists, rel))
+    val after = new IndexSearcher(spark, dir).search(q, 10)
+    assert(after.totalHits == expected.totalHits && after.scoreDocs.toSeq == expected.scoreDocs.toSeq)
+  }
+
+  test("CheckIndex checks the commit's file list and reports files it does not name") {
+    val dir = build(300)
+    val m = IndexManifest.load(spark, dir)
+    // a stray parquet under a listed wave dir and a whole unlisted wave dir:
+    // reported, not counted, not a problem
+    val stray = s"postings/wave=0/part-stray.parquet"
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/${m.waves.head.of("postings").head.path}"),
+      java.nio.file.Paths.get(s"$dir/$stray"))
+    spark.read.parquet(s"$dir/docs/wave=0").write.parquet(s"$dir/docs/wave=7")
+    val r = CheckIndex.run(spark, dir)
+    assert(r.ok, r.problems)
+    assert(r.maxDoc == 300)
+    assert(r.unlisted.contains(stray) && r.unlisted.exists(_.startsWith("docs/wave=7/")), r.unlisted)
+    assert(!r.unlisted.exists(p => m.waves.head.files.exists(_.path == p)))
+    // a listed file whose size differs, then one that is missing
+    val victim = m.waves.head.of("docs").head
+    IndexManifest.commit(spark, m.copy(waves = m.waves.map(e => e.copy(files = e.files.map(f =>
+      if (f == victim) f.copy(bytes = f.bytes + 1) else f)))))
+    assert(CheckIndex.run(spark, dir).problems.exists(p => p.contains(victim.path) && p.contains("bytes")))
+    IndexManifest.commit(spark, m)
+    new java.io.File(s"$dir/${victim.path}").delete()
+    val missing = CheckIndex.run(spark, dir)
+    assert(!missing.ok && missing.problems.exists(p => p.contains(victim.path) && p.contains("missing")),
+      missing.problems)
   }
 
   test("publish writes the fieldstats table's rows into the manifest") {
@@ -90,7 +179,8 @@ class ManifestSpec extends AnyFunSuite with SparkTestBase {
     val again = IndexManifest.load(spark, dir)
     assert(again.fieldStats.nonEmpty && again.fieldStats == m.fieldStats)
     assert(again.termsGen > m.termsGen, "a republish commits a fresh generation")
-    assert(again.copy(fieldStats = None, termsGen = m.termsGen) == m.copy(fieldStats = None))
+    assert(again.copy(fieldStats = None, termsGen = m.termsGen, termsFiles = m.termsFiles) ==
+      m.copy(fieldStats = None))
   }
 
   test("a republish commits a fresh generation; a searcher opened before it still answers") {
@@ -135,5 +225,23 @@ class ManifestSpec extends AnyFunSuite with SparkTestBase {
     IndexManifest.commit(spark, m.copy(fieldStats = Some(m.fieldStats.get.filterNot(_.field == "path"))))
     assert(CheckIndex.run(spark, dir).problems.exists(p => p.contains("commit.json") &&
       p.contains("path")))
+  }
+}
+
+object ManifestSpec {
+  /** Rewrites `commit.json` as a manifest written before commits listed
+    * their files: no `waves`, no `termsFiles`.
+    */
+  def dropFileList(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(s"$dir/commit.json")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val in = fs.open(p)
+    val root = try json.readTree(in).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      finally in.close()
+    root.remove("waves")
+    root.remove("termsFiles")
+    val out = fs.create(p, true)
+    try out.write(json.writeValueAsBytes(root)) finally out.close()
   }
 }

@@ -156,7 +156,7 @@ class MergeReclaimSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("plan() reclaim scoring: delete-heavy waves tier lower and are picked first") {
-    def w(i: Int, bytes: Long) = TieredMerge.WaveInfo(i, bytes, s"/w/$i")
+    def w(i: Int, bytes: Long) = TieredMerge.WaveInfo(i, bytes)
     // 11 equal-size waves in one tier → default plan merges the 10 smallest
     val segs = (0 until 11).map(i => w(i, 100L << 20))
     val p0 = TieredMerge.plan(segs, segsPerTier = 5, maxMergeAtOnce = 3)
@@ -190,6 +190,33 @@ class MergeReclaimSpec extends AnyFunSuite with SparkTestBase {
     assert(a.totalHits == b.totalHits)
     assert(a.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
       b.scoreDocs.map(d => (d.docId, d.score)).toSeq)
+    assert(CheckIndex.run(spark, dir).ok)
+  }
+
+  test("a merge no delete touches commits as a plain merge; an expunge round folds once") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-rec-plain").toString
+    new IndexBuilder(spark, cfg(1)).build(corpusDf, dir)
+    Deletes.append(spark, dir, (0L until 25L) ++ (50L until 75L))
+    val fracs = TieredMerge.deletedFractions(spark, dir)
+    val (hit, clean) = TieredMerge.waves(spark, dir).partition(w => fracs(w.wave) > 0)
+    assert(hit.size == 2)
+    val gen = IndexManifest.load(spark, dir).termsGen
+    val before = new IndexSearcher(spark, dir).search(TermQuery("import"), 10, ScoreMode.Ref32)
+
+    // no deleted doc in the group: the live dictionary and the deletes
+    // table stay, and the merged wave lists its sources' docs
+    val plain = TieredMerge.execute(spark, dir, clean.take(3))
+    assert(IndexManifest.load(spark, dir).termsGen == gen)
+    assert(Deletes.count(spark, dir) == 50L)
+    assert(!new java.io.File(s"$dir/docs/wave=$plain").exists)
+    val after = new IndexSearcher(spark, dir).search(TermQuery("import"), 10, ScoreMode.Ref32)
+    assert(after.totalHits == before.totalHits &&
+      after.scoreDocs.map(d => (d.docId, d.score)).toSeq == before.scoreDocs.map(d => (d.docId, d.score)).toSeq)
+
+    // both delete-hit waves rewritten in one round: one fold, one swap
+    assert(TieredMerge.expungeDeletes(spark, dir, minDeletedFraction = 0.4).size == 2)
+    assert(IndexManifest.load(spark, dir).termsGen == gen + 1)
+    assert(Deletes.count(spark, dir) == 0L)
     assert(CheckIndex.run(spark, dir).ok)
   }
 

@@ -24,7 +24,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
   }
 
   private def decodedPostings(dir: String): Map[(String, String, Long), Seq[(Long, Int, Int)]] =
-    spark.read.parquet(s"$dir/postings")
+    spark.read.parquet(IndexManifest.load(spark, dir).paths("postings"): _*)
       .select("field", "term", "rangeId", "payload")
       .as[(String, String, Long, Array[Byte])]
       .collect()
@@ -85,7 +85,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("LogMergePolicy: adjacent same-level runs of mergeFactor; oversized never merge") {
-    def w(i: Int, bytes: Long) = TieredMerge.WaveInfo(i, bytes, s"/w/$i")
+    def w(i: Int, bytes: Long) = TieredMerge.WaveInfo(i, bytes)
     // 12 similar-size segments → two adjacent groups of 10 cannot both form;
     // exactly one group of the first 10 (positional, arrival order)
     val flat = (0 until 12).map(i => w(i, 10L << 20))
@@ -132,14 +132,15 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
     // merge output waves live above MergeWaveBase — a streaming micro-batch
     // (wave = 100000 + batchId, mode=overwrite) can never clobber them
     assert(merged.forall(_ >= TieredMerge.MergeWaveBase))
-    val retired = TieredMerge.retiredWaves(spark, dir)
-    assert(retired.nonEmpty)
-    // generational ordering: the merged wave (numbered ≥ 1e6) sorts at its
-    // OLDEST source's position, not after everything else
-    val byAge = TieredMerge.wavesByAge(spark, dir)
+    val committed = IndexManifest.load(spark, dir)
+    assert(committed.retired.nonEmpty)
+    // generational ordering: the commit lists the merged wave (numbered
+    // ≥ 1e6) at its OLDEST source's position, not after everything else
+    val byAge = TieredMerge.waves(spark, dir)
+    assert(byAge.map(_.wave) == committed.waves.map(_.wave))
     val mergedIdx = byAge.indexWhere(_.wave >= TieredMerge.MergeWaveBase)
     assert(mergedIdx >= 0)
-    val oldestSource = TieredMerge.mergeLog(spark, dir)(byAge(mergedIdx).wave).min
+    val oldestSource = committed.waves(mergedIdx).covers.min
     assert(byAge.take(mergedIdx).forall(_.wave < oldestSource),
       s"merged wave out of generational position: ${byAge.map(_.wave)}")
     val hitsBefore = new IndexSearcher(spark, dir)
@@ -170,50 +171,75 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
       java.nio.file.Files.copy(src.toPath, dst.toPath,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
 
-  test("merge crash windows: logged-retired leftovers and uncommitted outputs are swept") {
+  test("merge crash windows: retired leftovers and uncommitted outputs are swept") {
     val dir = java.nio.file.Files.createTempDirectory("graft-merge-crash").toString
     val cfg = IndexConfig(analyzer = analyzer, docsPerRange = 128,
       numSegments = 12, segmentsPerWave = 1, buildPartitions = 8)
     new IndexBuilder(spark, cfg).build(TestCorpus.corpus(N).toDF(), dir)
-    val before = new IndexSearcher(spark, dir)
-      .search(TermQuery("import"), 5, ScoreMode.Ref32).totalHits
-
-    // snapshot all pre-merge waves (sources get deleted by the merge)
+    val q = TermQuery("import")
+    val before = new IndexSearcher(spark, dir).search(q, 5, ScoreMode.Ref32).totalHits
+    val pre = CheckIndex.run(spark, dir)
     val snap = new java.io.File(s"$dir/postings_snapshot")
     copyDir(new java.io.File(s"$dir/postings"), snap)
+
     assert(TieredMerge.maybeMerge(spark, dir, segsPerTier = 1, maxMergeAtOnce = 10).nonEmpty)
-    val retired = TieredMerge.retiredWaves(spark, dir)
-    assert(retired.nonEmpty)
-    val mergedWave = TieredMerge.waves(spark, dir).maxBy(_.wave)
-    assert(mergedWave.wave >= TieredMerge.MergeWaveBase)
-    // WaveInfo.path is a Hadoop URI (file:/tmp/...) — localize for java.io
-    val mergedDir = new java.io.File(s"$dir/postings/wave=${mergedWave.wave}")
-
-    // crash window A: merges log written, a retired source dir still on disk
-    // (crash between log write and source deletion) — waves() must treat it
-    // as dead and delete the leftover, or readers double its postings
-    val r0 = retired.min
-    val leftover = new java.io.File(s"$dir/postings/wave=$r0")
-    copyDir(new java.io.File(snap, s"wave=$r0"), leftover)
-    assert(!TieredMerge.waves(spark, dir).exists(_.wave == r0))
-    assert(!leftover.exists(), "logged-retired leftover dir not deleted on load")
-
-    // crash window B: merged output durable but NO log (crash before the
-    // commit point) — the orphan must be swept; its sources are still live
+    val m = IndexManifest.load(spark, dir)
+    val mergedWave = m.waves.map(_.wave).max
+    assert(mergedWave >= TieredMerge.MergeWaveBase)
+    // a retired source on disk — kept for readers of the previous commit,
+    // or left by a crash between a commit and its sweep — and an
+    // uncommitted merge output (a crash after the merged wave's write,
+    // before its commit)
+    val leftover = m.retired.min
+    val leftoverDir = new java.io.File(s"$dir/postings/wave=$leftover")
+    if (!leftoverDir.exists()) copyDir(new java.io.File(snap, s"wave=$leftover"), leftoverDir)
     val orphanWave = TieredMerge.MergeWaveBase + 777
     val orphan = new java.io.File(s"$dir/postings/wave=$orphanWave")
-    copyDir(mergedDir, orphan)
-    assert(!TieredMerge.waves(spark, dir).exists(_.wave == orphanWave))
-    assert(!orphan.exists(), "uncommitted merge output not deleted on load")
+    copyDir(new java.io.File(s"$dir/postings/wave=$mergedWave"), orphan)
+    copyDir(new java.io.File(s"$dir/termsPartial/wave=$mergedWave"),
+      new java.io.File(s"$dir/termsPartial/wave=$orphanWave"))
 
-    // publish sweeps before reading → searcher sees exactly one copy of
-    // every posting after both crash shapes at once
-    copyDir(new java.io.File(snap, s"wave=$r0"), leftover)
-    copyDir(mergedDir, orphan)
+    // invisible to a new searcher and to CheckIndex's counts
+    assert(new IndexSearcher(spark, dir).search(q, 5, ScoreMode.Ref32).totalHits == before)
+    val report = CheckIndex.run(spark, dir)
+    assert(report.ok, report.problems.mkString("; "))
+    assert(report.maxDoc == N && report.sumDocFreq == pre.sumDocFreq &&
+      report.sumTotalTermFreq == pre.sumTotalTermFreq)
+    assert(report.unlisted.exists(_.startsWith(s"postings/wave=$orphanWave/")) &&
+      report.unlisted.exists(_.startsWith(s"postings/wave=$leftover/")), report.unlisted)
+    assert(!TieredMerge.waves(spark, dir).exists(w => w.wave == orphanWave || w.wave == leftover))
+
+    // the next commit (an append) sweeps both; a full publish never adopts them
+    graft.streaming.StreamingIndexer.appendBatch(spark, new IndexBuilder(spark, cfg),
+      Seq(TestCorpus.corpus(1).head.copy(path = "stream/0.scala", content = "import appended")).toDF(),
+      batchId = 0L, dir)
+    assert(!orphan.exists() && !new java.io.File(s"$dir/termsPartial/wave=$orphanWave").exists(),
+      "uncommitted merge output not swept")
+    assert(!leftoverDir.exists(), "retired source not swept")
+    copyDir(new java.io.File(s"$dir/postings/wave=$mergedWave"), orphan)
     new IndexBuilder(spark, cfg).publish(dir)
-    val after = new IndexSearcher(spark, dir)
-      .search(TermQuery("import"), 5, ScoreMode.Ref32).totalHits
-    assert(after == before, s"postings doubled after crash recovery: $after != $before")
+    assert(!orphan.exists())
+    assert(new IndexSearcher(spark, dir).search(q, 5, ScoreMode.Ref32).totalHits == before + 1)
+    assert(CheckIndex.run(spark, dir).ok)
+  }
+
+  test("a searcher opened before a merge keeps answering after the merge commits") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-merge-open").toString
+    val cfg = IndexConfig(analyzer = analyzer, docsPerRange = 64,
+      numSegments = 4, segmentsPerWave = 1, buildPartitions = 4)
+    new IndexBuilder(spark, cfg).build(TestCorpus.corpus(200).toDF(), dir)
+    assert(TieredMerge.waves(spark, dir).size == 4)
+    val queries = Seq[Query](TermQuery("import"), PhraseQuery(Seq("posting", "list")))
+    val ref = new IndexSearcher(spark, dir)
+    val expected = queries.map(q => ref.search(q, 10, ScoreMode.Ref32))
+    val opened = new IndexSearcher(spark, dir) // never queried before the merge
+    assert(TieredMerge.maybeMerge(spark, dir, segsPerTier = 2, maxMergeAtOnce = 3).size == 1)
+    queries.zip(expected).foreach { case (q, exp) =>
+      val got = opened.search(q, 10, ScoreMode.Ref32)
+      assert(got.totalHits == exp.totalHits, s"totalHits $q")
+      assert(got.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
+        exp.scoreDocs.map(d => (d.docId, d.score)).toSeq, s"topk $q")
+    }
   }
 
   test("CheckIndex catches a broken manifest") {

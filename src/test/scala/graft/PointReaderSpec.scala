@@ -49,7 +49,7 @@ class PointReaderSpec extends AnyFunSuite with SparkTestBase {
 
   test("terms reads equal the Spark read: present and absent keys, keyword and supplementary terms") {
     val loc = IndexManifest.load(spark, dir).termsLocation
-    val got = new PointReader(conf, loc).read(
+    val got = new PointReader(conf, IndexManifest.load(spark, dir).termsPaths).read(
         Seq("field", "term", "docFreq", "totalTermFreq", "singletonDocId"),
         Some(PointReader.pairs(keys))) { g =>
       (g.getString("field", 0), g.getString("term", 0), g.getLong("docFreq", 0),
@@ -72,7 +72,7 @@ class PointReaderSpec extends AnyFunSuite with SparkTestBase {
     for (d <- Seq(dir, offsetsDir)) {
       val cols = Seq("field", "term", "rangeId", "firstDocId", "payload", "posPayload", "offPayload")
       def rows(pred: org.apache.parquet.filter2.predicate.FilterPredicate) =
-        new PointReader(conf, s"$d/postings").read(cols, Some(pred)) { g =>
+        new PointReader(conf, IndexManifest.load(spark, d).paths("postings")).read(cols, Some(pred)) { g =>
           (g.getString("field", 0), g.getString("term", 0), g.getLong("rangeId", 0),
             g.getLong("firstDocId", 0), hex(g.getBinary("payload", 0).getBytes),
             hex(PointReader.bytesOrNull(g, "posPayload")),
@@ -117,6 +117,7 @@ class PointReaderSpec extends AnyFunSuite with SparkTestBase {
     fs.delete(new org.apache.hadoop.fs.Path(s"$v1/docs"), true)
     fs.rename(new org.apache.hadoop.fs.Path(s"$v1/docs_v1"), new org.apache.hadoop.fs.Path(s"$v1/docs"))
     IndexManifest.commit(spark, IndexManifest.load(spark, v1).copy(formatVersion = 1))
+    ManifestSpec.dropFileList(spark, v1) // a version-1 commit lists no files
     val expV1 = spark.read.parquet(s"$v1/docs").where(col("docId").isin(ids: _*))
       .withColumn("fieldDls", typedLit(Map.empty[String, Int]))
       .select("docId", "segId", "repo", "path", "commit", "lang", "contentSha", "dl", "norm",

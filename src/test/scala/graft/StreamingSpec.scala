@@ -174,6 +174,51 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     assert(local.facetCounts(MatchAllQuery(), "lang").collect().map(_.getLong(1)).sum == 150)
   }
 
+  test("a searcher opened between a wave's write and its commit reads its own commit only") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-stream-window").toString
+    val cfg = IndexConfig(analyzer = new StandardCodeAnalyzer(),
+      docsPerRange = 64, numSegments = 4, segmentsPerWave = 4,
+      explicitDocIdCol = Some("docId"))
+    val builder = new IndexBuilder(spark, cfg)
+    val all = TestCorpus.corpus(300).zipWithIndex.map { case (f, i) =>
+      (i.toLong, f.repo, f.path, f.commit, f.lang, f.content) }
+    builder.build(all.take(150).toDF("docId", "repo", "path", "commit", "lang", "content"), dir)
+    val queries = Seq[Query](TermQuery("import"), PhraseQuery(Seq("posting", "list")))
+    def pairs(t: TopDocs) = t.scoreDocs.map(d => (d.docId, d.score)).toSeq
+    val expected = queries.map(q => new IndexSearcher(spark, dir).search(q, 20))
+    val wave = StreamingIndexer.StreamingWaveBase
+    builder.invertWave(all.drop(150).toDF("docId", "repo", "path", "commit", "lang", "content")
+      .withColumn("segId", org.apache.spark.sql.functions.lit(wave))
+      .select(builder.stagedColumns.map(org.apache.spark.sql.functions.col): _*), wave, dir)
+    val inWindow = new IndexSearcher(spark, dir) // the wave is written, not committed
+    for ((q, exp) <- queries.zip(expected)) {
+      val got = inWindow.search(q, 20)
+      assert(got.totalHits == exp.totalHits && pairs(got) == pairs(exp), s"in the window: $q")
+    }
+    builder.publishIncremental(dir, wave)
+    for ((q, exp) <- queries.zip(expected)) {
+      val got = inWindow.search(q, 20)
+      assert(got.totalHits == exp.totalHits && pairs(got) == pairs(exp), s"after the commit: $q")
+      assert(new IndexSearcher(spark, dir).search(q, 20).totalHits > exp.totalHits, q)
+    }
+  }
+
+  test("an empty batch commits nothing; the next commit sweeps its dirs") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-stream-empty").toString
+    val cfg = IndexConfig(analyzer = new StandardCodeAnalyzer(),
+      docsPerRange = 64, numSegments = 4, segmentsPerWave = 4)
+    val builder = new IndexBuilder(spark, cfg)
+    builder.build(TestCorpus.corpus(100).toDF(), dir)
+    val commit = java.nio.file.Paths.get(s"$dir/commit.json")
+    val before = java.nio.file.Files.readAllBytes(commit)
+    StreamingIndexer.appendBatch(spark, builder, Seq.empty[CodeFile].toDF(), batchId = 0L, dir)
+    assert(java.nio.file.Files.readAllBytes(commit).sameElements(before))
+    StreamingIndexer.appendBatch(spark, builder, TestCorpus.corpus(101).drop(100).toDF(), batchId = 1L, dir)
+    assert(!new java.io.File(s"$dir/postings/wave=${StreamingIndexer.StreamingWaveBase}").exists())
+    assert(IndexManifest.load(spark, dir).maxDoc == 101)
+    assert(CheckIndex.run(spark, dir).ok)
+  }
+
   test("incremental publish: dictionary == full recompute; replay is a no-op; generations swept") {
     val dir = java.nio.file.Files.createTempDirectory("graft-stream-inc").toString
     val cfg = IndexConfig(analyzer = new StandardCodeAnalyzer(),
@@ -201,7 +246,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       spark.read.parquet(mf.statsLocation).as[FieldStats].collect().sortBy(_.field).toSeq
     val incrementalStats = statsTable(m)
     assert(m.termsGen == 2, s"two increments → gen 2, got ${m.termsGen}")
-    assert(m.publishedWaves.count(_ >= StreamingIndexer.StreamingWaveBase) == 2)
+    assert(m.waves.count(_.wave >= StreamingIndexer.StreamingWaveBase) == 2)
     assert(m.maxDoc == 240 && m.maxDocId == 239)
     // gen-0 dirs superseded at gen 2 → swept; gen-1 kept for in-flight readers
     val fs = new org.apache.hadoop.fs.Path(dir)
